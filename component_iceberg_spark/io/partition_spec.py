@@ -55,11 +55,6 @@ class PartitionField:
             return f"_pt_{self.transform}{self.param}_{self.source}"
         return f"_pt_{self.transform}_{self.source}"
 
-    def spec_str(self) -> str:
-        if self.param is not None:
-            return f"{self.transform}({self.param}, {self.source})"
-        return f"{self.transform}({self.source})"
-
 
 def parse_spec(spec: list[str]) -> list[PartitionField]:
     """Parse ``["bucket(8, o_custkey)", "day(o_orderdate)", "col"]`` into
@@ -138,10 +133,6 @@ def apply_spec(df: DataFrame, fields: list[PartitionField]) -> DataFrame:
 
 def partition_columns(fields: list[PartitionField]) -> list[str]:
     return [f.source if f.transform == "identity" else f.name for f in fields]
-
-
-def hidden_columns(fields: list[PartitionField]) -> list[str]:
-    return [f.name for f in fields if f.transform != "identity"]
 
 
 def _transform_literal(field: PartitionField, lit) -> object | None:

@@ -622,51 +622,41 @@ class SnapCatalog:
     DV_PROBE_MAX_DENSITY = 0.05          # doomed fraction of scoped rows
     DV_PROBE_MAX_FILE_POSITIONS = 8192   # per-file probe work bound
     DV_PROBE_MAX_TOTAL_POSITIONS = 2_000_000  # broadcast bytes bound (~16 MB)
-    # rewrite_deletes_to_dv write parallelism: one output task per this
-    # many folded positions (~32 MB of longs) — sparse folds keep the
-    # single-file layout, a large accreted backlog fans out
+    # DV write parallelism: one output task per this many positions
+    # (~32 MB of longs) — sparse writes keep the single-file layout, a
+    # large scattered delete or accreted backlog fans out
     DV_FOLD_POSITIONS_PER_TASK = 4_000_000
-    # a DENSE delete whose ordinals form few contiguous RUNS (the
-    # realistic dense shapes: time-range deletes, partition drops,
-    # compaction-era tombstones) can still broadcast — as (start, end)
-    # ranges, whose bytes and per-row probe work are RUN-count-bounded
-    # at any density. Above this many runs in one file, ranges stop
-    # compressing and the dense apply falls back to the anti-join; the
-    # TOTAL bound caps the broadcast payload across files (a band delete
-    # touching 100k files would otherwise broadcast 100k × per-file
-    # arrays — the same OOM vector the positions cap closes).
+    # a delete whose ordinals form few contiguous RUNS (the realistic
+    # dense shapes: time-range deletes, partition drops, compaction-era
+    # tombstones) is stored and broadcast as (start, end) ranges, whose
+    # bytes and per-row probe work are RUN-count-bounded at any
+    # density. Above this many runs in one file, ranges stop
+    # compressing and the writer keeps ordinals; the TOTAL bound caps
+    # the broadcast payload across files (a band delete touching 100k
+    # files would otherwise broadcast 100k × per-file arrays — the same
+    # OOM vector the positions cap closes).
     DV_RANGE_PROBE_MAX_PER_FILE = 128
     DV_RANGE_PROBE_MAX_TOTAL_RANGES = 1_000_000  # ~16 MB of (start, end)
-    # prefer the range probe over the ordinal probe at ANY density once
-    # positions outnumber runs by this factor (contiguity beats density
-    # — the range probe's payload and per-row work are both run-bounded)
-    DV_RANGES_PREFER_FACTOR = 64
-    # STORAGE layout choice (r15, the Iceberg-v3 roaring-bitmap
-    # analogue): once positions outnumber runs by this factor AND the
-    # run counts fit the range-probe bounds, the DV file stores
-    # (file_path, starts, ends) directly — entry ``layout: "ranges"`` —
-    # instead of explicit ordinal arrays. Storage bytes drop from
-    # positions-sized to runs-sized, and the read applies the stored
-    # ranges with NO derivation pass. The factor is lower than the
-    # read-side prefer factor (8 vs 64) because storage pays the
-    # compression once at write time while the probe pays its shape on
-    # every read: at 8x the stored bytes already shrink 4x (two longs
-    # per run vs one per position), and any stored-ranges entry is
-    # forced through the ranges apply, which at >=8x is never worse
-    # than the ordinal probe. Requiring the probe bounds at WRITE time
-    # keeps the invariant that a ranges-layout entry is always
-    # broadcastable as-is.
+    # STORAGE layout choice (the Iceberg-v3 roaring-bitmap analogue):
+    # once positions outnumber runs by this factor AND the run counts
+    # fit the range-probe bounds, the DV file stores (file_path, starts,
+    # ends) directly — entry ``layout: "ranges"`` — instead of explicit
+    # ordinal arrays. Storage bytes drop from positions-sized to
+    # runs-sized, and the read applies the stored ranges as-is. At 8x
+    # the stored bytes already shrink 4x (two longs per run vs one per
+    # position). Requiring the probe bounds at WRITE time keeps the
+    # invariant that a ranges-layout entry is always broadcastable.
+    # Ranges are NOT derived at read time: every contiguous shape is
+    # already stored as ranges, and on dense scattered entries the
+    # range probe measured ~9x slower than the anti-join (DESIGN_NOTES).
     DV_STORE_RANGES_FACTOR = 8
 
     def __init__(self, warehouse: str):
         self.warehouse = warehouse
         os.makedirs(warehouse, exist_ok=True)
-        # per-delete-file stat memo for pre-stamp DV entries (immutable
-        # files, so the cache can never go stale) — see _dv_apply_mode
-        self._legacy_dv_stats: dict[str, tuple[int, int]] = {}
         # per-data-dir footer bounds memo for pre-stamp (legacy/adopted)
-        # dirs — data dirs are immutable once published, same staleness
-        # argument as _legacy_dv_stats; dirs with an unreadable file are
+        # dirs — data dirs are immutable once published, so the cache
+        # can never go stale; dirs with an unreadable file are
         # NOT cached (a repaired adopted link changes content without
         # changing the dir name) — see _dispatch_bounds / ADVICE r14 #3
         self._footer_bounds_cache: dict[tuple[str, str, str], list] = {}
@@ -1334,12 +1324,13 @@ class SnapCatalog:
         manifest = self._manifest(namespace, table, base)
         files = manifest["files"]
         deletes = manifest.get("deletes", [])
-        # dirs covered by a POSITIONAL delete entry must never fold:
+        # dirs covered by a path-scoped delete entry must never fold:
         # folding hard-links data files under new basenames, which would
         # orphan the (file_path, pos) addresses the delete file stores.
         # Each such dir gets a unique singleton signature so it is
         # carried as-is (equality entries scope by dir name and survive
-        # folding; positional entries scope by file path and don't).
+        # folding; DVs and legacy positional files scope by file path
+        # and don't).
         pos_covered = {
             d
             for e in deletes
@@ -1685,12 +1676,7 @@ class SnapCatalog:
                 break
             except FileExistsError:
                 continue
-        cur_tmp = self._tbl(
-            namespace, table, f"_current.tmp-{uuid.uuid4().hex}"
-        )
-        with open(cur_tmp, "w") as f:
-            f.write(str(sid))
-        os.replace(cur_tmp, self._tbl(namespace, table, "_current"))
+        self._write_current_hint(namespace, table, sid)
         return sid
 
     def cherry_pick(
@@ -1844,7 +1830,7 @@ class SnapCatalog:
         doomed = self._resolve_schema(scan, manifest).filter(
             predicate
         ).select(self.POS_FILE_COL, self.POS_IDX_COL)
-        return self.delete_positions_dv(spark, namespace, table, doomed)
+        return self.delete_positions(spark, namespace, table, doomed)
 
     def _dispatch_bounds(
         self,
@@ -2353,8 +2339,8 @@ class SnapCatalog:
     ) -> DataFrame:
         """Scan exposing each row's physical address — (data file path,
         row ordinal within the file) as ``_pos_file``/``_pos_idx`` — the
-        handle a caller needs to author Iceberg-v2-style POSITIONAL
-        deletes (``delete_positions``). Addresses come from Spark's
+        handle a caller needs to author position deletes
+        (``delete_positions``). Addresses come from Spark's
         ``_metadata.file_path``/``row_index`` hidden columns, so the
         scan stays fully distributed and adds no shuffle.
 
@@ -2389,68 +2375,40 @@ class SnapCatalog:
         table: str,
         pos_df: DataFrame,
     ) -> int:
-        """Merge-on-read POSITIONAL delete (the other Iceberg v2 delete
-        format, reference ex-iceberg's pyiceberg table contract: v2
-        tables carry equality deletes AND (file_path, pos) delete files
-        — the format compaction engines emit). ``pos_df`` carries the
-        doomed rows' physical addresses as ``_pos_file``/``_pos_idx``
-        (author them with ``read_with_positions``). The delete file is
-        written with Iceberg's positional-delete schema (file_path,
-        pos); the commit is metadata-only — no data rewrite.
+        """Merge-on-read POSITIONAL delete, written as a DELETION VECTOR
+        (the Iceberg v3 successor of the v2 (file_path, pos) delete
+        file, which v3 deprecates for new writes). ``pos_df`` carries
+        the doomed rows' physical addresses as ``_pos_file``/``_pos_idx``
+        (author them with ``read_with_positions``); the commit is
+        metadata-only — no data rewrite.
+
+        The DV holds ONE row per touched data file — file-count-sized
+        in rows at any delete density — in the layout
+        ``_dv_write_relation`` picks from the addresses' runs: stored
+        ``(file_path, starts, ends)`` ranges for contiguous bands, the
+        sorted ``positions`` array otherwise. The entry is stamped with
+        position/run stats, so the read picks its apply plan
+        (``_dv_apply_mode``) without a job. This is the one
+        position-delete author: ``delete_where_mor`` calls it and
+        ``update_where_mor`` shares its ``_dv_write_entry``.
 
         Scoping is TIGHTER than ``delete_keys``: the entry records only
-        the data dirs the addresses actually touch (derived from the
-        file paths), so untouched dirs keep folding in
-        ``compact_manifests`` and their read groups never pay this
-        entry's anti-join. Positions are additionally physical — they
-        name files — so rows appended later can never be masked even
-        inside a scoped dir. Reads anti-join on (file, pos);
-        ``compact`` materializes and clears pending positional deletes
-        exactly like equality ones. ``compact_manifests`` never folds a
-        dir covered by a positional entry (folding hard-links data files
-        under new basenames, which would orphan the stored paths)."""
+        the data dirs the addresses actually touch, so untouched dirs
+        keep folding in ``compact_manifests`` and their read groups
+        never pay this entry's apply. Positions are additionally
+        physical — they name files — so rows appended later can never
+        be masked even inside a scoped dir. ``compact`` materializes
+        and clears the DV, ``rewrite_deletes_to_dv`` folds accreted
+        entries into one, and ``compact_manifests`` never folds a
+        covered dir (folding hard-links data files under new
+        basenames, which would orphan the stored paths)."""
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
-        del_dir_name = f"posdelete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
-        (
-            pos_df.select(
-                F.col(self.POS_FILE_COL).alias("file_path"),
-                F.col(self.POS_IDX_COL).cast("long").alias("pos"),
-            )
-            .distinct()
-            .coalesce(1)
-            .write.parquet(out)
+        out, entry = self._dv_write_entry(
+            spark, namespace, table, manifest, pos_df
         )
-        # scope to the dirs the addresses actually TOUCH (derivable from
-        # the file paths for free), not every dir visible at delete
-        # time: untouched dirs stay foldable by compact_manifests and
-        # their read groups skip this entry's anti-join entirely. The
-        # dir-name extraction is representation-safe — commit dir names
-        # are uuid hex, never URI-escaped.
-        touched = {
-            r["d"]
-            for r in spark.read.parquet(out)
-            .select(
-                F.regexp_extract(
-                    F.col("file_path"), r"/data/([^/]+)/", 1
-                ).alias("d")
-            )
-            .distinct()
-            .collect()
-        }
-        entry = {
-            "dir": del_dir_name,
-            "mode": "positional",
-            "applies_to": sorted(
-                d for d in manifest["files"] if d in touched
-            ),
-        }
-        if not entry["applies_to"]:
-            # nothing addressed: don't publish a dead entry (and don't
-            # leave the empty delete file for orphan GC to chase)
-            shutil.rmtree(out, ignore_errors=True)
-            return base
+        if entry is None:
+            return base  # nothing addressed: no dead entry is published
         try:
             return self._commit(
                 namespace, table, None, operation="delete", carry=False,
@@ -2459,78 +2417,6 @@ class SnapCatalog:
             )
         except CommitConflict:
             shutil.rmtree(out, ignore_errors=True)  # no manifest refs it
-            raise
-
-    def compact_position_deletes(
-        self, spark: SparkSession, namespace: str, table: str
-    ) -> int:
-        """Iceberg ``rewrite_position_delete_files`` analogue: merge all
-        pending POSITIONAL delete files into one, dropping dead
-        addresses, without touching data files. Every streaming upsert /
-        CDC-style pipeline accretes small delete files; at read time
-        each costs one anti-join pass over its scoped group, so
-        maintenance folds them.
-
-        Two properties make the merge safe that would NOT hold for
-        equality entries: a positional address can only ever mask its
-        exact (file, ordinal) row, so (a) widening ``applies_to`` to the
-        union of the sources' scopes cannot mask later-appended rows
-        (their files are different), and (b) addresses whose file no
-        longer sits under a live scoped dir are DEAD — a CoW rewrite
-        already materialized them — and are dropped here. Equality
-        entries are semantic (key-scoped) and are carried unchanged.
-
-        No-op (returns the current snapshot id) with fewer than two
-        pending positional entries."""
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        entries = manifest.get("deletes", [])
-        pos = [e for e in entries if e.get("mode") == "positional"]
-        if len(pos) < 2:
-            return base
-        keep = [e for e in entries if e.get("mode") != "positional"]
-        merged = None
-        for e in pos:
-            df = spark.read.parquet(
-                self._tbl(namespace, table, "deletes", e["dir"])
-            )
-            merged = df if merged is None else merged.unionByName(df)
-        # drop dead addresses: only files under a live scoped dir can
-        # still be masked. Match on the /data/<dirname>/ COMPONENT, not
-        # the absolute warehouse path: stored addresses are Spark
-        # _metadata URIs (file:…, percent-encoded), so an absolute-path
-        # substring silently misses on any warehouse path with
-        # URI-escaped characters and would drop LIVE addresses —
-        # dir names are uuid hex and never escape, so the component
-        # match is representation-safe (a false keep is harmless: the
-        # address simply never matches a scanned row).
-        scope = sorted({d for e in pos for d in e["applies_to"]})
-        live = [
-            F.col("file_path").contains(f"/data/{d}/") for d in scope
-        ]
-        alive = live[0]
-        for cond in live[1:]:
-            alive = alive | cond
-        del_dir_name = f"posdelete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
-        merged.filter(alive).distinct().coalesce(1).write.parquet(out)
-        entry = {
-            "dir": del_dir_name,
-            "mode": "positional",
-            "applies_to": [d for d in scope if d in set(manifest["files"])],
-        }
-        try:
-            return self._commit(
-                namespace, table, None,
-                operation="rewrite_position_deletes",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep + [entry],
-            )
-        except CommitConflict:
-            # no manifest references the merged file yet — sweep it
-            # (the compact_manifests link-dir discipline)
-            shutil.rmtree(out, ignore_errors=True)
             raise
 
     def _dv_write_relation(
@@ -2542,19 +2428,19 @@ class SnapCatalog:
         namespace: str,
         table: str,
     ) -> tuple[list[str], dict, str | None]:
-        """Runs-first DV writer shared by every DV-authoring path
-        (``_dv_write_entry`` per-statement, ``rewrite_deletes_to_dv``
-        fold): ONE gaps-and-islands pass over the (file_path, pos)
-        relation yields per-file run arrays plus the position/run stats
-        the read gate consumes — computed BEFORE any bytes land, so the
-        storage layout is chosen from the same numbers the apply gate
-        reads and nothing is ever written twice.
+        """Runs-first DV writer behind ``_dv_write_entry`` (per-statement
+        deletes and updates, and the ``rewrite_deletes_to_dv`` fold):
+        ONE per-file aggregate over the (file_path, pos) relation yields
+        per-file run arrays plus the position/run stats the read gate
+        consumes — computed BEFORE any bytes land, so the storage layout
+        is chosen from the same numbers the apply gate reads and nothing
+        is ever written twice.
 
         Layout choice (r15): positions >= ``DV_STORE_RANGES_FACTOR`` x
         runs AND runs inside the range-probe bounds stores
         ``(file_path, starts, ends)`` directly (``layout "ranges"`` —
         runs-sized bytes, the Iceberg-v3 roaring-bitmap analogue; the
-        read applies it with no derivation pass). Otherwise the
+        read broadcasts it as-is). Otherwise the
         explicit sorted ordinal form (``layout "positions"``), expanded
         from the run arrays with vectorized ``sequence``/``flatten``
         (positions < factor x runs bounds the per-row expansion).
@@ -2566,50 +2452,38 @@ class SnapCatalog:
         longer serializes through one task). The ranges form is
         run-bounded (<= ~16 MB by the probe caps) and keeps one file.
 
-        Plan cost: one shuffle total — the window's hash exchange on
-        file_path also satisfies both downstream groupBys (subset
-        clustering), where the r14 flow paid the write shuffle AND a
-        second full pass for ``_dv_stats``. The file-count-sized runs
-        relation is localCheckpoint'ed so the stats aggregate and the
-        write both read it without recomputing the source scan (the
-        ``update_where_mor`` one-evaluation discipline).
+        Plan cost: one shuffle total — the per-file aggregate collects
+        each file's sorted distinct ordinals (duplicate addresses, e.g.
+        overlapping entries in a fold, collapse here) and reads the run
+        bounds off them, with no sort or window stage. One file's doomed
+        ordinals sit in one task's memory, bounded by the file's row
+        count — the same bound the positions layout stores per row. The
+        file-count-sized runs relation is localCheckpoint'ed so the
+        stats aggregate and the write both read it without recomputing
+        the source scan (the ``update_where_mor`` one-evaluation
+        discipline).
 
         Returns ``(applies_to, stats, layout)``; layout None (nothing
         written) when no position addresses a live dir."""
-        # duplicates would both split runs (the row_number offset jumps)
-        # and inflate counts — dedup here so every caller is covered
-        pos_rel = pos_rel.dropDuplicates(["file_path", "pos"])
-        runs = (
-            pos_rel.withColumn(
-                "_grp",
-                F.col("pos")
-                - F.row_number().over(
-                    Window.partitionBy("file_path").orderBy("pos")
-                ),
-            )
-            .groupBy("file_path", "_grp")
-            .agg(
-                F.min("pos").alias("s"),
-                F.max("pos").alias("e"),
-                F.count(F.lit(1)).alias("c"),
-            )
-        )
+        # a run starts where the previous ordinal is not x - 1 and ends
+        # where the next is not x + 1; CASE keeps the neighbour lookups
+        # inside the array (an out-of-range index raises under ANSI)
         per_file = (
-            runs.groupBy("file_path")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("s"), F.col("e")))
-                ).alias("_runs"),
-                F.sum("c").alias("_n"),
-                F.count(F.lit(1)).alias("_nr"),
-            )
+            pos_rel.groupBy("file_path")
+            .agg(F.array_sort(F.collect_set("pos")).alias("_p"))
             .select(
                 "file_path",
-                F.col("_runs.s").alias("starts"),
-                F.col("_runs.e").alias("ends"),
-                "_n",
-                "_nr",
+                F.expr(
+                    "filter(_p, (x, i) -> CASE WHEN i = 0 THEN true"
+                    " ELSE _p[i - 1] <> x - 1 END)"
+                ).alias("starts"),
+                F.expr(
+                    "filter(_p, (x, i) -> CASE WHEN i = size(_p) - 1"
+                    " THEN true ELSE _p[i + 1] <> x + 1 END)"
+                ).alias("ends"),
+                F.size("_p").alias("_n"),
             )
+            .withColumn("_nr", F.size("starts"))
             .localCheckpoint()
         )
         # dir extraction is anchored to THIS table's data root, not a
@@ -2686,12 +2560,15 @@ class SnapCatalog:
             per_file.unpersist()
 
     @staticmethod
-    def _dv_positions_relation(keys_df: DataFrame, layout: str) -> DataFrame:
-        """Expand a stored DV relation of either layout back to
-        (file_path, pos) rows — the fold/merge path's layout bridge.
-        Ranges expand with vectorized ``sequence`` (two explodes, no
-        struct field names to depend on)."""
-        if layout == "ranges":
+    def _dv_positions_relation(keys_df: DataFrame, entry: dict) -> DataFrame:
+        """Expand a stored path-scoped delete file back to (file_path,
+        pos) rows — the one layout bridge the fold and the read's
+        anti-join share. Ranges expand with vectorized ``sequence`` (two
+        explodes, no struct field names to depend on); a legacy
+        ``mode: "positional"`` file already holds the rows."""
+        if entry["mode"] == "positional":
+            return keys_df.select("file_path", "pos")
+        if entry.get("layout") == "ranges":
             return keys_df.select(
                 "file_path",
                 F.explode(
@@ -2714,13 +2591,14 @@ class SnapCatalog:
     ) -> tuple[str, dict | None]:
         """Write a DV delete file from (``POS_FILE_COL``,
         ``POS_IDX_COL``) rows and build its STAMPED manifest entry —
-        the one authoring path ``delete_positions_dv`` and
-        ``update_where_mor`` share, so the position/run stats the read
-        gate consumes can never drift between writers. Returns
-        ``(delete file path, entry)``; entry is None (and nothing
-        written) when no live dir is addressed. The entry records the
-        storage ``layout`` (``_dv_write_relation``'s choice) so the
-        read side dispatches without inspecting file schemas."""
+        the one authoring path ``delete_positions``,
+        ``update_where_mor`` and ``rewrite_deletes_to_dv`` share, so
+        the position/run stats the read gate consumes can never drift
+        between writers. Returns ``(delete file path, entry)``; entry
+        is None (and nothing written) when no live dir is addressed.
+        The entry records the storage ``layout``
+        (``_dv_write_relation``'s choice) so the read side dispatches
+        without inspecting file schemas."""
         del_dir_name = f"dvdelete-{uuid.uuid4().hex[:12]}"
         out = self._tbl(namespace, table, "deletes", del_dir_name)
         pos_rel = pos_df.select(
@@ -2740,147 +2618,83 @@ class SnapCatalog:
             **stats,
         }
 
-    def delete_positions_dv(
-        self,
-        spark: SparkSession,
-        namespace: str,
-        table: str,
-        pos_df: DataFrame,
-    ) -> int:
-        """Merge-on-read DELETE as a DELETION VECTOR — the Iceberg v3 /
-        Delta-DV evolution of the positional delete file
-        (``delete_positions``): instead of one (file_path, pos) ROW per
-        doomed row, ONE row per touched data file carrying the sorted
-        int array of its deleted ordinals (the explicit-array form of
-        the roaring bitmap; this container has no roaring codec, and
-        the array keeps the entry a plain parquet value).
-
-        Why a third format: positional-file density is the failure mode
-        of the r11 format — a delete touching 1M rows of one file costs
-        1M delete ROWS and an anti-join whose build side is
-        row-count-sized. The DV entry for the same delete is ONE row
-        whose array is run-length-friendly parquet. The relation is
-        file-count-sized in ROWS but positions-sized in BYTES, so the
-        read-side apply is DENSITY-GATED (``_dv_apply_mode``): at
-        sparse density it broadcasts and rows probe their file's sorted
-        ordinal array with NO shuffle; at dense density (where the
-        probe's O(rows × positions-per-file) work and the broadcast
-        payload both blow up) the read explodes it back into a
-        (file, pos) anti-join. Writers stamp ``n_positions`` /
-        ``max_file_positions`` on the entry so the gate costs reads
-        nothing. Storage stays DV either way — the gate picks the apply
-        PLAN, not the format.
-        Same scoping, folding, and maintenance contracts as positional
-        entries: scoped to touched dirs, never folded by
-        ``compact_manifests``, materialized + cleared by ``compact``,
-        rewritten by ``rewrite_deletes_to_dv``."""
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        out, entry = self._dv_write_entry(
-            spark, namespace, table, manifest, pos_df
-        )
-        if entry is None:
-            return base
-        try:
-            return self._commit(
-                namespace, table, None, operation="delete", carry=False,
-                base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), extra_deletes=[entry],
-            )
-        except CommitConflict:
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-
     def rewrite_deletes_to_dv(
         self, spark: SparkSession, namespace: str, table: str
     ) -> int:
-        """Maintenance: fold EVERY pending path-scoped delete entry —
-        r11 positional files and existing DVs alike — into ONE deletion
-        vector, dropping dead addresses, without touching data files
-        (the DV-era successor of ``compact_position_deletes``: same
-        dead-address and scope-union contracts, but the output is the
-        one-row-per-file format, so k accreted delete files collapse to
-        ONE entry and the read side goes from k apply passes to one —
-        a shuffle-free broadcast probe at sparse density, a single
-        anti-join at dense density; the folded entry carries the
-        position stats the gate reads, see ``_dv_apply_mode``).
+        """Maintenance (Iceberg ``rewrite_position_delete_files``
+        analogue): fold EVERY pending path-scoped delete entry — DVs of
+        either layout, unstamped legacy DVs and legacy
+        ``mode: "positional"`` files alike — into ONE stamped deletion
+        vector, dropping dead addresses, without touching data files.
+        k accreted delete files collapse to ONE entry, so the read goes
+        from k apply passes to one, and the folded entry carries the
+        stats the apply gate reads (``_dv_apply_mode``).
 
-        Address-level safety is identical to the positional fold: a
-        (file, ordinal) can only mask its exact row, so unioning scopes
-        masks nothing new, and addresses whose file no longer lives
-        under a scoped dir are dead (a CoW rewrite materialized them) —
-        dropped here. Equality entries are semantic and carried
-        unchanged. No-op when there is nothing to fold (no path-scoped
-        entries, or already exactly one DV)."""
+        Two properties make the fold safe that would NOT hold for
+        equality entries: a (file, ordinal) address can only mask its
+        exact row, so (a) unioning the sources' scopes masks nothing
+        new (later-appended rows live in other files), and (b)
+        addresses whose file no longer lives under a live scoped dir
+        are dead (a CoW rewrite materialized them) and are dropped
+        here. Equality entries are semantic and carried unchanged.
+        No-op when there is nothing to fold (no path-scoped entries,
+        or exactly one DV the current writer already stamped)."""
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
         entries = manifest.get("deletes", [])
         pos = [e for e in entries if e.get("mode") in ("positional", "dv")]
-        if not pos or (len(pos) == 1 and pos[0]["mode"] == "dv"):
+        if not pos or (len(pos) == 1 and "layout" in pos[0]):
             return base
         keep = [e for e in entries if e.get("mode") not in ("positional", "dv")]
-        merged = None
-        for e in pos:
-            df = spark.read.parquet(
-                self._tbl(namespace, table, "deletes", e["dir"])
-            )
-            if e["mode"] == "dv":
-                df = self._dv_positions_relation(
-                    df, e.get("layout", "positions")
-                )
-            merged = df if merged is None else merged.unionByName(df)
-        # dead-address drop: same representation-safe /data/<dir>/
-        # component match as compact_position_deletes
-        scope = sorted({d for e in pos for d in e["applies_to"]})
-        live_scope = [d for d in scope if d in set(manifest["files"])]
-        if not live_scope:
-            # every scoped dir was since rewritten: all addresses are
-            # dead — publish the equality entries only, no DV at all
-            return self._commit(
-                namespace, table, None, operation="rewrite_to_dv",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep,
-            )
-        alive = F.col("file_path").contains(f"/data/{scope[0]}/")
-        for d in scope[1:]:
-            alive = alive | F.col("file_path").contains(f"/data/{d}/")
-        del_dir_name = f"dvdelete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
-        # the shared runs-first writer (r15) handles everything the r14
-        # fold special-cased: layout choice (an accreted backlog of
-        # band deletes folds into a runs-sized ``ranges`` entry),
-        # size-aware write fan-out for the scattered form (from the
-        # EXACT folded volume — the stats pass runs before the write —
-        # not the r14 footer estimate), and the gate stats stamp (the
-        # fold must not launder a dense DV into an unstamped entry)
-        applies_to, stats, layout = self._dv_write_relation(
-            spark, out, merged.filter(alive), live_scope, namespace, table
+        live_dirs = set(manifest["files"])
+        live_scope = sorted(
+            {d for e in pos for d in e["applies_to"] if d in live_dirs}
         )
-        if layout is None:
-            # every address was dead after all: equality entries only
-            return self._commit(
-                namespace, table, None, operation="rewrite_to_dv",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep,
+        out, entry = None, None
+        if live_scope:
+            merged = None
+            for e in pos:
+                df = self._dv_positions_relation(
+                    spark.read.parquet(
+                        self._tbl(namespace, table, "deletes", e["dir"])
+                    ),
+                    e,
+                )
+                merged = df if merged is None else merged.unionByName(df)
+            # dead-address drop: match on the /data/<dirname>/ COMPONENT,
+            # not the absolute warehouse path — stored addresses are
+            # Spark _metadata URIs (file:…, percent-encoded), so an
+            # absolute-path substring would miss on any URI-escaped
+            # warehouse path and drop LIVE addresses; dir names are uuid
+            # hex and never escape (a false keep is harmless: the address
+            # simply never matches a scanned row)
+            alive = F.col("file_path").contains(f"/data/{live_scope[0]}/")
+            for d in live_scope[1:]:
+                alive = alive | F.col("file_path").contains(f"/data/{d}/")
+            # the shared runs-first writer picks the layout (an accreted
+            # backlog of band deletes folds into a runs-sized ``ranges``
+            # entry), fans the write out from the EXACT folded volume,
+            # and stamps the gate stats (the fold must not launder a
+            # dense DV into an unstamped entry)
+            out, entry = self._dv_write_entry(
+                spark, namespace, table, manifest,
+                merged.filter(alive).select(
+                    F.col("file_path").alias(self.POS_FILE_COL),
+                    F.col("pos").alias(self.POS_IDX_COL),
+                ),
             )
-        entry = {
-            "dir": del_dir_name,
-            "mode": "dv",
-            "layout": layout,
-            "applies_to": applies_to,
-            **stats,
-        }
+        # every address dead (every scoped dir since rewritten): the
+        # equality entries are published alone, with no DV at all
         try:
             return self._commit(
                 namespace, table, None, operation="rewrite_to_dv",
                 carry=False, base_sid=base, inherit_spec=True,
                 carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep + [entry],
+                extra_deletes=keep + ([entry] if entry else []),
             )
         except CommitConflict:
-            shutil.rmtree(out, ignore_errors=True)
+            if out:
+                shutil.rmtree(out, ignore_errors=True)
             raise
 
     def _pending_deletes(
@@ -2891,128 +2705,50 @@ class SnapCatalog:
             if set(e["applies_to"]) & set(dir_names)
         ]
 
-    def _dv_apply_mode(
-        self, manifest: dict, entry: dict, keys_df: DataFrame
-    ) -> str:
-        """Representation choice for the DV read apply — three plans by
-        measured shape, all decided from entry-stamped stats (no job):
+    def _dv_apply_mode(self, manifest: dict, entry: dict) -> str:
+        """Apply plan for a path-scoped delete entry — three plans, all
+        decided from the manifest entry (no job):
 
-        - ``probe`` (sparse): the file-count-sized relation broadcasts,
-          rows probe their file's sorted ordinal array. Shuffle-free;
-          per-row work O(positions-per-file), payload positions-sized —
-          both fine below the density/size gates.
-        - ``ranges`` (dense but contiguous): positions collapse to few
-          (start, end) runs — time-range deletes, partition drops — so
-          the broadcast payload and the per-row ``exists`` probe are
-          RUN-count-bounded at ANY density. Still shuffle-free.
-        - ``anti`` (dense and scattered): the only shape where nothing
-          small exists to broadcast; explode into a (file, pos)
-          anti-join — one hash exchange, linear work, bounded memory.
+        - ``ranges``: a stored ``layout: "ranges"`` DV broadcasts its
+          (starts, ends) run arrays as-is and rows probe their file's
+          runs. Shuffle-free; payload and per-row work are run-count-
+          bounded at any density (the writer only stores ranges inside
+          the ``DV_RANGE_PROBE_*`` bounds).
+        - ``probe``: a stamped positions-layout DV inside every
+          ``DV_PROBE_*`` bound broadcasts and rows probe their file's
+          sorted ordinal array. Shuffle-free; per-row work
+          O(positions-per-file), payload positions-sized — both fine
+          below the gates.
+        - ``anti``: everything else — dense DVs, unstamped legacy DVs
+          and legacy ``mode: "positional"`` files — expands through
+          ``_dv_positions_relation`` into one (file, pos) left-anti
+          join: one hash exchange, linear work, bounded memory.
 
         Dense means ANY of: doomed fraction of the scoped dirs' rows
         above ``DV_PROBE_MAX_DENSITY``, a single file carrying more than
         ``DV_PROBE_MAX_FILE_POSITIONS`` ordinals, or total positions
-        above ``DV_PROBE_MAX_TOTAL_POSITIONS``.
-
-        Contiguity beats density (r14): whenever positions outnumber
-        runs by ``DV_RANGES_PREFER_FACTOR`` and the run counts fit the
-        probe bounds, ``ranges`` wins outright — even at sparse density
-        the ordinal probe pays O(positions-per-file) per row while the
-        range probe pays O(runs-per-file), so a sparse-but-contiguous
-        band (a range delete over a range-organized file) must not fall
-        into the sparse ordinal plan."""
+        above ``DV_PROBE_MAX_TOTAL_POSITIONS``. Ranges are never derived
+        at read time: every shape the writer compresses is stored as
+        ranges, and on dense scattered entries the derived range probe
+        measured ~9x slower than the anti-join."""
+        if entry.get("layout") == "ranges":
+            return "ranges"
         n = entry.get("n_positions")
         mx = entry.get("max_file_positions")
-        if n is None or mx is None:
-            # legacy unstamped entry: one tiny aggregate, memoized per
-            # delete file (they are immutable) so repeat reads of an
-            # old warehouse don't pay a Spark job per scan forever
-            cached = self._legacy_dv_stats.get(entry["dir"])
-            if cached is None:
-                row = keys_df.select(
-                    F.sum(F.size("positions")).alias("n"),
-                    F.max(F.size("positions")).alias("mx"),
-                ).first()
-                cached = (int(row["n"] or 0), int(row["mx"] or 0))
-                self._legacy_dv_stats[entry["dir"]] = cached
-            n, mx = cached
-        mfr = entry.get("max_file_ranges")
-        nrt = entry.get("n_ranges")
-        ranges_fit = (
-            mfr is not None
-            and mfr <= self.DV_RANGE_PROBE_MAX_PER_FILE
-            and nrt is not None
-            and nrt <= self.DV_RANGE_PROBE_MAX_TOTAL_RANGES
-        )
-        # CONTIGUITY BEATS DENSITY (r14): when the ordinals collapse to
-        # far fewer runs than positions, the range probe strictly
-        # dominates the ordinal probe — payload AND per-row work drop
-        # from O(positions-per-file) to O(runs-per-file) — so prefer it
-        # even at sparse density. The motivating shape is a range
-        # predicate's MoR delete over a range-organized file: ~6k
-        # contiguous ordinals are ONE run, and probing a 6k-long array
-        # per row is ~6000× the work of one between() check (measured:
-        # snap_delete_auto's range lane, bench r14).
-        if ranges_fit and nrt and n >= self.DV_RANGES_PREFER_FACTOR * nrt:
-            return "ranges"
-        dense = (
+        if entry["mode"] != "dv" or n is None or mx is None:
+            return "anti"
+        if (
             mx > self.DV_PROBE_MAX_FILE_POSITIONS
             or n > self.DV_PROBE_MAX_TOTAL_POSITIONS
-        )
-        if not dense:
-            dir_rows = manifest.get("dir_rows") or {}
-            scoped = [dir_rows.get(d) for d in entry["applies_to"]]
-            if scoped and all(s is not None for s in scoped):
-                total = sum(scoped)
-                dense = bool(total) and n / total > self.DV_PROBE_MAX_DENSITY
-        if not dense:
-            return "probe"
-        if ranges_fit:
-            return "ranges"
-        return "anti"
-
-    @staticmethod
-    def _runs_of(positions) -> tuple[list[int], list[int]]:
-        """Collapse a SORTED, duplicate-free ordinal array into maximal
-        contiguous runs: returns (starts, ends), inclusive on both ends.
-        The pure kernel under the ranges apply — property-pinned in
-        tests/test_snaptable.py (every ordinal covered by exactly one
-        run, no run covers a non-member, runs are maximal)."""
-        import numpy as np
-
-        a = np.asarray(positions, dtype=np.int64)
-        if a.size == 0:
-            return [], []
-        brk = np.where(np.diff(a) != 1)[0]
-        starts = np.concatenate(([a[0]], a[brk + 1]))
-        ends = np.concatenate((a[brk], [a[-1]]))
-        return starts.tolist(), ends.tolist()
-
-    @staticmethod
-    def _dv_ranges_relation(keys_df: DataFrame) -> DataFrame:
-        """Collapse a DV relation's per-file sorted ordinal arrays into
-        (starts, ends) run arrays — executed over the FILE-count-sized
-        delete relation (Arrow-batched numpy diff per file row, never
-        per data row), so deriving ranges costs one tiny pass however
-        many rows they delete."""
-        import pandas as pd
-
-        runs_of = SnapCatalog._runs_of
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for fp, arr in zip(pdf["file_path"], pdf["positions"]):
-                    starts, ends = runs_of(arr)
-                    rows.append((fp, starts, ends))
-                yield pd.DataFrame(
-                    rows, columns=["file_path", "starts", "ends"]
-                )
-
-        return keys_df.select("file_path", "positions").mapInPandas(
-            gen,
-            schema="file_path string, starts array<long>, ends array<long>",
-        )
+        ):
+            return "anti"
+        dir_rows = manifest.get("dir_rows") or {}
+        scoped = [dir_rows.get(d) for d in entry["applies_to"]]
+        if scoped and all(s is not None for s in scoped):
+            total = sum(scoped)
+            if total and n / total > self.DV_PROBE_MAX_DENSITY:
+                return "anti"
+        return "probe"
 
     def _read_with_deletes(
         self,
@@ -3023,10 +2759,11 @@ class SnapCatalog:
         dir_names: list[str],
         partition_filters: list[str] | None = None,
     ) -> DataFrame:
-        """Scan with pending equality deletes applied: dirs are grouped by
-        their applicable delete-entry set; each group anti-joins its
-        delete keys (small side — broadcasts), groups union back. With no
-        pending deletes this is a plain scan.
+        """Scan with pending merge-on-read deletes applied: dirs are
+        grouped by their applicable delete-entry set; each group applies
+        its entries (equality keys anti-join, path-scoped entries take
+        the ``_dv_apply_mode`` plan), groups union back. With no pending
+        deletes this is a plain scan.
 
         ``partition_filters`` are predicates over the *hidden* partition
         columns of a transform-partitioned table (see
@@ -3054,10 +2791,10 @@ class SnapCatalog:
                 groups.setdefault(key, []).append(d)
             out = None
             for key, dirs in sorted(groups.items(), key=lambda kv: sorted(kv[0])):
-                # positional entries anti-join on the rows' physical
-                # (file, ordinal) address, which must be projected at
-                # SCAN time (hidden _metadata columns don't survive a
-                # union), so the group's read carries them when needed
+                # path-scoped entries match on the rows' physical (file,
+                # ordinal) address, which must be projected at SCAN time
+                # (hidden _metadata columns don't survive a union), so
+                # the group's read carries them when needed
                 needs_pos = any(
                     deletes[i].get("mode") in ("positional", "dv")
                     for i in key
@@ -3072,13 +2809,63 @@ class SnapCatalog:
                     ),
                     manifest,
                 )
+                pos_col = F.col(self.POS_IDX_COL)
                 for i in sorted(key):
                     e = deletes[i]
                     keys_df = spark.read.parquet(
                         self._tbl(namespace, table, "deletes", e["dir"])
                     )
-                    if e.get("mode") == "positional":
-                        doomed = keys_df.select(
+                    if e.get("mode") not in ("positional", "dv"):
+                        part = part.join(keys_df, e["key_cols"], "left_anti")
+                        continue
+                    mode = self._dv_apply_mode(manifest, e)
+                    if mode == "ranges":
+                        rng = keys_df.select(
+                            F.col("file_path").alias(self.POS_FILE_COL),
+                            F.col("starts").alias("_dv_starts"),
+                            F.col("ends").alias("_dv_ends"),
+                        )
+                        # zip_with, not arrays_zip: arrays_zip names its
+                        # struct fields after the input columns, which is
+                        # version-sensitive Spark behavior — a rename to
+                        # '0'/'1' would silently break the lambda's field
+                        # access. zip_with carries no field names.
+                        in_a_run = F.exists(
+                            F.zip_with(
+                                F.col("_dv_starts"),
+                                F.col("_dv_ends"),
+                                lambda s, e: (pos_col >= s) & (pos_col <= e),
+                            ),
+                            lambda hit: hit,
+                        )
+                        part = (
+                            part.join(
+                                F.broadcast(rng), [self.POS_FILE_COL], "left"
+                            )
+                            .filter(F.col("_dv_starts").isNull() | ~in_a_run)
+                            .drop("_dv_starts", "_dv_ends")
+                        )
+                    elif mode == "probe":
+                        dv = keys_df.select(
+                            F.col("file_path").alias(self.POS_FILE_COL),
+                            F.col("positions").alias("_dv_positions"),
+                        )
+                        part = (
+                            part.join(
+                                F.broadcast(dv), [self.POS_FILE_COL], "left"
+                            )
+                            .filter(
+                                F.col("_dv_positions").isNull()
+                                | ~F.array_contains(
+                                    F.col("_dv_positions"), pos_col
+                                )
+                            )
+                            .drop("_dv_positions")
+                        )
+                    else:
+                        doomed = self._dv_positions_relation(
+                            keys_df, e
+                        ).select(
                             F.col("file_path").alias(self.POS_FILE_COL),
                             F.col("pos").alias(self.POS_IDX_COL),
                         )
@@ -3087,108 +2874,6 @@ class SnapCatalog:
                             [self.POS_FILE_COL, self.POS_IDX_COL],
                             "left_anti",
                         )
-                    elif e.get("mode") == "dv":
-                        # deletion vector: one row per touched file.
-                        # SHAPE-GATED apply (_dv_apply_mode): sparse →
-                        # broadcast ordinal probe (shuffle-free);
-                        # dense-but-contiguous → broadcast RANGE probe
-                        # (run-count-bounded bytes and work at any
-                        # density, still shuffle-free);
-                        # dense-and-scattered → exploded (file, pos)
-                        # anti-join (one hash exchange, linear work).
-                        # A ``layout: "ranges"`` entry (r15 storage)
-                        # holds (starts, ends) run arrays, guaranteed
-                        # inside the probe bounds by its writer — the
-                        # ranges apply is forced (the other plans would
-                        # read a ``positions`` column that does not
-                        # exist, and at the stored >= 8x compression
-                        # the range probe dominates them anyway).
-                        layout = e.get("layout", "positions")
-                        mode = (
-                            "ranges"
-                            if layout == "ranges"
-                            else self._dv_apply_mode(manifest, e, keys_df)
-                        )
-                        if mode == "anti":
-                            doomed = keys_df.select(
-                                F.col("file_path").alias(self.POS_FILE_COL),
-                                F.explode("positions").alias(
-                                    self.POS_IDX_COL
-                                ),
-                            )
-                            part = part.join(
-                                doomed,
-                                [self.POS_FILE_COL, self.POS_IDX_COL],
-                                "left_anti",
-                            )
-                        elif mode == "ranges":
-                            # stored-ranges entries broadcast the file
-                            # AS IS — zero derivation; positions-layout
-                            # entries that the contiguity gate routed
-                            # here derive runs once over the
-                            # file-count-sized relation
-                            rng_src = (
-                                keys_df
-                                if layout == "ranges"
-                                else self._dv_ranges_relation(keys_df)
-                            )
-                            rng = rng_src.select(
-                                F.col("file_path").alias(
-                                    self.POS_FILE_COL
-                                ),
-                                F.col("starts").alias("_dv_starts"),
-                                F.col("ends").alias("_dv_ends"),
-                            )
-                            pos_col = F.col(self.POS_IDX_COL)
-                            # zip_with, not arrays_zip: arrays_zip names
-                            # its struct fields after the input columns,
-                            # which is version-sensitive Spark behavior —
-                            # a rename to '0'/'1' would silently break
-                            # the lambda's field access. zip_with carries
-                            # no field names to depend on.
-                            in_a_run = F.exists(
-                                F.zip_with(
-                                    F.col("_dv_starts"),
-                                    F.col("_dv_ends"),
-                                    lambda s, e: (pos_col >= s)
-                                    & (pos_col <= e),
-                                ),
-                                lambda hit: hit,
-                            )
-                            part = (
-                                part.join(
-                                    F.broadcast(rng),
-                                    [self.POS_FILE_COL],
-                                    "left",
-                                )
-                                .filter(
-                                    F.col("_dv_starts").isNull()
-                                    | ~in_a_run
-                                )
-                                .drop("_dv_starts", "_dv_ends")
-                            )
-                        else:
-                            dv = keys_df.select(
-                                F.col("file_path").alias(self.POS_FILE_COL),
-                                F.col("positions").alias("_dv_positions"),
-                            )
-                            part = (
-                                part.join(
-                                    F.broadcast(dv),
-                                    [self.POS_FILE_COL],
-                                    "left",
-                                )
-                                .filter(
-                                    F.col("_dv_positions").isNull()
-                                    | ~F.array_contains(
-                                        F.col("_dv_positions"),
-                                        F.col(self.POS_IDX_COL),
-                                    )
-                                )
-                                .drop("_dv_positions")
-                            )
-                    else:
-                        part = part.join(keys_df, e["key_cols"], "left_anti")
                 if needs_pos:
                     part = part.drop(self.POS_FILE_COL, self.POS_IDX_COL)
                 out = part if out is None else out.unionByName(
@@ -3715,12 +3400,7 @@ class SnapCatalog:
                 break
             except FileExistsError:
                 continue  # metadata-only: recompute on the new head
-        cur_tmp = self._tbl(
-            namespace, table, f"_current.tmp-{uuid.uuid4().hex}"
-        )
-        with open(cur_tmp, "w") as f:
-            f.write(str(sid))
-        os.replace(cur_tmp, self._tbl(namespace, table, "_current"))
+        self._write_current_hint(namespace, table, sid)
         return sid
 
     def rename_column(
@@ -3918,9 +3598,7 @@ class SnapCatalog:
                     "directory names embed it — rewrite the layout first"
                 )
             for e in cur.get("deletes") or []:
-                if e.get("mode") != "positional" and old in e.get(
-                    "key_cols", []
-                ):
+                if old in e.get("key_cols", []):
                     raise ValueError(
                         f"column {old!r} is referenced by a pending "
                         "equality-delete entry; compact() first"
@@ -4592,7 +4270,7 @@ class SnapCatalog:
         - ``n_data_dirs`` high + ``n_small_dirs`` high → ``compact()``
           (or ``compact_manifests`` when only the entry count hurts),
         - ``n_pending_delete_entries`` > 0 → merge-on-read debt;
-          ``compact_position_deletes`` / ``compact()`` fold it,
+          ``rewrite_deletes_to_dv`` / ``compact()`` fold it,
         - ``n_snapshots`` ≫ ``n_current_ancestors`` → rolled-back or
           superseded history; ``expire_snapshots`` reclaims it (minus
           the ``n_refs``-pinned heads),
@@ -5015,14 +4693,21 @@ class SnapCatalog:
                     f"{namespace}.{table}: snapshot {sid} was committed "
                     "concurrently; re-run this operation on the new state"
                 ) from None
-        # _current is a convenience hint only; reads derive the current id
-        # from the manifest set (_current_sid) — so a failed hint write
-        # must NOT raise: the commit is already PUBLISHED (the manifest
-        # was exclusively created above), and an exception escaping here
-        # would reach callers' cleanup handlers, which sweep data/delete
-        # dirs on the assumption nothing was published — turning a
-        # cosmetic I/O error into a published snapshot referencing
-        # deleted files.
+        self._write_current_hint(namespace, table, sid)
+        return sid
+
+    def _write_current_hint(self, namespace: str, table: str, sid: int) -> None:
+        """Point the ``_current`` hint at a just-published snapshot.
+
+        The hint is a convenience only; reads derive the current id from
+        the manifest set (_current_sid) — so a failed hint write must
+        NOT raise: the commit is already PUBLISHED (the manifest was
+        exclusively created before this call), and an exception escaping
+        here would report a landed commit as failed (a retry then runs
+        against the new state) and reach callers' cleanup handlers,
+        which sweep data/delete dirs on the assumption nothing was
+        published — turning a cosmetic I/O error into a published
+        snapshot referencing deleted files."""
         try:
             cur_tmp = self._tbl(
                 namespace, table, f"_current.tmp-{uuid.uuid4().hex}"
@@ -5032,4 +4717,3 @@ class SnapCatalog:
             os.replace(cur_tmp, self._tbl(namespace, table, "_current"))
         except OSError:
             pass
-        return sid

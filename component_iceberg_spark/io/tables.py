@@ -104,11 +104,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register fixture tables as temp views for the SQL API."""
-    for name in tables:
-        p = table_path(sf_dir, name)
-        if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(name)

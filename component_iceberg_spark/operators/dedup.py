@@ -36,6 +36,12 @@ ROWS_PER_BAND = NUM_HASHES // BANDS
 SHINGLE_N = 3
 
 
+def _quote_ident(name: str) -> str:
+    """Backtick-quote an identifier for SQL text (embedded backticks
+    doubled), so reserved words and odd names parse as column names."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def doc_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, shingle) pairs, distinct per doc.
 
@@ -366,7 +372,7 @@ def incremental_minhash_pairs(
     # exact verification re-reads corpus TEXT only for candidate docs —
     # a candidate-sized semi-join + shingle pass, never a corpus scan
     corpus_cand = corpus.join(
-        cand.selectExpr(f"doc_corpus AS {id_col}").distinct(),
+        cand.selectExpr(f"doc_corpus AS {_quote_ident(id_col)}").distinct(),
         id_col,
         "left_semi",
     )
@@ -392,7 +398,7 @@ def incremental_minhash_pairs(
             "round((cast(i AS double) * 1.0D)"
             " / cast(ca.n + cb2.n - i AS double), 6) AS jaccard",
         )
-        .filter(F.expr(f"jaccard >= {threshold!r}D"))
+        .filter(F.expr(f"jaccard >= {float(threshold)!r}D"))
     )
 
 
@@ -451,7 +457,7 @@ def screened_drop_ids(
         )
         cand = cand.unionByName(cross)
         prior_cand = prior.join(
-            cand.selectExpr(f"other AS {id_col}").distinct(),
+            cand.selectExpr(f"other AS {_quote_ident(id_col)}").distinct(),
             id_col,
             "left_semi",
         )
@@ -481,11 +487,11 @@ def screened_drop_ids(
         .filter(
             F.expr(
                 "(cast(i AS double) * 1.0D) / cast(na + nb - i AS double)"
-                f" >= {threshold!r}D"
+                f" >= {float(threshold)!r}D"
             )
         )
     )
-    return verified.selectExpr(f"`drop` AS {id_col}").distinct()
+    return verified.selectExpr(f"`drop` AS {_quote_ident(id_col)}").distinct()
 
 
 # ---------------------------------------------------------------------------

@@ -626,32 +626,37 @@ def snap_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "snapshot"),
 )
 def snap_delete_mor_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read POSITIONAL delete (the other Iceberg v2 delete-file
-    format, the one compaction engines emit: (file_path, pos) rows; the
-    equality format is ``snap_delete_mor``). The scenario deletes
-    specific duplicate OCCURRENCES — a row identity no equality delete
-    can express, because both copies carry identical column values:
+    """Merge-on-read POSITION delete (deletes by physical (file_path,
+    pos) address; the equality format is ``snap_delete_mor``). The
+    scenario deletes specific duplicate OCCURRENCES — a row identity no
+    equality delete can express, because both copies carry identical
+    column values:
 
     1. commit the orders table, then append exact copies of every
        o_orderkey % 10 == 0 row (duplicates by VALUE);
-    2. author a positional delete for every occurrence AFTER the first
+    2. author a position delete for every occurrence AFTER the first
        per key: ``read_with_positions`` exposes each row's physical
        (file, ordinal) address, a key-partitioned row_number orders the
-       occurrences, and the rn >= 2 addresses land in a small
-       positional-delete file — a metadata-only commit, no data rewrite
-       (at 100 TB the window shuffles (key, address) pairs only, never
-       payload columns);
+       occurrences, and ``delete_positions`` writes the rn >= 2
+       addresses as a deletion vector (the Iceberg v3 successor of the
+       v2 position-delete file) — a metadata-only commit, no data
+       rewrite (at 100 TB the window shuffles (key, address) pairs
+       only, never payload columns);
     3. append fresh copies of the o_orderkey < 30 duplicates — these
        must NOT be masked (positions name FILES, so later rows are
        physically out of scope: Iceberg's sequence-number rule with an
        even stronger address-level guarantee).
 
-    The read anti-joins each scoped group on (file, ordinal);
-    ``compact`` materializes pending positional deletes exactly like
+    The read masks each scoped group by (file, ordinal). Which copy is
+    doomed follows the (random) data-file paths, so the DV is either one
+    contiguous run over the appended file (stored as ranges, applied by
+    the broadcast range probe) or every tenth row of the original file
+    (dense scattered, applied by the anti-join) — exact either way.
+    ``compact`` materializes pending position deletes exactly like
     equality ones (pinned in tests/test_snaptable.py), and
-    ``compact_manifests`` refuses to fold positional-covered dirs (the
-    fold hard-links files under new basenames, which would orphan the
-    stored addresses)."""
+    ``compact_manifests`` refuses to fold DV-covered dirs (the fold
+    hard-links files under new basenames, which would orphan the stored
+    addresses)."""
     from pyspark.sql import Window
 
     from component_iceberg_spark.plans.queries_mutation import _warehouse
@@ -691,14 +696,14 @@ def snap_delete_mor_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snap_rewrite_pos_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete-file maintenance (Iceberg ``rewrite_position_delete_files``
-    analogue): two positional-delete commits accrete two small delete
-    files — each costs the read one anti-join pass —
-    ``compact_position_deletes`` merges them into ONE file (deduped,
-    dead addresses dropped) without touching data files, and the read
-    after the rewrite must equal the read before it. Scope-widening to
-    the union is safe precisely because positions are physically
-    file-scoped (see the method docstring); the read after maintenance
-    runs ONE anti-join where it ran two."""
+    analogue): two position-delete commits accrete two small DVs — each
+    costs the read one apply pass — ``rewrite_deletes_to_dv`` folds
+    them into ONE stamped DV (deduped, dead addresses dropped) without
+    touching data files, and the read after the rewrite must equal the
+    read before it. Scope-widening to the union is safe precisely
+    because positions are physically file-scoped (see the method
+    docstring); the read after maintenance runs ONE apply pass where it
+    ran two."""
     from component_iceberg_spark.plans.queries_mutation import _warehouse
 
     cat = _warehouse(sf_dir, "pos_rewrite")
@@ -722,7 +727,7 @@ def snap_rewrite_pos_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             cat.POS_FILE_COL, cat.POS_IDX_COL
         ),
     )
-    cat.compact_position_deletes(spark, "ns", "orders")
+    cat.rewrite_deletes_to_dv(spark, "ns", "orders")
     return cat.read(spark, "ns", "orders")
 
 
@@ -739,19 +744,16 @@ def snap_rewrite_pos_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snap_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read DELETE as a DELETION VECTOR (the Iceberg v3 /
-    Delta-DV third delete format, after r2's equality and r11's
-    positional files): the scenario deletes a DENSE third of the table
-    — exactly the density where the positional-file format stops being
-    economic. The DV entry stores ONE row per touched data file with
-    the sorted array of deleted ordinals — storage stays one
-    run-length-friendly row per file whatever the density. The read
-    APPLY is density-gated (r13, ``_dv_apply_mode``): this dense
-    third exceeds the probe gate, so the read explodes the DV into one
-    (file, pos) anti-join — bounded probe work and no positions-sized
-    broadcast — while a sparse DV applies as the shuffle-free broadcast
-    probe (both branches pinned in tests/test_shuffle_volume.py). A
-    later append of deleted keys must NOT be masked — DV addresses name
-    files, the same physical scoping as positional entries.
+    Delta-DV delete format) at DENSE SCATTERED density: a third of the
+    table, every third key. The DV entry stores ONE row per touched
+    data file with the sorted array of deleted ordinals — storage stays
+    one row per file whatever the density. The read APPLY is
+    density-gated (``_dv_apply_mode``): this dense third exceeds the
+    probe gate, so the read explodes the DV into one (file, pos)
+    anti-join — bounded probe work and no positions-sized broadcast —
+    while a sparse DV applies as the shuffle-free broadcast probe (both
+    branches pinned in tests/test_shuffle_volume.py). A later append of
+    deleted keys must NOT be masked — DV addresses name files.
     Maintenance: ``rewrite_deletes_to_dv`` (``snap_rewrite_to_dv``);
     fold/compaction contracts pinned in tests/test_snaptable.py."""
     from component_iceberg_spark.plans.queries_mutation import _warehouse
@@ -765,7 +767,7 @@ def snap_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     doomed = addressed.filter(F.col("o_orderkey") % 3 == 0).select(
         cat.POS_FILE_COL, cat.POS_IDX_COL
     )
-    cat.delete_positions_dv(spark, "ns", "orders", doomed)
+    cat.delete_positions(spark, "ns", "orders", doomed)
     reborn = o.filter(
         (F.col("o_orderkey") % 3 == 0) & (F.col("o_orderkey") < 30)
     )
@@ -791,10 +793,11 @@ def snap_delete_dv_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion vector at DENSE-CONTIGUOUS density — the realistic dense
     shape (a time-range / key-band delete: 40% of the table in one
     contiguous band). Ordinals collapse to a handful of (start, end)
-    RUNS per file, so the r13 shape gate (``_dv_apply_mode``) keeps the
-    apply a shuffle-free broadcast probe — run-count-bounded payload and
-    per-row work at ANY delete density — where the scattered-dense twin
-    (``snap_delete_dv``, every 3rd key) must fall back to the anti-join.
+    RUNS per file, so the writer stores the ranges layout and the read
+    applies it as a shuffle-free broadcast range probe — run-count-
+    bounded payload and per-row work at ANY delete density — where the
+    scattered-dense twin (``snap_delete_dv``, every 3rd key) must fall
+    back to the anti-join.
     Same physical scoping: a later re-append of deleted keys is not
     masked. Plan choice pinned in tests/test_shuffle_volume.py; rows
     oracle-exact regardless of the representation (physical, not
@@ -809,7 +812,7 @@ def snap_delete_dv_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = o.agg(F.max("o_orderkey")).collect()[0][0]
     band = int(hi * 0.4)
     addressed = cat.read_with_positions(spark, "ns", "orders")
-    cat.delete_positions_dv(
+    cat.delete_positions(
         spark, "ns", "orders",
         addressed.filter(F.col("o_orderkey") <= band).select(
             cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -981,17 +984,17 @@ def snap_update_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "snapshot"),
 )
 def snap_rewrite_to_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed-format delete maintenance: one POSITIONAL-file commit and
-    one DV commit accrete against the same table, then
-    ``rewrite_deletes_to_dv`` folds BOTH into a single deletion vector
-    (dead addresses dropped, scope unioned) without touching data
-    files — the DV-era ``rewrite_position_delete_files``. The read
-    after the rewrite must equal the read before it; afterwards the
-    read pays ONE apply pass where it paid one per entry (the folded
-    entry carries position stats, so the density gate picks broadcast
-    probe vs anti-join without a job — this ~31%-doomed fold lands on
-    the anti-join branch). This is the upgrade path a table follows
-    when its accreted v2 positional files are rewritten into v3 DVs."""
+    """Dense delete maintenance: two scattered position-delete commits
+    accrete against the same table, then ``rewrite_deletes_to_dv``
+    folds BOTH into a single deletion vector (dead addresses dropped,
+    scope unioned) without touching data files — the DV-era
+    ``rewrite_position_delete_files``. The read after the rewrite must
+    equal the read before it; afterwards the read pays ONE apply pass
+    where it paid one per entry (the folded entry carries position
+    stats, so the density gate picks broadcast probe vs anti-join
+    without a job — this ~31%-doomed fold lands on the anti-join
+    branch). The same fold upgrades a table's legacy v2 positional
+    files into a v3 DV (pinned in tests/test_snaptable.py)."""
     from component_iceberg_spark.plans.queries_mutation import _warehouse
 
     cat = _warehouse(sf_dir, "dv_rewrite")
@@ -1009,7 +1012,7 @@ def snap_rewrite_to_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             cat.POS_FILE_COL, cat.POS_IDX_COL
         ),
     )
-    cat.delete_positions_dv(
+    cat.delete_positions(
         spark, "ns", "orders",
         addressed.filter(F.col("o_orderkey") % 7 == 0).select(
             cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -1042,16 +1045,14 @@ def snap_dv_ranges_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     band delete persists ``(file_path, starts, ends)`` run arrays
     directly — entry ``layout: "ranges"``, runs-sized bytes instead of
     one long per doomed row — and the read broadcasts the stored file
-    with ZERO derivation (the r13/r14 path derived runs from ordinal
-    arrays at read time; storage was still positions-sized). The
-    scenario drives the full layout lifecycle and VERIFIES each step
-    in-query (manifest inspection — a wrong layout fails the gate):
-    a ~30% prefix-band DV stores as ranges; a second band arrives as a
-    POSITIONAL file (the v2 format); ``rewrite_deletes_to_dv`` folds
-    ranges + positional into ONE ranges-layout DV (the ranges entry
-    round-trips through position expansion and re-compresses); a
-    re-append of deleted keys is not masked (physical file scoping).
-    Layout choice, no-derivation plan, and write fan-out pinned in
+    as-is. The scenario drives the full layout lifecycle and VERIFIES
+    each step in-query (manifest inspection — a wrong layout fails the
+    gate): a ~30% prefix-band DV stores as ranges; a second band lands
+    as a second DV; ``rewrite_deletes_to_dv`` folds both into ONE
+    ranges-layout DV (each entry round-trips through position
+    expansion and re-compresses); a re-append of deleted keys is not
+    masked (physical file scoping).
+    Layout choice, stored-ranges plan, and write fan-out pinned in
     tests/test_snaptable.py::test_dv_ranges_storage_layout and
     ::test_dv_write_entry_fans_out_large_scattered."""
     from component_iceberg_spark.plans.queries_mutation import _warehouse
@@ -1066,7 +1067,7 @@ def snap_dv_ranges_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     addressed = cat.read_with_positions(spark, "ns", "orders")
     # both doomed sets from the SAME pre-delete addressing (authoring
     # over pending deletes is refused; files are immutable)
-    cat.delete_positions_dv(
+    cat.delete_positions(
         spark, "ns", "orders",
         addressed.filter(F.col("o_orderkey") <= b1).select(
             cat.POS_FILE_COL, cat.POS_IDX_COL

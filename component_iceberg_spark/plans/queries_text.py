@@ -1368,12 +1368,6 @@ def _h32(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
-def _u01(col: F.Column) -> F.Column:
-    """Deterministic uniform [0,1) draw from a column (md5-prefix / 2^32);
-    bit-identical to the oracle's ({_u32_sql(...)}) / 2^32 lane."""
-    return _h32(col).cast("double") / F.lit(4294967296.0)
-
-
 def _domain_mix_oracle() -> str:
     # uniform hash u(doc) ∈ [0,1): first 8 hex chars of md5(doc_id) as a
     # 32-bit int (nibble-by-nibble, DuckDB has no base-conv builtin),

@@ -56,6 +56,48 @@ def plan_formatted(df) -> str:
     return buf.getvalue()
 
 
+def write_legacy_delete(cat, ns, table, pos_df, mode="positional"):
+    """Commit a path-scoped delete entry in a shape no current writer
+    produces, the way older warehouses hold them: ``mode="positional"``
+    is a v2 position-delete file (one (file_path, pos) row per doomed
+    row); ``mode="dv"`` is an UNSTAMPED positions-layout deletion vector
+    (one sorted ordinal array per touched file, no ``layout`` key and no
+    position stats). ``pos_df`` carries ``_pos_file``/``_pos_idx`` as
+    ``read_with_positions`` exposes them. Returns the new snapshot id."""
+    import re
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    base = cat._current_sid(ns, table)
+    manifest = cat._manifest(ns, table, base)
+    rows = pos_df.select(
+        F.col(cat.POS_FILE_COL).alias("file_path"),
+        F.col(cat.POS_IDX_COL).cast("long").alias("pos"),
+    ).distinct()
+    if mode == "dv":
+        rows = rows.groupBy("file_path").agg(
+            F.array_sort(F.collect_list("pos")).alias("positions")
+        )
+    name = f"legacy-{uuid.uuid4().hex[:12]}"
+    rows.coalesce(1).write.parquet(cat._tbl(ns, table, "deletes", name))
+    dir_re = re.compile(re.escape(f"/{ns}/{table}/data/") + r"([^/]+)/")
+    touched = {
+        dir_re.search(r.file_path).group(1)
+        for r in rows.select("file_path").distinct().collect()
+    }
+    entry = {
+        "dir": name,
+        "mode": mode,
+        "applies_to": sorted(d for d in manifest["files"] if d in touched),
+    }
+    return cat._commit(
+        ns, table, None, operation="delete", carry=False, base_sid=base,
+        inherit_spec=True, carry_dirs=list(manifest["files"]),
+        extra_deletes=[entry],
+    )
+
+
 def _canon(v):
     """Canonicalize a cell for order-insensitive multiset comparison."""
     if v is None:

@@ -754,6 +754,50 @@ def test_screened_drop_ids_matches_two_pipeline_form(spark):
     assert fused == (intra | cross)
 
 
+def test_minhash_screen_hostile_id_column_and_scalar_thresholds(spark):
+    """incremental_minhash_pairs and screened_drop_ids render the
+    caller's id column and threshold into SQL text: a reserved-word id
+    column (``select``) must parse as a column name, and numpy.float64
+    / Decimal thresholds must give exactly the plain-float result."""
+    import decimal
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from component_iceberg_spark.operators import dedup as D
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank "
+    rows = [
+        (i, base * 3 + f"tail {i % 10} unique words {'x' * (i % 4)}")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def run(frame, id_col, threshold):
+        prior = frame.filter(F.col(id_col) < 20)
+        batch = frame.filter(F.col(id_col) >= 20)
+        prior_profile = D.corpus_minhash_profile(prior, id_col, "text")
+        batch_profile = D.corpus_minhash_profile(batch, id_col, "text")
+        drops = D.screened_drop_ids(
+            batch, batch_profile, id_col, "text", threshold,
+            prior=prior, prior_profile=prior_profile,
+        )
+        pairs = D.incremental_minhash_pairs(
+            prior, batch, id_col, "text", threshold
+        )
+        assert drops.columns == [id_col]
+        return (
+            {r[0] for r in drops.collect()},
+            {tuple(r) for r in pairs.collect()},
+        )
+
+    want = run(df, "doc_id", 0.8)
+    assert want[0] and want[1], "fixture must produce drops and pairs"
+    assert run(df.withColumnRenamed("doc_id", "select"), "select", 0.8) == want
+    assert run(df, "doc_id", np.float64(0.8)) == want
+    assert run(df, "doc_id", decimal.Decimal("0.8")) == want
+
+
 def _model_merge(
     base: dict[int, int],
     source: dict[int, int],
@@ -1951,38 +1995,84 @@ def test_intersect_join_presence_semantics(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# DV run (range) encoding — the pure kernel under the r13 ranges apply
+# DV run encoding — the per-file runs _dv_write_relation stores and stamps
 # ---------------------------------------------------------------------------
 
-
-@settings(max_examples=300, deadline=None)
-@given(
-    st.sets(st.integers(min_value=0, max_value=10_000), max_size=400)
+_segments = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=400),
+        st.integers(min_value=1, max_value=60),
+    ),
+    min_size=1,
+    max_size=6,
 )
-def test_dv_runs_encoding_is_exact_cover(positions):
-    """_runs_of (the kernel the broadcast range probe applies): the runs
-    must cover exactly the input set — every ordinal inside exactly one
-    [start, end], no run covering a non-member, runs sorted, disjoint,
-    maximal (adjacent runs never touch), and total run length equals the
-    input size. Whatever hypothesis draws — empty, singletons, long
-    bands, scattered — a violation here is a wrong DELETE at read time."""
-    from component_iceberg_spark.io.snaptable import SnapCatalog
 
-    sorted_pos = sorted(positions)
-    starts, ends = SnapCatalog._runs_of(sorted_pos)
-    assert len(starts) == len(ends)
-    covered = set()
-    prev_end = None
-    for s, e in zip(starts, ends):
-        assert s <= e
-        if prev_end is not None:
-            # maximality: a gap of exactly 1 would mean two runs that
-            # should have been merged
-            assert s > prev_end + 1
-        covered.update(range(s, e + 1))
-        prev_end = e
-    assert covered == set(positions)
-    assert sum(e - s + 1 for s, e in zip(starts, ends)) == len(positions)
+
+def _runs(sorted_pos):
+    runs = []
+    for p in sorted_pos:
+        if runs and runs[-1][1] == p - 1:
+            runs[-1][1] = p
+        else:
+            runs.append([p, p])
+    return runs
+
+
+@pytest.mark.parametrize("hyp", [None])
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(seg_a=_segments, seg_b=_segments, cap=st.sampled_from([2, 60]))
+def test_dv_write_runs_are_exact_cover(
+    spark, tmp_path, hyp, seg_a, seg_b, cap
+):
+    """The run arrays the DV writer derives per file (and stores as the
+    ranges layout, or expands into the positions layout) cover exactly
+    the distinct addressed ordinals — overlapping segments put duplicate
+    addresses in the input — and are maximal: the stamped position and
+    run counts equal a plain-Python run split, whichever layout the
+    writer picks (segment lengths capped at 2 keep the input scattered,
+    so the positions layout is drawn too). A violation here is a wrong
+    DELETE at read time."""
+    import uuid
+
+    wh = str(tmp_path / uuid.uuid4().hex)
+    cat = SnapCatalog(wh)
+    files = {
+        f"file:{wh}/ns/t/data/{d}/part-0.parquet": [
+            p for s, n in seg for p in range(s, s + min(n, cap))
+        ]
+        for d, seg in (("da", seg_a), ("db", seg_b))
+    }
+    rel = spark.createDataFrame(
+        [(f, p) for f, ps in files.items() for p in ps],
+        "file_path string, pos long",
+    )
+    out = f"{wh}/dv"
+    applies_to, stats, layout = cat._dv_write_relation(
+        spark, out, rel, ["da", "db"], "ns", "t"
+    )
+    want = {f: sorted(set(ps)) for f, ps in files.items()}
+    runs = {f: _runs(ps) for f, ps in want.items()}
+    assert applies_to == ["da", "db"]
+    assert stats == {
+        "n_positions": sum(len(ps) for ps in want.values()),
+        "max_file_positions": max(len(ps) for ps in want.values()),
+        "n_ranges": sum(len(r) for r in runs.values()),
+        "max_file_ranges": max(len(r) for r in runs.values()),
+    }
+    stored = spark.read.parquet(out)
+    if layout == "ranges":
+        got = {
+            r.file_path: [list(t) for t in zip(r.starts, r.ends)]
+            for r in stored.collect()
+        }
+        assert got == runs
+    else:
+        got = {r.file_path: list(r.positions) for r in stored.collect()}
+        assert got == want
 
 
 @settings(max_examples=500, deadline=None)

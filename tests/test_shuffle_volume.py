@@ -231,16 +231,18 @@ def test_frequent_best_shuffle_is_state_sized(
 
 def test_dv_read_shuffle_free_vs_positional(spark, sf_dir):
     """The DV format's 100 TB claim, in bytes, at the density the probe
-    is FOR (sparse — below the r13 density gate): the positional-file
-    format anti-joins a row-count-sized build side — under the no-auto-
-    broadcast regime (what a 100 TB build side forces) that plan
-    hash-exchanges the whole scan — while the DV relation broadcasts and
-    the read shuffles ~NOTHING. Same table, same doomed rows, two
-    formats. (The DENSE regime, where the gate flips the DV apply to
-    the anti-join, is pinned by test_dv_read_density_gate_flips_apply.)"""
+    is FOR (sparse — below the density gate): what ``delete_positions``
+    authors (a stamped DV) broadcasts and the read shuffles ~NOTHING,
+    while a legacy v2 positional file anti-joins a row-count-sized
+    build side — under the no-auto-broadcast regime (what a 100 TB
+    build side forces) that plan hash-exchanges the whole scan. Same
+    table, same doomed rows, two formats. (The DENSE regime, where the
+    gate flips the DV apply to the anti-join, is pinned by
+    test_dv_read_density_gate_flips_apply.)"""
     from pyspark.sql import functions as F
 
     from component_iceberg_spark.io.snaptable import SnapCatalog
+    from tests.conftest import write_legacy_delete
 
     wh_root = "/tmp/cis_scratch/vol_pin_dv"
     shutil.rmtree(wh_root, ignore_errors=True)
@@ -258,9 +260,13 @@ def test_dv_read_shuffle_free_vs_positional(spark, sf_dir):
             cat.POS_FILE_COL, cat.POS_IDX_COL
         )
         if fmt == "dv":
-            cat.delete_positions_dv(spark, "ns", "t", doomed)
-        else:
             cat.delete_positions(spark, "ns", "t", doomed)
+            (entry,) = cat._manifest(
+                "ns", "t", cat._current_sid("ns", "t")
+            )["deletes"]
+            assert entry["layout"] == "positions", entry
+        else:
+            write_legacy_delete(cat, "ns", "t", doomed)
         reads[fmt] = cat, "ns", "t"
     want = o.filter("o_orderkey % 97 <> 0").count()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -287,14 +293,14 @@ def test_dv_read_shuffle_free_vs_positional(spark, sf_dir):
 
 
 def test_dv_read_density_gate_flips_apply(spark, sf_dir):
-    """The r13 shape gate, pinned on all THREE apply plans over the SAME
-    table (VERDICT r12 #2): a sparse DV (~1% doomed) applies as the
-    broadcast ordinal probe (BroadcastExchange + array_contains, no
-    exchange of the scan); a dense SCATTERED DV (a third doomed, every
-    3rd ordinal — runs don't compress) flips to the exploded (file, pos)
-    LeftAnti join — no probe, no positions-sized broadcast (the ADVICE
-    r12 OOM vector), linear work; a dense CONTIGUOUS DV (a prefix band —
-    the realistic dense shape: time-range delete) collapses to
+    """The shape gate, pinned on all THREE apply plans over the SAME
+    table: a sparse DV (~1% doomed) applies as the broadcast ordinal
+    probe (BroadcastExchange + array_contains, no exchange of the
+    scan); a dense SCATTERED DV (a third doomed, every 3rd ordinal —
+    runs don't compress) flips to ONE exploded (file, pos) LeftAnti
+    join — no probe, no positions-sized broadcast, no Python range
+    derivation, linear work; a dense CONTIGUOUS DV (a prefix band — the
+    realistic dense shape: time-range delete) is stored as
     run-count-bounded ranges and stays a shuffle-free broadcast probe at
     ANY density (BroadcastExchange + the _dv_starts range probe, no
     LeftAnti, no array_contains)."""
@@ -325,7 +331,7 @@ def test_dv_read_density_gate_flips_apply(spark, sf_dir):
             cat = SnapCatalog(os.path.join(wh_root, label))
             cat.create_or_replace("ns", "t", o)
             addressed = cat.read_with_positions(spark, "ns", "t")
-            cat.delete_positions_dv(
+            cat.delete_positions(
                 spark, "ns", "t",
                 addressed.filter(pred).select(
                     cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -334,12 +340,11 @@ def test_dv_read_density_gate_flips_apply(spark, sf_dir):
             df = cat.read(spark, "ns", "t")
             assert df.count() == n - o.filter(pred).count(), label
             plans[label] = df._jdf.queryExecution().executedPlan().toString()
-        # r14 contiguity preference, its own deterministic fixture (the
-        # orders fixture's rows-per-file sits below the 64x prefer
-        # factor at test SF): 20k rows in 4 range-disjoint files, a 4%
-        # prefix band = 800 positions in ONE run — sparse by every
-        # density gate, yet the ordinal probe would pay 800 comparisons
-        # per row where the range probe pays one between()
+        # contiguity at sparse density, its own deterministic fixture:
+        # 20k rows in 4 range-disjoint files, a 4% prefix band = 800
+        # positions in ONE run — sparse by every density gate, yet the
+        # ordinal probe would pay 800 comparisons per row where the
+        # stored range probe pays one between()
         cat = SnapCatalog(os.path.join(wh_root, "sparse_contiguous"))
         ids = spark.range(20_000).select(
             F.col("id"), (F.col("id") * 2).alias("v")
@@ -348,7 +353,7 @@ def test_dv_read_density_gate_flips_apply(spark, sf_dir):
             "ns", "t", ids.repartitionByRange(4, "id")
         )
         addressed = cat.read_with_positions(spark, "ns", "t")
-        cat.delete_positions_dv(
+        cat.delete_positions(
             spark, "ns", "t",
             addressed.filter("id < 800").select(
                 cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -370,7 +375,8 @@ def test_dv_read_density_gate_flips_apply(spark, sf_dir):
     assert "array_contains" not in scat and "BroadcastExchange" not in scat, (
         scat
     )
-    assert "LeftAnti" in scat, scat
+    assert scat.count("LeftAnti") == 1, scat
+    assert "_dv_starts" not in scat and "MapInPandas" not in scat, scat
     cont = plans["dense_contiguous"]
     assert "_dv_starts" in cont and "BroadcastExchange" in cont, cont
     assert "LeftAnti" not in cont and "array_contains" not in cont, cont

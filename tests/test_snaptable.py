@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from component_iceberg_spark.io.snaptable import SnapCatalog
 from component_iceberg_spark.io.tables import load_table
+from tests.conftest import write_legacy_delete
 
 
 def _data_files(wh: str, ns: str, tbl: str, commit_dirs: list[str]) -> int:
@@ -519,11 +520,11 @@ def test_merge_on_read_delete_cycle(spark, sf_dir, tmp_path):
 
 
 def test_positional_delete_cycle(spark, sf_dir, tmp_path):
-    """Positional-delete files ((file_path, pos), the second Iceberg v2
-    delete format): no data rewrite at delete time; reads mask exactly
-    the addressed rows; later appends are physically out of scope;
-    compaction materializes and clears them — the same contract as the
-    equality-delete cycle."""
+    """Position deletes (authored by (file_path, pos) address, stored
+    as a deletion vector): no data rewrite at delete time; reads mask
+    exactly the addressed rows; later appends are physically out of
+    scope; compaction materializes and clears them — the same contract
+    as the equality-delete cycle."""
     import pytest
 
     wh = str(tmp_path / "wh")
@@ -545,7 +546,7 @@ def test_positional_delete_cycle(spark, sf_dir, tmp_path):
     # metadata-only: no new data dir
     assert set(os.listdir(data_root)) == dirs_before
     (entry,) = cat._manifest("ns", "t", sid)["deletes"]
-    assert entry["mode"] == "positional"
+    assert entry["mode"] == "dv" and entry["n_positions"] > 0
     want = o.filter("o_orderkey >= 100").count()
     assert cat.read(spark, "ns", "t").count() == want
     # position columns never leak into the user schema
@@ -564,7 +565,7 @@ def test_positional_delete_cycle(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="pending"):
         cat.read_with_positions(spark, "ns", "t")
 
-    # compaction folds the positional deletes in and clears the entries
+    # compaction folds the position deletes in and clears the entries
     sid = cat.compact(spark, "ns", "t")
     m = cat._manifest("ns", "t", sid)
     assert m["deletes"] == []
@@ -611,137 +612,15 @@ def test_partitions_meta_hidden_spec(spark, sf_dir, tmp_path):
     assert cat.POS_FILE_COL in rp.columns
 
 
-def test_compact_position_deletes(spark, sf_dir, tmp_path):
-    """rewrite_position_delete_files analogue: N pending positional
-    delete files merge into ONE (reads identical, one anti-join pass
-    instead of N), scope-widening is safe (positions are physically
-    file-scoped), dead addresses from CoW-rewritten dirs are dropped,
-    and equality entries ride along unchanged."""
-    wh = str(tmp_path / "wh")
-    cat = SnapCatalog(wh)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cat.create_or_replace("ns", "t", o.filter("o_orderkey < 800"))
-    cat.append("ns", "t", o.filter("o_orderkey >= 800"))
-
-    # three small positional deletes, authored one clean snapshot at a
-    # time via compact-free reads (read_with_positions refuses pending
-    # deletes, so address everything up front)
-    addressed = cat.read_with_positions(spark, "ns", "t")
-    addr = addressed.select(
-        "o_orderkey", cat.POS_FILE_COL, cat.POS_IDX_COL
-    ).collect()
-    import pandas as pd
-
-    def pos_df(lo, hi):
-        rows = [
-            (r[cat.POS_FILE_COL], r[cat.POS_IDX_COL])
-            for r in addr
-            if lo <= r["o_orderkey"] < hi
-        ]
-        return spark.createDataFrame(
-            pd.DataFrame(
-                rows, columns=[cat.POS_FILE_COL, cat.POS_IDX_COL]
-            )
-        )
-
-    cat.delete_positions(spark, "ns", "t", pos_df(0, 50))
-    cat.delete_positions(spark, "ns", "t", pos_df(50, 100))
-    cat.delete_positions(spark, "ns", "t", pos_df(1000, 1100))
-    # one equality entry rides along
-    cat.delete_keys(
-        spark, "ns", "t",
-        o.filter("o_orderkey = 777").select("o_orderkey"), ["o_orderkey"],
-    )
-    before = sorted(
-        tuple(r) for r in cat.read(spark, "ns", "t").collect()
-    )
-    m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert len([e for e in m["deletes"] if e.get("mode") == "positional"]) == 3
-
-    sid = cat.compact_position_deletes(spark, "ns", "t")
-    m = cat._manifest("ns", "t", sid)
-    pos_entries = [e for e in m["deletes"] if e.get("mode") == "positional"]
-    eq_entries = [e for e in m["deletes"] if e.get("mode") != "positional"]
-    assert len(pos_entries) == 1, "merged into one delete file"
-    assert len(eq_entries) == 1, "equality entry carried unchanged"
-    after = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
-    assert after == before, "reads identical through the merge"
-    # idempotent second call is a no-op
-    assert cat.compact_position_deletes(spark, "ns", "t") == sid
-
-    # the merged file carries exactly the live addresses (deduped union
-    # of the three source files; nothing dropped here — all scoped dirs
-    # are still live — and nothing double-counted)
-    merged_file_rows = spark.read.parquet(
-        os.path.join(wh, "ns", "t", "deletes", pos_entries[0]["dir"])
-    ).count()
-    assert merged_file_rows == len(
-        [r for r in addr if r["o_orderkey"] < 100 or 1000 <= r["o_orderkey"] < 1100]
-    )
-
-
-def test_compact_position_deletes_drops_dead_addresses(
-    spark, sf_dir, tmp_path
-):
-    """Addresses into a CoW-rewritten (no-longer-referenced) dir are
-    DEAD — the rewrite already materialized those deletes — and must
-    not survive into the merged delete file."""
-    wh = str(tmp_path / "wh")
-    cat = SnapCatalog(wh)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cat.create_or_replace("ns", "t", o.filter("o_orderkey < 1000"))
-    cat.append("ns", "t", o.filter("o_orderkey >= 1000"))
-    addressed = cat.read_with_positions(spark, "ns", "t")
-    import pandas as pd
-
-    addr = addressed.select(
-        "o_orderkey", cat.POS_FILE_COL, cat.POS_IDX_COL
-    ).collect()
-
-    def pos_df(keys):
-        rows = [
-            (r[cat.POS_FILE_COL], r[cat.POS_IDX_COL])
-            for r in addr
-            if r["o_orderkey"] in keys
-        ]
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=[cat.POS_FILE_COL, cat.POS_IDX_COL])
-        )
-
-    # entry 1 spans both dirs; entry 2 addresses only the first
-    cat.delete_positions(spark, "ns", "t", pos_df(set(range(0, 50)) | set(range(1000, 1050))))
-    cat.delete_positions(spark, "ns", "t", pos_df(set(range(50, 80))))
-    # CoW-rewrite the second dir: its pending deletes materialize and the
-    # dir leaves the manifest — its addresses are now dead
-    cat.delete_where(spark, "ns", "t", "o_orderkey >= 1200")
-    before = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
-
-    sid = cat.compact_position_deletes(spark, "ns", "t")
-    m = cat._manifest("ns", "t", sid)
-    (entry,) = [e for e in m["deletes"] if e.get("mode") == "positional"]
-    merged = spark.read.parquet(
-        os.path.join(wh, "ns", "t", "deletes", entry["dir"])
-    )
-    live_keys = {
-        r["o_orderkey"] for r in addr if r["o_orderkey"] < 80
-    }
-    assert merged.count() == len(live_keys), "dead second-dir addresses dropped"
-    after = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
-    assert after == before
-
-
 def test_compact_manifests_never_folds_positional_dirs(spark, sf_dir, tmp_path):
     """Manifest folding hard-links data files under NEW basenames, which
     would orphan stored (file_path, pos) addresses — dirs covered by a
-    positional entry must be carried as-is, other dirs still fold, and
-    the masked rows stay masked after the fold. Positional entries scope
-    to the dirs their addresses TOUCH (not every dir visible at delete
-    time), so the second commit — addressed by nothing — folds with the
-    clean dirs."""
+    legacy positional entry (a v2 position-delete file no current
+    writer produces) must be carried as-is, other dirs still fold, and
+    the masked rows stay masked after the fold. The entry scopes to the
+    dirs its addresses TOUCH (not every dir visible at delete time), so
+    the second commit — addressed by nothing — folds with the clean
+    dirs."""
     wh = str(tmp_path / "wh")
     cat = SnapCatalog(wh)
     n = load_table(spark, sf_dir, "nation")
@@ -753,7 +632,7 @@ def test_compact_manifests_never_folds_positional_dirs(spark, sf_dir, tmp_path):
         cat.POS_FILE_COL, cat.POS_IDX_COL
     )
     assert doomed.count() == 1
-    cat.delete_positions(spark, "ns", "t", doomed)
+    write_legacy_delete(cat, "ns", "t", doomed)
     # two more commits with no pending-delete coverage: these CAN fold
     cat.append("ns", "t", n.filter("n_regionkey = 3"))
     cat.append("ns", "t", n.filter("n_regionkey = 4"))
@@ -806,7 +685,7 @@ def test_compact_manifests_equality_entry_keeps_positional_dirs(
 
     sid = cat.compact_manifests("ns", "t")
     post = cat._manifest("ns", "t", sid)
-    eq = [e for e in post["deletes"] if e.get("mode") != "positional"]
+    eq = [e for e in post["deletes"] if "key_cols" in e]
     assert len(eq) == 1 and len(eq[0]["applies_to"]) == 1, post["deletes"]
     got = {r.n_nationkey for r in cat.read(spark, "ns", "t").collect()}
     assert got == want, "equality delete must survive the fold"
@@ -2696,48 +2575,41 @@ def test_update_where_auto_density_dispatch(spark, sf_dir, tmp_path):
 
 
 def test_dv_apply_mode_threshold_matrix(tmp_path):
-    """_dv_apply_mode decided purely from stamped entry stats (keys_df
-    untouched — None proves no job runs): probe below every gate;
-    density/per-file/total-positions each flip dense; dense+contiguous →
-    ranges; per-file runs over cap OR total runs over cap (the broadcast
-    payload bound no small fixture can reach) → anti."""
+    """_dv_apply_mode decided purely from the manifest entry (no job):
+    a stored ranges layout always takes the range probe; a stamped
+    positions-layout DV below every gate takes the ordinal probe;
+    density/per-file/total-positions each flip it to the anti-join;
+    unstamped legacy DVs and legacy positional files always anti-join
+    (never a blind probe, never a read-side range derivation)."""
     cat = SnapCatalog(str(tmp_path / "wh"))
     manifest = {"files": ["d"], "dir_rows": {"d": 100_000}}
 
-    def mode(**stats):
-        return cat._dv_apply_mode(manifest, {"applies_to": ["d"], **stats},
-                                  None)
+    def mode(mode="dv", **stats):
+        return cat._dv_apply_mode(
+            manifest, {"applies_to": ["d"], "mode": mode, **stats}
+        )
 
-    base = dict(n_positions=100, max_file_positions=100,
+    base = dict(layout="positions", n_positions=100, max_file_positions=100,
                 n_ranges=50, max_file_ranges=50)
     assert mode(**base) == "probe"
-    # density over 5% of scoped rows → dense; few runs → ranges
-    assert mode(**{**base, "n_positions": 40_000}) == "ranges"
+    # density over 5% of scoped rows → anti, however few the runs
+    assert mode(**{**base, "n_positions": 40_000, "n_ranges": 1}) == "anti"
     # dense via the per-file positions bound
     assert mode(**{**base, "max_file_positions": 9_000,
-                   "n_positions": 9_000}) == "ranges"
-    # dense + per-file runs over cap → anti
-    assert mode(n_positions=40_000, max_file_positions=4_000,
-                n_ranges=500, max_file_ranges=500) == "anti"
-    # dense + TOTAL runs over cap → anti (payload bound across files)
-    assert mode(n_positions=3_000_000, max_file_positions=100,
-                n_ranges=1_500_000, max_file_ranges=100) == "anti"
-    # dense + missing run stamps (legacy fold) → anti, never a blind probe
-    assert mode(n_positions=40_000, max_file_positions=4_000) == "anti"
-    # r14 contiguity preference: SPARSE by every density gate, but
-    # positions outnumber runs 64x+ → ranges wins outright (the ordinal
-    # probe would pay O(positions-per-file) per row for no reason)
-    assert mode(n_positions=800, max_file_positions=800,
-                n_ranges=1, max_file_ranges=1) == "ranges"
-    # just under the prefer factor → stays the sparse ordinal probe
-    assert mode(n_positions=63, max_file_positions=63,
-                n_ranges=1, max_file_ranges=1) == "probe"
-    # contiguity cannot override the run-probe payload bounds: sparse,
-    # compressible, but per-file runs over cap → probe (not ranges)
-    assert mode(n_positions=100_000 * 64, max_file_positions=4_000,
-                n_ranges=200, max_file_ranges=200) != "ranges"
-    # legacy entry without run stamps: preference silently unavailable
+                   "n_positions": 9_000}) == "anti"
+    # dense via the TOTAL positions bound (the broadcast payload cap)
+    assert mode(**{**base, "n_positions": 3_000_000,
+                   "max_file_positions": 100}) == "anti"
+    # sparse legacy stamps without run stats or layout still probe
     assert mode(n_positions=800, max_file_positions=800) == "probe"
+    # stored ranges: the range probe at any density (the writer only
+    # stores ranges inside the range-probe bounds)
+    assert mode(layout="ranges", n_positions=40_000,
+                max_file_positions=40_000, n_ranges=4,
+                max_file_ranges=1) == "ranges"
+    # unstamped legacy DV and legacy positional file → anti
+    assert mode() == "anti"
+    assert mode(mode="positional") == "anti"
 
 
 def test_all_data_files_and_metadata_log(spark, sf_dir, tmp_path):
@@ -2870,7 +2742,7 @@ def test_dv_delete_cycle(spark, sf_dir, tmp_path):
         cat.POS_FILE_COL, cat.POS_IDX_COL
     )
     n_doomed = doomed.count()
-    sid = cat.delete_positions_dv(spark, "ns", "t", doomed)
+    sid = cat.delete_positions(spark, "ns", "t", doomed)
 
     assert set(os.listdir(data_root)) == dirs_before, "metadata-only"
     (entry,) = cat._manifest("ns", "t", sid)["deletes"]
@@ -2909,8 +2781,8 @@ def test_dv_delete_cycle(spark, sf_dir, tmp_path):
 
 
 def test_rewrite_deletes_to_dv_mixed_formats(spark, sf_dir, tmp_path):
-    """rewrite_deletes_to_dv folds positional files AND existing DVs
-    into ONE deletion vector: reads identical through the fold, the
+    """rewrite_deletes_to_dv folds legacy positional files AND existing
+    DVs into ONE deletion vector: reads identical through the fold, the
     equality entry rides along unchanged, a second call is a no-op, and
     the merged DV carries exactly the live addresses."""
     wh = str(tmp_path / "wh")
@@ -2935,8 +2807,8 @@ def test_rewrite_deletes_to_dv_mixed_formats(spark, sf_dir, tmp_path):
             pd.DataFrame(rows, columns=[cat.POS_FILE_COL, cat.POS_IDX_COL])
         )
 
-    cat.delete_positions(spark, "ns", "t", pos_df(lambda k: k < 50))
-    cat.delete_positions_dv(
+    write_legacy_delete(cat, "ns", "t", pos_df(lambda k: k < 50))
+    cat.delete_positions(
         spark, "ns", "t", pos_df(lambda k: 50 <= k < 100)
     )
     cat.delete_positions(
@@ -2975,9 +2847,7 @@ def test_rewrite_deletes_to_dv_mixed_formats(spark, sf_dir, tmp_path):
          if r["o_orderkey"] < 100 or 1000 <= r["o_orderkey"] < 1100]
     )
     assert (
-        SnapCatalog._dv_positions_relation(
-            merged, dv_entries[0]["layout"]
-        ).count()
+        SnapCatalog._dv_positions_relation(merged, dv_entries[0]).count()
         == n_live
     )
 
@@ -3010,7 +2880,7 @@ def test_rewrite_deletes_to_dv_drops_dead_addresses(
             pd.DataFrame(rows, columns=[cat.POS_FILE_COL, cat.POS_IDX_COL])
         )
 
-    cat.delete_positions_dv(
+    cat.delete_positions(
         spark, "ns", "t", pos_df(set(range(0, 50)) | set(range(1000, 1050)))
     )
     cat.delete_positions(spark, "ns", "t", pos_df(set(range(50, 80))))
@@ -3025,13 +2895,98 @@ def test_rewrite_deletes_to_dv_drops_dead_addresses(
     )
     live_keys = {r["o_orderkey"] for r in addr if r["o_orderkey"] < 80}
     assert (
-        SnapCatalog._dv_positions_relation(
-            merged, entry.get("layout", "positions")
-        ).count()
+        SnapCatalog._dv_positions_relation(merged, entry).count()
         == len(live_keys)
     ), "dead second-dir addresses dropped"
     after = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
     assert after == before
+
+
+def test_legacy_delete_entries_read_exact_and_fold(spark, tmp_path):
+    """Entries no current writer produces stay readable: a hand-built v2
+    ``mode: "positional"`` file and an UNSTAMPED positions-layout DV
+    (no stats, no layout key) each read exactly through the one (file,
+    pos) anti-join — one LeftAnti per entry, no broadcast probe, no
+    read-side stats job — and ``rewrite_deletes_to_dv`` folds both into
+    ONE stamped DV with identical reads."""
+    from tests.conftest import plan_formatted
+
+    ids = spark.range(4_000).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    )
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    cat.create_or_replace("ns", "t", ids.repartitionByRange(4, "id"))
+    addressed = cat.read_with_positions(spark, "ns", "t")
+
+    def doomed(pred):
+        return addressed.filter(pred).select(
+            cat.POS_FILE_COL, cat.POS_IDX_COL
+        )
+
+    # scattered and sparse: a stamped DV of this shape would probe
+    write_legacy_delete(cat, "ns", "t", doomed("id % 97 = 0"))
+    write_legacy_delete(cat, "ns", "t", doomed("id % 89 = 0"), mode="dv")
+    m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
+    assert sorted(e["mode"] for e in m["deletes"]) == ["dv", "positional"]
+    assert not any("layout" in e or "n_positions" in e for e in m["deletes"])
+
+    want = sorted(
+        tuple(r)
+        for r in ids.filter("id % 97 <> 0 AND id % 89 <> 0").collect()
+    )
+    df = cat.read(spark, "ns", "t")
+    assert sorted(tuple(r) for r in df.collect()) == want
+    plan = plan_formatted(df)
+    assert plan.count("LeftAnti") >= 2, plan
+    assert "array_contains" not in plan and "_dv_starts" not in plan, plan
+
+    sid = cat.rewrite_deletes_to_dv(spark, "ns", "t")
+    (entry,) = cat._manifest("ns", "t", sid)["deletes"]
+    assert entry["mode"] == "dv" and entry["layout"] == "positions"
+    assert entry["n_positions"] == len(
+        [i for i in range(4_000) if i % 97 == 0 or i % 89 == 0]
+    )
+    assert sorted(
+        tuple(r) for r in cat.read(spark, "ns", "t").collect()
+    ) == want
+    # the folded entry is the target shape: a second call is a no-op
+    assert cat.rewrite_deletes_to_dv(spark, "ns", "t") == sid
+
+
+def test_current_hint_failure_does_not_fail_landed_commits(
+    spark, tmp_path, monkeypatch
+):
+    """The ``_current`` hint is written after the manifest is published,
+    so a failed hint write must not report a landed rollback or rename
+    as failed (a retry would then run against the new state): both
+    return the new snapshot id and the table reads the post-state."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    ids = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
+    sid1 = cat.create_or_replace("ns", "t", ids)
+    cat.append("ns", "t", spark.range(10, 15).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    ))
+    real_replace = os.replace
+
+    def failing_replace(src, dst):
+        if os.path.basename(dst) == "_current":
+            raise OSError("injected _current replace failure")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    hint = os.path.join(cat.warehouse, "ns", "t", "_current")
+
+    sid = cat.rollback_to("ns", "t", sid1)
+    assert sid == cat._current_sid("ns", "t") == sid1 + 2
+    assert cat.read(spark, "ns", "t").count() == 10
+
+    sid = cat.rename_column("ns", "t", "v", "w")
+    assert sid == cat._current_sid("ns", "t") == sid1 + 3
+    got = cat.read(spark, "ns", "t")
+    assert got.columns == ["id", "w"] and got.count() == 10
+    # the injection really hit: the hint still names the pre-failure head
+    with open(hint) as f:
+        assert int(f.read()) == sid1 + 1
 
 
 def test_compact_manifests_never_folds_dv_dirs(spark, sf_dir, tmp_path):
@@ -3050,7 +3005,7 @@ def test_compact_manifests_never_folds_dv_dirs(spark, sf_dir, tmp_path):
     doomed = addressed.filter("o_orderkey < 50").select(
         cat.POS_FILE_COL, cat.POS_IDX_COL
     )
-    cat.delete_positions_dv(spark, "ns", "t", doomed)
+    cat.delete_positions(spark, "ns", "t", doomed)
     covered = set(
         cat._manifest("ns", "t", cat._current_sid("ns", "t"))["deletes"][0][
             "applies_to"
@@ -3445,7 +3400,7 @@ def test_rewrite_to_dv_fold_write_parallelism(spark, sf_dir, tmp_path,
                 cat.POS_FILE_COL, cat.POS_IDX_COL
             ),
         )
-        cat.delete_positions_dv(
+        cat.delete_positions(
             spark, "ns", "t",
             addressed.filter("o_orderkey % 7 = 0").select(
                 cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -3621,9 +3576,7 @@ def test_dv_ranges_storage_layout(spark, tmp_path):
     analogue): a contiguous band delete stores (file_path, starts,
     ends) directly — entry ``layout: "ranges"``, runs-sized bytes, no
     ``positions`` column on disk — and the read broadcasts the stored
-    file with NO derivation pass (no MapInPandas node in the plan,
-    where a positions-layout entry routed to the ranges apply pays
-    one). A scattered delete on the same code path keeps the explicit
+    file as-is (no MapInPandas node in the plan). A scattered delete on the same code path keeps the explicit
     ordinal layout. Compaction materializes the ranges entry exactly."""
     import pyarrow.parquet as pq
 
@@ -3637,7 +3590,7 @@ def test_dv_ranges_storage_layout(spark, tmp_path):
         cat = SnapCatalog(str(tmp_path / "wh_band"))
         cat.create_or_replace("ns", "t", ids.repartitionByRange(4, "id"))
         addressed = cat.read_with_positions(spark, "ns", "t")
-        cat.delete_positions_dv(
+        cat.delete_positions(
             spark, "ns", "t",
             addressed.filter("id >= 3000 AND id < 9000").select(
                 cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -3683,7 +3636,7 @@ def test_dv_ranges_storage_layout(spark, tmp_path):
         cat2 = SnapCatalog(str(tmp_path / "wh_scat"))
         cat2.create_or_replace("ns", "t", ids.repartitionByRange(4, "id"))
         addressed = cat2.read_with_positions(spark, "ns", "t")
-        cat2.delete_positions_dv(
+        cat2.delete_positions(
             spark, "ns", "t",
             addressed.filter("id % 97 = 0").select(
                 cat2.POS_FILE_COL, cat2.POS_IDX_COL
@@ -3717,7 +3670,7 @@ def test_dv_write_entry_fans_out_large_scattered(spark, tmp_path,
     # of every file_path into one of the ~14 write buckets
     cat.create_or_replace("ns", "t", ids.repartitionByRange(8, "id"))
     addressed = cat.read_with_positions(spark, "ns", "t")
-    cat.delete_positions_dv(
+    cat.delete_positions(
         spark, "ns", "t",
         addressed.filter("id % 3 = 0").select(
             cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -3962,7 +3915,7 @@ def test_dv_write_scoping_with_data_in_warehouse_path(spark, tmp_path):
     )
     cat.create_or_replace("ns", "t", ids)
     addressed = cat.read_with_positions(spark, "ns", "t")
-    sid = cat.delete_positions_dv(
+    sid = cat.delete_positions(
         spark, "ns", "t",
         addressed.filter("id < 100").select(
             cat.POS_FILE_COL, cat.POS_IDX_COL

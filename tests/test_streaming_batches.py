@@ -286,6 +286,32 @@ def test_incremental_screen_one_commit_per_epoch_and_subshingle(
         n_parts = len(_glob.glob(_os.path.join(d, "part-*.parquet")))
         assert n_parts <= 2, (d, n_parts)
 
+    # a wider epoch sourced through repartition(8) — the default
+    # many-slice path the coalesce-to-input-width bound targets: its one
+    # commit writes at most that input width in files
+    seen_dirs = set(
+        cat._manifest("stream", "seen", cat._current_sid("stream", "seen"))[
+            "files"
+        ]
+    )
+    b2 = spark.createDataFrame(
+        [
+            (10 + i, " ".join(f"w{i}x{k}" for k in range(8)))
+            for i in range(8)
+        ],
+        "doc_id long, text string",
+    ).repartition(8)
+    SE.screen_batch_incremental(cat, b2)
+    assert len(cat._snapshots("stream", "seen")) == 3
+    m = cat._manifest("stream", "seen", cat._current_sid("stream", "seen"))
+    new_dirs = [d for d in m["files"] if d not in seen_dirs]
+    assert new_dirs, m["files"]
+    for d in new_dirs:
+        path = str(tmp_path / "wh" / "stream" / "seen" / "data" / d)
+        n_parts = len(_glob.glob(_os.path.join(path, "part-*.parquet")))
+        assert 0 < n_parts <= 8, (d, n_parts)
+    assert cat.read(spark, "stream", "seen").count() == 12
+
 
 def test_run_concurrently_order_and_errors():
     """run_concurrently returns results in argument order and propagates
