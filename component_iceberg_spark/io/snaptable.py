@@ -14,7 +14,14 @@ Layout::
     <warehouse>/<namespace>/<table>/
         data/commit-<sid>/part-*.parquet     # files written by commit <sid>
         snapshots/<sid>.json                 # manifest: files visible at <sid>
-        _current                             # latest snapshot id
+
+A table exists exactly when ``snapshots/`` holds a manifest; the current
+snapshot is the highest manifest id. Besides ``files`` (the visible data
+dirs, in commit order) a manifest carries ``dirs``: one metadata record
+per data dir, ``{"rows", "stats", "bounds", "blooms", "schema"}``, each
+field present only where it was stamped (see :func:`_stamp_dir`). An
+absent record or field only disables a metadata shortcut (pruning,
+manifest row counts, the explicit-schema scan) — never correctness.
 
 Design notes (what makes this 100 TB-shaped even though it's small):
 
@@ -39,6 +46,7 @@ import json
 import os
 import re
 import shutil
+import sys
 import time
 import uuid
 
@@ -518,6 +526,59 @@ def _merge_dir_stats(per_dir: list[dict | None]) -> dict | None:
     return merged
 
 
+def _stamp_dir(
+    path: str, bloom_cols: list[str] | None, schema: dict | None = None
+) -> dict:
+    """The manifest ``dirs`` record of a freshly written (or adopted)
+    data dir: one :func:`dir_footer_metrics` walk for rows, stats and
+    per-row-group bounds (the Iceberg lower/upper_bounds pattern, so
+    auto-dispatch is served from the manifest with zero per-statement
+    I/O), registered blooms, and — when passed the dir's Spark schema
+    JSON — the nullability-normalized physical schema stamp that lets
+    equal-schema reads skip mergeSchema inference (see ``_scan_schema``).
+    Empty stats/blooms and over-cap bounds are left out: every reader
+    treats an absent field as "no shortcut"."""
+    stats, rows, bounds = dir_footer_metrics(path)
+    rec: dict = {"rows": rows}
+    if stats:
+        rec["stats"] = stats
+    if bounds is not None:
+        rec["bounds"] = bounds
+    blooms = dir_column_blooms(path, bloom_cols) if bloom_cols else {}
+    if blooms:
+        rec["blooms"] = blooms
+    if schema is not None:
+        rec["schema"] = _nullable_schema_json(schema)
+    return rec
+
+
+def _fold_dir_records(records: list[dict]) -> dict:
+    """The ``dirs`` record of a manifest fold (``compact_manifests``):
+    the folded dir hard-links the SAME physical files as its sources.
+    Stats merge min-of-mins / max-of-maxes, rows sum, blooms OR-merge,
+    bounds records concatenate (they carry no file names) under the
+    ``DIR_BOUNDS_MAX_GROUPS`` cap fresh stamps honor, and the schema
+    stamp survives only when every source carried the same one. A field
+    any source lacks is left out of the fold."""
+    rec: dict = {}
+    stats = _merge_dir_stats([r.get("stats") for r in records])
+    if stats:
+        rec["stats"] = stats
+    if all("rows" in r for r in records):
+        rec["rows"] = sum(r["rows"] for r in records)
+    blooms = _merge_dir_blooms([r.get("blooms") for r in records])
+    if blooms:
+        rec["blooms"] = blooms
+    if all("bounds" in r for r in records):
+        bounds = [b for r in records for b in r["bounds"]]
+        if len(bounds) <= DIR_BOUNDS_MAX_GROUPS:
+            rec["bounds"] = bounds
+    schema = records[0].get("schema")
+    if schema is not None and all(r.get("schema") == schema for r in records):
+        rec["schema"] = schema
+    return rec
+
+
 def simple_conjuncts(predicate: str) -> list[tuple[str, str, object]]:
     """Best-effort decomposition of ``a AND b AND …`` into
     ``(column, op, literal)`` tuples for stats pruning. Returns ``[]``
@@ -680,12 +741,16 @@ class SnapCatalog:
         if not os.path.isdir(ns_dir):
             return []
         return sorted(
-            d for d in os.listdir(ns_dir)
-            if os.path.isdir(os.path.join(ns_dir, d, "snapshots"))
+            d for d in os.listdir(ns_dir) if self.table_exists(namespace, d)
         )
 
     def table_exists(self, namespace: str, table: str) -> bool:
-        return os.path.isfile(self._tbl(namespace, table, "_current"))
+        # the published manifests are the table (the rule _current_sid
+        # reads the head by): a dir whose snapshots/ holds none is not
+        snap_dir = self._tbl(namespace, table, "snapshots")
+        return os.path.isdir(snap_dir) and any(
+            fn.endswith(".json") for fn in os.listdir(snap_dir)
+        )
 
     def drop_table(self, namespace: str, table: str) -> None:
         path = os.path.join(self.warehouse, namespace, table)
@@ -899,23 +964,10 @@ class SnapCatalog:
                         ) from None
                     os.symlink(src, dst)
                     link_mode = "symlink"
-            extra_stats: dict[str, dict] = {}
-            extra_blooms: dict[str, dict] = {}
-            extra_bounds: dict[str, list] = {}
             if compute_stats:
-                stats, n_rows, bounds = dir_footer_metrics(dst_root)
-                extra_rows = {nd: n_rows}
-                if stats:
-                    extra_stats[nd] = stats
-                if bounds is not None:
-                    extra_bounds[nd] = bounds
-                bloom_cols = manifest.get("bloom_cols") or []
-                if bloom_cols:
-                    bl = dir_column_blooms(dst_root, bloom_cols)
-                    if bl:
-                        extra_blooms[nd] = bl
+                rec = _stamp_dir(dst_root, manifest.get("bloom_cols"))
             else:
-                extra_rows = {nd: dir_row_count(dst_root)}
+                rec = {"rows": dir_row_count(dst_root)}
             # marker BEFORE publish: a crash after the commit can no
             # longer leave the adoption unrecorded (the silent-double
             # failure a retry would hit); a crash between the marker
@@ -930,10 +982,7 @@ class SnapCatalog:
             sid = self._commit(
                 namespace, table, None, operation="add_files",
                 carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=manifest["files"] + [nd],
-                extra_dir_stats=extra_stats, extra_dir_rows=extra_rows,
-                extra_dir_blooms=extra_blooms,
-                extra_dir_bounds=extra_bounds,
+                carry_dirs=manifest["files"] + [nd], extra_dirs={nd: rec},
             )
         except Exception:
             shutil.rmtree(dst_root, ignore_errors=True)
@@ -1101,7 +1150,7 @@ class SnapCatalog:
         ]
         bounds = delta.agg(*aggs).collect()[0]
         # collect() renders tz-adjusted TimestampType in the SYSTEM
-        # timezone (datetime.fromtimestamp), while dir_stats live in
+        # timezone (datetime.fromtimestamp), while manifest stats live in
         # naive UTC — on a non-UTC host the raw strftime would shift
         # the key range by the host offset and the prune could skip a
         # dir holding matched keys (lost updates; review r15). Anchor
@@ -1311,9 +1360,10 @@ class SnapCatalog:
         - prior snapshots still reference the original directories
           (time travel intact; hard links mean later GC of either side is
           safe — the inode survives until both are gone),
-        - per-dir column stats and row counts are MERGED from the parent
-          manifest (min-of-mins / max-of-maxs / sum), so stats pruning and
-          metadata-only ``row_count`` keep working without a scan,
+        - each folded dir's ``dirs`` record is FOLDED from its sources'
+          records in the parent manifest (:func:`_fold_dir_records`), so
+          stats pruning and metadata-only ``row_count`` keep working
+          without a scan,
         - pending equality deletes: directories are grouped by their
           applicable delete-entry signature and folded PER GROUP, so a
           delete registered before a later append still applies to exactly
@@ -1353,18 +1403,10 @@ class SnapCatalog:
         if len(groups) >= len(files):
             return base  # already one entry per delete-signature: no-op
         data_root = self._tbl(namespace, table, "data")
-        parent_stats = manifest.get("dir_stats", {})
-        parent_rows = manifest.get("dir_rows", {})
-        parent_blooms = manifest.get("dir_blooms", {})
-        parent_bounds = manifest.get("dir_bounds", {})
-        parent_schemas_cm = manifest.get("dir_schemas", {})
+        parent_dirs = manifest.get("dirs", {})
         new_files: list[str] = []
         sig_to_dir: dict[frozenset, str] = {}
-        extra_stats: dict[str, dict] = {}
-        extra_rows: dict[str, int] = {}
-        extra_blooms: dict[str, dict] = {}
-        extra_bounds: dict[str, list] = {}
-        extra_schemas: dict[str, dict] = {}
+        extra_dirs: dict[str, dict] = {}
         linked_dirs: list[str] = []
         for sig, dirs in sorted(groups.items(), key=lambda kv: sorted(kv[1])):
             if len(dirs) == 1:
@@ -1395,37 +1437,9 @@ class SnapCatalog:
             linked_dirs.append(out)
             sig_to_dir[sig] = nd
             new_files.append(nd)
-            merged = _merge_dir_stats([parent_stats.get(d) for d in dirs])
-            if merged is not None:
-                extra_stats[nd] = merged
-            if all(d in parent_rows for d in dirs):
-                extra_rows[nd] = sum(parent_rows[d] for d in dirs)
-            mb = _merge_dir_blooms([parent_blooms.get(d) for d in dirs])
-            if mb:
-                extra_blooms[nd] = mb
-            # a fold hard-links the SAME physical files under the new
-            # dir, so per-row-group bounds records concatenate exactly
-            # (records carry no file names); any dir without a stamp —
-            # or a concatenation exceeding the same bloat cap fresh
-            # stamps honor — leaves the folded dir unstamped: absent
-            # bounds only disable the dispatch shortcut
-            if all(d in parent_bounds for d in dirs):
-                cat_records = [
-                    r for d in dirs for r in parent_bounds[d]
-                ]
-                if len(cat_records) <= DIR_BOUNDS_MAX_GROUPS:
-                    extra_bounds[nd] = cat_records
-            # folded files are the same physical bytes, so when every
-            # source dir carried one identical schema stamp the folded
-            # dir inherits it (keeps the explicit-schema scan fast path
-            # across manifest folds); any disagreement or missing stamp
-            # leaves the folded dir unstamped — reads fall back to
-            # mergeSchema inference there
-            src_schemas = [parent_schemas_cm.get(d) for d in dirs]
-            if src_schemas[0] is not None and all(
-                s == src_schemas[0] for s in src_schemas[1:]
-            ):
-                extra_schemas[nd] = src_schemas[0]
+            extra_dirs[nd] = _fold_dir_records(
+                [parent_dirs.get(d, {}) for d in dirs]
+            )
         remapped = []
         for i, e in enumerate(deletes):
             if e.get("mode") in ("positional", "dv"):
@@ -1442,9 +1456,7 @@ class SnapCatalog:
                 namespace, table, None, operation="compact_manifests",
                 carry=False, base_sid=base, inherit_spec=True,
                 carry_dirs=new_files, clear_deletes=True,
-                extra_deletes=remapped, extra_dir_stats=extra_stats,
-                extra_dir_rows=extra_rows, extra_dir_blooms=extra_blooms,
-                extra_dir_bounds=extra_bounds, extra_dir_schemas=extra_schemas,
+                extra_deletes=remapped, extra_dirs=extra_dirs,
             )
         except CommitConflict:
             for d in linked_dirs:  # don't leave link dirs for orphan GC
@@ -1579,7 +1591,6 @@ class SnapCatalog:
                 "partition spec first (competing physical layouts)"
             )
         df = self.read(spark, namespace, table, snapshot_id=base)
-        bloom_cols = manifest.get("bloom_cols") or []
         bucketed = (
             df.withColumn("_ck", make_cluster_col(df))
             .repartitionByRange(n_buckets, F.col("_ck"))
@@ -1594,10 +1605,7 @@ class SnapCatalog:
             "_cluster_bucket"
         ).parquet(tmp_root)
         new_files: list[str] = []
-        extra_stats: dict[str, dict] = {}
-        extra_rows: dict[str, int] = {}
-        extra_blooms: dict[str, dict] = {}
-        extra_bounds: dict[str, list] = {}
+        extra_dirs: dict[str, dict] = {}
         try:
             for sub in sorted(os.listdir(tmp_root)):
                 if not sub.startswith("_cluster_bucket="):
@@ -1606,23 +1614,12 @@ class SnapCatalog:
                 dst = os.path.join(data_root, nd)
                 os.rename(os.path.join(tmp_root, sub), dst)
                 new_files.append(nd)
-                stats, extra_rows[nd], bounds = dir_footer_metrics(dst)
-                if stats is not None:
-                    extra_stats[nd] = stats
-                if bounds is not None:
-                    extra_bounds[nd] = bounds
-                if bloom_cols:
-                    bl = dir_column_blooms(dst, bloom_cols)
-                    if bl:
-                        extra_blooms[nd] = bl
+                extra_dirs[nd] = _stamp_dir(dst, manifest.get("bloom_cols"))
             shutil.rmtree(tmp_root, ignore_errors=True)
             return self._commit(
                 namespace, table, None, operation="cluster_rewrite",
                 carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=new_files,
-                clear_deletes=True, extra_dir_stats=extra_stats,
-                extra_dir_rows=extra_rows, extra_dir_blooms=extra_blooms,
-                extra_dir_bounds=extra_bounds,
+                carry_dirs=new_files, clear_deletes=True, extra_dirs=extra_dirs,
                 # every dir above is freshly written from a RESOLVED
                 # read — logical names/types are materialized, so the
                 # rename chain resets (compact()'s semantics); only
@@ -1676,7 +1673,6 @@ class SnapCatalog:
                 break
             except FileExistsError:
                 continue
-        self._write_current_hint(namespace, table, sid)
         return sid
 
     def cherry_pick(
@@ -1747,27 +1743,12 @@ class SnapCatalog:
                 raise ValueError(
                     f"cherry_pick: delta dir {d} was garbage-collected"
                 )
-        src_stats = src.get("dir_stats") or {}
-        src_rows = src.get("dir_rows") or {}
-        src_blooms = src.get("dir_blooms") or {}
-        src_bounds = src.get("dir_bounds") or {}
+        src_dirs = src.get("dirs", {})
         return self._commit(
             namespace, table, None, operation="cherry_pick",
             carry=False, base_sid=base, inherit_spec=True,
             carry_dirs=cur["files"] + delta,
-            extra_dir_stats={d: src_stats[d] for d in delta if d in src_stats},
-            extra_dir_rows={d: src_rows[d] for d in delta if d in src_rows},
-            extra_dir_blooms={
-                d: src_blooms[d] for d in delta if d in src_blooms
-            },
-            extra_dir_bounds={
-                d: src_bounds[d] for d in delta if d in src_bounds
-            },
-            extra_dir_schemas={
-                d: s
-                for d, s in (src.get("dir_schemas") or {}).items()
-                if d in delta
-            },
+            extra_dirs={d: src_dirs[d] for d in delta if d in src_dirs},
         )
 
     def delete_where(
@@ -1859,8 +1840,8 @@ class SnapCatalog:
         ``upper_bounds`` / ``null_value_counts``) and evaluates the same
         bounds there; reading footers here keeps the layout unchanged.
 
-        Served from the MANIFEST when the statement's dirs carry
-        ``dir_bounds`` records (stamped by ``_commit`` /
+        Served from the MANIFEST when the candidate dirs' records
+        carry ``bounds`` (stamped by ``_commit`` /
         ``add_files`` / rewrites — the Iceberg manifest-metrics
         pattern: zero per-statement I/O); pre-stamp dirs fall back to a
         footer walk MEMOIZED per (namespace, table, dir) — data dirs
@@ -1934,11 +1915,11 @@ class SnapCatalog:
             for names in phys.values():
                 if new in names:
                     names.add(old)
-        dir_bounds = manifest.get("dir_bounds") or {}
+        dirs = manifest.get("dirs", {})
         lower = upper = total = 0
         broken = False
         for d in candidates:
-            records = dir_bounds.get(d)
+            records = dirs.get(d, {}).get("bounds")
             if records is None:
                 records = self._footer_bounds_records(namespace, table, d)
             if records is None:
@@ -1979,48 +1960,26 @@ class SnapCatalog:
     ) -> list[dict] | None:
         """Row-group bounds records for a pre-stamp data dir, from
         parquet footers — the legacy path ``_dispatch_bounds`` takes
-        when the manifest carries no ``dir_bounds`` for ``d``.
+        when the dir's ``dirs`` record carries no ``bounds``: the same
+        :func:`dir_footer_metrics` walk a commit stamps, uncapped.
         Memoized per (namespace, table, dir): data dirs are immutable
         once published. A dir with an unreadable file returns None and
         is NOT cached — repairing a broken adopted link changes the
         dir's content without changing its name, so caching the
         failure (or a partial read) could serve stale bounds forever.
-        No record cap here, unlike ``dir_file_bounds`` — nothing is
-        persisted, so the only cost is this process's memory."""
+        No record or stat-length cap here, unlike a commit stamp —
+        nothing is persisted, so the only cost is this process's memory."""
         key = (namespace, table, d)
         cached = self._footer_bounds_cache.get(key)
         if cached is not None:
             return cached
-        import pyarrow.parquet as pq
-
-        records: list[dict] = []
-        root = self._tbl(namespace, table, "data", d)
-        for rdir, _sub, fns in os.walk(root):
-            for fn in sorted(fns):
-                if not fn.endswith(".parquet") or fn.startswith((".", "_")):
-                    continue
-                try:
-                    md = pq.ParquetFile(os.path.join(rdir, fn)).metadata
-                except OSError:
-                    return None  # degrade this dir only; do not cache
-                for rg in range(md.num_row_groups):
-                    row_group = md.row_group(rg)
-                    cols = {}
-                    for ci in range(row_group.num_columns):
-                        col = row_group.column(ci)
-                        st = col.statistics
-                        if st is not None and st.has_min_max:
-                            mn = _stat_jsonable(st.min)
-                            mx = _stat_jsonable(st.max)
-                            if mn is not None and mx is not None:
-                                cols[col.path_in_schema] = (
-                                    mn,
-                                    mx,
-                                    st.null_count
-                                    if st.has_null_count
-                                    else None,
-                                )
-                    records.append({"n": row_group.num_rows, "c": cols})
+        try:
+            _stats, _rows, records = dir_footer_metrics(
+                self._tbl(namespace, table, "data", d),
+                max_groups=sys.maxsize, max_stat_len=sys.maxsize,
+            )
+        except OSError:
+            return None  # degrade this dir only; do not cache
         self._footer_bounds_cache[key] = records
         return records
 
@@ -2212,9 +2171,9 @@ class SnapCatalog:
                 carry_dirs=list(manifest["files"]), extra_deletes=[entry],
             )
         except Exception:
-            # safe to sweep on ANY failure: _commit can no longer raise
-            # after publish (the _current hint write is best-effort), so
-            # an exception here means no manifest references the file
+            # safe to sweep on ANY failure: _commit does nothing after
+            # the manifest publish, so an exception here means no
+            # manifest references the file
             shutil.rmtree(out, ignore_errors=True)
             raise
 
@@ -2742,8 +2701,8 @@ class SnapCatalog:
             or n > self.DV_PROBE_MAX_TOTAL_POSITIONS
         ):
             return "anti"
-        dir_rows = manifest.get("dir_rows") or {}
-        scoped = [dir_rows.get(d) for d in entry["applies_to"]]
+        dirs = manifest.get("dirs", {})
+        scoped = [dirs.get(d, {}).get("rows") for d in entry["applies_to"]]
         if scoped and all(s is not None for s in scoped):
             total = sum(scoped)
             if total and n / total > self.DV_PROBE_MAX_DENSITY:
@@ -3305,11 +3264,11 @@ class SnapCatalog:
                 continue
             usable.append((col, op, lit))
         conjuncts = usable
-        dir_stats = manifest.get("dir_stats", {})
-        dir_blooms = manifest.get("dir_blooms", {})
+        dirs = manifest.get("dirs", {})
         candidates, skipped = [], []
         for d in manifest["files"]:
-            stats = dir_stats.get(d)
+            rec = dirs.get(d, {})
+            stats = rec.get("stats")
             keep = True
             if stats:
                 for col, op, lit in conjuncts:
@@ -3321,7 +3280,7 @@ class SnapCatalog:
             if keep:
                 # point-lookup skipping past what min/max can see: a
                 # registered bloom answers "value definitely absent"
-                blooms = dir_blooms.get(d) or {}
+                blooms = rec.get("blooms") or {}
                 for col, op, lit in conjuncts:
                     if (
                         op == "="
@@ -3400,7 +3359,6 @@ class SnapCatalog:
                 break
             except FileExistsError:
                 continue  # metadata-only: recompute on the new head
-        self._write_current_hint(namespace, table, sid)
         return sid
 
     def rename_column(
@@ -3511,7 +3469,8 @@ class SnapCatalog:
 
         Plain tables (r16, guide §1.2 — the driver should do almost no
         per-statement work): when EVERY scanned directory carries the
-        same commit-stamped physical schema (``dir_schemas``), return
+        same commit-stamped physical schema (its ``dirs`` record's
+        ``schema``), return
         it, so the reader is built with an explicit schema instead of a
         mergeSchema inference pass — measured ~230 ms → ~20 ms per
         DataFrame CONSTRUCTION (the inference is a distributed
@@ -3532,12 +3491,12 @@ class SnapCatalog:
             ):
                 return None
             files = manifest.get("files") or []
-            stamped = manifest.get("dir_schemas") or {}
+            dirs = manifest.get("dirs", {})
             if not files:
                 return None
-            first = stamped.get(files[0])
+            first = dirs.get(files[0], {}).get("schema")
             if first is None or any(
-                stamped.get(d) != first for d in files[1:]
+                dirs.get(d, {}).get("schema") != first for d in files[1:]
             ):
                 return None
             from pyspark.sql import types as T
@@ -3603,19 +3562,29 @@ class SnapCatalog:
                         f"column {old!r} is referenced by a pending "
                         "equality-delete entry; compact() first"
                     )
+            # stats and blooms follow the logical name (a drop removes
+            # it); bounds keep physical names — _dispatch_bounds resolves
+            # them through the rename chain
+            dirs = {
+                d: {
+                    **rec,
+                    **{
+                        f: {
+                            new if k == old else k: v
+                            for k, v in rec[f].items()
+                            if new is not None or k != old
+                        }
+                        for f in ("stats", "blooms")
+                        if f in rec
+                    },
+                }
+                for d, rec in cur.get("dirs", {}).items()
+            }
             if new is not None:
                 fields = [
                     {**f, "name": new} if f["name"] == old else f
                     for f in schema["fields"]
                 ]
-                dir_stats = {
-                    d: {new if k == old else k: v for k, v in st.items()}
-                    for d, st in (cur.get("dir_stats") or {}).items()
-                }
-                dir_blooms = {
-                    d: {new if k == old else k: v for k, v in bl.items()}
-                    for d, bl in (cur.get("dir_blooms") or {}).items()
-                }
                 bloom_cols = [
                     new if c == old else c
                     for c in (cur.get("bloom_cols") or [])
@@ -3623,14 +3592,6 @@ class SnapCatalog:
                 renames = (cur.get("renames") or []) + [[old, new]]
             else:
                 fields = [f for f in schema["fields"] if f["name"] != old]
-                dir_stats = {
-                    d: {k: v for k, v in st.items() if k != old}
-                    for d, st in (cur.get("dir_stats") or {}).items()
-                }
-                dir_blooms = {
-                    d: {k: v for k, v in bl.items() if k != old}
-                    for d, bl in (cur.get("dir_blooms") or {}).items()
-                }
                 bloom_cols = [
                     c for c in (cur.get("bloom_cols") or []) if c != old
                 ]
@@ -3639,8 +3600,7 @@ class SnapCatalog:
                 **cur,
                 "operation": operation,
                 "schema": {**schema, "fields": fields},
-                "dir_stats": dir_stats,
-                "dir_blooms": dir_blooms,
+                "dirs": dirs,
                 "bloom_cols": bloom_cols,
                 "renames": renames,
                 "retired": retired + [old],
@@ -3717,8 +3677,9 @@ class SnapCatalog:
         same way). Raises if the manifest predates row-count tracking."""
         sid = snapshot_id or self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, sid)
-        dir_rows = manifest.get("dir_rows")
-        if dir_rows is None or set(dir_rows) != set(manifest["files"]):
+        dirs = manifest.get("dirs", {})
+        rows = [dirs.get(d, {}).get("rows") for d in manifest["files"]]
+        if None in rows:
             raise ValueError(
                 f"{namespace}.{table}@{sid}: manifest lacks row counts"
             )
@@ -3727,7 +3688,7 @@ class SnapCatalog:
                 f"{namespace}.{table}@{sid}: pending merge-on-read deletes;"
                 " exact count needs a scan (or compact first)"
             )
-        return sum(dir_rows.values())
+        return sum(rows)
 
     def read_appends_between(
         self,
@@ -3946,8 +3907,10 @@ class SnapCatalog:
         rows = []
         for s in self._snapshots(namespace, table):
             sid = s["snapshot_id"]
-            dir_rows = s.get("dir_rows") or {}
-            entries = [("data", d, dir_rows.get(d)) for d in s["files"]]
+            dirs = s.get("dirs", {})
+            entries = [
+                ("data", d, dirs.get(d, {}).get("rows")) for d in s["files"]
+            ]
             entries += [
                 ("deletes", e["dir"], None) for e in s.get("deletes", [])
             ]
@@ -3983,12 +3946,11 @@ class SnapCatalog:
         stats degrade observability, not correctness."""
         sid = snapshot_id or self._current_sid(namespace, table)
         m = self._manifest(namespace, table, sid)
-        dir_rows = m.get("dir_rows") or {}
-        dir_stats = m.get("dir_stats") or {}
+        dirs = m.get("dirs", {})
 
         def _spark_type(col: str) -> str:
             for d in m["files"]:
-                pair = (dir_stats.get(d) or {}).get(col)
+                pair = dirs.get(d, {}).get("stats", {}).get(col)
                 if pair is not None:
                     v = pair[0]
                     if isinstance(v, bool):
@@ -4006,8 +3968,8 @@ class SnapCatalog:
             fields += [f"min_{c} {t}", f"max_{c} {t}"]
         rows = []
         for i, d in enumerate(m["files"]):
-            rec = [i, d, dir_rows.get(d)]
-            st = dir_stats.get(d) or {}
+            rec = [i, d, dirs.get(d, {}).get("rows")]
+            st = dirs.get(d, {}).get("stats", {})
             for c in stat_cols:
                 lo, hi = st.get(c) or (None, None)
                 rec += [lo, hi]
@@ -4289,15 +4251,11 @@ class SnapCatalog:
             for r in self.history(spark, namespace, table).collect()
             if r.is_current_ancestor
         }
-        dir_rows = cur.get("dir_rows") or {}
+        dirs = cur.get("dirs", {})
         files = cur["files"]
-        have_all = all(d in dir_rows for d in files)
-        total = sum(dir_rows[d] for d in files) if have_all else None
-        small = sum(
-            1
-            for d in files
-            if d in dir_rows and dir_rows[d] < small_dir_rows
-        )
+        rows = [dirs.get(d, {}).get("rows") for d in files]
+        total = None if None in rows else sum(rows)
+        small = sum(1 for n in rows if n is not None and n < small_dir_rows)
         row = (
             len(snaps),
             len(ancestors),
@@ -4326,9 +4284,8 @@ class SnapCatalog:
         return os.path.join(self.warehouse, namespace, table, *parts)
 
     def _current_sid(self, namespace: str, table: str) -> int:
-        # Derived from the snapshot manifests (max id), not the _current
-        # hint file: concurrent committers' hint writes can interleave, but
-        # the set of published manifests is authoritative.
+        # the set of published manifests is authoritative: the head is
+        # the highest id
         snaps = self._snapshots(namespace, table)
         if not snaps:
             raise SnapshotNotFound(f"{namespace}.{table} has no current snapshot")
@@ -4367,11 +4324,7 @@ class SnapCatalog:
         carry_dirs: list[str] | None = None,
         extra_deletes: list[dict] | None = None,
         clear_deletes: bool = False,
-        extra_dir_stats: dict | None = None,
-        extra_dir_rows: dict | None = None,
-        extra_dir_blooms: dict | None = None,
-        extra_dir_bounds: dict | None = None,
-        extra_dir_schemas: dict | None = None,
+        extra_dirs: dict | None = None,
         bloom_cols: list[str] | None = None,
         reset_schema_lineage: bool = False,
         sort_by: list[str] | None = None,
@@ -4404,7 +4357,10 @@ class SnapCatalog:
         directories into the new manifest untouched (file-pruned
         copy-on-write: a mutation rewrites only directories whose stats say
         they can contain affected rows). ``df=None`` publishes a
-        metadata-only commit of exactly ``carry_dirs``.
+        metadata-only commit of exactly ``carry_dirs``. ``extra_dirs``
+        supplies the ``dirs`` records of dirs the caller assembled
+        without this commit's data write (adopted, folded, clustered or
+        cherry-picked dirs — new names the parent manifest lacks).
         """
         snaps = self._snapshots(namespace, table)
         if partition_by is None and (carry or inherit_spec) and snaps:
@@ -4467,30 +4423,16 @@ class SnapCatalog:
                         f"CHECK constraint violated: ({check}); "
                         f"sample offending row: {bad[0].asDict()}"
                     )
-            # one footer walk serves stats + rows + per-row-group bounds
-            # (the Iceberg lower/upper_bounds pattern): stamped once at
-            # commit time so auto-dispatch is served from the manifest
-            # with zero per-statement I/O
-            new_stats, new_rows, new_bounds = dir_footer_metrics(out_dir)
-            new_blooms = (
-                dir_column_blooms(out_dir, bloom_cols) if bloom_cols else {}
-            )
-            # physical schema stamp for the new dir (the schema of THIS
-            # commit's df, before any lineage merge below rewrites the
-            # logical manifest schema): lets equal-schema reads skip the
-            # mergeSchema inference job (see _scan_schema). Partitioned
-            # layouts are not stamped — their files physically lack the
-            # partition columns, so the stamp would not match inference.
-            new_dir_schema = (
-                _nullable_schema_json(schema_json)
-                if not partition_by
-                else None
+            # the physical schema of THIS commit's df (before any lineage
+            # merge below rewrites the logical manifest schema) is
+            # stamped too — except on partitioned layouts, whose files
+            # physically lack the partition columns, so the stamp would
+            # not match inference
+            new_dir = _stamp_dir(
+                out_dir, bloom_cols, None if partition_by else schema_json
             )
         else:
-            data_dir_name, out_dir, new_stats, new_rows = None, None, None, 0
-            new_blooms = {}
-            new_bounds = None
-            new_dir_schema = None
+            data_dir_name, out_dir = None, None
             schema_json = snaps[-1]["schema"] if snaps else None
 
         # Optimistic publish: claim snapshot id N+1 via exclusive create of
@@ -4520,52 +4462,14 @@ class SnapCatalog:
                 files = list(carry_dirs) + new_files
             else:
                 files = new_files
-            # carried dirs keep their parent-manifest stats verbatim — the
-            # whole point is those directories were not rewritten
-            parent_stats = snaps[-1].get("dir_stats", {}) if snaps else {}
-            dir_stats = {d: parent_stats[d] for d in files if d in parent_stats}
-            if data_dir_name and new_stats:
-                dir_stats[data_dir_name] = new_stats
-            parent_rows = snaps[-1].get("dir_rows", {}) if snaps else {}
-            dir_rows = {d: parent_rows[d] for d in files if d in parent_rows}
-            if data_dir_name:
-                dir_rows[data_dir_name] = new_rows
-            parent_blooms = snaps[-1].get("dir_blooms", {}) if snaps else {}
-            dir_blooms = {
-                d: parent_blooms[d] for d in files if d in parent_blooms
+            # carried dirs keep their parent-manifest records verbatim —
+            # the whole point is those directories were not rewritten
+            stamped = {
+                **(snaps[-1].get("dirs", {}) if snaps else {}),
+                **({data_dir_name: new_dir} if data_dir_name else {}),
+                **(extra_dirs or {}),
             }
-            if data_dir_name and new_blooms:
-                dir_blooms[data_dir_name] = new_blooms
-            for d, bl in (extra_dir_blooms or {}).items():
-                if d in files and bl:
-                    dir_blooms[d] = bl
-            parent_bounds = snaps[-1].get("dir_bounds", {}) if snaps else {}
-            dir_bounds = {
-                d: parent_bounds[d] for d in files if d in parent_bounds
-            }
-            if data_dir_name and new_bounds is not None:
-                dir_bounds[data_dir_name] = new_bounds
-            for d, b in (extra_dir_bounds or {}).items():
-                if d in files and b is not None:
-                    dir_bounds[d] = b
-            parent_schemas = snaps[-1].get("dir_schemas", {}) if snaps else {}
-            dir_schemas = {
-                d: parent_schemas[d] for d in files if d in parent_schemas
-            }
-            if data_dir_name and new_dir_schema is not None:
-                dir_schemas[data_dir_name] = new_dir_schema
-            # caller-computed metadata for dirs it assembled WITHOUT a data
-            # write (compact_manifests merges stats from the parent
-            # manifest — the dirs are new names, so parent lookup misses)
-            for d, s in (extra_dir_stats or {}).items():
-                if d in files:
-                    dir_stats[d] = s
-            for d, r in (extra_dir_rows or {}).items():
-                if d in files:
-                    dir_rows[d] = r
-            for d, s in (extra_dir_schemas or {}).items():
-                if d in files and s:
-                    dir_schemas[d] = s
+            dirs = {d: stamped[d] for d in files if stamped.get(d)}
             # pending equality-delete entries follow the dirs they apply
             # to: entries whose dirs were all rewritten (or cleared by
             # compaction) drop out; surviving entries prune their
@@ -4667,16 +4571,12 @@ class SnapCatalog:
                 "partition_by": partition_by or [],
                 "partition_spec": transform_spec or [],
                 "schema": schema_json,
-                "dir_stats": dir_stats,
-                "dir_rows": dir_rows,
+                "dirs": dirs,
                 "deletes": deletes,
                 "renames": renames,
                 "retired": retired,
                 "widened": widened,
                 "bloom_cols": bloom_cols or [],
-                "dir_blooms": dir_blooms,
-                "dir_bounds": dir_bounds,
-                "dir_schemas": dir_schemas,
             }
             snap_path = self._tbl(namespace, table, "snapshots", f"{sid}.json")
             try:
@@ -4693,27 +4593,4 @@ class SnapCatalog:
                     f"{namespace}.{table}: snapshot {sid} was committed "
                     "concurrently; re-run this operation on the new state"
                 ) from None
-        self._write_current_hint(namespace, table, sid)
         return sid
-
-    def _write_current_hint(self, namespace: str, table: str, sid: int) -> None:
-        """Point the ``_current`` hint at a just-published snapshot.
-
-        The hint is a convenience only; reads derive the current id from
-        the manifest set (_current_sid) — so a failed hint write must
-        NOT raise: the commit is already PUBLISHED (the manifest was
-        exclusively created before this call), and an exception escaping
-        here would report a landed commit as failed (a retry then runs
-        against the new state) and reach callers' cleanup handlers,
-        which sweep data/delete dirs on the assumption nothing was
-        published — turning a cosmetic I/O error into a published
-        snapshot referencing deleted files."""
-        try:
-            cur_tmp = self._tbl(
-                namespace, table, f"_current.tmp-{uuid.uuid4().hex}"
-            )
-            with open(cur_tmp, "w") as f:
-                f.write(str(sid))
-            os.replace(cur_tmp, self._tbl(namespace, table, "_current"))
-        except OSError:
-            pass

@@ -7,6 +7,7 @@ import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from component_iceberg_spark.io.snaptable import SnapCatalog
@@ -319,7 +320,7 @@ def test_stats_pruned_read_skips_dirs(spark, sf_dir, tmp_path):
 
     manifest = cat._manifest("ns", "t", 3)
     assert len(manifest["files"]) == 3
-    assert all(d in manifest["dir_stats"] for d in manifest["files"])
+    assert all("stats" in manifest["dirs"][d] for d in manifest["files"])
 
     pred = "o_orderkey >= 500 AND o_orderkey < 1000"
     candidates, skipped = cat._prune_dirs(manifest, pred)
@@ -358,7 +359,7 @@ def test_file_pruned_delete_carries_untouched_dirs(spark, sf_dir, tmp_path):
     assert lo_dir not in m3["files"], "affected dir must be rewritten"
     assert _file_sig(os.path.join(wh, "ns", "t", "data", hi_dir)) == hi_sig
     # carried dir keeps its stats in the new manifest
-    assert m3["dir_stats"][hi_dir] == m2["dir_stats"][hi_dir]
+    assert m3["dirs"][hi_dir]["stats"] == m2["dirs"][hi_dir]["stats"]
     assert (
         cat.read(spark, "ns", "t").count()
         == o.filter("o_orderkey >= 100").count()
@@ -838,11 +839,11 @@ def test_compact_manifests_folds_entries_metadata_only(spark, sf_dir, tmp_path):
     assert cat.read(spark, "ns", "t", snapshot_id=2).count() == n.filter(
         "n_regionkey <= 2"
     ).count()
-    # metadata-only row_count works off the MERGED dir_rows (no scan)
+    # metadata-only row_count works off the MERGED rows (no scan)
     assert cat.row_count("ns", "t") == n.count()
     # merged stats: min-of-mins / max-of-maxs over the folded dirs
     folded = post["files"][0]
-    lo, hi = post["dir_stats"][folded]["n_regionkey"]
+    lo, hi = post["dirs"][folded]["stats"]["n_regionkey"]
     assert (lo, hi) == (0, 4)
     # hard links, not copies: every linked file shares its source inode
     import glob as _g
@@ -925,7 +926,7 @@ def test_cluster_rewrite_prunes_and_preserves(spark, sf_dir, tmp_path):
     assert len(post["files"]) == 8
     # disjoint narrow ranges: a 1/8th-range predicate skips >= half
     _cands, skipped = cat._prune_dirs(post, pred)
-    assert len(skipped) >= 4, (len(skipped), post["dir_stats"])
+    assert len(skipped) >= 4, (len(skipped), post["dirs"])
     # content identical (full scan) and exact under the predicate
     assert cat.read(spark, "ns", "t").count() == o.count()
     expect = o.filter(pred).count()
@@ -1958,11 +1959,19 @@ def test_bloom_pruning_skips_dirs_minmax_cannot(spark, sf_dir, tmp_path):
     cat.append("ns", "t", c.filter("c_custkey % 3 = 1"))  # inherits blooms
     cat.append("ns", "t", c.filter("c_custkey % 3 = 2"))
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert all(len(bl) == 1 for bl in m["dir_blooms"].values())
+    assert all(
+        len(r["blooms"]) == 1 for r in m["dirs"].values() if "blooms" in r
+    )
     # min/max alone cannot prune the % 3 = 0 dir (its name range covers
     # the value; only the boundary dir whose lexical min exceeds the
     # literal falls to range stats)
-    stats_only = {**m, "dir_blooms": {}}
+    stats_only = {
+        **m,
+        "dirs": {
+            d: {k: v for k, v in r.items() if k != "blooms"}
+            for d, r in m["dirs"].items()
+        },
+    }
     cand, stats_skipped = cat._split_by_stats(
         stats_only,
         [("c_name", "=", "Customer#000000001")],
@@ -2024,7 +2033,7 @@ def test_bloom_survives_manifest_fold_and_rename(spark, sf_dir, tmp_path):
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
     assert len(m["files"]) == 1
     folded = m["files"][0]
-    assert "c_name" in (m["dir_blooms"].get(folded) or {}), m["dir_blooms"]
+    assert "c_name" in m["dirs"][folded].get("blooms", {}), m["dirs"]
     # merged bloom: present values hit, absent values skip the only dir
     cand, _ = cat._prune_dirs(m, "c_name = 'Customer#000000002'")
     assert cand == [folded]
@@ -2059,7 +2068,7 @@ def test_bloom_type_mismatch_never_skips(spark, tmp_path):
     cat.create_or_replace("ns", "t", df, bloom_cols=["v"])
     m = cat._manifest("ns", "t", 1)
     d = m["files"][0]
-    assert m["dir_blooms"][d]["v"]["kind"] == "s"
+    assert m["dirs"][d]["blooms"]["v"]["kind"] == "s"
     # int literal vs string bloom: never prune
     cand, skipped = cat._split_by_stats(m, [("v", "=", 5)])
     assert cand == [d] and not skipped
@@ -2191,13 +2200,13 @@ def test_cluster_rewrite_keeps_bloom_registration(spark, sf_dir, tmp_path):
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
     assert m.get("bloom_cols") == ["c_name"], m.get("bloom_cols")
     assert m["files"] and all(
-        "c_name" in (m["dir_blooms"].get(d) or {}) for d in m["files"]
-    ), m.get("dir_blooms")
+        "c_name" in m["dirs"][d].get("blooms", {}) for d in m["files"]
+    ), m.get("dirs")
     # appends after the rewrite keep building blooms (inherited cols)
     cat.append("ns", "t", c.limit(7))
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
     assert all(
-        "c_name" in (m["dir_blooms"].get(d) or {}) for d in m["files"]
+        "c_name" in m["dirs"][d].get("blooms", {}) for d in m["files"]
     )
     # and the registered bloom still prunes an absent value entirely
     cand, skipped = cat._prune_dirs(m, "c_name = 'Customer#notreal'")
@@ -2220,7 +2229,7 @@ def test_bloom_float_probe_beyond_double_precision_never_skips(
     df = spark.createDataFrame([(big, "x")], "k long, v string")
     cat.create_or_replace("ns", "t", df, bloom_cols=["k"])
     m = cat._manifest("ns", "t", 1)
-    bloom = m["dir_blooms"][m["files"][0]]["k"]
+    bloom = m["dirs"][m["files"][0]]["blooms"]["k"]
     # double-equal but integer-different literal: conservative keep
     assert bloom_maybe_contains(bloom, float(2**53)) is True
     assert bloom_maybe_contains(bloom, -float(2**53)) is True
@@ -2284,7 +2293,7 @@ def test_add_files_no_copy_and_lifecycle(spark, sf_dir, tmp_path):
     assert cat.read(spark, "ns", "t").count() == n_before + n_ext
     assert cat.row_count("ns", "t") == n_before + n_ext
     # footer stats recorded → the adopted dir prunes like any other
-    assert "o_orderkey" in (m["dir_stats"].get(adopted[0]) or {})
+    assert "o_orderkey" in m["dirs"][adopted[0]].get("stats", {})
     # appends on top keep working
     cat.append("ns", "t", o.filter("o_orderkey % 3 = 2"))
     assert cat.read(spark, "ns", "t").count() == o.count()
@@ -2582,7 +2591,7 @@ def test_dv_apply_mode_threshold_matrix(tmp_path):
     unstamped legacy DVs and legacy positional files always anti-join
     (never a blind probe, never a read-side range derivation)."""
     cat = SnapCatalog(str(tmp_path / "wh"))
-    manifest = {"files": ["d"], "dir_rows": {"d": 100_000}}
+    manifest = {"files": ["d"], "dirs": {"d": {"rows": 100_000}}}
 
     def mode(mode="dv", **stats):
         return cat._dv_apply_mode(
@@ -2700,7 +2709,7 @@ def test_add_files_without_stats_degrades_not_breaks(
     sid = cat.add_files(spark, "ns", "t", ext, compute_stats=False)
     m = cat._manifest("ns", "t", sid)
     ad = [d for d in m["files"] if d.startswith("adopted-")][0]
-    assert ad not in (m.get("dir_stats") or {})
+    assert "stats" not in m["dirs"][ad]
     # files() NULL degradation on the metrics-free dir
     frow = {
         r.data_dir: (r.min_o_orderkey, r.max_o_orderkey)
@@ -2953,28 +2962,22 @@ def test_legacy_delete_entries_read_exact_and_fold(spark, tmp_path):
     assert cat.rewrite_deletes_to_dv(spark, "ns", "t") == sid
 
 
-def test_current_hint_failure_does_not_fail_landed_commits(
-    spark, tmp_path, monkeypatch
-):
-    """The ``_current`` hint is written after the manifest is published,
-    so a failed hint write must not report a landed rollback or rename
-    as failed (a retry would then run against the new state): both
-    return the new snapshot id and the table reads the post-state."""
+def _hint_files(cat: SnapCatalog, ns: str, tbl: str) -> list[str]:
+    return [f for f in os.listdir(cat._tbl(ns, tbl)) if f.startswith("_current")]
+
+
+def test_rollback_and_rename_return_the_published_head(spark, tmp_path):
+    """A metadata-only rollback or rename returns the snapshot id it
+    published — the new head — and the table reads the post-state (a
+    caller that saw a landed commit reported otherwise would retry it
+    against the new state). Neither leaves a side file next to the
+    manifests."""
     cat = SnapCatalog(str(tmp_path / "wh"))
     ids = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
     sid1 = cat.create_or_replace("ns", "t", ids)
     cat.append("ns", "t", spark.range(10, 15).select(
         F.col("id"), (F.col("id") * 2).alias("v")
     ))
-    real_replace = os.replace
-
-    def failing_replace(src, dst):
-        if os.path.basename(dst) == "_current":
-            raise OSError("injected _current replace failure")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(os, "replace", failing_replace)
-    hint = os.path.join(cat.warehouse, "ns", "t", "_current")
 
     sid = cat.rollback_to("ns", "t", sid1)
     assert sid == cat._current_sid("ns", "t") == sid1 + 2
@@ -2984,9 +2987,79 @@ def test_current_hint_failure_does_not_fail_landed_commits(
     assert sid == cat._current_sid("ns", "t") == sid1 + 3
     got = cat.read(spark, "ns", "t")
     assert got.columns == ["id", "w"] and got.count() == 10
-    # the injection really hit: the hint still names the pre-failure head
-    with open(hint) as f:
-        assert int(f.read()) == sid1 + 1
+    assert _hint_files(cat, "ns", "t") == []
+
+
+def test_table_existence_derives_from_published_manifests(spark, tmp_path):
+    """A table exists exactly when snapshots/ holds a manifest — the
+    rule the head snapshot is read by. An existence check served by a
+    best-effort side file could miss a landed commit, and upsert would
+    then publish the delta ALONE (no base, nothing carried): 100 rows
+    plus a 10-key upsert (5 new) must read 105 rows, never 10."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    cat.create_or_replace(
+        "ns", "t", spark.range(100).select(F.col("id"), F.lit("a").alias("v"))
+    )
+    for f in _hint_files(cat, "ns", "t"):
+        os.remove(cat._tbl("ns", "t", f))
+    assert cat.table_exists("ns", "t")
+    assert cat.list_tables("ns") == ["t"]
+    delta = spark.range(95, 105).select(F.col("id"), F.lit("b").alias("v"))
+    cat.upsert("ns", "t", delta, keys=["id"])
+    got = cat.read(spark, "ns", "t")
+    assert got.count() == 105
+    assert got.filter("v = 'b'").count() == 10
+    assert _hint_files(cat, "ns", "t") == []
+    # a table dir whose snapshots/ holds no manifest (e.g. a first
+    # commit that failed its CHECK) neither exists nor lists
+    os.makedirs(cat._tbl("ns", "empty", "snapshots"))
+    assert not cat.table_exists("ns", "empty")
+    assert cat.list_tables("ns") == ["t"]
+
+
+def test_parent_format_manifest_reads_exact_and_next_commit_writes_dirs(
+    spark, tmp_path
+):
+    """A manifest in the earlier format — five per-dir maps (dir_stats,
+    dir_rows, dir_bounds, dir_blooms, dir_schemas) and no ``dirs`` —
+    needs no migration: readers see its metadata as absent, so reads
+    stay exact and only the shortcuts go (files() shows NULLs,
+    row_count refuses); the next append publishes only ``dirs``."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    df = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v"))
+    cat.create_or_replace("ns", "t", df, bloom_cols=["id"])
+    path = cat._tbl("ns", "t", "snapshots", "1.json")
+    with open(path) as f:
+        m = json.load(f)
+    recs = m.pop("dirs")
+    (d,) = m["files"]
+    assert set(recs[d]) == {"rows", "stats", "bounds", "blooms", "schema"}
+    for field in ("stats", "rows", "bounds", "blooms"):
+        m[f"dir_{field}"] = {d: recs[d][field]}
+    m["dir_schemas"] = {d: recs[d]["schema"]}
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+    assert sorted(
+        r.id for r in cat.read(spark, "ns", "t", where="id = 7").collect()
+    ) == [7]
+    assert cat.read(spark, "ns", "t").count() == 100
+    (row,) = cat.files(spark, "ns", "t", stat_cols=("id",)).collect()
+    assert (row.n_rows, row.min_id, row.max_id) == (None, None, None)
+    with pytest.raises(ValueError, match="lacks row counts"):
+        cat.row_count("ns", "t")
+
+    sid = cat.append(
+        "ns", "t",
+        spark.range(100, 110).select(F.col("id"), (F.col("id") * 2).alias("v")),
+    )
+    m2 = cat._manifest("ns", "t", sid)
+    legacy = {"dir_stats", "dir_rows", "dir_bounds", "dir_blooms", "dir_schemas"}
+    assert not legacy & set(m2)
+    (new,) = [x for x in m2["files"] if x != d]
+    assert list(m2["dirs"]) == [new]
+    assert m2["dirs"][new]["rows"] == 10
+    assert cat.read(spark, "ns", "t").count() == 110
 
 
 def test_compact_manifests_never_folds_dv_dirs(spark, sf_dir, tmp_path):
@@ -3042,7 +3115,7 @@ def test_entries_metadata_table(spark, sf_dir, tmp_path):
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
     for ordv, rows in by_dir.items():
         d = m["files"][ordv]
-        assert sum(r.n_rows for r in rows) == m["dir_rows"][d]
+        assert sum(r.n_rows for r in rows) == m["dirs"][d]["rows"]
     assert all(r.size_bytes > 0 and r.n_row_groups >= 1 for r in e)
     # file ordinals are 0..k-1 within each dir
     for rows in by_dir.values():
@@ -3083,9 +3156,9 @@ def test_cherry_pick_contract(spark, sf_dir, tmp_path):
              set(cat._manifest("ns", "t", 1)["files"])]
     (dd,) = delta
     # stats, rows and blooms carried from the source manifest
-    assert m["dir_stats"].get(dd) == src["dir_stats"].get(dd)
-    assert m["dir_rows"].get(dd) == src["dir_rows"].get(dd)
-    assert m["dir_blooms"].get(dd) == src["dir_blooms"].get(dd)
+    assert m["dirs"][dd].get("stats") == src["dirs"][dd].get("stats")
+    assert m["dirs"][dd].get("rows") == src["dirs"][dd].get("rows")
+    assert m["dirs"][dd].get("blooms") == src["dirs"][dd].get("blooms")
     assert cat.row_count("ns", "t") == o.count()
     # refusals
     with pytest.raises(ValueError, match="already referenced"):
@@ -3539,7 +3612,7 @@ def test_dispatch_bounds_rename_partition_and_timestamp(
 def test_auto_dispatch_footer_proof_noop_zero_scans(spark, sf_dir, tmp_path):
     """A predicate footer-PROVEN empty (upper bound 0) is a commit-free
     no-op with ZERO candidate-dir scans — even on a stats-free adopted
-    table where manifest pruning can't help (no dir_stats: _prune_dirs
+    table where manifest pruning can't help (no stats: _prune_dirs
     keeps every dir a candidate, so only the footer bounds stand
     between the statement and a pointless scan)."""
     cat = SnapCatalog(str(tmp_path / "wh"))
@@ -3551,7 +3624,7 @@ def test_auto_dispatch_footer_proof_noop_zero_scans(spark, sf_dir, tmp_path):
     cat.create_or_replace("ns", "t", df.limit(0))  # schema anchor
     cat.add_files(spark, "ns", "t", ext, compute_stats=False)
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    adopted = [d for d in m["files"] if d not in (m.get("dir_stats") or {})]
+    adopted = [d for d in m["files"] if "stats" not in m["dirs"][d]]
     assert adopted, "fixture must contain a stats-free dir"
 
     calls = {"n": 0}
@@ -3690,7 +3763,8 @@ def test_dv_write_entry_fans_out_large_scattered(spark, tmp_path,
 
 def test_dispatch_bounds_manifest_served_and_memoized(spark, tmp_path):
     """VERDICT r14 #3 done-criterion: _commit stamps per-row-group
-    bounds into the manifest (dir_bounds) and _dispatch_bounds serves
+    bounds into the manifest (the dir record's bounds) and
+    _dispatch_bounds serves
     from them with ZERO footer reads; a pre-stamp (legacy) manifest
     falls back to a footer walk that is memoized per dir, so repeated
     statements against the same snapshot pay the walk once (ADVICE r14
@@ -3704,8 +3778,8 @@ def test_dispatch_bounds_manifest_served_and_memoized(spark, tmp_path):
     cat.create_or_replace("ns", "t", df.repartitionByRange(4, "id"))
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
     (d,) = m["files"]
-    assert d in m.get("dir_bounds", {}), "commit must stamp bounds"
-    assert sum(r["n"] for r in m["dir_bounds"][d]) == 1000
+    assert "bounds" in m["dirs"][d], "commit must stamp bounds"
+    assert sum(r["n"] for r in m["dirs"][d]["bounds"]) == 1000
 
     calls = {"n": 0}
     real_pf = _pq.ParquetFile
@@ -3718,8 +3792,14 @@ def test_dispatch_bounds_manifest_served_and_memoized(spark, tmp_path):
     try:
         served = cat._dispatch_bounds("ns", "t", m, [d], "id < 250")
         assert calls["n"] == 0, "stamped table must read no footers"
-        # legacy manifest (no dir_bounds): footer walk, then memo
-        legacy = {k: v for k, v in m.items() if k != "dir_bounds"}
+        # legacy manifest (no bounds): footer walk, then memo
+        legacy = {
+            **m,
+            "dirs": {
+                dd: {k: v for k, v in r.items() if k != "bounds"}
+                for dd, r in m["dirs"].items()
+            },
+        }
         walked = cat._dispatch_bounds("ns", "t", legacy, [d], "id < 250")
         assert calls["n"] > 0, "legacy path must walk footers once"
         first = calls["n"]
@@ -3859,7 +3939,7 @@ def test_dispatch_bounds_offset_literal(spark, tmp_path):
 
 def test_delta_key_pruning_system_timezone(spark, tmp_path):
     """Review r15: collect() renders tz-adjusted timestamps in the
-    SYSTEM timezone while dir_stats are naive UTC — on a non-UTC host
+    SYSTEM timezone while manifest stats are naive UTC — on a non-UTC host
     the merge-key range shifted by the host offset and the prune could
     carry a dir that holds matched keys as 'untouched' (lost updates).
     Simulated by flipping Python's process timezone (which is exactly
@@ -3894,7 +3974,7 @@ def test_delta_key_pruning_system_timezone(spark, tmp_path):
         else:
             os.environ["TZ"] = prev_tz
         _time.tzset()
-    by_rows = {d: m["dir_rows"][d] for d in m["files"]}
+    by_rows = {d: m["dirs"][d]["rows"] for d in m["files"]}
     dir1, dir2 = m["files"]  # commit order: [00:00-02:00], [08:00-10:00]
     assert dir2 in cand, (
         "the dir holding the delta's key must stay a candidate under a "
@@ -3937,7 +4017,7 @@ def test_cluster_rewrite_stamps_dir_bounds(spark, sf_dir, tmp_path):
     cat.create_or_replace("ns", "t", o)
     cat.cluster_rewrite(spark, "ns", "t", "o_orderkey", n_buckets=4)
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert set(m["files"]) <= set(m.get("dir_bounds", {})), (
+    assert all("bounds" in m["dirs"][d] for d in m["files"]), (
         "every rewritten bucket dir must be stamped"
     )
     calls = {"fb": 0}
@@ -3968,7 +4048,7 @@ def test_compact_manifests_bounds_concat_cap(spark, tmp_path,
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
     (folded,) = m["files"]
     assert folded.startswith("manifest-")
-    assert folded not in (m.get("dir_bounds") or {}), (
+    assert "bounds" not in m["dirs"][folded], (
         "over-cap concatenation must not stamp"
     )
     # and the un-stamped fold still answers dispatch via the fallback
@@ -4027,7 +4107,7 @@ def test_dir_schema_stamp_fast_path_and_fallbacks(spark, tmp_path):
     cat.create_or_replace("ns", "t", df)
     cat.append("ns", "t", df)
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert set(m["dir_schemas"]) == set(m["files"])
+    assert all("schema" in m["dirs"][d] for d in m["files"])
     assert cat._scan_schema(m) is not None, "uniform stamps -> fast path"
     fast = cat.read(spark, "ns", "t")
     merged = spark.read.option("mergeSchema", "true").parquet(
@@ -4040,7 +4120,7 @@ def test_dir_schema_stamp_fast_path_and_fallbacks(spark, tmp_path):
     cat.compact_manifests("ns", "t")
     mf = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
     assert len(mf["files"]) == 1
-    assert cat._scan_schema(mf) is not None, mf.get("dir_schemas")
+    assert cat._scan_schema(mf) is not None, mf.get("dirs")
 
     # evolving append (extra column): stamps disagree -> mergeSchema
     # fallback keeps surfacing the union of columns on plain tables

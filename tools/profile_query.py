@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
 """Profile registered queries: wall per rep (same warm-session noop-sink
-methodology as bench.py) plus a per-stage breakdown pulled from the local
-Spark UI REST API (the scripted equivalent of guide §7.1's "open the
-Stages tab"), so the expensive jobs inside multi-job operators (mutation
-verbs, streaming harnesses) are attributable without a browser.
+methodology as bench.py) plus a per-stage breakdown read from Spark's
+in-process status store (the scripted equivalent of guide §7.1's "open
+the Stages tab", through the same reader as
+:mod:`component_iceberg_spark.metrics` — no UI needed), so the expensive
+jobs inside multi-job operators (mutation verbs, streaming harnesses)
+are attributable without a browser.
 
 Usage:
     python tools/profile_query.py q21_waiting_supplier snap_compact ...
@@ -12,14 +14,16 @@ Usage:
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from component_iceberg_spark.metrics import (  # noqa: E402
+    _drain_listener_bus,
+    _stage_list,
+)
 from component_iceberg_spark.plans import load_all  # noqa: E402
 from component_iceberg_spark.session import get_spark  # noqa: E402
 
@@ -32,29 +36,25 @@ def force(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def _rest(spark, path):
-    port = spark.conf.get("spark.ui.port", "4040")
-    app_id = spark.sparkContext.applicationId
-    url = f"http://localhost:{port}/api/v1/applications/{app_id}/{path}"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read())
-
-
 def stages(spark):
-    try:
-        return {
-            (s["stageId"], s["attemptId"]): s
-            for s in _rest(spark, "stages?status=complete")
-        }
-    except Exception as e:  # UI disabled or race — degrade to wall-only
-        print(f"  [stage breakdown unavailable: {e}]")
-        return {}
+    """Completed stages keyed by (stage id, attempt id)."""
+    _drain_listener_bus(spark)
+    return {
+        (s.stageId(), s.attemptId()): s
+        for s in _stage_list(spark)
+        if s.status().toString() == "COMPLETE"
+    }
+
+
+def _label(s) -> str:
+    desc = s.description()
+    return desc.get() if desc.isDefined() else s.name()
 
 
 def main() -> None:
     names = sys.argv[1:]
     registry = load_all()
-    spark = get_spark("profile", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("profile")
     sc = spark.sparkContext
     force(registry["scan_full"].fn(spark, SF_DIR))
 
@@ -73,7 +73,7 @@ def main() -> None:
             reps.append(time.perf_counter() - t0)
         after = stages(spark)
         new = [s for k, s in after.items() if k not in before]
-        new.sort(key=lambda s: -(s.get("executorRunTime") or 0))
+        new.sort(key=lambda s: -s.executorRunTime())
         print(
             f"\n=== {name}: warmup {warm:.3f}s "
             f"reps {[round(x, 3) for x in reps]} best {min(reps):.3f} "
@@ -81,13 +81,13 @@ def main() -> None:
         )
         for s in new[:TOP]:
             print(
-                f"  run {s.get('executorRunTime', 0) / 1000:7.2f}s"
-                f" cpu {s.get('executorCpuTime', 0) / 1e9:7.2f}s"
-                f" tasks {s.get('numCompleteTasks', 0):4d}"
-                f" in {s.get('inputBytes', 0) / 1e6:8.1f}MB"
-                f" sh_r {s.get('shuffleReadBytes', 0) / 1e6:7.1f}MB"
-                f" sh_w {s.get('shuffleWriteBytes', 0) / 1e6:7.1f}MB"
-                f"  {(s.get('description') or s.get('name', ''))[:90]}"
+                f"  run {s.executorRunTime() / 1000:7.2f}s"
+                f" cpu {s.executorCpuTime() / 1e9:7.2f}s"
+                f" tasks {s.numCompleteTasks():4d}"
+                f" in {s.inputBytes() / 1e6:8.1f}MB"
+                f" sh_r {s.shuffleReadBytes() / 1e6:7.1f}MB"
+                f" sh_w {s.shuffleWriteBytes() / 1e6:7.1f}MB"
+                f"  {_label(s)[:90]}"
             )
         sys.stdout.flush()
     sc.setJobDescription(None)
