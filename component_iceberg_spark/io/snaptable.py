@@ -32,14 +32,16 @@ Design notes (what makes this 100 TB-shaped even though it's small):
 - Upsert rewrites only via a distributed anti-join + union (one shuffle on
   the key), never driver-side row handling; at scale the same plan is what
   Iceberg's copy-on-write MERGE produces.
-- Commits are atomic via write-temp-then-rename of the manifest; the
-  single-writer assumption matches the reference component. A real
+- Commits are atomic via write-temp-then-link of the manifest (the link
+  fails if a rival published the id first); the single-writer
+  assumption matches the reference component. A real
   multi-writer deployment swaps this for the Iceberg REST catalog's
   optimistic commit — which is why the public API mirrors the connector's.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import hashlib
 import json
@@ -747,10 +749,7 @@ class SnapCatalog:
     def table_exists(self, namespace: str, table: str) -> bool:
         # the published manifests are the table (the rule _current_sid
         # reads the head by): a dir whose snapshots/ holds none is not
-        snap_dir = self._tbl(namespace, table, "snapshots")
-        return os.path.isdir(snap_dir) and any(
-            fn.endswith(".json") for fn in os.listdir(snap_dir)
-        )
+        return self._head_sid(namespace, table) is not None
 
     def drop_table(self, namespace: str, table: str) -> None:
         path = os.path.join(self.warehouse, namespace, table)
@@ -1651,29 +1650,18 @@ class SnapCatalog:
                     f"{namespace}.{table}@{snapshot_id}: data dir {d} was "
                     "garbage-collected; rollback target no longer exists"
                 )
-        while True:
-            snaps = self._snapshots(namespace, table)
-            sid = snaps[-1]["snapshot_id"] + 1
-            manifest = {
+        return self._publish_metadata_commit(
+            namespace, table,
+            lambda _cur: {
                 **target,
-                "snapshot_id": sid,
-                "parent_id": snaps[-1]["snapshot_id"],
                 # lineage pointer for the history metadata table: the
                 # rollback's CONTENT ancestor is the target, so the
                 # undone snapshots fall off the current-ancestor chain
                 # (Iceberg history semantics)
                 "rollback_of": target["snapshot_id"],
-                "timestamp_ms": int(time.time() * 1000),
                 "operation": "rollback",
-            }
-            snap_path = self._tbl(namespace, table, "snapshots", f"{sid}.json")
-            try:
-                with open(snap_path, "x") as f:
-                    json.dump(manifest, f)
-                break
-            except FileExistsError:
-                continue
-        return sid
+            },
+        )
 
     def cherry_pick(
         self, namespace: str, table: str, snapshot_id: int
@@ -1751,67 +1739,221 @@ class SnapCatalog:
             extra_dirs={d: src_dirs[d] for d in delta if d in src_dirs},
         )
 
+    # -- row-level DML: six verbs over one core (_mutate_where) -------------
+
+    # auto dispatch threshold: above this matched fraction of the candidate
+    # dirs' rows a statement is copy-on-write, at or below it merge-on-read
+    COW_DENSITY = 0.2
+
     def delete_where(
         self, spark: SparkSession, namespace: str, table: str, predicate: str
     ) -> int:
         """Row-level DELETE (Iceberg ``DELETE FROM`` analogue, copy-on-write):
         survivors are rewritten as a new snapshot; prior snapshots still
-        see the deleted rows (time-travelable deletes). At scale Iceberg's
-        merge-on-read would write delete files instead — same API."""
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        # File-pruned rewrite: dirs whose stats cannot satisfy the predicate
-        # contain no doomed rows — carried untouched (byte-identical).
-        candidates, untouched = self._prune_dirs(manifest, predicate)
-        if not candidates:
-            return self._commit(
-                namespace, table, None, operation="delete", carry=False,
-                base_sid=base, inherit_spec=True, carry_dirs=untouched,
-            )
-        df = self._read_with_deletes(
-            spark, namespace, table, manifest, candidates
-        ).filter(f"NOT ({predicate})")
-        return self._commit(
-            namespace, table, df, operation="delete", carry=False,
-            base_sid=base, inherit_spec=True, carry_dirs=untouched,
+        see the deleted rows (time-travelable deletes)."""
+        return self._mutate_where(
+            spark, namespace, table, predicate, None, "cow"
         )
 
     def delete_where_mor(
         self, spark: SparkSession, namespace: str, table: str, predicate: str
     ) -> int:
-        """Row-level DELETE, merge-on-read as a DELETION VECTOR — the
-        MoR twin of :meth:`delete_where` (Iceberg ``DELETE FROM`` with
-        ``write.delete.mode=merge-on-read`` on a v3/DV table): doomed
-        rows' physical addresses are computed from a positional scan of
-        only the PREDICATE-CANDIDATE dirs (stats/bloom pruning — dirs
-        that cannot match contribute nothing and are never scanned) and
-        committed as one DV entry. No data file is rewritten; the read
-        applies the DV as a broadcast membership probe. This is the
-        DELETE shape for a small-to-moderate doomed fraction of a huge
-        table: delete cost is one pruned scan + a file-count-sized
-        metadata write, with the rewrite deferred to compaction.
-        Refused while other deletes are pending (positional addressing
-        over masked rows is ambiguous — same contract as
-        ``read_with_positions``)."""
+        """Row-level DELETE, merge-on-read as a DELETION VECTOR (Iceberg
+        ``write.delete.mode=merge-on-read`` on a v3/DV table): the doomed
+        rows' addresses are committed as one DV entry and no data file
+        is rewritten until compaction. Refused while deletes are
+        pending."""
+        return self._mutate_where(
+            spark, namespace, table, predicate, None, "mor"
+        )
+
+    def delete_where_auto(
+        self, spark: SparkSession, namespace: str, table: str, predicate: str
+    ) -> int:
+        """Row-level DELETE, copy-on-write or merge-on-read as the MEASURED
+        doom density decides (:meth:`_auto_mode`); pending merge-on-read
+        deletes force copy-on-write."""
+        return self._mutate_where(
+            spark, namespace, table, predicate, None, "auto"
+        )
+
+    def update_where(
+        self, spark: SparkSession, namespace: str, table: str,
+        predicate: str, assignments: dict[str, str],
+    ) -> int:
+        """Row-level UPDATE (Iceberg ``UPDATE … SET`` analogue,
+        copy-on-write): matching rows get the SET expressions, others pass
+        through, one new snapshot. ``assignments`` maps column → SQL
+        expression."""
+        return self._mutate_where(
+            spark, namespace, table, predicate, assignments, "cow"
+        )
+
+    def update_where_mor(
+        self, spark: SparkSession, namespace: str, table: str,
+        predicate: str, assignments: dict[str, str],
+    ) -> int:
+        """Row-level UPDATE, merge-on-read (Iceberg
+        ``write.update.mode=merge-on-read``): ONE atomic commit masks the
+        matched rows with a deletion vector and appends their updated
+        images as one new small data dir. Refused while deletes are
+        pending."""
+        return self._mutate_where(
+            spark, namespace, table, predicate, assignments, "mor"
+        )
+
+    def update_where_auto(
+        self, spark: SparkSession, namespace: str, table: str,
+        predicate: str, assignments: dict[str, str],
+    ) -> int:
+        """Row-level UPDATE, copy-on-write or merge-on-read as the MEASURED
+        match density decides, like :meth:`delete_where_auto`."""
+        return self._mutate_where(
+            spark, namespace, table, predicate, assignments, "auto"
+        )
+
+    def _mutate_where(
+        self, spark: SparkSession, namespace: str, table: str,
+        predicate: str, assignments: dict[str, str] | None, mode: str,
+    ) -> int:
+        """The one row-level mutation core: ``assignments=None`` is a
+        DELETE, anything else an UPDATE; ``mode`` is ``"cow"``, ``"mor"``
+        or ``"auto"``. The head, its manifest and the stats/bloom-pruned
+        candidate dirs are read ONCE, then one of two bodies runs:
+
+        - copy-on-write rewrites the candidate dirs (pending deletes
+          applied) — ``NOT pred`` survivors, or the ``when/otherwise``
+          SET — and carries the untouched dirs byte-identical. With no
+          candidate dir it still publishes a metadata-only snapshot.
+        - merge-on-read writes the matched rows' physical addresses from
+          a positional scan as one DV (:meth:`_commit_dv`); an UPDATE's
+          new images land in the same manifest publish, so old rows are
+          masked and new rows visible atomically (the DV scopes only the
+          dirs it addresses, never the images' new dir). No candidate
+          dir or no match returns the base id without a commit. Refused
+          over pending deletes: positional addressing over masked rows
+          is ambiguous (the ``read_with_positions`` contract).
+
+        ``auto`` runs the body :meth:`_auto_mode` picks on the same
+        manifest and candidates, and copy-on-write over pending deletes
+        (copy-on-write is always legal)."""
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
-        if self._pending_deletes(manifest, manifest["files"]):
-            raise ValueError(
-                f"{namespace}.{table}: delete_where_mor with pending "
-                "merge-on-read deletes is ambiguous — compact() first"
+        candidates, untouched = self._prune_dirs(manifest, predicate)
+        verb = "delete" if assignments is None else "update"
+        if mode != "cow" and self._pending_deletes(
+            manifest, manifest["files"]
+        ):
+            if mode == "mor":
+                raise ValueError(
+                    f"{namespace}.{table}: {verb}_where_mor with pending "
+                    "merge-on-read deletes is ambiguous — compact() first"
+                )
+            mode = "cow"
+        if mode == "auto":
+            mode = self._auto_mode(
+                spark, namespace, table, manifest, candidates, predicate
             )
-        candidates, _untouched = self._prune_dirs(manifest, predicate)
-        if not candidates:
-            return base  # no dir can match: nothing to delete
-        scan = self._read_dirs(
-            spark, namespace, table, candidates,
-            bool(manifest.get("partition_by")), with_positions=True,
-            read_schema=self._scan_schema(manifest),
+        if mode == "cow":
+            df = None
+            if candidates:
+                df = self._read_with_deletes(
+                    spark, namespace, table, manifest, candidates
+                )
+                if assignments is None:
+                    df = df.filter(f"NOT ({predicate})")
+                for col_name, expr in (assignments or {}).items():
+                    df = df.withColumn(
+                        col_name,
+                        F.when(F.expr(predicate), F.expr(expr)).otherwise(
+                            F.col(col_name)
+                        ),
+                    )
+            return self._commit(
+                namespace, table, df, operation=verb, carry=False,
+                base_sid=base, inherit_spec=True, carry_dirs=untouched,
+            )
+        if mode == "skip" or not candidates:
+            return base  # no row can match: nothing to publish
+        matched = self._scan_dirs(
+            spark, namespace, table, manifest, candidates, with_positions=True
+        ).filter(predicate)
+        images = None
+        if assignments is not None:
+            # SET targets must exist — the CoW body fails on an unknown
+            # column (unresolvable in its otherwise() branch); silently
+            # accepting one here would fork the schema on a typo
+            pos_cols = (self.POS_FILE_COL, self.POS_IDX_COL)
+            user_cols = {
+                c for c in matched.columns
+                if c not in pos_cols and not c.startswith("_pt_")
+            }
+            unknown = sorted(set(assignments) - user_cols)
+            if unknown:
+                raise ValueError(
+                    f"update_where_mor SET targets not in the table schema: "
+                    f"{unknown}"
+                )
+            # ONE evaluation of the predicate feeds BOTH jobs (the DV
+            # write and the image append): without the checkpoint, a
+            # nondeterministic predicate would mask one row set and
+            # append images of another — silent loss/duplication (the
+            # same double-execution hazard _commit's `check` closes)
+            matched = matched.localCheckpoint()
+            images = matched
+            for col_name, expr in assignments.items():
+                images = images.withColumn(col_name, F.expr(expr))
+            images = images.drop(
+                *pos_cols, *[c for c in images.columns if c.startswith("_pt_")]
+            )
+        return self._commit_dv(
+            spark, namespace, table, base, manifest, matched,
+            df=images, operation=verb,
         )
-        doomed = self._resolve_schema(scan, manifest).filter(
-            predicate
-        ).select(self.POS_FILE_COL, self.POS_IDX_COL)
-        return self.delete_positions(spark, namespace, table, doomed)
+
+    def _auto_mode(
+        self, spark: SparkSession, namespace: str, table: str,
+        manifest: dict, candidates: list[str], predicate: str,
+    ) -> str:
+        """The auto verbs' physical shape from the matched fraction of the
+        candidate dirs' rows: ``"cow"`` above ``COW_DENSITY``, ``"mor"``
+        at or below it, ``"skip"`` when no row can match. Iceberg pins
+        this choice statically per table (``write.delete.mode`` /
+        ``write.update.mode``); here it is measured per statement, the
+        way AQE picks join strategies at runtime. Dense matches go
+        copy-on-write: rewriting most of a dir is the deferred work
+        anyway, and a dense DV (or MoR images nearly doubling a dir's
+        bytes) taxes every read until compaction.
+
+        The decision is served COUNT-FREE whenever the row-group bounds
+        of :meth:`_dispatch_bounds` land decisively on one side of the
+        threshold, so the common equality/range statement pays exactly
+        ONE candidate-dir scan: the chosen body's own. Only when they
+        straddle it (or can't run) does one combined aggregate measure
+        matched AND total in a single job — the predicate reaches the
+        parquet reader as a pushed filter."""
+        if not candidates:
+            return "skip"
+        bounds = self._dispatch_bounds(
+            namespace, table, manifest, candidates, predicate
+        )
+        if bounds is not None:
+            lower, upper, total = bounds
+            if upper == 0:
+                return "skip"  # footer proof: no row can match
+            if total and lower / total > self.COW_DENSITY:
+                return "cow"
+            if total and upper / total <= self.COW_DENSITY:
+                return "mor"
+        scan = self._scan_dirs(spark, namespace, table, manifest, candidates)
+        row = scan.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.expr(predicate)).alias("m"),
+        ).first()
+        n, matched = int(row["n"]), int(row["m"] or 0)
+        if matched == 0:
+            return "skip"
+        return "cow" if n and matched / n > self.COW_DENSITY else "mor"
 
     def _dispatch_bounds(
         self,
@@ -1824,33 +1966,20 @@ class SnapCatalog:
         """Count-free ``(lower, upper, total)`` bounds on the rows the
         predicate matches inside the candidate dirs, from parquet FOOTER
         row-group stats — min/max plus null_count, metadata-only, no
-        Spark job. This is what feeds the auto-dispatch verbs on their
+        Spark job. This is what feeds :meth:`_auto_mode` on its
         stats-served path: a row group whose range can't satisfy some
         conjunct contributes zero matches (NULLs fail comparisons too);
         one where every conjunct is satisfied by the WHOLE range and the
         column has zero nulls contributes all its rows; anything else is
         indeterminate (counts toward ``upper`` only).
 
-        Cost is O(files under the candidate dirs) footer reads,
-        driver-side — the same class of work ``dir_column_stats`` does
-        at commit time, and always cheaper than the predicate-pushed
-        count job it replaces (which scans those same dirs' pages). A
-        real deployment stamps these per-file metrics into the manifest
-        at write time (Iceberg's manifest ``lower_bounds`` /
-        ``upper_bounds`` / ``null_value_counts``) and evaluates the same
-        bounds there; reading footers here keeps the layout unchanged.
-
-        Served from the MANIFEST when the candidate dirs' records
-        carry ``bounds`` (stamped by ``_commit`` /
-        ``add_files`` / rewrites — the Iceberg manifest-metrics
-        pattern: zero per-statement I/O); pre-stamp dirs fall back to a
-        footer walk MEMOIZED per (namespace, table, dir) — data dirs
-        are immutable once published, so the cache can never go stale,
-        and repeated statements against a legacy snapshot pay the walk
-        once (ADVICE r14 #3). A dir with an unreadable file (broken
-        symlink-adopted source) is not cached and yields no bounds —
-        but only after the remaining candidate dirs have warmed the
-        memo, so the work is degraded per-file, not discarded.
+        Served from the MANIFEST when the candidate dirs' records carry
+        ``bounds`` (stamped at commit — Iceberg's manifest
+        ``lower_bounds`` / ``upper_bounds`` / ``null_value_counts``:
+        zero per-statement I/O); pre-stamp dirs fall back to the
+        memoized footer walk of :meth:`_footer_bounds_records`. A dir
+        with an unreadable file yields no bounds — but only after the
+        remaining candidate dirs have warmed the memo.
 
         Soundness guards (ADVICE r14 #1/#2): conjuncts on
         FLOAT/DOUBLE columns use only the NaN-sound operator subset
@@ -1983,276 +2112,6 @@ class SnapCatalog:
         self._footer_bounds_cache[key] = records
         return records
 
-    def delete_where_auto(
-        self,
-        spark: SparkSession,
-        namespace: str,
-        table: str,
-        predicate: str,
-        cow_density: float = 0.2,
-    ) -> int:
-        """Row-level DELETE with the physical strategy chosen by MEASURED
-        doom density — the auto-selection layer over the two DELETE
-        shapes (Iceberg exposes the same choice as a static table
-        property, ``write.delete.mode``; here the engine measures and
-        picks per statement, the way Spark's AQE picks join strategies
-        at runtime). One predicate-pushed count over only the
-        stats/bloom-pruned candidate dirs yields the doomed fraction:
-        at or below ``cow_density`` the delete is merge-on-read as a
-        deletion vector (:meth:`delete_where_mor` — metadata-sized
-        commit, rewrite deferred to compaction); above it, copy-on-write
-        (:meth:`delete_where` — deleting most of a dir means the
-        deferred rewrite dominates anyway, and a dense DV would tax
-        every read with an anti-join until compaction). Pending
-        merge-on-read deletes force the CoW path (DV authoring over
-        masked rows is refused; CoW is always legal).
-
-        The decision is served COUNT-FREE whenever footer row-group
-        stats bound the doomed fraction decisively on one side of
-        ``cow_density`` (:meth:`_dispatch_bounds` — metadata reads, no
-        job), so the common equality/range statement pays exactly ONE
-        candidate-dir scan: the chosen verb's own. Only when the bounds
-        straddle the threshold does one combined aggregate measure the
-        real density (matched and total in the SAME job — the predicate
-        reaches the parquet reader as a pushed filter), still small next
-        to either delete's own work."""
-        if not 0.0 < cow_density <= 1.0:
-            raise ValueError(f"cow_density must be in (0, 1]: {cow_density}")
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        if self._pending_deletes(manifest, manifest["files"]):
-            return self.delete_where(spark, namespace, table, predicate)
-        candidates, _untouched = self._prune_dirs(manifest, predicate)
-        if not candidates:
-            return base  # no dir can match: nothing to delete
-        bounds = self._dispatch_bounds(
-            namespace, table, manifest, candidates, predicate
-        )
-        if bounds is not None:
-            lower, upper, total = bounds
-            if upper == 0:
-                return base  # footer proof: no row can match
-            if total and lower / total > cow_density:
-                return self.delete_where(spark, namespace, table, predicate)
-            if total and upper / total <= cow_density:
-                return self.delete_where_mor(
-                    spark, namespace, table, predicate
-                )
-        # bounds straddle the threshold (or can't run): measure — one
-        # combined aggregate yields matched AND total in a single job
-        scan = self._resolve_schema(
-            self._read_dirs(
-                spark, namespace, table, candidates,
-                bool(manifest.get("partition_by")),
-                read_schema=self._scan_schema(manifest),
-            ),
-            manifest,
-        )
-        row = scan.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.expr(predicate)).alias("m"),
-        ).first()
-        cand_rows, doomed_n = int(row["n"]), int(row["m"] or 0)
-        if doomed_n == 0:
-            return base
-        if cand_rows and doomed_n / cand_rows > cow_density:
-            return self.delete_where(spark, namespace, table, predicate)
-        return self.delete_where_mor(spark, namespace, table, predicate)
-
-    def update_where(
-        self,
-        spark: SparkSession,
-        namespace: str,
-        table: str,
-        predicate: str,
-        assignments: dict[str, str],
-    ) -> int:
-        """Row-level UPDATE (Iceberg ``UPDATE … SET`` analogue, copy-on-write):
-        matching rows get the SET expressions, others pass through, one new
-        snapshot. ``assignments`` maps column → SQL expression."""
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        # File-pruned rewrite, same as delete_where: only dirs that can
-        # contain predicate matches are rewritten.
-        candidates, untouched = self._prune_dirs(manifest, predicate)
-        if not candidates:
-            return self._commit(
-                namespace, table, None, operation="update", carry=False,
-                base_sid=base, inherit_spec=True, carry_dirs=untouched,
-            )
-        df = self._read_with_deletes(
-            spark, namespace, table, manifest, candidates
-        )
-        for col_name, expr in assignments.items():
-            df = df.withColumn(
-                col_name,
-                F.when(F.expr(predicate), F.expr(expr)).otherwise(F.col(col_name)),
-            )
-        return self._commit(
-            namespace, table, df, operation="update", carry=False,
-            base_sid=base, inherit_spec=True, carry_dirs=untouched,
-        )
-
-    def update_where_mor(
-        self,
-        spark: SparkSession,
-        namespace: str,
-        table: str,
-        predicate: str,
-        assignments: dict[str, str],
-    ) -> int:
-        """Row-level UPDATE, merge-on-read — the MoR twin of
-        :meth:`update_where` (Iceberg ``UPDATE … SET`` with
-        ``write.update.mode=merge-on-read``): ONE atomic commit that
-        (a) masks the matched rows' physical addresses with a deletion
-        vector and (b) appends their updated images as one new small
-        data dir. No candidate dir is rewritten — update cost is one
-        stats/bloom-pruned scan plus a matched-rows-sized write, with
-        the rewrite deferred to compaction, exactly the delete-file +
-        re-insert pair Iceberg's MoR UPDATE emits. The DV scopes only
-        the dirs the addresses touch, so the appended images (a new
-        dir) are never masked. Readers see old rows masked and new rows
-        visible atomically because both land in the same manifest
-        publish. Refused while other deletes are pending (positional
-        addressing over masked rows is ambiguous — the
-        ``read_with_positions`` contract)."""
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        if self._pending_deletes(manifest, manifest["files"]):
-            raise ValueError(
-                f"{namespace}.{table}: update_where_mor with pending "
-                "merge-on-read deletes is ambiguous — compact() first"
-            )
-        candidates, _untouched = self._prune_dirs(manifest, predicate)
-        if not candidates:
-            return base  # no dir can match: nothing to update
-        scan = self._read_dirs(
-            spark, namespace, table, candidates,
-            bool(manifest.get("partition_by")), with_positions=True,
-            read_schema=self._scan_schema(manifest),
-        )
-        doomed = self._resolve_schema(scan, manifest).filter(predicate)
-        # SET targets must exist — the CoW twin fails on an unknown
-        # column (unresolvable in its otherwise() branch); silently
-        # accepting one here would fork the schema on a typo
-        user_cols = {
-            c for c in doomed.columns
-            if c not in (self.POS_FILE_COL, self.POS_IDX_COL)
-            and not c.startswith("_pt_")
-        }
-        unknown = sorted(set(assignments) - user_cols)
-        if unknown:
-            raise ValueError(
-                f"update_where_mor SET targets not in the table schema: "
-                f"{unknown}"
-            )
-        # ONE evaluation of the predicate feeds BOTH jobs (the DV write
-        # and the image append): without the checkpoint, a
-        # nondeterministic predicate would mask one row set and append
-        # images of another — silent loss/duplication (the same
-        # double-execution hazard _commit's `check` closes for writes)
-        doomed = doomed.localCheckpoint()
-        updated = doomed
-        for col_name, expr in assignments.items():
-            updated = updated.withColumn(col_name, F.expr(expr))
-        drop = [self.POS_FILE_COL, self.POS_IDX_COL] + [
-            c for c in updated.columns if c.startswith("_pt_")
-        ]
-        updated = updated.drop(*drop)
-        out, entry = self._dv_write_entry(
-            spark, namespace, table, manifest, doomed
-        )
-        if entry is None:
-            return base  # predicate matched zero rows
-        try:
-            return self._commit(
-                namespace, table, updated, operation="update",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), extra_deletes=[entry],
-            )
-        except Exception:
-            # safe to sweep on ANY failure: _commit does nothing after
-            # the manifest publish, so an exception here means no
-            # manifest references the file
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-
-    def update_where_auto(
-        self,
-        spark: SparkSession,
-        namespace: str,
-        table: str,
-        predicate: str,
-        assignments: dict[str, str],
-        cow_density: float = 0.2,
-    ) -> int:
-        """Row-level UPDATE with the physical strategy chosen by MEASURED
-        match density — the UPDATE twin of :meth:`delete_where_auto`,
-        completing the auto-dispatch matrix (Iceberg pins the choice
-        statically via ``write.update.mode``; here one predicate-pushed
-        count picks per statement): at or below ``cow_density`` the
-        update is merge-on-read (:meth:`update_where_mor` — DV mask +
-        image append, no dir rewritten); above it, copy-on-write
-        (:meth:`update_where` — updating most of a dir means MoR would
-        nearly double its bytes AND tax every read with a dense apply
-        until compaction). Pending merge-on-read deletes force the CoW
-        path (MoR authoring is refused over masked rows).
-
-        Dispatch cost matches :meth:`delete_where_auto`: COUNT-FREE from
-        footer row-group bounds when they land decisively on one side of
-        ``cow_density`` (one candidate-dir scan total — the chosen
-        verb's own), one combined matched+total aggregate otherwise."""
-        if not 0.0 < cow_density <= 1.0:
-            raise ValueError(f"cow_density must be in (0, 1]: {cow_density}")
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        if self._pending_deletes(manifest, manifest["files"]):
-            return self.update_where(
-                spark, namespace, table, predicate, assignments
-            )
-        candidates, _untouched = self._prune_dirs(manifest, predicate)
-        if not candidates:
-            return base  # no dir can match: nothing to update
-        bounds = self._dispatch_bounds(
-            namespace, table, manifest, candidates, predicate
-        )
-        if bounds is not None:
-            lower, upper, total = bounds
-            if upper == 0:
-                return base  # footer proof: no row can match
-            if total and lower / total > cow_density:
-                return self.update_where(
-                    spark, namespace, table, predicate, assignments
-                )
-            if total and upper / total <= cow_density:
-                return self.update_where_mor(
-                    spark, namespace, table, predicate, assignments
-                )
-        # bounds straddle the threshold (or can't run): measure — one
-        # combined aggregate yields matched AND total in a single job
-        scan = self._resolve_schema(
-            self._read_dirs(
-                spark, namespace, table, candidates,
-                bool(manifest.get("partition_by")),
-                read_schema=self._scan_schema(manifest),
-            ),
-            manifest,
-        )
-        row = scan.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.expr(predicate)).alias("m"),
-        ).first()
-        cand_rows, matched_n = int(row["n"]), int(row["m"] or 0)
-        if matched_n == 0:
-            return base
-        if cand_rows and matched_n / cand_rows > cow_density:
-            return self.update_where(
-                spark, namespace, table, predicate, assignments
-            )
-        return self.update_where_mor(
-            spark, namespace, table, predicate, assignments
-        )
-
     def delete_keys(
         self,
         spark: SparkSession,
@@ -2275,19 +2134,37 @@ class SnapCatalog:
         writes KBs and defers the rewrite to the next compaction."""
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
-        del_dir_name = f"delete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
-        keys_df.select(*key_cols).distinct().coalesce(1).write.parquet(out)
-        entry = {
-            "dir": del_dir_name,
-            "key_cols": list(key_cols),
-            "applies_to": list(manifest["files"]),
-        }
-        return self._commit(
-            namespace, table, None, operation="delete", carry=False,
-            base_sid=base, inherit_spec=True,
-            carry_dirs=list(manifest["files"]), extra_deletes=[entry],
+        with self._delete_file(namespace, table, "delete") as out:
+            keys_df.select(*key_cols).distinct().coalesce(1).write.parquet(
+                out
+            )
+            entry = {
+                "dir": os.path.basename(out),
+                "key_cols": list(key_cols),
+                "applies_to": list(manifest["files"]),
+            }
+            return self._commit(
+                namespace, table, None, operation="delete", carry=False,
+                base_sid=base, inherit_spec=True,
+                carry_dirs=list(manifest["files"]), extra_deletes=[entry],
+            )
+
+    @contextlib.contextmanager
+    def _delete_file(self, namespace: str, table: str, prefix: str):
+        """A fresh ``deletes/<prefix>-<uuid>`` path for ONE delete-file
+        author to write and publish inside the block — every author
+        (``delete_keys``, :meth:`_commit_dv`, ``rewrite_deletes_to_dv``)
+        goes through here. If the block raises — the write, a conflict,
+        the manifest publish — no manifest references the path, so it
+        is swept: a failed statement never orphans a delete file."""
+        out = self._tbl(
+            namespace, table, "deletes", f"{prefix}-{uuid.uuid4().hex[:12]}"
         )
+        try:
+            yield out
+        except Exception:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
 
     # column names a positional scan exposes to delete authors
     POS_FILE_COL = "_pos_file"
@@ -2314,13 +2191,9 @@ class SnapCatalog:
                 f"{namespace}.{table}: read_with_positions with pending "
                 "merge-on-read deletes is ambiguous — compact() first"
             )
-        out = self._resolve_schema(
-            self._read_dirs(
-                spark, namespace, table, list(manifest["files"]),
-                bool(manifest.get("partition_by")), with_positions=True,
-                read_schema=self._scan_schema(manifest),
-            ),
-            manifest,
+        out = self._scan_dirs(
+            spark, namespace, table, manifest, list(manifest["files"]),
+            with_positions=True,
         )
         # hidden transform-partition columns never reach callers (the
         # read() contract) — the POS columns are the only additions
@@ -2347,9 +2220,9 @@ class SnapCatalog:
         ``(file_path, starts, ends)`` ranges for contiguous bands, the
         sorted ``positions`` array otherwise. The entry is stamped with
         position/run stats, so the read picks its apply plan
-        (``_dv_apply_mode``) without a job. This is the one
-        position-delete author: ``delete_where_mor`` calls it and
-        ``update_where_mor`` shares its ``_dv_write_entry``.
+        (``_dv_apply_mode``) without a job. Its :meth:`_commit_dv` is
+        the one position-delete publish the merge-on-read DELETE and
+        UPDATE bodies share.
 
         Scoping is TIGHTER than ``delete_keys``: the entry records only
         the data dirs the addresses actually touch, so untouched dirs
@@ -2362,21 +2235,32 @@ class SnapCatalog:
         covered dir (folding hard-links data files under new
         basenames, which would orphan the stored paths)."""
         base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        out, entry = self._dv_write_entry(
-            spark, namespace, table, manifest, pos_df
+        return self._commit_dv(
+            spark, namespace, table, base,
+            self._manifest(namespace, table, base), pos_df,
         )
-        if entry is None:
-            return base  # nothing addressed: no dead entry is published
-        try:
+
+    def _commit_dv(
+        self, spark: SparkSession, namespace: str, table: str, base: int,
+        manifest: dict, pos_df: DataFrame, df: DataFrame | None = None,
+        operation: str = "delete",
+    ) -> int:
+        """Write ``pos_df``'s (``POS_FILE_COL``, ``POS_IDX_COL``)
+        addresses as one DV and publish it on ``base`` — plus ``df``'s
+        rows as a new data dir in the SAME manifest (a merge-on-read
+        UPDATE's images). Returns ``base`` without a commit when no live
+        dir is addressed: no dead entry is published."""
+        with self._delete_file(namespace, table, "dvdelete") as out:
+            entry = self._dv_write_entry(
+                spark, namespace, table, manifest, pos_df, out
+            )
+            if entry is None:
+                return base
             return self._commit(
-                namespace, table, None, operation="delete", carry=False,
+                namespace, table, df, operation=operation, carry=False,
                 base_sid=base, inherit_spec=True,
                 carry_dirs=list(manifest["files"]), extra_deletes=[entry],
             )
-        except CommitConflict:
-            shutil.rmtree(out, ignore_errors=True)  # no manifest refs it
-            raise
 
     def _dv_write_relation(
         self,
@@ -2547,19 +2431,17 @@ class SnapCatalog:
         table: str,
         manifest: dict,
         pos_df: DataFrame,
-    ) -> tuple[str, dict | None]:
-        """Write a DV delete file from (``POS_FILE_COL``,
+        out: str,
+    ) -> dict | None:
+        """Write a DV delete file at ``out`` from (``POS_FILE_COL``,
         ``POS_IDX_COL``) rows and build its STAMPED manifest entry —
-        the one authoring path ``delete_positions``,
-        ``update_where_mor`` and ``rewrite_deletes_to_dv`` share, so
-        the position/run stats the read gate consumes can never drift
-        between writers. Returns ``(delete file path, entry)``; entry
-        is None (and nothing written) when no live dir is addressed.
+        the one authoring path :meth:`_commit_dv` and
+        ``rewrite_deletes_to_dv`` share, so the position/run stats the
+        read gate consumes can never drift between writers. Returns
+        None (and writes nothing) when no live dir is addressed.
         The entry records the storage ``layout``
         (``_dv_write_relation``'s choice) so the read side dispatches
         without inspecting file schemas."""
-        del_dir_name = f"dvdelete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
         pos_rel = pos_df.select(
             F.col(self.POS_FILE_COL).alias("file_path"),
             F.col(self.POS_IDX_COL).cast("long").alias("pos"),
@@ -2568,9 +2450,9 @@ class SnapCatalog:
             spark, out, pos_rel, list(manifest["files"]), namespace, table
         )
         if layout is None:
-            return out, None
-        return out, {
-            "dir": del_dir_name,
+            return None
+        return {
+            "dir": os.path.basename(out),
             "mode": "dv",
             "layout": layout,
             "applies_to": applies_to,
@@ -2609,7 +2491,7 @@ class SnapCatalog:
         live_scope = sorted(
             {d for e in pos for d in e["applies_to"] if d in live_dirs}
         )
-        out, entry = None, None
+        doomed = None
         if live_scope:
             merged = None
             for e in pos:
@@ -2630,31 +2512,27 @@ class SnapCatalog:
             alive = F.col("file_path").contains(f"/data/{live_scope[0]}/")
             for d in live_scope[1:]:
                 alive = alive | F.col("file_path").contains(f"/data/{d}/")
+            doomed = merged.filter(alive).select(
+                F.col("file_path").alias(self.POS_FILE_COL),
+                F.col("pos").alias(self.POS_IDX_COL),
+            )
+        with self._delete_file(namespace, table, "dvdelete") as out:
             # the shared runs-first writer picks the layout (an accreted
             # backlog of band deletes folds into a runs-sized ``ranges``
             # entry), fans the write out from the EXACT folded volume,
             # and stamps the gate stats (the fold must not launder a
             # dense DV into an unstamped entry)
-            out, entry = self._dv_write_entry(
-                spark, namespace, table, manifest,
-                merged.filter(alive).select(
-                    F.col("file_path").alias(self.POS_FILE_COL),
-                    F.col("pos").alias(self.POS_IDX_COL),
-                ),
+            entry = None if doomed is None else self._dv_write_entry(
+                spark, namespace, table, manifest, doomed, out
             )
-        # every address dead (every scoped dir since rewritten): the
-        # equality entries are published alone, with no DV at all
-        try:
+            # every address dead (every scoped dir since rewritten): the
+            # equality entries are published alone, with no DV at all
             return self._commit(
                 namespace, table, None, operation="rewrite_to_dv",
                 carry=False, base_sid=base, inherit_spec=True,
                 carry_dirs=list(manifest["files"]), clear_deletes=True,
                 extra_deletes=keep + ([entry] if entry else []),
             )
-        except CommitConflict:
-            if out:
-                shutil.rmtree(out, ignore_errors=True)
-            raise
 
     def _pending_deletes(
         self, manifest: dict, dir_names: list[str]
@@ -2730,17 +2608,9 @@ class SnapCatalog:
         still visible — Spark turns them into PartitionFilters, pruning
         directories at file-listing time — and the hidden columns are then
         dropped so callers always see the user schema."""
-        partitioned = bool(manifest.get("partition_by"))
         deletes = self._pending_deletes(manifest, dir_names)
-        scan_schema = self._scan_schema(manifest)
         if not deletes:
-            out = self._resolve_schema(
-                self._read_dirs(
-                    spark, namespace, table, dir_names, partitioned,
-                    read_schema=scan_schema,
-                ),
-                manifest,
-            )
+            out = self._scan_dirs(spark, namespace, table, manifest, dir_names)
         else:
             groups: dict[frozenset, list[str]] = {}
             for d in dir_names:
@@ -2761,12 +2631,9 @@ class SnapCatalog:
                 # schema resolution runs BEFORE the anti-joins: delete
                 # entries authored after a rename reference logical names
                 # (pre-rename entries refuse the rename — compact first)
-                part = self._resolve_schema(
-                    self._read_dirs(
-                        spark, namespace, table, dirs, partitioned,
-                        with_positions=needs_pos, read_schema=scan_schema,
-                    ),
-                    manifest,
+                part = self._scan_dirs(
+                    spark, namespace, table, manifest, dirs,
+                    with_positions=needs_pos,
                 )
                 pos_col = F.col(self.POS_IDX_COL)
                 for i in sorted(key):
@@ -2852,47 +2719,29 @@ class SnapCatalog:
         return out
 
     def expire_snapshots(
-        self, namespace: str, table: str, keep_last: int = 1
-    ) -> list[int]:
-        """Snapshot GC (Iceberg ``expire_snapshots`` analogue): drop all but
-        the newest ``keep_last`` snapshot manifests, then delete data
-        directories no retained snapshot references. Returns expired ids.
-
-        Metadata-first ordering makes the physical delete safe: a reader
-        holding an expired id fails fast on the missing manifest rather
-        than scanning half-deleted data.
-        """
-        snaps = self._snapshots(namespace, table)
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        # ref-reachable snapshots are never expired (Iceberg semantics:
-        # branches/tags pin their snapshots through GC)
-        pinned = {r["snapshot_id"] for r in self.list_refs(namespace, table)}
-        expired = [
-            s for s in snaps[:-keep_last] if s["snapshot_id"] not in pinned
-        ]
-        retained = snaps[-keep_last:] + [
-            s for s in snaps[:-keep_last] if s["snapshot_id"] in pinned
-        ]
-        return self._drop_snapshots(namespace, table, expired, retained)
-
-    def expire_snapshots_policy(
         self,
         namespace: str,
         table: str,
         keep_last: int = 1,
         branch_keep: dict[str, int] | None = None,
     ) -> list[int]:
-        """Per-branch retention GC (the Iceberg branch-level
-        ``min-snapshots-to-keep`` property applied through
-        ``expire_snapshots``): beyond the main history's newest
-        ``keep_last``, each branch named in ``branch_keep`` retains its
-        newest N ANCESTORS — the snapshots at-or-before the branch head
-        in history order — so a long-lived audit/staging branch keeps
-        its own rollback window while the main line is trimmed
-        aggressively. Every ref head (branch or tag) stays pinned
-        regardless, same as :meth:`expire_snapshots`. Returns expired
-        ids."""
+        """Snapshot GC (Iceberg ``expire_snapshots`` analogue): drop all but
+        the newest ``keep_last`` snapshot manifests, then delete data
+        directories no retained snapshot references. Returns expired ids.
+        Every ref head (branch or tag) stays pinned — Iceberg semantics:
+        branches/tags pin their snapshots through GC.
+
+        ``branch_keep`` is per-branch retention (the Iceberg branch-level
+        ``min-snapshots-to-keep`` property): each named branch retains
+        its newest N ANCESTORS — the snapshots at-or-before the branch
+        head in history order — so a long-lived audit/staging branch
+        keeps its own rollback window while the main line is trimmed
+        aggressively.
+
+        Metadata-first ordering makes the physical delete safe: a reader
+        holding an expired id fails fast on the missing manifest rather
+        than scanning half-deleted data.
+        """
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         snaps = self._snapshots(namespace, table)
@@ -2921,18 +2770,6 @@ class SnapCatalog:
             )
         expired = [s for s in snaps if s["snapshot_id"] not in retained_ids]
         retained = [s for s in snaps if s["snapshot_id"] in retained_ids]
-        return self._drop_snapshots(namespace, table, expired, retained)
-
-    def _drop_snapshots(
-        self,
-        namespace: str,
-        table: str,
-        expired: list[dict],
-        retained: list[dict],
-    ) -> list[int]:
-        """Shared physical GC tail: remove expired manifests
-        metadata-first, then data/delete directories no retained
-        manifest still references."""
         for s in expired:
             os.remove(
                 self._tbl(namespace, table, "snapshots", f"{s['snapshot_id']}.json")
@@ -2948,7 +2785,7 @@ class SnapCatalog:
         data_root = self._tbl(namespace, table, "data")
         for d in sorted(expired_dirs - live_dirs):
             shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
-        # same rule for equality-delete files: drop only those the expired
+        # same rule for delete files: drop only those the expired
         # manifests referenced and no retained manifest still does
         live_del = {
             e["dir"] for s in retained for e in s.get("deletes", [])
@@ -3054,20 +2891,24 @@ class SnapCatalog:
     def remove_orphans(
         self, namespace: str, table: str, older_than_ms: int = 24 * 3600 * 1000
     ) -> list[str]:
-        """Delete data directories referenced by no snapshot manifest and
-        older than the threshold (Iceberg ``remove_orphan_files`` analogue).
+        """Delete data and delete-file directories referenced by no
+        snapshot manifest and older than the threshold (Iceberg
+        ``remove_orphan_files`` analogue). Returns the removed dir names.
         The age threshold is what makes this safe to run concurrently with
-        commits: an in-flight commit's data dir exists before its manifest,
-        but it is necessarily younger than any sane threshold."""
-        live = {
-            d for s in self._snapshots(namespace, table) for d in s["files"]
-        }
-        data_root = self._tbl(namespace, table, "data")
+        commits: an in-flight commit's data or delete dir exists before its
+        manifest, but it is necessarily younger than any sane threshold."""
+        snaps = self._snapshots(namespace, table)
+        cutoff = time.time() - older_than_ms / 1000.0
         removed = []
-        if os.path.isdir(data_root):
-            cutoff = time.time() - older_than_ms / 1000.0
-            for d in sorted(os.listdir(data_root)):
-                path = os.path.join(data_root, d)
+        for kind, live in (
+            ("data", {d for s in snaps for d in s["files"]}),
+            ("deletes", {e["dir"] for s in snaps for e in s.get("deletes", [])}),
+        ):
+            root = self._tbl(namespace, table, kind)
+            if not os.path.isdir(root):
+                continue
+            for d in sorted(os.listdir(root)):
+                path = os.path.join(root, d)
                 if d not in live and os.path.getmtime(path) < cutoff:
                     shutil.rmtree(path, ignore_errors=True)
                     removed.append(d)
@@ -3331,35 +3172,45 @@ class SnapCatalog:
             )
         return df
 
+    def _scan_dirs(
+        self, spark: SparkSession, namespace: str, table: str,
+        manifest: dict, dir_names: list[str], with_positions: bool = False,
+    ) -> DataFrame:
+        """Schema-resolved scan of ``dir_names`` under ``manifest``'s
+        layout, schema and rename chain — no pending deletes applied."""
+        return self._resolve_schema(
+            self._read_dirs(
+                spark, namespace, table, dir_names,
+                bool(manifest.get("partition_by")),
+                with_positions=with_positions,
+                read_schema=self._scan_schema(manifest),
+            ),
+            manifest,
+        )
+
     def _publish_metadata_commit(self, namespace: str, table: str, build) -> int:
-        """Optimistic publish loop for METADATA-ONLY commits derived from
-        the current head: ``build(cur_manifest)`` returns the new
-        manifest body (id/parent/timestamp are stamped here, any copied
-        rollback lineage pointer is stripped); a publish collision
-        recomputes on the new head. Shared by the schema-edit commits —
-        rename/drop (:meth:`_schema_edit_commit`) and
-        :meth:`widen_column_type`."""
+        """Optimistic publish loop for METADATA-ONLY commits:
+        ``build(cur_manifest)`` returns the new manifest body from the
+        current head (id/parent/timestamp are stamped here); a publish
+        collision recomputes on the new head. Shared by
+        :meth:`rollback_to` and the schema-edit commits — rename/drop
+        (:meth:`_schema_edit_commit`) and :meth:`widen_column_type`."""
         while True:
-            snaps = self._snapshots(namespace, table)
-            cur = snaps[-1]
-            manifest = build(cur)
-            manifest["snapshot_id"] = cur["snapshot_id"] + 1
-            manifest["parent_id"] = cur["snapshot_id"]
-            manifest["timestamp_ms"] = int(time.time() * 1000)
+            cur = self._manifest(
+                namespace, table, self._current_sid(namespace, table)
+            )
+            sid = cur["snapshot_id"] + 1
             # a lineage pointer copied from a rollback parent would make
             # history() walk past this commit's real parent
-            manifest.pop("rollback_of", None)
-            sid = manifest["snapshot_id"]
-            snap_path = self._tbl(
-                namespace, table, "snapshots", f"{sid}.json"
-            )
-            try:
-                with open(snap_path, "x") as f:
-                    json.dump(manifest, f)
-                break
-            except FileExistsError:
-                continue  # metadata-only: recompute on the new head
-        return sid
+            cur.pop("rollback_of", None)
+            manifest = {
+                **build(cur),
+                "snapshot_id": sid,
+                "parent_id": cur["snapshot_id"],
+                "timestamp_ms": int(time.time() * 1000),
+            }
+            if self._publish_manifest(namespace, table, sid, manifest):
+                return sid
 
     def rename_column(
         self, namespace: str, table: str, old: str, new: str
@@ -3725,13 +3576,8 @@ class SnapCatalog:
                 )
         new_dirs = [d for d in end["files"] if d not in set(start["files"])]
         if not new_dirs:
-            return self._resolve_schema(
-                self._read_dirs(
-                    spark, namespace, table, end["files"],
-                    bool(end.get("partition_by")),
-                    read_schema=self._scan_schema(end),
-                ),
-                end,
+            return self._scan_dirs(
+                spark, namespace, table, end, end["files"]
             ).limit(0)
         return self._read_with_deletes(spark, namespace, table, end, new_dirs)
 
@@ -4283,13 +4129,31 @@ class SnapCatalog:
     def _tbl(self, namespace: str, table: str, *parts: str) -> str:
         return os.path.join(self.warehouse, namespace, table, *parts)
 
+    def _head_sid(self, namespace: str, table: str) -> int | None:
+        """The highest published snapshot id, read from the manifest
+        NAMES of one listdir — no manifest is parsed, so the lookup does
+        not grow with history. None when nothing is published."""
+        snap_dir = self._tbl(namespace, table, "snapshots")
+        if not os.path.isdir(snap_dir):
+            return None
+        return max(
+            (int(fn[:-5]) for fn in os.listdir(snap_dir) if fn.endswith(".json")),
+            default=None,
+        )
+
     def _current_sid(self, namespace: str, table: str) -> int:
         # the set of published manifests is authoritative: the head is
         # the highest id
-        snaps = self._snapshots(namespace, table)
-        if not snaps:
+        sid = self._head_sid(namespace, table)
+        if sid is None:
             raise SnapshotNotFound(f"{namespace}.{table} has no current snapshot")
-        return snaps[-1]["snapshot_id"]
+        return sid
+
+    def _head(self, namespace: str, table: str) -> dict | None:
+        """The head manifest — the only one a publish derives from — or
+        None for a table with nothing published."""
+        sid = self._head_sid(namespace, table)
+        return None if sid is None else self._manifest(namespace, table, sid)
 
     def _manifest(self, namespace: str, table: str, sid: int) -> dict:
         path = self._tbl(namespace, table, "snapshots", f"{sid}.json")
@@ -4297,6 +4161,43 @@ class SnapCatalog:
             raise SnapshotNotFound(f"{namespace}.{table} snapshot {sid}")
         with open(path) as f:
             return json.load(f)
+
+    def _publish_manifest(
+        self, namespace: str, table: str, sid: int, manifest: dict
+    ) -> bool:
+        """Publish ``manifest`` as ``snapshots/<sid>.json`` atomically:
+        write a private temp file, then hard-link it to the final name.
+        The link either creates the complete file or raises
+        ``FileExistsError`` (a rival published ``sid`` first → False),
+        so a failure mid-write never leaves a truncated manifest behind.
+        The temp file is always unlinked, and that unlink cannot raise.
+
+        On a filesystem without hard links the id is claimed by an
+        exclusive create and the finished temp file copied in; a failed
+        copy removes the claim again. There a concurrent reader can see
+        the copy in progress — the link path has no such window."""
+        path = self._tbl(namespace, table, "snapshots", f"{sid}.json")
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            try:
+                os.link(tmp, path)
+            except FileExistsError:
+                raise
+            except OSError:
+                with open(path, "x") as dst, open(tmp) as src:
+                    try:
+                        shutil.copyfileobj(src, dst)
+                    except BaseException:
+                        os.unlink(path)
+                        raise
+            return True
+        except FileExistsError:
+            return False
+        finally:
+            with contextlib.suppress(OSError):
+                os.unlink(tmp)
 
     def _snapshots(self, namespace: str, table: str) -> list[dict]:
         snap_dir = self._tbl(namespace, table, "snapshots")
@@ -4362,235 +4263,233 @@ class SnapCatalog:
         without this commit's data write (adopted, folded, clustered or
         cherry-picked dirs — new names the parent manifest lacks).
         """
-        snaps = self._snapshots(namespace, table)
-        if partition_by is None and (carry or inherit_spec) and snaps:
-            # appends and mutations inherit the table's partition spec
-            partition_by = snaps[-1].get("partition_by")
-        if transform_spec is None and (carry or inherit_spec) and snaps:
-            transform_spec = snaps[-1].get("partition_spec")
-        if bloom_cols is None and (carry or inherit_spec) and snaps:
-            bloom_cols = snaps[-1].get("bloom_cols")
+        head = self._head(namespace, table)
+        if head is not None and (carry or inherit_spec):
+            # appends and mutations inherit the table's layout
+            if partition_by is None:
+                partition_by = head.get("partition_by")
+            if transform_spec is None:
+                transform_spec = head.get("partition_spec")
+            if bloom_cols is None:
+                bloom_cols = head.get("bloom_cols")
 
         # Data files are written ONCE under a collision-free name; only the
         # metadata publish participates in the optimistic-commit loop, so a
         # losing committer never rewrites data (Iceberg's commit shape).
+        # ANY failure before the publish — the write, a CHECK violation
+        # or its validation read throwing, a conflict, the manifest write
+        # — leaves a data dir no manifest references, so it is swept.
         os.makedirs(self._tbl(namespace, table, "snapshots"), exist_ok=True)
-        if df is not None:
-            # manifest schema = the USER schema; hidden transform columns
-            # are derived below and never appear to readers
-            schema_json = df.schema.jsonValue()
-            if transform_spec:
-                fields = partition_spec.parse_spec(transform_spec)
-                df = partition_spec.apply_spec(df, fields)
-                partition_by = partition_spec.partition_columns(fields)
-            if sort_by:
-                if partition_by:
-                    raise ValueError(
-                        "sort_by (ordered write) and partitioning are "
-                        "mutually exclusive — hive layout interleaves files"
+        data_dir_name, out_dir = None, None
+        try:
+            if df is not None:
+                # manifest schema = the USER schema; hidden transform
+                # columns are derived below and never appear to readers
+                schema_json = df.schema.jsonValue()
+                if transform_spec:
+                    fields = partition_spec.parse_spec(transform_spec)
+                    df = partition_spec.apply_spec(df, fields)
+                    partition_by = partition_spec.partition_columns(fields)
+                if sort_by:
+                    if partition_by:
+                        raise ValueError(
+                            "sort_by (ordered write) and partitioning are "
+                            "mutually exclusive — hive layout interleaves "
+                            "files"
+                        )
+                    n = (
+                        sort_partitions
+                        or df.sparkSession.sparkContext.defaultParallelism
                     )
-                n = sort_partitions or df.sparkSession.sparkContext.defaultParallelism
-                # range partitions are written as part-00000, part-00001, …
-                # in key order, and each is sorted — (file_path, row_index)
-                # is the insertion order, with no single-task sort anywhere
-                df = df.repartitionByRange(
-                    n, *[F.col(c) for c in sort_by]
-                ).sortWithinPartitions(*sort_by)
-            data_dir_name = f"commit-{uuid.uuid4().hex[:12]}"
-            out_dir = self._tbl(namespace, table, "data", data_dir_name)
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(out_dir)
-            if check is not None:
-                # ANY check failure mode — a violated predicate OR the
-                # validation read itself throwing (e.g. a malformed
-                # predicate raising AnalysisException) — must sweep the
-                # unpublished data dir, or it is orphaned on disk.
-                try:
+                    # range partitions are written as part-00000, …
+                    # in key order, and each is sorted — (file_path,
+                    # row_index) is the insertion order, with no
+                    # single-task sort anywhere
+                    df = df.repartitionByRange(
+                        n, *[F.col(c) for c in sort_by]
+                    ).sortWithinPartitions(*sort_by)
+                data_dir_name = f"commit-{uuid.uuid4().hex[:12]}"
+                out_dir = self._tbl(namespace, table, "data", data_dir_name)
+                writer = df.write.mode("overwrite")
+                if partition_by:
+                    writer = writer.partitionBy(*partition_by)
+                writer.parquet(out_dir)
+                if check is not None:
                     bad = (
                         df.sparkSession.read.parquet(out_dir)
                         .filter(f"NOT ({check})")
                         .limit(1)
                         .collect()
                     )
-                except Exception:
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise
-                if bad:
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise ValueError(
-                        f"CHECK constraint violated: ({check}); "
-                        f"sample offending row: {bad[0].asDict()}"
-                    )
-            # the physical schema of THIS commit's df (before any lineage
-            # merge below rewrites the logical manifest schema) is
-            # stamped too — except on partitioned layouts, whose files
-            # physically lack the partition columns, so the stamp would
-            # not match inference
-            new_dir = _stamp_dir(
-                out_dir, bloom_cols, None if partition_by else schema_json
-            )
-        else:
-            data_dir_name, out_dir = None, None
-            schema_json = snaps[-1]["schema"] if snaps else None
-
-        # Optimistic publish: claim snapshot id N+1 via exclusive create of
-        # its manifest; a concurrent winner makes the create fail, so we
-        # re-read the new table state and retry on top of it.
-        while True:
-            snaps = self._snapshots(namespace, table)
-            sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-            if base_sid is not None and snaps and snaps[-1]["snapshot_id"] != base_sid:
-                # A rival commit landed while this operation was computing /
-                # writing data: its result is stale — publishing it at sid+1
-                # would silently drop the rival's rows (lost update). Same
-                # contract as the FileExistsError window below, but this
-                # catches conflicts that land during the (long) data-write
-                # phase, not just the publish instant.
-                if out_dir:
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"{namespace}.{table}: table advanced from snapshot "
-                    f"{base_sid} to {snaps[-1]['snapshot_id']} during this "
-                    "operation; re-run it on the new state"
+                    if bad:
+                        raise ValueError(
+                            f"CHECK constraint violated: ({check}); "
+                            f"sample offending row: {bad[0].asDict()}"
+                        )
+                # the physical schema of THIS commit's df (before any
+                # lineage merge below rewrites the logical manifest
+                # schema) is stamped too — except on partitioned
+                # layouts, whose files physically lack the partition
+                # columns, so the stamp would not match inference
+                new_dir = _stamp_dir(
+                    out_dir, bloom_cols, None if partition_by else schema_json
                 )
-            new_files = [data_dir_name] if data_dir_name else []
-            if carry and snaps:
-                files = snaps[-1]["files"] + new_files
-            elif carry_dirs is not None:
-                files = list(carry_dirs) + new_files
             else:
-                files = new_files
-            # carried dirs keep their parent-manifest records verbatim —
-            # the whole point is those directories were not rewritten
-            stamped = {
-                **(snaps[-1].get("dirs", {}) if snaps else {}),
-                **({data_dir_name: new_dir} if data_dir_name else {}),
-                **(extra_dirs or {}),
-            }
-            dirs = {d: stamped[d] for d in files if stamped.get(d)}
-            # pending equality-delete entries follow the dirs they apply
-            # to: entries whose dirs were all rewritten (or cleared by
-            # compaction) drop out; surviving entries prune their
-            # applies_to to the dirs still present
-            deletes: list[dict] = []
-            if not clear_deletes and snaps:
-                for e in snaps[-1].get("deletes", []):
-                    keep = [d for d in e["applies_to"] if d in files]
-                    if keep:
-                        deletes.append({**e, "applies_to": keep})
-            deletes.extend(extra_deletes or [])
-            # rename-chain / retired-name metadata follows the carried
-            # dirs (they keep their pre-rename physical names); a pure
-            # replace rewrites everything, so both reset. Reintroducing a
-            # retired name would make old physical bytes ambiguous with
-            # the new column — refuse (the name-based layout's substitute
-            # for Iceberg field ids).
-            renames: list = []
-            retired: list = []
-            widened = False
-            if (
-                snaps
-                and (carry or carry_dirs is not None)
-                and not reset_schema_lineage
-            ):
-                renames = snaps[-1].get("renames") or []
-                retired = snaps[-1].get("retired") or []
-                widened = bool(snaps[-1].get("widened"))
-                if schema_json and (renames or retired or widened):
-                    # reads on lineage-active tables PROJECT to the
-                    # manifest schema, so a narrower append must not
-                    # hide previously evolved columns (mergeSchema
-                    # keeps surfacing them on plain tables): keep every
-                    # parent field in parent order (taking the new
-                    # field dict where names overlap), then append the
-                    # genuinely new columns
-                    parent_fields = (snaps[-1].get("schema") or {}).get(
+                schema_json = head["schema"] if head else None
+
+            # Optimistic publish: claim snapshot id N+1 via an exclusive
+            # link of its manifest; a concurrent winner makes the link
+            # fail, so we re-read the head and retry on top of it.
+            while True:
+                head = self._head(namespace, table)
+                sid = head["snapshot_id"] + 1 if head else 1
+                if (
+                    base_sid is not None
+                    and head
+                    and head["snapshot_id"] != base_sid
+                ):
+                    # A rival commit landed while this operation was
+                    # computing / writing data: its result is stale —
+                    # publishing it at sid+1 would silently drop the
+                    # rival's rows (lost update). Same contract as the
+                    # lost publish race below, but this catches
+                    # conflicts that land during the (long) data-write
+                    # phase, not just the publish instant.
+                    raise CommitConflict(
+                        f"{namespace}.{table}: table advanced from "
+                        f"snapshot {base_sid} to {head['snapshot_id']} "
+                        "during this operation; re-run it on the new state"
+                    )
+                new_files = [data_dir_name] if data_dir_name else []
+                if carry and head:
+                    files = head["files"] + new_files
+                elif carry_dirs is not None:
+                    files = list(carry_dirs) + new_files
+                else:
+                    files = new_files
+                # carried dirs keep their parent-manifest records
+                # verbatim — the whole point is those directories were
+                # not rewritten
+                stamped = {
+                    **(head.get("dirs", {}) if head else {}),
+                    **({data_dir_name: new_dir} if data_dir_name else {}),
+                    **(extra_dirs or {}),
+                }
+                dirs = {d: stamped[d] for d in files if stamped.get(d)}
+                # pending delete entries follow the dirs they apply to:
+                # entries whose dirs were all rewritten (or cleared by
+                # compaction) drop out; surviving entries prune their
+                # applies_to to the dirs still present
+                deletes: list[dict] = []
+                if not clear_deletes and head:
+                    for e in head.get("deletes", []):
+                        keep = [d for d in e["applies_to"] if d in files]
+                        if keep:
+                            deletes.append({**e, "applies_to": keep})
+                deletes.extend(extra_deletes or [])
+                # rename-chain / retired-name metadata follows the
+                # carried dirs (they keep their pre-rename physical
+                # names); a pure replace rewrites everything, so both
+                # reset. Reintroducing a retired name would make old
+                # physical bytes ambiguous with the new column — refuse
+                # (the name-based layout's substitute for Iceberg field
+                # ids).
+                renames: list = []
+                retired: list = []
+                widened = False
+                if (
+                    head
+                    and (carry or carry_dirs is not None)
+                    and not reset_schema_lineage
+                ):
+                    renames = head.get("renames") or []
+                    retired = head.get("retired") or []
+                    widened = bool(head.get("widened"))
+                    parent_fields = (head.get("schema") or {}).get(
                         "fields", []
                     )
-                    if parent_fields:
-                        new_by_name = {
-                            f["name"]: f for f in schema_json["fields"]
-                        }
-                        pnames = {f["name"] for f in parent_fields}
+                    if schema_json and (renames or retired or widened):
+                        # reads on lineage-active tables PROJECT to the
+                        # manifest schema, so a narrower append must not
+                        # hide previously evolved columns (mergeSchema
+                        # keeps surfacing them on plain tables): keep
+                        # every parent field in parent order (taking the
+                        # new field dict where names overlap), then
+                        # append the genuinely new columns
+                        if parent_fields:
+                            new_by_name = {
+                                f["name"]: f for f in schema_json["fields"]
+                            }
+                            pnames = {f["name"] for f in parent_fields}
+                            schema_json = {
+                                **schema_json,
+                                "fields": [
+                                    new_by_name.get(f["name"], f)
+                                    for f in parent_fields
+                                ]
+                                + [
+                                    f
+                                    for f in schema_json["fields"]
+                                    if f["name"] not in pnames
+                                ],
+                            }
+                    if widened and schema_json:
+                        # a narrow-typed append after a widening must
+                        # not revert the logical type: the narrow files
+                        # upcast at scan, the schema keeps the wide type
+                        ptypes = {f["name"]: f["type"] for f in parent_fields}
                         schema_json = {
                             **schema_json,
                             "fields": [
-                                new_by_name.get(f["name"], f)
-                                for f in parent_fields
-                            ]
-                            + [
-                                f
+                                {**f, "type": ptypes[f["name"]]}
+                                if (
+                                    f["name"] in ptypes
+                                    and (f["type"], ptypes[f["name"]])
+                                    in self._WIDENINGS
+                                )
+                                else f
                                 for f in schema_json["fields"]
-                                if f["name"] not in pnames
                             ],
                         }
-                if widened and schema_json:
-                    # a narrow-typed append after a widening must not
-                    # revert the logical type: the narrow files upcast at
-                    # scan, the schema keeps the wide type
-                    ptypes = {
-                        f["name"]: f["type"]
-                        for f in (snaps[-1].get("schema") or {}).get(
-                            "fields", []
-                        )
-                    }
-                    schema_json = {
-                        **schema_json,
-                        "fields": [
-                            {**f, "type": ptypes[f["name"]]}
-                            if (
-                                f["name"] in ptypes
-                                and (f["type"], ptypes[f["name"]])
-                                in self._WIDENINGS
+                    if schema_json and retired:
+                        clash = {
+                            f["name"] for f in schema_json.get("fields", [])
+                        } & set(retired)
+                        if clash:
+                            raise ValueError(
+                                f"column name(s) {sorted(clash)} were "
+                                "retired by an earlier rename/drop and old "
+                                "data files may still contain them; name "
+                                "reuse is not supported on this name-based "
+                                "layout"
                             )
-                            else f
-                            for f in schema_json["fields"]
-                        ],
-                    }
-                if schema_json and retired:
-                    clash = {
-                        f["name"] for f in schema_json.get("fields", [])
-                    } & set(retired)
-                    if clash:
-                        if out_dir:  # unpublished — sweep, don't orphan
-                            shutil.rmtree(out_dir, ignore_errors=True)
-                        raise ValueError(
-                            f"column name(s) {sorted(clash)} were retired "
-                            "by an earlier rename/drop and old data files "
-                            "may still contain them; name reuse is not "
-                            "supported on this name-based layout"
-                        )
-            manifest = {
-                "snapshot_id": sid,
-                "parent_id": snaps[-1]["snapshot_id"] if snaps else None,
-                "timestamp_ms": int(time.time() * 1000),
-                "operation": operation,
-                "files": files,
-                "partition_by": partition_by or [],
-                "partition_spec": transform_spec or [],
-                "schema": schema_json,
-                "dirs": dirs,
-                "deletes": deletes,
-                "renames": renames,
-                "retired": retired,
-                "widened": widened,
-                "bloom_cols": bloom_cols or [],
-            }
-            snap_path = self._tbl(namespace, table, "snapshots", f"{sid}.json")
-            try:
-                with open(snap_path, "x") as f:
-                    json.dump(manifest, f)
-                break
-            except FileExistsError:
-                if carry:
-                    continue  # append: data independent of state — retry
-                # result was computed from a now-stale snapshot
-                if out_dir:
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                raise CommitConflict(
-                    f"{namespace}.{table}: snapshot {sid} was committed "
-                    "concurrently; re-run this operation on the new state"
-                ) from None
-        return sid
+                manifest = {
+                    "snapshot_id": sid,
+                    "parent_id": head["snapshot_id"] if head else None,
+                    "timestamp_ms": int(time.time() * 1000),
+                    "operation": operation,
+                    "files": files,
+                    "partition_by": partition_by or [],
+                    "partition_spec": transform_spec or [],
+                    "schema": schema_json,
+                    "dirs": dirs,
+                    "deletes": deletes,
+                    "renames": renames,
+                    "retired": retired,
+                    "widened": widened,
+                    "bloom_cols": bloom_cols or [],
+                }
+                if self._publish_manifest(namespace, table, sid, manifest):
+                    return sid
+                if not carry:
+                    # result was computed from a now-stale snapshot
+                    raise CommitConflict(
+                        f"{namespace}.{table}: snapshot {sid} was committed "
+                        "concurrently; re-run this operation on the new "
+                        "state"
+                    )
+                # append: data independent of state — retry
+        except Exception:
+            if out_dir:
+                shutil.rmtree(out_dir, ignore_errors=True)
+            raise

@@ -942,7 +942,7 @@ def snap_update_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _range_lane() -> DataFrame:
         # stats-served CoW lane: footer lower bound (7 of 8 range-disjoint
-        # files certainly match, zero nulls) clears cow_density with no
+        # files certainly match, zero nulls) clears COW_DENSITY with no
         # dispatch job
         k = (
             o.orderBy("o_orderkey").limit(o.count() // 25)
@@ -1220,7 +1220,7 @@ def snap_delete_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _range_lane() -> DataFrame:
         # stats-served lane: 8 range-disjoint files, a ≤4th-percentile
         # range predicate — footer bounds prove the doomed fraction ≤ one
-        # straddling file (~12.5%) < cow_density, so MoR dispatches with
+        # straddling file (~12.5%) < COW_DENSITY, so MoR dispatches with
         # no dispatch job at all
         k = (
             o.orderBy("o_orderkey").limit(o.count() // 25)

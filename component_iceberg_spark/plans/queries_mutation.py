@@ -1125,7 +1125,7 @@ def snap_expire_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-branch retention GC (Iceberg branch-level
     ``min-snapshots-to-keep`` through ``expire_snapshots``): six commits,
     an ``audit`` branch parked at the third snapshot, then
-    ``expire_snapshots_policy(keep_last=1, branch_keep={'audit': 2})``.
+    ``expire_snapshots(keep_last=1, branch_keep={'audit': 2})``.
     Main trims to its newest snapshot, but the audit branch keeps its
     head AND one more ancestor — retained set {s1, s2, s5}, expired
     {s0, s3, s4} — and both retained ancestors stay time-travelable.
@@ -1140,7 +1140,7 @@ def snap_expire_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.create_or_replace("ns", "nation", n)
     # park the audit branch two commits back from the final replace
     cat.create_branch("ns", "nation", "audit", snapshot_id=sids[1])
-    expired = cat.expire_snapshots_policy(
+    expired = cat.expire_snapshots(
         "ns", "nation", keep_last=1, branch_keep={"audit": 2}
     )
     remaining = [s["snapshot_id"] for s in cat._snapshots("ns", "nation")]

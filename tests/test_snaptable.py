@@ -165,19 +165,19 @@ def test_commit_conflict_semantics(spark, sf_dir, tmp_path):
     def race_once(cat):
         """Make cat's next commit see a stale snapshot list on its first
         state read, while a winner claims the id it will try."""
-        real = SnapCatalog._snapshots
+        real = SnapCatalog._head
         state = {"calls": 0}
         stale = real(cat, "ns", "t")
 
         def patched(self, namespace, table):
             state["calls"] += 1
             # call 1 is _commit's partition-spec pre-read; call 2 is the
-            # publish loop's state read — the race window
+            # publish loop's head read — the race window
             if state["calls"] == 2:
                 # winner lands right after the stale read
-                winner = dict(stale[-1])
-                winner["snapshot_id"] = stale[-1]["snapshot_id"] + 1
-                winner["parent_id"] = stale[-1]["snapshot_id"]
+                winner = dict(stale)
+                winner["snapshot_id"] = stale["snapshot_id"] + 1
+                winner["parent_id"] = stale["snapshot_id"]
                 path = os.path.join(
                     wh, namespace, table, "snapshots",
                     f"{winner['snapshot_id']}.json",
@@ -187,7 +187,7 @@ def test_commit_conflict_semantics(spark, sf_dir, tmp_path):
                 return stale
             return real(self, namespace, table)
 
-        cat._snapshots = patched.__get__(cat)
+        cat._head = patched.__get__(cat)
 
     # append under a race: retries transparently onto the winner's state
     race_once(b)
@@ -1056,10 +1056,10 @@ def test_expire_snapshots_policy_per_branch(spark, sf_dir, tmp_path):
 
     # unknown branch refuses before touching anything
     with pytest.raises(SnapshotNotFound):
-        cat.expire_snapshots_policy("ns", "t", branch_keep={"nope": 2})
+        cat.expire_snapshots("ns", "t", branch_keep={"nope": 2})
     assert len(cat._snapshots("ns", "t")) == 5
 
-    expired = cat.expire_snapshots_policy(
+    expired = cat.expire_snapshots(
         "ns", "t", keep_last=1, branch_keep={"audit": 2}
     )
     # retained: s5 (main keep_last), s3 head + s2 ancestor, s1 (tag pin)
@@ -1086,7 +1086,7 @@ def test_expire_policy_refuses_tags_in_branch_keep(spark, sf_dir, tmp_path):
     cat.append("ns", "t", n.limit(1))
     cat.create_tag("ns", "t", "release")
     with pytest.raises(ValueError, match="tag"):
-        cat.expire_snapshots_policy("ns", "t", branch_keep={"release": 2})
+        cat.expire_snapshots("ns", "t", branch_keep={"release": 2})
     assert len(cat._snapshots("ns", "t")) == 2
 
 
@@ -2575,9 +2575,6 @@ def test_update_where_auto_density_dispatch(spark, sf_dir, tmp_path):
         got.exceptAll(want).count() == 0
         and want.exceptAll(got).count() == 0
     )
-    with pytest.raises(ValueError, match="cow_density"):
-        cat.update_where_auto(spark, "ns", "t", "o_orderkey = 1", set_,
-                              cow_density=2.0)
     with pytest.raises(ValueError, match="SET targets"):
         cat.update_where_mor(spark, "ns", "t", "o_orderkey = 1",
                              {"not_a_column": "1"})
@@ -3221,8 +3218,6 @@ def test_delete_where_auto_density_dispatch(spark, sf_dir, tmp_path):
     no-candidate and zero-match predicates are commit-free no-ops;
     pending MoR deletes force the CoW path (DV authoring is refused
     over masked rows)."""
-    import pytest
-
     wh = str(tmp_path / "wh")
     cat = SnapCatalog(wh)
     o = load_table(spark, sf_dir, "orders").select(
@@ -3270,9 +3265,6 @@ def test_delete_where_auto_density_dispatch(spark, sf_dir, tmp_path):
         "AND o_orderkey % 2 <> 0"
     ).count()
     assert cat.read(spark, "ns", "t").count() == want3
-    with pytest.raises(ValueError, match="cow_density"):
-        cat.delete_where_auto(spark, "ns", "t", "o_orderkey = 1",
-                              cow_density=0.0)
 
 
 def test_cherry_pick_recovers_rolled_back_adoption(spark, sf_dir, tmp_path):
@@ -3330,7 +3322,8 @@ def test_dispatch_bounds_math(spark, tmp_path):
     )
 
 
-def test_auto_dispatch_stats_served_single_scan(spark, tmp_path):
+def test_auto_dispatch_stats_served_single_scan(spark, tmp_path,
+                                                monkeypatch):
     """VERDICT r13 #2 done-criterion: on the stats-served path an auto
     mutation statement pays exactly ONE candidate-dir scan — the chosen
     verb's own — because the dispatch itself is decided from footer
@@ -3366,9 +3359,9 @@ def test_auto_dispatch_stats_served_single_scan(spark, tmp_path):
         return cat, calls
 
     # decisive MoR: upper ≈ 250/1000 ≤ 0.5 → DV, no dispatch count
+    monkeypatch.setattr(SnapCatalog, "COW_DENSITY", 0.5)
     cat, calls = tracked(str(tmp_path / "wh1"))
-    sid = cat.delete_where_auto(spark, "ns", "t", "id < 10",
-                                cow_density=0.5)
+    sid = cat.delete_where_auto(spark, "ns", "t", "id < 10")
     assert calls["n"] == 1, "stats-served dispatch must not scan to count"
     assert calls["fb"] == 0, "stamped: no footer walk for dispatch"
     (entry,) = cat._manifest("ns", "t", sid)["deletes"]
@@ -3377,8 +3370,7 @@ def test_auto_dispatch_stats_served_single_scan(spark, tmp_path):
 
     # decisive CoW: lower ≈ 750/1000 > 0.5 → rewrite, no dispatch count
     cat, calls = tracked(str(tmp_path / "wh2"))
-    sid = cat.delete_where_auto(spark, "ns", "t", "id >= 10",
-                                cow_density=0.5)
+    sid = cat.delete_where_auto(spark, "ns", "t", "id >= 10")
     assert calls["n"] == 1
     assert calls["fb"] == 0
     assert cat._manifest("ns", "t", sid)["deletes"] == []
@@ -3387,7 +3379,7 @@ def test_auto_dispatch_stats_served_single_scan(spark, tmp_path):
     # decisive MoR update: DV mask + image append, still one scan
     cat, calls = tracked(str(tmp_path / "wh3"))
     sid = cat.update_where_auto(spark, "ns", "t", "id < 10",
-                                {"v": "v + 100000"}, cow_density=0.5)
+                                {"v": "v + 100000"})
     assert calls["n"] == 1
     assert calls["fb"] == 0
     assert [e["mode"] for e in cat._manifest("ns", "t", sid)["deletes"]] \
@@ -3400,6 +3392,7 @@ def test_auto_dispatch_stats_served_single_scan(spark, tmp_path):
     # measures matched AND total in ONE combined aggregate, then the
     # verb scans — exactly two candidate-dir scans, never three (the
     # old stats-free path paid a second full count for the denominator)
+    monkeypatch.undo()  # the default threshold
     cat, calls = tracked(str(tmp_path / "wh4"))
     sid = cat.delete_where_auto(spark, "ns", "t", "id % 97 = 0")
     assert calls["n"] == 2, "measured dispatch = one agg scan + the verb"
@@ -4130,3 +4123,276 @@ def test_dir_schema_stamp_fast_path_and_fallbacks(spark, tmp_path):
     assert set(cat.read(spark, "ns", "t").columns) == {
         "id", "a", "s", "extra"
     }
+
+
+def _id_table(spark, path):
+    """1000 rows (id, v = 2 * id) over 4 range-disjoint files."""
+    cat = SnapCatalog(path)
+    df = spark.range(1000).select(F.col("id"), (F.col("id") * 2).alias("v"))
+    cat.create_or_replace("ns", "t", df.repartitionByRange(4, "id"))
+    return cat
+
+
+_VERB_MODES = ("cow", "mor", "auto")
+# (case, verb, mode) -> (outcome, snapshot count after). An int outcome is
+# the returned sid; a class is the exception the statement raises.
+_VERB_OUTCOMES = {
+    # no candidate dir: only copy-on-write publishes (metadata-only)
+    **{("no_candidate", v, m): ((2, 2) if m == "cow" else (1, 1))
+       for v in ("delete", "update") for m in _VERB_MODES},
+    # candidate dirs but zero matches: copy-on-write still rewrites
+    **{("zero_matches", v, m): ((2, 2) if m == "cow" else (1, 1))
+       for v in ("delete", "update") for m in _VERB_MODES},
+    # pending deletes (sid 2): merge-on-read refuses, auto falls back to
+    # copy-on-write
+    **{("pending_deletes", v, m): ((ValueError, 2) if m == "mor" else (3, 3))
+       for v in ("delete", "update") for m in _VERB_MODES},
+    # unknown SET target over matching rows: copy-on-write fails to
+    # resolve it, merge-on-read (and auto, which dispatches MoR on this
+    # sparse predicate) refuses it before writing
+    ("unknown_target", "update", "cow"): ("analysis", 1),
+    ("unknown_target", "update", "mor"): (ValueError, 1),
+    ("unknown_target", "update", "auto"): (ValueError, 1),
+}
+
+
+@pytest.mark.parametrize(
+    "case,verb,mode",
+    sorted(_VERB_OUTCOMES),
+    ids=["-".join(k) for k in sorted(_VERB_OUTCOMES)],
+)
+def test_mutation_verb_outcome_matrix(spark, tmp_path, case, verb, mode):
+    """Every row-level verb's outcome per edge case: the returned sid
+    (a base-sid return means no commit) or the exception, and the
+    snapshot count it leaves behind."""
+    from pyspark.errors import AnalysisException
+
+    cat = _id_table(spark, str(tmp_path / "wh"))
+    if case == "pending_deletes":
+        cat.delete_keys(
+            spark, "ns", "t", spark.range(500, 510), ["id"]
+        )
+    predicate = {
+        "no_candidate": "id > 5000",      # manifest stats prune every dir
+        "zero_matches": "id % 1000 = 1001",  # no pruning, no match
+    }.get(case, "id < 10")
+    fn = getattr(cat, f"{verb}_where" + ("" if mode == "cow" else f"_{mode}"))
+    args = [spark, "ns", "t", predicate]
+    if verb == "update":
+        target = "nope" if case == "unknown_target" else "v"
+        args.append({target: "v + 1"})
+    want, n_snaps = _VERB_OUTCOMES[(case, verb, mode)]
+    if want == "analysis":
+        want = AnalysisException
+    if isinstance(want, int):
+        assert fn(*args) == want
+    else:
+        with pytest.raises(want):
+            fn(*args)
+    assert len(cat._snapshots("ns", "t")) == n_snaps
+
+
+def test_manifest_write_failure_leaves_table_readable_and_retryable(
+    spark, tmp_path, monkeypatch
+):
+    """A failure mid-way through writing a manifest must not leave a
+    truncated ``<sid>.json``: the table keeps reading its pre-state, a
+    retry lands, and the failed append leaves no unreferenced data dir
+    and no temp manifest."""
+    from component_iceberg_spark.io import snaptable
+
+    wh = str(tmp_path / "wh")
+    cat = _id_table(spark, wh)
+    real_dump = json.dump
+
+    def failing_dump(obj, fp, *a, **kw):
+        if f"{os.sep}snapshots{os.sep}" in getattr(fp, "name", ""):
+            fp.write('{"snapshot_id": ')  # partial bytes land first
+            fp.flush()
+            raise OSError("disk full")
+        return real_dump(obj, fp, *a, **kw)
+
+    more = spark.range(1000, 1010).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    )
+    monkeypatch.setattr(snaptable.json, "dump", failing_dump)
+    with pytest.raises(OSError, match="disk full"):
+        cat.append("ns", "t", more)
+    monkeypatch.undo()
+
+    assert cat.read(spark, "ns", "t").count() == 1000
+    assert cat.append("ns", "t", more) == 2
+    assert cat.read(spark, "ns", "t").count() == 1010
+    data = set(os.listdir(os.path.join(wh, "ns", "t", "data")))
+    assert data == set(cat._manifest("ns", "t", 2)["files"])
+    assert sorted(os.listdir(os.path.join(wh, "ns", "t", "snapshots"))) == [
+        "1.json", "2.json"
+    ]
+
+
+def test_head_lookup_parses_no_history(spark, tmp_path, monkeypatch):
+    """The head id comes from manifest names and only the head manifest
+    is parsed: an append and a current read parse as many manifests at 30
+    snapshots as at 3."""
+    from component_iceberg_spark.io import snaptable
+
+    cat = _id_table(spark, str(tmp_path / "wh"))
+    row = spark.range(1).select(F.col("id"), F.col("id").alias("v"))
+    real_load = json.load
+    parses = {"n": 0}
+
+    def counting_load(fp, *a, **kw):
+        if f"{os.sep}snapshots{os.sep}" in getattr(fp, "name", ""):
+            parses["n"] += 1
+        return real_load(fp, *a, **kw)
+
+    def parses_per_statement():
+        monkeypatch.setattr(snaptable.json, "load", counting_load)
+        parses["n"] = 0
+        cat.append("ns", "t", row)
+        appended = parses["n"]
+        parses["n"] = 0
+        cat.read(spark, "ns", "t")
+        read = parses["n"]
+        monkeypatch.undo()
+        return appended, read
+
+    while len(cat._snapshots("ns", "t")) < 3:
+        cat.rollback_to("ns", "t", 1)  # metadata-only history growth
+    at_3 = parses_per_statement()
+    while len(cat._snapshots("ns", "t")) < 30:
+        cat.rollback_to("ns", "t", 1)
+    at_30 = parses_per_statement()
+    assert at_3 == at_30, (at_3, at_30)
+
+
+@pytest.mark.parametrize(
+    "author",
+    ["delete_keys", "delete_positions", "delete_where_mor",
+     "rewrite_deletes_to_dv"],
+)
+def test_delete_file_authors_sweep_on_conflict(spark, tmp_path, author):
+    """A delete-file author that loses the race to a rival append raises
+    CommitConflict and leaves no delete file behind; remove_orphans also
+    sweeps delete dirs no manifest references (a crashed author's), under
+    the same age rule as data dirs, and spares referenced ones."""
+    from component_iceberg_spark.io.snaptable import CommitConflict
+
+    wh = str(tmp_path / "wh")
+    cat = _id_table(spark, wh)
+    rival = SnapCatalog(wh)
+    del_root = os.path.join(wh, "ns", "t", "deletes")
+    if author == "rewrite_deletes_to_dv":
+        addressed = cat.read_with_positions(spark, "ns", "t")
+        for pred in ("id < 5", "id >= 990"):
+            cat.delete_positions(spark, "ns", "t", addressed.filter(
+                pred
+            ).select(cat.POS_FILE_COL, cat.POS_IDX_COL))
+    kept = set(os.listdir(del_root)) if os.path.isdir(del_root) else set()
+
+    # the rival append lands right after the author reads its base
+    real_manifest = SnapCatalog._manifest
+    state = {"raced": False}
+
+    def racing_manifest(self, namespace, table, sid):
+        out = real_manifest(self, namespace, table, sid)
+        if not state["raced"]:
+            state["raced"] = True
+            rival.append("ns", "t", spark.range(2000, 2005).select(
+                F.col("id"), (F.col("id") * 2).alias("v")
+            ))
+        return out
+
+    doomed = None
+    if author == "delete_positions":
+        doomed = cat.read_with_positions(spark, "ns", "t").filter(
+            "id % 7 = 0"
+        ).select(cat.POS_FILE_COL, cat.POS_IDX_COL)
+    cat._manifest = racing_manifest.__get__(cat)
+    with pytest.raises(CommitConflict):
+        if author == "delete_keys":
+            cat.delete_keys(spark, "ns", "t", spark.range(3), ["id"])
+        elif author == "delete_positions":
+            cat.delete_positions(spark, "ns", "t", doomed)
+        elif author == "delete_where_mor":
+            cat.delete_where_mor(spark, "ns", "t", "id % 7 = 0")
+        else:
+            cat.rewrite_deletes_to_dv(spark, "ns", "t")
+    del cat._manifest
+    on_disk = set(os.listdir(del_root)) if os.path.isdir(del_root) else set()
+    assert on_disk == kept, "the losing author must sweep its delete file"
+
+    crashed = os.path.join(del_root, "delete-crashed00000")
+    os.makedirs(crashed)
+    with open(os.path.join(crashed, "part-0.parquet"), "w") as f:
+        f.write("placeholder")
+    assert cat.remove_orphans("ns", "t", older_than_ms=3600 * 1000) == []
+    assert cat.remove_orphans("ns", "t", older_than_ms=0) == [
+        "delete-crashed00000"
+    ]
+    assert set(os.listdir(del_root)) == kept
+
+
+def test_mor_delete_conflicts_with_rival_rewrite(spark, tmp_path):
+    """A rival copy-on-write rewrite landing between a merge-on-read
+    DELETE's candidate scan and its publish must surface CommitConflict:
+    the DV is validated against the head its addresses were read from,
+    never re-scoped onto the rival's head (where the rewritten dirs are
+    no longer live and the delete would silently vanish)."""
+    from component_iceberg_spark.io.snaptable import CommitConflict
+
+    wh = str(tmp_path / "wh")
+    a, b = _id_table(spark, wh), SnapCatalog(wh)
+    real = SnapCatalog._read_dirs
+    state = {"raced": False}
+
+    def racing_read_dirs(self, *args, **kw):
+        out = real(self, *args, **kw)
+        if not state["raced"]:
+            state["raced"] = True
+            b.delete_where(spark, "ns", "t", "id >= 900")  # rival rewrite
+        return out
+
+    a._read_dirs = racing_read_dirs.__get__(a)
+    with pytest.raises(CommitConflict):
+        a.delete_where_mor(spark, "ns", "t", "id < 10")
+    del a._read_dirs
+    # the caller re-runs on the new state and the delete lands
+    a.delete_where_mor(spark, "ns", "t", "id < 10")
+    assert a.read(spark, "ns", "t").filter("id < 10").count() == 0
+    assert a.read(spark, "ns", "t").count() == 890
+
+
+def test_manifest_publish_without_hard_links(spark, tmp_path, monkeypatch):
+    """On a filesystem without hard links a manifest is claimed by
+    exclusive create and copied in: commits land and read exactly, a
+    copy that fails mid-way removes its claim, and a retry lands."""
+    import errno
+    import shutil
+
+    def no_links(*_a, **_k):
+        raise OSError(errno.EPERM, "hard links unsupported")
+
+    monkeypatch.setattr(os, "link", no_links)
+    wh = str(tmp_path / "wh")
+    cat = _id_table(spark, wh)
+    more = spark.range(1000, 1010).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    )
+    real_copy = shutil.copyfileobj
+
+    def failing_copy(src, dst, *a, **kw):
+        dst.write(src.read(8))  # partial bytes land first
+        dst.flush()
+        raise OSError("disk full")
+
+    monkeypatch.setattr(shutil, "copyfileobj", failing_copy)
+    with pytest.raises(OSError, match="disk full"):
+        cat.append("ns", "t", more)
+    monkeypatch.setattr(shutil, "copyfileobj", real_copy)
+    assert cat.read(spark, "ns", "t").count() == 1000
+    assert cat.append("ns", "t", more) == 2
+    assert cat.read(spark, "ns", "t").count() == 1010
+    assert sorted(os.listdir(os.path.join(wh, "ns", "t", "snapshots"))) == [
+        "1.json", "2.json"
+    ]
