@@ -1009,7 +1009,8 @@ class SnapCatalog:
         (``wr-iceberg/src/component.py:107-108``): matched rows take all
         columns from the delta, unmatched delta rows insert; delta-internal
         key duplicates resolve last-wins by ``order_by`` (cross-batch
-        last-wins parity, SURVEY §7).
+        last-wins parity, SURVEY §7). This is :meth:`merge` with its
+        default clauses, published as an ``upsert`` snapshot.
 
         ``evolve=True`` is the Iceberg ``MERGE … WITH SCHEMA EVOLUTION``
         analogue: the delta may carry ADDITIVE columns (a strict
@@ -1019,24 +1020,94 @@ class SnapCatalog:
         ``snap_schema_evolution``). Dropping target columns or changing
         a common column's type stays refused either way — evolution is
         additive only, exactly Iceberg's safe subset.
+        """
+        return self._merge(
+            namespace, table, delta, keys, None, None, None, order_by,
+            evolve, "upsert",
+        )
 
-        Plan: dedupe delta (window over keys) → target anti-join delta →
-        union. One shuffle on the key columns; the small side broadcasts
-        automatically under AQE.
+    def merge(
+        self,
+        namespace: str,
+        table: str,
+        source: DataFrame,
+        keys: list[str],
+        *,
+        delete_when: str | None = None,
+        update_when: str | None = None,
+        insert_when: str | None = None,
+        order_by: str | None = None,
+        evolve: bool = False,
+    ) -> int:
+        """Multi-action MERGE (Iceberg ``MERGE INTO`` with several WHEN
+        clauses — the general form of :meth:`upsert`, which is the
+        two-clause UPDATE*/INSERT* special case the reference drives
+        through pyiceberg ``table.upsert``,
+        ``wr-iceberg/src/component.py:107-108``). Per source row, after
+        the source is deduped on ``keys``:
 
-        Determinism: without ``order_by``, delta-internal key duplicates
+        - matched  & ``delete_when``            → the key's target rows deleted
+        - matched  & else & ``update_when``     → the key's target rows
+          replaced by the source row
+        - matched  & else & not ``update_when`` → the key's target rows kept
+        - unmatched source & ``insert_when``    → source row inserted
+        - unmatched target                      → kept
+
+        Conditions are SQL boolean expressions over the SOURCE row's
+        columns (the CDC-apply shape: the source carries the op
+        discriminator); a condition that evaluates to NULL is false.
+        Defaults: no deletes, update all matched, insert all unmatched —
+        i.e. plain upsert. ``order_by`` and ``evolve`` are :meth:`upsert`'s.
+        """
+        return self._merge(
+            namespace, table, source, keys, delete_when, update_when,
+            insert_when, order_by, evolve, "merge",
+        )
+
+    def _merge(
+        self,
+        namespace: str,
+        table: str,
+        source: DataFrame,
+        keys: list[str],
+        delete_when: str | None,
+        update_when: str | None,
+        insert_when: str | None,
+        order_by: str | None,
+        evolve: bool,
+        operation: str,
+    ) -> int:
+        """The one MERGE body behind :meth:`upsert` and :meth:`merge`.
+
+        Plan: dedupe source (window over keys) → file-pruned target anti-
+        join the keys the source updates or deletes → union the emitted
+        source rows. The rule is key-level: a key that a source row
+        updates or deletes loses ALL of its target rows, so a target that
+        holds duplicate keys never keeps a stale copy beside the new row.
+        With no WHEN clause every source row is emitted and the plan is
+        one shuffle on the key columns (the small side broadcasts under
+        AQE); a clause adds one key-only join that tells matched source
+        rows (emitted iff update and not delete) from unmatched ones
+        (emitted iff insert). The union keeps the target's column order.
+
+        Determinism: without ``order_by``, source-internal key duplicates
         resolve by the md5 of the remaining columns — a partition-layout-
-        independent tie-break, so repeated runs of the same upsert always
-        keep the same row (``dropDuplicates`` would keep whichever row a
-        task saw first). Pass ``order_by`` to express intent (the
+        independent tie-break, so repeated runs of the same statement
+        always keep the same row (``dropDuplicates`` would keep whichever
+        row a task saw first). Pass ``order_by`` to express intent (the
         reference's batch pump is deterministic last-by-arrival); the
         hash fallback only guarantees *a* stable winner, not which one.
         """
-        spark = delta.sparkSession
+        # helper columns take a suffix no source column carries, so a user
+        # column that happens to share a helper's name is never replaced
+        sfx = ""
+        while {f"_rn{sfx}", f"_hit{sfx}"} & set(source.columns):
+            sfx += "_"
+        rn, hit = f"_rn{sfx}", f"_hit{sfx}"
         if order_by is not None:
             rank_key = F.col(order_by).desc()
         else:
-            non_keys = [c for c in delta.columns if c not in keys]
+            non_keys = [c for c in source.columns if c not in keys]
             # Unambiguous row encoding: to_json escapes separators and
             # distinguishes NULL from any string, so two *distinct* rows
             # can never hash equal (a concat_ws encoding would collide on
@@ -1046,32 +1117,58 @@ class SnapCatalog:
                 F.to_json(F.struct(*[F.col(c) for c in non_keys]))
             ).desc() if non_keys else F.lit(1).asc()
         w = Window.partitionBy(*keys).orderBy(rank_key)
-        delta = (
-            delta.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        source = (
+            source.withColumn(rn, F.row_number().over(w))
+            .filter(F.col(rn) == 1)
+            .drop(rn)
         )
+
+        def flag(cond: str | None, default: bool) -> Column:
+            return (
+                F.coalesce(F.expr(cond), F.lit(False)) if cond
+                else F.lit(default)
+            )
+
+        dele = flag(delete_when, False)
+        upd = flag(update_when, True)
+        ins = flag(insert_when, True)
         if not self.table_exists(namespace, table):
+            # every source row is unmatched: insert_when is the only guard
             return self._commit(
-                namespace, table, delta, operation="upsert", carry=False,
-                inherit_spec=True,
+                namespace, table, source.filter(ins), operation=operation,
+                carry=False, inherit_spec=True,
             )
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
         self._validate_source_schema(
-            namespace, table, manifest, delta, "upsert", additive_ok=evolve
+            namespace, table, manifest, source, operation, additive_ok=evolve
         )
-        candidates, untouched = self._delta_key_pruning(manifest, delta, keys)
+        candidates, untouched = self._delta_key_pruning(manifest, source, keys)
         if candidates:
             target = self._read_with_deletes(
-                spark, namespace, table, manifest, candidates
+                source.sparkSession, namespace, table, manifest, candidates
             )
-            survivors = target.join(delta.select(*keys), keys, "left_anti")
-            merged = survivors.unionByName(delta, allowMissingColumns=evolve)
+            kept = target.join(
+                source.filter(dele | upd).select(*keys), keys, "left_anti"
+            )
+            emitted = source
+            if delete_when or update_when or insert_when:
+                matched = (
+                    target.select(*keys)
+                    .join(source.select(*keys), keys, "left_semi")
+                    .distinct()
+                    .withColumn(hit, F.lit(True))
+                )
+                emitted = (
+                    source.join(matched, keys, "left")
+                    .filter(F.when(F.col(hit), upd & ~dele).otherwise(ins))
+                    .drop(hit)
+                )
+            merged = kept.unionByName(emitted, allowMissingColumns=evolve)
         else:
-            merged = delta
+            merged = source.filter(ins)
         return self._commit(
-            namespace, table, merged, operation="upsert", carry=False,
+            namespace, table, merged, operation=operation, carry=False,
             base_sid=base, inherit_spec=True, carry_dirs=untouched,
         )
 
@@ -1177,139 +1274,6 @@ class SnapCatalog:
         if conjuncts:
             return self._split_by_stats(manifest, conjuncts)
         return list(manifest["files"]), []
-
-    def merge(
-        self,
-        namespace: str,
-        table: str,
-        source: DataFrame,
-        keys: list[str],
-        *,
-        delete_when: str | None = None,
-        update_when: str | None = None,
-        insert_when: str | None = None,
-        order_by: str | None = None,
-        evolve: bool = False,
-    ) -> int:
-        """Multi-action MERGE (Iceberg ``MERGE INTO`` with several WHEN
-        clauses — the general form of :meth:`upsert`, which is the
-        two-clause UPDATE*/INSERT* special case the reference drives
-        through pyiceberg ``table.upsert``,
-        ``wr-iceberg/src/component.py:107-108``):
-
-        - matched  & ``delete_when``            → target row deleted
-        - matched  & else & ``update_when``     → row replaced by source
-        - matched  & else & not ``update_when`` → target row kept
-        - unmatched source & ``insert_when``    → source row inserted
-        - unmatched target                      → kept
-
-        Conditions are SQL boolean expressions over the SOURCE row's
-        columns (the CDC-apply shape: the source carries the op
-        discriminator). Defaults: no deletes, update all matched, insert
-        all unmatched — i.e. plain upsert.
-
-        Plan: ONE shuffle — a full-outer join on the key columns with both
-        sides packed into structs, then a single CASE projection picks the
-        surviving row. File-pruned copy-on-write carries data dirs whose
-        key-range stats cannot overlap the source untouched, exactly like
-        :meth:`upsert`; source-internal key duplicates resolve with the
-        same deterministic last-wins rule.
-
-        ``evolve=True``: additive schema evolution, same contract as
-        :meth:`upsert` — extra source columns join the table schema,
-        kept/carried target rows surface them as NULL (the target side
-        of the full-outer join packs NULL-typed lanes for the new
-        columns so both structs share one shape; old files are never
-        rewritten).
-        """
-        spark = source.sparkSession
-        if order_by is not None:
-            rank_key = F.col(order_by).desc()
-        else:
-            non_keys = [c for c in source.columns if c not in keys]
-            rank_key = F.md5(
-                F.to_json(F.struct(*[F.col(c) for c in non_keys]))
-            ).desc() if non_keys else F.lit(1).asc()
-        w = Window.partitionBy(*keys).orderBy(rank_key)
-        source = (
-            source.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # action flags evaluated on the source row BEFORE packing, so the
-        # conditions see plain column names
-        flagged = (
-            source.withColumn("_del", F.expr(delete_when or "false"))
-            .withColumn("_upd", F.expr(update_when or "true"))
-            .withColumn("_ins", F.expr(insert_when or "true"))
-        )
-        cols = source.columns
-        s_pack = flagged.select(
-            *[F.col(k).alias(f"_k_{k}") for k in keys],
-            F.struct(*[F.col(c) for c in cols]).alias("_s"),
-            "_del", "_upd", "_ins",
-        )
-        if not self.table_exists(namespace, table):
-            # every source row is unmatched: insert_when is the only guard
-            # (matched-clause conditions never apply, same as below)
-            inserts = s_pack.filter(F.col("_ins")).select("_s.*")
-            return self._commit(
-                namespace, table, inserts, operation="merge", carry=False,
-                inherit_spec=True,
-            )
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        self._validate_source_schema(
-            namespace, table, manifest, source, "merge", additive_ok=evolve
-        )
-        candidates, untouched = self._delta_key_pruning(
-            manifest, source, keys
-        )
-        if candidates:
-            target = self._read_with_deletes(
-                spark, namespace, table, manifest, candidates
-            )
-            # evolution: the target packs NULL-typed lanes for columns
-            # only the source carries, so _t and _s share one struct type
-            s_types = {f.name: f.dataType for f in source.schema.fields}
-            t_lanes = [
-                (
-                    F.col(c) if c in target.columns
-                    else F.lit(None).cast(s_types[c])
-                ).alias(c)
-                for c in cols
-            ]
-            t_pack = target.select(
-                *[F.col(k).alias(f"_k_{k}") for k in keys],
-                F.struct(*t_lanes).alias("_t"),
-            )
-            joined = t_pack.join(
-                s_pack, on=[f"_k_{k}" for k in keys], how="full_outer"
-            )
-            # Iceberg MERGE clause order: matched rows consult the
-            # matched-clauses only (delete wins over update); unmatched
-            # source rows consult insert_when only.
-            survivor = (
-                F.when(F.col("_s").isNull(), F.col("_t"))
-                .when(
-                    F.col("_t").isNull(),
-                    F.when(F.col("_ins"), F.col("_s")),
-                )
-                .when(F.col("_del"), F.lit(None))
-                .when(F.col("_upd"), F.col("_s"))
-                .otherwise(F.col("_t"))
-            )
-            merged = (
-                joined.withColumn("_row", survivor)
-                .filter(F.col("_row").isNotNull())
-                .select("_row.*")
-            )
-        else:
-            merged = s_pack.filter(F.col("_ins")).select("_s.*")
-        return self._commit(
-            namespace, table, merged, operation="merge", carry=False,
-            base_sid=base, inherit_spec=True, carry_dirs=untouched,
-        )
 
     def compact(
         self,
@@ -2892,26 +2856,38 @@ class SnapCatalog:
         self, namespace: str, table: str, older_than_ms: int = 24 * 3600 * 1000
     ) -> list[str]:
         """Delete data and delete-file directories referenced by no
-        snapshot manifest and older than the threshold (Iceberg
-        ``remove_orphan_files`` analogue). Returns the removed dir names.
+        snapshot manifest, and temp manifests (``<sid>.json.tmp-<hex>``,
+        left by a process killed inside :meth:`_publish_manifest`), all
+        older than the threshold (Iceberg ``remove_orphan_files``
+        analogue). Returns the removed names.
         The age threshold is what makes this safe to run concurrently with
-        commits: an in-flight commit's data or delete dir exists before its
-        manifest, but it is necessarily younger than any sane threshold."""
+        commits: an in-flight commit's data or delete dir or temp manifest
+        exists before its manifest, but it is necessarily younger than any
+        sane threshold."""
         snaps = self._snapshots(namespace, table)
+        live_data = {d for s in snaps for d in s["files"]}
+        live_del = {e["dir"] for s in snaps for e in s.get("deletes", [])}
         cutoff = time.time() - older_than_ms / 1000.0
         removed = []
-        for kind, live in (
-            ("data", {d for s in snaps for d in s["files"]}),
-            ("deletes", {e["dir"] for s in snaps for e in s.get("deletes", [])}),
+        for kind, orphan in (
+            ("data", lambda d: d not in live_data),
+            ("deletes", lambda d: d not in live_del),
+            ("snapshots", lambda d: ".json.tmp-" in d),
         ):
             root = self._tbl(namespace, table, kind)
             if not os.path.isdir(root):
                 continue
             for d in sorted(os.listdir(root)):
                 path = os.path.join(root, d)
-                if d not in live and os.path.getmtime(path) < cutoff:
-                    shutil.rmtree(path, ignore_errors=True)
-                    removed.append(d)
+                # a rival commit may unlink its temp manifest or sweep its
+                # failed dir between the listing and the age check
+                with contextlib.suppress(FileNotFoundError):
+                    if orphan(d) and os.path.getmtime(path) < cutoff:
+                        if os.path.isdir(path):
+                            shutil.rmtree(path, ignore_errors=True)
+                        else:
+                            os.unlink(path)
+                        removed.append(d)
         return removed
 
     # -- reads --------------------------------------------------------------

@@ -1192,13 +1192,18 @@ def snap_merge_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``snap_upsert``'s two-clause special case and the shape a CDC apply
     job needs (the source row carries the action discriminator).
 
-    Physical plan: ONE shuffle — full-outer join of the file-pruned
-    target against the deduped source on the key, both sides packed as
-    structs, a single CASE projection picking the surviving row
-    (io/snaptable.py merge). Data dirs whose key-range stats cannot
-    overlap the source carry into the new snapshot untouched, so at
-    100 TB the rewrite cost tracks the touched key range, not the table
-    size."""
+    Physical plan: upsert's plan plus one key-only join
+    (io/snaptable.py ``_merge``, the one MERGE body behind both verbs).
+    The file-pruned target anti-joins the keys the deduped source
+    updates or deletes; the source rows are emitted through a left join
+    against the distinct matched keys (target keys semi-joined with the
+    source keys), which sends matched rows through ``update_when AND
+    NOT delete_when`` and unmatched rows through ``insert_when``; one
+    union writes the result. While the source fits the broadcast
+    threshold neither join shuffles the target. Data dirs whose
+    key-range stats cannot overlap the source carry into the new
+    snapshot untouched, so at 100 TB the rewrite cost tracks the touched
+    key range, not the table size."""
     cat = _warehouse(sf_dir, "merge_multi")
     base, src = _upsert_inputs(spark, sf_dir)
     cat.create_or_replace("ns", "orders", base)

@@ -799,27 +799,38 @@ def test_minhash_screen_hostile_id_column_and_scalar_thresholds(spark):
 
 
 def _model_merge(
-    base: dict[int, int],
-    source: dict[int, int],
+    base: dict[int, int | None],
+    source: dict[int, int | None],
     *,
     delete_when,
     update_when,
     insert_when,
-) -> dict[int, int]:
+) -> dict[int, int | None]:
     """Reference multi-action MERGE in plain Python: matched keys consult
     delete_when then update_when (else keep target); unmatched source
-    keys consult insert_when ONLY."""
+    keys consult insert_when ONLY. A NULL value makes a SQL condition
+    NULL, which counts as false."""
+    def holds(cond, v):
+        return v is not None and cond(v)
+
     state = dict(base)
     for k, v in source.items():
         if k in state:
-            if delete_when(v):
+            if holds(delete_when, v):
                 del state[k]
-            elif update_when(v):
+            elif holds(update_when, v):
                 state[k] = v
         else:
-            if insert_when(v):
+            if holds(insert_when, v):
                 state[k] = v
     return state
+
+
+# values may be NULL, so every clause condition can evaluate to NULL
+null_rows = st.lists(
+    st.tuples(st.integers(0, 15), st.none() | st.integers(0, 100)),
+    min_size=0, max_size=25,
+)
 
 
 @pytest.mark.parametrize("hyp", [None])
@@ -828,23 +839,27 @@ def _model_merge(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(base=rows, source=rows, dmod=st.integers(2, 5), umod=st.integers(2, 5))
+@given(
+    base=null_rows, source=null_rows, dmod=st.integers(2, 5),
+    umod=st.integers(2, 5),
+)
 def test_merge_matches_model(
     spark, tmp_path_factory, hyp, base, source, dmod, umod
 ):
     """cat.merge against the Python model under randomized value-derived
     clause conditions (delete when v % dmod == 0, update when
     v % umod != 0, insert unless deletable) — covers every clause
-    combination the fixture query can't reach by construction."""
+    combination the fixture query can't reach by construction, and NULL
+    values, on which every condition is NULL and so false."""
     b = dict(base)
     s = dict(source)
     cat = SnapCatalog(str(tmp_path_factory.mktemp("wh")))
     bdf = spark.createDataFrame(
         list(b.items()) or [(None, None)], schema="k int, v int"
-    ).dropna()
+    ).dropna(subset=["k"])
     sdf = spark.createDataFrame(
         list(s.items()) or [(None, None)], schema="k int, v int"
-    ).dropna()
+    ).dropna(subset=["k"])
     cat.create_or_replace("ns", "t", bdf)
     cat.merge(
         "ns", "t", sdf, keys=["k"],

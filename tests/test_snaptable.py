@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -1153,6 +1154,17 @@ def test_merge_defaults_equal_upsert(spark, sf_dir, tmp_path):
     ra = {tuple(r) for r in a.read(spark, "ns", "t").collect()}
     rb = {tuple(r) for r in b.read(spark, "ns", "t").collect()}
     assert ra == rb and len(ra) > 0
+
+    # a target holding a key twice: the updated key loses every copy
+    dup = spark.createDataFrame([(1, 10), (1, 11), (2, 20)], "k long, v long")
+    one = spark.createDataFrame([(1, 99)], "k long, v long")
+    a.create_or_replace("ns", "d", dup)
+    a.upsert("ns", "d", one, keys=["k"])
+    b.create_or_replace("ns", "d", dup)
+    b.merge("ns", "d", one, keys=["k"])
+    for cat in (a, b):
+        got = sorted(tuple(r) for r in cat.read(spark, "ns", "d").collect())
+        assert got == [(1, 99), (2, 20)]
 
 
 def test_merge_missing_table_inserts_only_insert_when(spark, tmp_path):
@@ -4396,3 +4408,112 @@ def test_manifest_publish_without_hard_links(spark, tmp_path, monkeypatch):
     assert sorted(os.listdir(os.path.join(wh, "ns", "t", "snapshots"))) == [
         "1.json", "2.json"
     ]
+
+
+@pytest.mark.parametrize("verb", ["upsert", "merge"])
+def test_merge_verbs_keep_table_column_order(spark, tmp_path, verb):
+    """A source that lists the columns in another order, over keys the
+    table holds, leaves the table's column order as it was."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    cat.create_or_replace(
+        "ns", "t", spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
+    )
+    src = spark.createDataFrame([(99, 1), (30, 3)], "v long, k long")
+    getattr(cat, verb)("ns", "t", src, keys=["k"])
+    got = cat.read(spark, "ns", "t")
+    assert got.columns == ["k", "v"]
+    assert sorted(tuple(r) for r in got.collect()) == [(1, 99), (2, 20), (3, 30)]
+
+
+@pytest.mark.parametrize("col", ["_rn", "_del", "_hit"])
+@pytest.mark.parametrize("verb", ["upsert", "merge"])
+def test_merge_verbs_keep_columns_named_like_helpers(spark, tmp_path, verb, col):
+    """A user column that shares a name with a column the MERGE plan
+    adds for itself is neither replaced nor dropped."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    schema = f"k long, {col} long"
+    cat.create_or_replace(
+        "ns", "t", spark.createDataFrame([(1, 10), (2, 20), (4, 40)], schema)
+    )
+    src = spark.createDataFrame([(1, 99), (3, 30), (4, 0)], schema)
+    clauses = {"delete_when": f"{col} = 0"} if verb == "merge" else {}
+    getattr(cat, verb)("ns", "t", src, keys=["k"], **clauses)
+    got = cat.read(spark, "ns", "t")
+    assert got.columns == ["k", col]
+    want = [(1, 99), (2, 20), (3, 30)] + ([(4, 0)] if verb == "upsert" else [])
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+
+_MERGE_VERBS = {
+    "upsert": ("upsert", {}),
+    "merge_defaults": ("merge", {}),
+    # the clauses name only the key, which every case's source carries
+    "merge_clauses": ("merge", {
+        "delete_when": "k < 0", "update_when": "k > 6", "insert_when": "k > 0",
+    }),
+}
+# case -> (outcome, snapshot count after). An int outcome is the returned
+# sid; a class is the exception the statement raises.
+_MERGE_CASES = {
+    "missing_table": (1, 1),
+    "no_candidate": (2, 2),
+    "candidates": (2, 2),
+    "mismatch_no_candidate": (ValueError, 1),
+    "evolve": (2, 2),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MERGE_CASES))
+@pytest.mark.parametrize("verb", sorted(_MERGE_VERBS))
+def test_merge_verb_outcome_matrix(spark, tmp_path, verb, case):
+    """Every MERGE verb's outcome per edge case: the returned sid or the
+    exception, the snapshot count it leaves behind and the operation
+    label of the head snapshot."""
+    method, clauses = _MERGE_VERBS[verb]
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    if case != "missing_table":
+        cat.create_or_replace("ns", "t", spark.createDataFrame(
+            [(i, i) for i in range(10)], "k long, v long"
+        ))
+    lo = 1000 if case in ("no_candidate", "mismatch_no_candidate") else 5
+    rows = [(k, k - lo + 1) for k in range(lo, lo + 10)]
+    schema = {
+        "mismatch_no_candidate": "k long, other long",
+        "evolve": "k long, v long, extra long",
+    }.get(case, "k long, v long")
+    if case == "evolve":
+        rows = [r + (7,) for r in rows]
+    src = spark.createDataFrame(rows, schema)
+    fn = getattr(cat, method)
+    args = ("ns", "t", src, ["k"])
+    kwargs = {**clauses, **({"evolve": True} if case == "evolve" else {})}
+    want, n_snaps = _MERGE_CASES[case]
+    if isinstance(want, int):
+        assert fn(*args, **kwargs) == want
+    else:
+        with pytest.raises(want):
+            fn(*args, **kwargs)
+    snaps = cat._snapshots("ns", "t")
+    assert len(snaps) == n_snaps
+    label = method if isinstance(want, int) else "replace"
+    assert snaps[-1]["operation"] == label
+
+
+def test_remove_orphans_sweeps_stale_temp_manifests(spark, tmp_path):
+    """A process killed inside the manifest publish leaves
+    ``<sid>.json.tmp-<hex>`` behind: remove_orphans removes it once it
+    is older than the threshold and keeps a fresh one (an in-flight
+    publish)."""
+    wh = str(tmp_path / "wh")
+    cat = _id_table(spark, wh)
+    snaps = os.path.join(wh, "ns", "t", "snapshots")
+    stale = "2.json.tmp-" + "a" * 32
+    fresh = "2.json.tmp-" + "b" * 32
+    for name in (stale, fresh):
+        with open(os.path.join(snaps, name), "w") as f:
+            f.write('{"snapshot_id": ')
+    old = time.time() - 7200
+    os.utime(os.path.join(snaps, stale), (old, old))
+    assert cat.remove_orphans("ns", "t", older_than_ms=3600 * 1000) == [stale]
+    assert sorted(os.listdir(snaps)) == ["1.json", fresh]
+    assert cat.read(spark, "ns", "t").count() == 1000
