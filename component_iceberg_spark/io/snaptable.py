@@ -941,10 +941,10 @@ class SnapCatalog:
             "add_files",
         )
         nd = f"adopted-{uuid.uuid4().hex[:12]}"
-        dst_root = os.path.join(self._tbl(namespace, table, "data"), nd)
         marker = os.path.join(adopt_root, f"{nd}.json")
         link_mode = "hardlink"
-        try:
+        with self._new_paths(namespace, table) as claim:
+            dst_root = claim("data", nd)
             for src in parquet_files:
                 rel = os.path.relpath(src, src_dir)
                 dst = os.path.join(dst_root, rel)
@@ -972,22 +972,22 @@ class SnapCatalog:
             # failure a retry would hit); a crash between the marker
             # and the commit instead leaves a committed=false marker
             # that refuses the retry LOUDLY — the strictly safer side.
-            with open(marker, "w") as f:
-                json.dump(
-                    {"src": src_dir, "dir": nd, "link_mode": link_mode,
-                     "committed": False},
-                    f,
+            try:
+                with open(marker, "w") as f:
+                    json.dump(
+                        {"src": src_dir, "dir": nd, "link_mode": link_mode,
+                         "committed": False},
+                        f,
+                    )
+                sid = self._commit(
+                    namespace, table, None, operation="add_files",
+                    carry=False, base_sid=base,
+                    carry_dirs=manifest["files"], extra_dirs={nd: rec},
                 )
-            sid = self._commit(
-                namespace, table, None, operation="add_files",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=manifest["files"] + [nd], extra_dirs={nd: rec},
-            )
-        except Exception:
-            shutil.rmtree(dst_root, ignore_errors=True)
-            if os.path.exists(marker):
-                os.remove(marker)  # in-band failure: retry stays legal
-            raise
+            except Exception:
+                if os.path.exists(marker):
+                    os.remove(marker)  # in-band failure: retry stays legal
+                raise
         with open(marker, "w") as f:
             json.dump(
                 {"src": src_dir, "dir": nd, "link_mode": link_mode,
@@ -1132,13 +1132,15 @@ class SnapCatalog:
         dele = flag(delete_when, False)
         upd = flag(update_when, True)
         ins = flag(insert_when, True)
-        if not self.table_exists(namespace, table):
-            # every source row is unmatched: insert_when is the only guard
+        base = self._head_sid(namespace, table)
+        if base is None:
+            # every source row is unmatched: insert_when is the only
+            # guard. Base 0 makes a rival that creates the table first
+            # a conflict, not a replace of its rows
             return self._commit(
                 namespace, table, source.filter(ins), operation=operation,
-                carry=False, inherit_spec=True,
+                carry=False, base_sid=0,
             )
-        base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
         self._validate_source_schema(
             namespace, table, manifest, source, operation, additive_ok=evolve
@@ -1169,7 +1171,7 @@ class SnapCatalog:
             merged = source.filter(ins)
         return self._commit(
             namespace, table, merged, operation=operation, carry=False,
-            base_sid=base, inherit_spec=True, carry_dirs=untouched,
+            base_sid=base, carry_dirs=untouched,
         )
 
     def _validate_source_schema(
@@ -1301,7 +1303,7 @@ class SnapCatalog:
         # rewrite_data_files + rewrite_position_delete_files in one
         return self._commit(
             namespace, table, df, operation="compact", carry=False,
-            base_sid=base, inherit_spec=True, clear_deletes=True,
+            base_sid=base, deletes=[],
         )
 
     def compact_manifests(self, namespace: str, table: str) -> int:
@@ -1370,61 +1372,61 @@ class SnapCatalog:
         new_files: list[str] = []
         sig_to_dir: dict[frozenset, str] = {}
         extra_dirs: dict[str, dict] = {}
-        linked_dirs: list[str] = []
-        for sig, dirs in sorted(groups.items(), key=lambda kv: sorted(kv[1])):
-            if len(dirs) == 1:
-                sig_to_dir[sig] = dirs[0]
-                new_files.append(dirs[0])
-                continue
-            nd = f"manifest-{uuid.uuid4().hex[:12]}"
-            out = os.path.join(data_root, nd)
-            for d in dirs:
-                src_root = os.path.join(data_root, d)
-                for rootdir, _subdirs, fns in os.walk(src_root):
-                    rel = os.path.relpath(rootdir, src_root)
-                    for fn in fns:
-                        if fn.startswith((".", "_")):
-                            continue  # _SUCCESS / .crc sidecars
-                        dst_dir = (
-                            out if rel == "." else os.path.join(out, rel)
-                        )
-                        os.makedirs(dst_dir, exist_ok=True)
-                        # source-dir prefix keeps basenames collision-free
-                        # (two commits can share a hive partition subdir)
-                        dst = os.path.join(dst_dir, f"{d}__{fn}")
-                        src = os.path.join(rootdir, fn)
-                        try:
-                            os.link(src, dst)
-                        except OSError:  # FS without hard links
-                            shutil.copy2(src, dst)
-            linked_dirs.append(out)
-            sig_to_dir[sig] = nd
-            new_files.append(nd)
-            extra_dirs[nd] = _fold_dir_records(
-                [parent_dirs.get(d, {}) for d in dirs]
-            )
-        remapped = []
-        for i, e in enumerate(deletes):
-            if e.get("mode") in ("positional", "dv"):
-                # path-scoped dirs never fold (singleton signatures
-                # above), so the entry carries its surviving dirs
-                # unchanged
-                applies = sorted(d for d in e["applies_to"] if d in set(files))
-            else:
-                applies = sorted(sig_to_dir[sig] for sig in groups if i in sig)
-            if applies:
-                remapped.append({**e, "applies_to": applies})
-        try:
+        with self._new_paths(namespace, table) as claim:
+            for sig, dirs in sorted(
+                groups.items(), key=lambda kv: sorted(kv[1])
+            ):
+                if len(dirs) == 1:
+                    sig_to_dir[sig] = dirs[0]
+                    new_files.append(dirs[0])
+                    continue
+                nd = f"manifest-{uuid.uuid4().hex[:12]}"
+                out = claim("data", nd)
+                for d in dirs:
+                    src_root = os.path.join(data_root, d)
+                    for rootdir, _subdirs, fns in os.walk(src_root):
+                        rel = os.path.relpath(rootdir, src_root)
+                        for fn in fns:
+                            if fn.startswith((".", "_")):
+                                continue  # _SUCCESS / .crc sidecars
+                            dst_dir = (
+                                out if rel == "." else os.path.join(out, rel)
+                            )
+                            os.makedirs(dst_dir, exist_ok=True)
+                            # source-dir prefix keeps basenames
+                            # collision-free (two commits can share a
+                            # hive partition subdir)
+                            dst = os.path.join(dst_dir, f"{d}__{fn}")
+                            src = os.path.join(rootdir, fn)
+                            try:
+                                os.link(src, dst)
+                            except OSError:  # FS without hard links
+                                shutil.copy2(src, dst)
+                sig_to_dir[sig] = nd
+                new_files.append(nd)
+                extra_dirs[nd] = _fold_dir_records(
+                    [parent_dirs.get(d, {}) for d in dirs]
+                )
+            remapped = []
+            for i, e in enumerate(deletes):
+                if e.get("mode") in ("positional", "dv"):
+                    # path-scoped dirs never fold (singleton signatures
+                    # above), so the entry carries its surviving dirs
+                    # unchanged
+                    applies = sorted(
+                        d for d in e["applies_to"] if d in set(files)
+                    )
+                else:
+                    applies = sorted(
+                        sig_to_dir[sig] for sig in groups if i in sig
+                    )
+                if applies:
+                    remapped.append({**e, "applies_to": applies})
             return self._commit(
                 namespace, table, None, operation="compact_manifests",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=new_files, clear_deletes=True,
-                extra_deletes=remapped, extra_dirs=extra_dirs,
+                carry=False, base_sid=base, carry_dirs=new_files,
+                deletes=remapped, extra_dirs=extra_dirs,
             )
-        except CommitConflict:
-            for d in linked_dirs:  # don't leave link dirs for orphan GC
-                shutil.rmtree(d, ignore_errors=True)
-            raise
 
     def cluster_rewrite(
         self,
@@ -1561,40 +1563,28 @@ class SnapCatalog:
             .drop("_ck")
             .withColumn("_cluster_bucket", F.spark_partition_id())
         )
-        data_root = self._tbl(namespace, table, "data")
         tmp_name = f"cluster-{uuid.uuid4().hex[:12]}"
-        tmp_root = os.path.join(data_root, f"_tmp_{tmp_name}")
-        bucketed.write.mode("overwrite").partitionBy(
-            "_cluster_bucket"
-        ).parquet(tmp_root)
-        new_files: list[str] = []
-        extra_dirs: dict[str, dict] = {}
-        try:
+        with self._new_paths(namespace, table) as claim:
+            tmp_root = claim("data", f"_tmp_{tmp_name}")
+            bucketed.write.mode("overwrite").partitionBy(
+                "_cluster_bucket"
+            ).parquet(tmp_root)
+            # the bucket dirs reach the manifest only as extra_dirs: the
+            # commit carries nothing, so the rename chain resets as for
+            # compact() — every dir is freshly written from a RESOLVED read
+            extra_dirs: dict[str, dict] = {}
             for sub in sorted(os.listdir(tmp_root)):
                 if not sub.startswith("_cluster_bucket="):
                     continue
                 nd = f"{tmp_name}-b{sub.split('=')[1]}"
-                dst = os.path.join(data_root, nd)
+                dst = claim("data", nd)
                 os.rename(os.path.join(tmp_root, sub), dst)
-                new_files.append(nd)
                 extra_dirs[nd] = _stamp_dir(dst, manifest.get("bloom_cols"))
             shutil.rmtree(tmp_root, ignore_errors=True)
             return self._commit(
-                namespace, table, None, operation="cluster_rewrite",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=new_files, clear_deletes=True, extra_dirs=extra_dirs,
-                # every dir above is freshly written from a RESOLVED
-                # read — logical names/types are materialized, so the
-                # rename chain resets (compact()'s semantics); only
-                # compact_manifests, which hard-links OLD files, keeps it
-                reset_schema_lineage=True,
+                namespace, table, None, operation=operation, carry=False,
+                base_sid=base, deletes=[], extra_dirs=extra_dirs,
             )
-        except CommitConflict:
-            for d in new_files:
-                shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
-            raise
-        finally:
-            shutil.rmtree(tmp_root, ignore_errors=True)
 
     def rollback_to(self, namespace: str, table: str, snapshot_id: int) -> int:
         """Iceberg ``rollback_to_snapshot``: publish a NEW snapshot whose
@@ -1603,9 +1593,9 @@ class SnapCatalog:
         intervening snapshots remain time-travelable — and the operation
         is metadata-only: no data file is read, written, or moved.
 
-        Like replace, rollback is last-writer-wins by contract ("set the
-        table to state X"), so a publish collision just retries at the
-        next id. Fails if the target's data directories were already
+        Rollback is last-writer-wins by contract ("set the table to
+        state X"): it publishes with no base, so a publish collision
+        just retries at the next id. Fails if the target's data directories were already
         garbage-collected by :meth:`expire_snapshots`."""
         target = self._manifest(namespace, table, snapshot_id)
         for d in target["files"]:
@@ -1614,9 +1604,9 @@ class SnapCatalog:
                     f"{namespace}.{table}@{snapshot_id}: data dir {d} was "
                     "garbage-collected; rollback target no longer exists"
                 )
-        return self._publish_metadata_commit(
+        return self._publish(
             namespace, table,
-            lambda _cur: {
+            lambda _head: {
                 **target,
                 # lineage pointer for the history metadata table: the
                 # rollback's CONTENT ancestor is the target, so the
@@ -1698,8 +1688,7 @@ class SnapCatalog:
         src_dirs = src.get("dirs", {})
         return self._commit(
             namespace, table, None, operation="cherry_pick",
-            carry=False, base_sid=base, inherit_spec=True,
-            carry_dirs=cur["files"] + delta,
+            carry=False, base_sid=base, carry_dirs=cur["files"] + delta,
             extra_dirs={d: src_dirs[d] for d in delta if d in src_dirs},
         )
 
@@ -1835,7 +1824,7 @@ class SnapCatalog:
                     )
             return self._commit(
                 namespace, table, df, operation=verb, carry=False,
-                base_sid=base, inherit_spec=True, carry_dirs=untouched,
+                base_sid=base, carry_dirs=untouched,
             )
         if mode == "skip" or not candidates:
             return base  # no row can match: nothing to publish
@@ -2098,7 +2087,8 @@ class SnapCatalog:
         writes KBs and defers the rewrite to the next compaction."""
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
-        with self._delete_file(namespace, table, "delete") as out:
+        with self._new_paths(namespace, table) as claim:
+            out = claim("deletes", f"delete-{uuid.uuid4().hex[:12]}")
             keys_df.select(*key_cols).distinct().coalesce(1).write.parquet(
                 out
             )
@@ -2109,26 +2099,9 @@ class SnapCatalog:
             }
             return self._commit(
                 namespace, table, None, operation="delete", carry=False,
-                base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), extra_deletes=[entry],
+                base_sid=base, carry_dirs=list(manifest["files"]),
+                deletes=manifest.get("deletes", []) + [entry],
             )
-
-    @contextlib.contextmanager
-    def _delete_file(self, namespace: str, table: str, prefix: str):
-        """A fresh ``deletes/<prefix>-<uuid>`` path for ONE delete-file
-        author to write and publish inside the block — every author
-        (``delete_keys``, :meth:`_commit_dv`, ``rewrite_deletes_to_dv``)
-        goes through here. If the block raises — the write, a conflict,
-        the manifest publish — no manifest references the path, so it
-        is swept: a failed statement never orphans a delete file."""
-        out = self._tbl(
-            namespace, table, "deletes", f"{prefix}-{uuid.uuid4().hex[:12]}"
-        )
-        try:
-            yield out
-        except Exception:
-            shutil.rmtree(out, ignore_errors=True)
-            raise
 
     # column names a positional scan exposes to delete authors
     POS_FILE_COL = "_pos_file"
@@ -2214,7 +2187,8 @@ class SnapCatalog:
         rows as a new data dir in the SAME manifest (a merge-on-read
         UPDATE's images). Returns ``base`` without a commit when no live
         dir is addressed: no dead entry is published."""
-        with self._delete_file(namespace, table, "dvdelete") as out:
+        with self._new_paths(namespace, table) as claim:
+            out = claim("deletes", f"dvdelete-{uuid.uuid4().hex[:12]}")
             entry = self._dv_write_entry(
                 spark, namespace, table, manifest, pos_df, out
             )
@@ -2222,8 +2196,8 @@ class SnapCatalog:
                 return base
             return self._commit(
                 namespace, table, df, operation=operation, carry=False,
-                base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), extra_deletes=[entry],
+                base_sid=base, carry_dirs=list(manifest["files"]),
+                deletes=manifest.get("deletes", []) + [entry],
             )
 
     def _dv_write_relation(
@@ -2480,7 +2454,8 @@ class SnapCatalog:
                 F.col("file_path").alias(self.POS_FILE_COL),
                 F.col("pos").alias(self.POS_IDX_COL),
             )
-        with self._delete_file(namespace, table, "dvdelete") as out:
+        with self._new_paths(namespace, table) as claim:
+            out = claim("deletes", f"dvdelete-{uuid.uuid4().hex[:12]}")
             # the shared runs-first writer picks the layout (an accreted
             # backlog of band deletes folds into a runs-sized ``ranges``
             # entry), fans the write out from the EXACT folded volume,
@@ -2493,9 +2468,9 @@ class SnapCatalog:
             # equality entries are published alone, with no DV at all
             return self._commit(
                 namespace, table, None, operation="rewrite_to_dv",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep + ([entry] if entry else []),
+                carry=False, base_sid=base,
+                carry_dirs=list(manifest["files"]),
+                deletes=keep + ([entry] if entry else []),
             )
 
     def _pending_deletes(
@@ -3164,30 +3139,6 @@ class SnapCatalog:
             manifest,
         )
 
-    def _publish_metadata_commit(self, namespace: str, table: str, build) -> int:
-        """Optimistic publish loop for METADATA-ONLY commits:
-        ``build(cur_manifest)`` returns the new manifest body from the
-        current head (id/parent/timestamp are stamped here); a publish
-        collision recomputes on the new head. Shared by
-        :meth:`rollback_to` and the schema-edit commits — rename/drop
-        (:meth:`_schema_edit_commit`) and :meth:`widen_column_type`."""
-        while True:
-            cur = self._manifest(
-                namespace, table, self._current_sid(namespace, table)
-            )
-            sid = cur["snapshot_id"] + 1
-            # a lineage pointer copied from a rollback parent would make
-            # history() walk past this commit's real parent
-            cur.pop("rollback_of", None)
-            manifest = {
-                **build(cur),
-                "snapshot_id": sid,
-                "parent_id": cur["snapshot_id"],
-                "timestamp_ms": int(time.time() * 1000),
-            }
-            if self._publish_manifest(namespace, table, sid, manifest):
-                return sid
-
     def rename_column(
         self, namespace: str, table: str, old: str, new: str
     ) -> int:
@@ -3242,6 +3193,7 @@ class SnapCatalog:
         spark_name = {"bigint": "long", "int": "integer"}.get(
             new_type, new_type
         )
+        self._current_sid(namespace, table)  # a missing table raises
 
         def build(cur: dict) -> dict:
             schema = cur.get("schema") or {}
@@ -3282,7 +3234,7 @@ class SnapCatalog:
                 "widened": True,
             }
 
-        return self._publish_metadata_commit(namespace, table, build)
+        return self._publish(namespace, table, build)
 
     def _scan_schema(self, manifest: dict):
         """Explicit read schema for the scan, or None (the scan keeps
@@ -3349,7 +3301,8 @@ class SnapCatalog:
         old: str, new: str | None,
     ) -> int:
         """Shared guards + manifest construction for rename/drop; the
-        publish loop is :meth:`_publish_metadata_commit`."""
+        publish loop is :meth:`_publish`."""
+        self._current_sid(namespace, table)  # a missing table raises
 
         def build(cur: dict) -> dict:
             schema = cur.get("schema") or {}
@@ -3433,7 +3386,7 @@ class SnapCatalog:
                 "retired": retired + [old],
             }
 
-        return self._publish_metadata_commit(namespace, table, build)
+        return self._publish(namespace, table, build)
 
     def _read_dirs(
         self,
@@ -4187,81 +4140,154 @@ class SnapCatalog:
         out.sort(key=lambda s: s["snapshot_id"])
         return out
 
+    def _publish(
+        self, namespace: str, table: str, build, base_sid: int | None = None
+    ) -> int:
+        """The one optimistic publish loop. ``build(head)`` returns the
+        new manifest body from the head manifest (None when nothing is
+        published); id, parent and timestamp are stamped here.
+
+        One conflict rule: ``base_sid`` is the head the commit was
+        derived from, and a missing table's head counts as 0. On every
+        turn a set base that differs from the head raises
+        :class:`CommitConflict` — publishing a result computed on a
+        stale head would drop the rival's rows (a lost update).
+        Otherwise the manifest is built from the head and linked at
+        head+1. A lost link goes round again: a commit with a base then
+        raises, one without rebuilds on the new head."""
+        while True:
+            head = self._head(namespace, table)
+            head_sid = head["snapshot_id"] if head else 0
+            if base_sid is not None and head_sid != base_sid:
+                raise CommitConflict(
+                    f"{namespace}.{table}: table advanced from snapshot "
+                    f"{base_sid} to {head_sid} during this operation; "
+                    "re-run it on the new state"
+                )
+            if head:
+                # a lineage pointer copied from a rollback parent would
+                # make history() walk past this commit's real parent
+                head.pop("rollback_of", None)
+            sid = head_sid + 1
+            manifest = {
+                **build(head),
+                "snapshot_id": sid,
+                "parent_id": head_sid or None,
+                "timestamp_ms": int(time.time() * 1000),
+            }
+            if self._publish_manifest(namespace, table, sid, manifest):
+                return sid
+
+    @contextlib.contextmanager
+    def _new_paths(self, namespace: str, table: str):
+        """The one sweep-on-failure guard for the paths an author
+        creates before it publishes. ``claim(*parts)`` registers and
+        returns ``<table>/<parts>``; if the block raises — a write, a
+        CHECK, a conflict, the manifest publish — no manifest names a
+        claimed path, so each is swept. Every guarded block ends with
+        its publish. Dirs a commit only re-references (carried from the
+        head, re-listed by :meth:`cherry_pick`) are never claimed. It
+        catches ``Exception``, not ``BaseException``: sweeping on an
+        interrupt that lands after the link would delete a published
+        dir."""
+        claimed: list[str] = []
+
+        def claim(*parts: str) -> str:
+            claimed.append(self._tbl(namespace, table, *parts))
+            return claimed[-1]
+
+        try:
+            yield claim
+        except Exception:
+            for path in claimed:
+                shutil.rmtree(path, ignore_errors=True)
+            raise
+
     def _commit(
         self,
         namespace: str,
         table: str,
-        df: DataFrame,
+        df: DataFrame | None,
         operation: str,
         carry: bool,
         partition_by: list[str] | None = None,
         transform_spec: list[str] | None = None,
         base_sid: int | None = None,
-        inherit_spec: bool = False,
         carry_dirs: list[str] | None = None,
-        extra_deletes: list[dict] | None = None,
-        clear_deletes: bool = False,
+        deletes: list[dict] | None = None,
         extra_dirs: dict | None = None,
         bloom_cols: list[str] | None = None,
-        reset_schema_lineage: bool = False,
         sort_by: list[str] | None = None,
         sort_partitions: int | None = None,
         check: str | None = None,
     ) -> int:
-        """Write data, then publish a manifest optimistically.
+        """Write ``df`` once as a new data dir, then publish a manifest
+        through :meth:`_publish`; ``df=None`` is a metadata-only commit.
+        Only the publish is retried, so a losing committer never
+        rewrites data (Iceberg's commit shape).
+
+        The manifest's files are the carried dirs — the head's with
+        ``carry``, else ``carry_dirs`` (file-pruned copy-on-write
+        carries only the dirs its stats rule out) — then this commit's
+        data dir, then any ``extra_dirs`` name not already listed.
+        ``extra_dirs`` supplies the ``dirs`` records of dirs the caller
+        assembled without this commit's data write (adopted, folded,
+        clustered or cherry-picked). ``deletes`` is the manifest's
+        delete-entry list; None carries the head's entries, each pruned
+        to the dirs still listed.
+
+        ``base_sid`` is the head the operation's inputs were read from
+        (:meth:`_publish`'s conflict rule). An append (``carry``) has no
+        base and rebuilds on whatever head it meets. A replace has none
+        either: its base is pinned to the head seen after the data
+        write, so it wins over whatever landed during the write (last
+        writer wins) while a publish collision raises. A commit with
+        ``carry`` or a base inherits the table's layout for every layout
+        argument left None — a mutation must not silently de-partition
+        a hive-partitioned table.
 
         ``check`` is a CHECK-constraint predicate validated against the
         WRITTEN files after the data write but before the manifest
-        publish: a violation deletes the (still-unpublished, hence
-        invisible) data dir and raises with a sample row. Checking the
-        written bytes — not the input plan — closes the window a
-        nondeterministic or concurrently-changing source would otherwise
-        have between a pre-write check job and the write job re-executing
-        the plan, and costs a scan of only the new directory.
-
-        ``base_sid`` is the snapshot id the operation's inputs were read
-        from: any state-derived commit (upsert/delete/update/compact) passes
-        it, and publish fails with :class:`CommitConflict` if the table has
-        advanced past it — Iceberg's validation-failed commit. Without it
-        (append: state-independent; replace: last-writer-wins by contract)
-        no base validation applies.
-
-        ``inherit_spec`` keeps the table's partition layout across commits
-        that don't explicitly set one — mutations must not silently
-        de-partition a hive-partitioned table.
-
-        ``carry_dirs`` carries an explicit subset of the parent's data
-        directories into the new manifest untouched (file-pruned
-        copy-on-write: a mutation rewrites only directories whose stats say
-        they can contain affected rows). ``df=None`` publishes a
-        metadata-only commit of exactly ``carry_dirs``. ``extra_dirs``
-        supplies the ``dirs`` records of dirs the caller assembled
-        without this commit's data write (adopted, folded, clustered or
-        cherry-picked dirs — new names the parent manifest lacks).
+        publish: a violation raises with a sample row (the unpublished
+        data dir is swept). Checking the written bytes — not the input
+        plan — closes the window a nondeterministic or
+        concurrently-changing source would otherwise have between a
+        pre-write check job and the write job re-executing the plan, and
+        costs a scan of only the new directory.
         """
         head = self._head(namespace, table)
-        if head is not None and (carry or inherit_spec):
-            # appends and mutations inherit the table's layout
+        carries = carry or carry_dirs is not None
+        if head is not None and (carry or base_sid is not None):
             if partition_by is None:
                 partition_by = head.get("partition_by")
             if transform_spec is None:
                 transform_spec = head.get("partition_spec")
             if bloom_cols is None:
                 bloom_cols = head.get("bloom_cols")
-
-        # Data files are written ONCE under a collision-free name; only the
-        # metadata publish participates in the optimistic-commit loop, so a
-        # losing committer never rewrites data (Iceberg's commit shape).
-        # ANY failure before the publish — the write, a CHECK violation
-        # or its validation read throwing, a conflict, the manifest write
-        # — leaves a data dir no manifest references, so it is swept.
         os.makedirs(self._tbl(namespace, table, "snapshots"), exist_ok=True)
-        data_dir_name, out_dir = None, None
-        try:
+        with self._new_paths(namespace, table) as claim:
+            data_dir_name = None
             if df is not None:
                 # manifest schema = the USER schema; hidden transform
                 # columns are derived below and never appear to readers
                 schema_json = df.schema.jsonValue()
+                if head and carries:
+                    # a new dir beside carried ones keeps the table's
+                    # column order (new columns last), so its stamp
+                    # matches theirs and _scan_schema keeps applying
+                    cols = [f["name"] for f in schema_json["fields"]]
+                    order = [
+                        f["name"]
+                        for f in (head.get("schema") or {}).get("fields", [])
+                        if f["name"] in cols
+                    ]
+                    order += [c for c in cols if c not in order]
+                    if order != cols:
+                        df = df.select(
+                            *[F.col("`" + c.replace("`", "``") + "`")
+                              for c in order]
+                        )
+                        schema_json = df.schema.jsonValue()
                 if transform_spec:
                     fields = partition_spec.parse_spec(transform_spec)
                     df = partition_spec.apply_spec(df, fields)
@@ -4285,7 +4311,7 @@ class SnapCatalog:
                         n, *[F.col(c) for c in sort_by]
                     ).sortWithinPartitions(*sort_by)
                 data_dir_name = f"commit-{uuid.uuid4().hex[:12]}"
-                out_dir = self._tbl(namespace, table, "data", data_dir_name)
+                out_dir = claim("data", data_dir_name)
                 writer = df.write.mode("overwrite")
                 if partition_by:
                     writer = writer.partitionBy(*partition_by)
@@ -4312,37 +4338,18 @@ class SnapCatalog:
                 )
             else:
                 schema_json = head["schema"] if head else None
+            if not carry and base_sid is None:
+                # a replace: it wins over what landed during its data
+                # write, and a publish collision raises
+                base_sid = self._head_sid(namespace, table) or 0
 
-            # Optimistic publish: claim snapshot id N+1 via an exclusive
-            # link of its manifest; a concurrent winner makes the link
-            # fail, so we re-read the head and retry on top of it.
-            while True:
-                head = self._head(namespace, table)
-                sid = head["snapshot_id"] + 1 if head else 1
-                if (
-                    base_sid is not None
-                    and head
-                    and head["snapshot_id"] != base_sid
-                ):
-                    # A rival commit landed while this operation was
-                    # computing / writing data: its result is stale —
-                    # publishing it at sid+1 would silently drop the
-                    # rival's rows (lost update). Same contract as the
-                    # lost publish race below, but this catches
-                    # conflicts that land during the (long) data-write
-                    # phase, not just the publish instant.
-                    raise CommitConflict(
-                        f"{namespace}.{table}: table advanced from "
-                        f"snapshot {base_sid} to {head['snapshot_id']} "
-                        "during this operation; re-run it on the new state"
-                    )
-                new_files = [data_dir_name] if data_dir_name else []
-                if carry and head:
-                    files = head["files"] + new_files
-                elif carry_dirs is not None:
-                    files = list(carry_dirs) + new_files
-                else:
-                    files = new_files
+            def build(head: dict | None) -> dict:
+                files = list(
+                    head["files"] if carry and head else carry_dirs or []
+                )
+                if data_dir_name:
+                    files.append(data_dir_name)
+                files += [d for d in extra_dirs or {} if d not in files]
                 # carried dirs keep their parent-manifest records
                 # verbatim — the whole point is those directories were
                 # not rewritten
@@ -4353,38 +4360,35 @@ class SnapCatalog:
                 }
                 dirs = {d: stamped[d] for d in files if stamped.get(d)}
                 # pending delete entries follow the dirs they apply to:
-                # entries whose dirs were all rewritten (or cleared by
-                # compaction) drop out; surviving entries prune their
-                # applies_to to the dirs still present
-                deletes: list[dict] = []
-                if not clear_deletes and head:
-                    for e in head.get("deletes", []):
+                # entries whose dirs were all rewritten drop out;
+                # surviving entries prune their applies_to to the dirs
+                # still present
+                entries = deletes
+                if entries is None:
+                    entries = []
+                    for e in head.get("deletes", []) if head else []:
                         keep = [d for d in e["applies_to"] if d in files]
                         if keep:
-                            deletes.append({**e, "applies_to": keep})
-                deletes.extend(extra_deletes or [])
+                            entries.append({**e, "applies_to": keep})
                 # rename-chain / retired-name metadata follows the
                 # carried dirs (they keep their pre-rename physical
-                # names); a pure replace rewrites everything, so both
-                # reset. Reintroducing a retired name would make old
-                # physical bytes ambiguous with the new column — refuse
-                # (the name-based layout's substitute for Iceberg field
-                # ids).
+                # names); a commit that carries nothing rewrote
+                # everything from a resolved read, so both reset.
+                # Reintroducing a retired name would make old physical
+                # bytes ambiguous with the new column — refuse (the
+                # name-based layout's substitute for Iceberg field ids).
+                schema = schema_json
                 renames: list = []
                 retired: list = []
                 widened = False
-                if (
-                    head
-                    and (carry or carry_dirs is not None)
-                    and not reset_schema_lineage
-                ):
+                if head and carries:
                     renames = head.get("renames") or []
                     retired = head.get("retired") or []
                     widened = bool(head.get("widened"))
                     parent_fields = (head.get("schema") or {}).get(
                         "fields", []
                     )
-                    if schema_json and (renames or retired or widened):
+                    if schema and (renames or retired or widened):
                         # reads on lineage-active tables PROJECT to the
                         # manifest schema, so a narrower append must not
                         # hide previously evolved columns (mergeSchema
@@ -4394,28 +4398,28 @@ class SnapCatalog:
                         # append the genuinely new columns
                         if parent_fields:
                             new_by_name = {
-                                f["name"]: f for f in schema_json["fields"]
+                                f["name"]: f for f in schema["fields"]
                             }
                             pnames = {f["name"] for f in parent_fields}
-                            schema_json = {
-                                **schema_json,
+                            schema = {
+                                **schema,
                                 "fields": [
                                     new_by_name.get(f["name"], f)
                                     for f in parent_fields
                                 ]
                                 + [
                                     f
-                                    for f in schema_json["fields"]
+                                    for f in schema["fields"]
                                     if f["name"] not in pnames
                                 ],
                             }
-                    if widened and schema_json:
+                    if widened and schema:
                         # a narrow-typed append after a widening must
                         # not revert the logical type: the narrow files
                         # upcast at scan, the schema keeps the wide type
                         ptypes = {f["name"]: f["type"] for f in parent_fields}
-                        schema_json = {
-                            **schema_json,
+                        schema = {
+                            **schema,
                             "fields": [
                                 {**f, "type": ptypes[f["name"]]}
                                 if (
@@ -4424,12 +4428,12 @@ class SnapCatalog:
                                     in self._WIDENINGS
                                 )
                                 else f
-                                for f in schema_json["fields"]
+                                for f in schema["fields"]
                             ],
                         }
-                    if schema_json and retired:
+                    if schema and retired:
                         clash = {
-                            f["name"] for f in schema_json.get("fields", [])
+                            f["name"] for f in schema.get("fields", [])
                         } & set(retired)
                         if clash:
                             raise ValueError(
@@ -4439,33 +4443,18 @@ class SnapCatalog:
                                 "reuse is not supported on this name-based "
                                 "layout"
                             )
-                manifest = {
-                    "snapshot_id": sid,
-                    "parent_id": head["snapshot_id"] if head else None,
-                    "timestamp_ms": int(time.time() * 1000),
+                return {
                     "operation": operation,
                     "files": files,
                     "partition_by": partition_by or [],
                     "partition_spec": transform_spec or [],
-                    "schema": schema_json,
+                    "schema": schema,
                     "dirs": dirs,
-                    "deletes": deletes,
+                    "deletes": entries,
                     "renames": renames,
                     "retired": retired,
                     "widened": widened,
                     "bloom_cols": bloom_cols or [],
                 }
-                if self._publish_manifest(namespace, table, sid, manifest):
-                    return sid
-                if not carry:
-                    # result was computed from a now-stale snapshot
-                    raise CommitConflict(
-                        f"{namespace}.{table}: snapshot {sid} was committed "
-                        "concurrently; re-run this operation on the new "
-                        "state"
-                    )
-                # append: data independent of state — retry
-        except Exception:
-            if out_dir:
-                shutil.rmtree(out_dir, ignore_errors=True)
-            raise
+
+            return self._publish(namespace, table, build, base_sid)

@@ -93,8 +93,8 @@ def write_legacy_delete(cat, ns, table, pos_df, mode="positional"):
     }
     return cat._commit(
         ns, table, None, operation="delete", carry=False, base_sid=base,
-        inherit_spec=True, carry_dirs=list(manifest["files"]),
-        extra_deletes=[entry],
+        carry_dirs=list(manifest["files"]),
+        deletes=manifest.get("deletes", []) + [entry],
     )
 
 

@@ -1313,6 +1313,7 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir, tmp_path):
         spark, "ns", "t", ["o_custkey", "o_totalprice"], n_buckets=16
     )
     m = zc._manifest("ns", "t", sid)
+    assert m["operation"] == "zorder_rewrite"
     n_dirs = len(m["files"])
     ck = o.agg(F.max("o_custkey")).collect()[0][0]
     tp = o.agg(F.max("o_totalprice")).collect()[0][0]
@@ -1330,6 +1331,7 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir, tmp_path):
     cc.create_or_replace("ns", "t", o)
     sid_c = cc.cluster_rewrite(spark, "ns", "t", "o_custkey", n_buckets=16)
     mc = cc._manifest("ns", "t", sid_c)
+    assert mc["operation"] == "cluster_rewrite"
     _c, skip_c = cc._prune_dirs(mc, f"o_totalprice <= {float(tp) / 4}")
     assert len(skip_c) <= len(skip_b) // 2, (
         "sorted-on-a layout should not prune b-predicates"
@@ -4137,10 +4139,14 @@ def test_dir_schema_stamp_fast_path_and_fallbacks(spark, tmp_path):
     }
 
 
+def _id_rows(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id"), (F.col("id") * 2).alias("v"))
+
+
 def _id_table(spark, path):
     """1000 rows (id, v = 2 * id) over 4 range-disjoint files."""
     cat = SnapCatalog(path)
-    df = spark.range(1000).select(F.col("id"), (F.col("id") * 2).alias("v"))
+    df = _id_rows(spark, 0, 1000)
     cat.create_or_replace("ns", "t", df.repartitionByRange(4, "id"))
     return cat
 
@@ -4204,17 +4210,85 @@ def test_mutation_verb_outcome_matrix(spark, tmp_path, case, verb, mode):
     assert len(cat._snapshots("ns", "t")) == n_snaps
 
 
+# every snapshot author, run against _id_table + one append (sid 2)
+_CRASH_AUTHORS = {
+    "create_or_replace": lambda spark, cat, src: cat.create_or_replace(
+        "ns", "t", _id_rows(spark, 2000, 2010)
+    ),
+    "append": lambda spark, cat, src: cat.append(
+        "ns", "t", _id_rows(spark, 2000, 2010)
+    ),
+    "upsert": lambda spark, cat, src: cat.upsert(
+        "ns", "t", _id_rows(spark, 5, 15), keys=["id"]
+    ),
+    "merge": lambda spark, cat, src: cat.merge(
+        "ns", "t", _id_rows(spark, 5, 15), keys=["id"],
+        delete_when="id < 8",
+    ),
+    "compact": lambda spark, cat, src: cat.compact(spark, "ns", "t"),
+    "compact_manifests": lambda spark, cat, src: cat.compact_manifests(
+        "ns", "t"
+    ),
+    "cluster_rewrite": lambda spark, cat, src: cat.cluster_rewrite(
+        spark, "ns", "t", "v", n_buckets=3
+    ),
+    "zorder_rewrite": lambda spark, cat, src: cat.zorder_rewrite(
+        spark, "ns", "t", ["id", "v"], n_buckets=3
+    ),
+    "add_files": lambda spark, cat, src: cat.add_files(spark, "ns", "t", src),
+    # the table is rolled back to 1 first, so snapshot 2's dir is a delta
+    "cherry_pick": lambda spark, cat, src: cat.cherry_pick("ns", "t", 2),
+    "delete_where": lambda spark, cat, src: cat.delete_where(
+        spark, "ns", "t", "id < 5"
+    ),
+    "delete_where_mor": lambda spark, cat, src: cat.delete_where_mor(
+        spark, "ns", "t", "id < 5"
+    ),
+    "update_where": lambda spark, cat, src: cat.update_where(
+        spark, "ns", "t", "id < 5", {"v": "v + 1"}
+    ),
+    "delete_keys": lambda spark, cat, src: cat.delete_keys(
+        spark, "ns", "t", spark.range(3), ["id"]
+    ),
+    "rename_column": lambda spark, cat, src: cat.rename_column(
+        "ns", "t", "v", "w"
+    ),
+    "rollback_to": lambda spark, cat, src: cat.rollback_to("ns", "t", 1),
+}
+
+
+@pytest.mark.parametrize("author", list(_CRASH_AUTHORS))
 def test_manifest_write_failure_leaves_table_readable_and_retryable(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, author
 ):
     """A failure mid-way through writing a manifest must not leave a
-    truncated ``<sid>.json``: the table keeps reading its pre-state, a
-    retry lands, and the failed append leaves no unreferenced data dir
-    and no temp manifest."""
+    truncated ``<sid>.json``, whichever author publishes: the table
+    keeps reading its pre-state, no new directory is left under
+    ``data/`` or ``deletes/``, no temp manifest is left, and a retry
+    lands as the next snapshot and orphans nothing."""
     from component_iceberg_spark.io import snaptable
 
     wh = str(tmp_path / "wh")
     cat = _id_table(spark, wh)
+    cat.append("ns", "t", _id_rows(spark, 1000, 1010))
+    if author == "cherry_pick":
+        cat.rollback_to("ns", "t", 1)
+    src = str(tmp_path / "src")
+    _id_rows(spark, 3000, 3010).write.parquet(src)
+    tbl = os.path.join(wh, "ns", "t")
+
+    def layout():
+        return {
+            kind: sorted(os.listdir(os.path.join(tbl, kind)))
+            if os.path.isdir(os.path.join(tbl, kind)) else []
+            for kind in ("data", "deletes", "snapshots")
+        }
+
+    def rows():
+        return sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
+
+    before, pre_rows = layout(), rows()
+    head = cat._current_sid("ns", "t")
     real_dump = json.dump
 
     def failing_dump(obj, fp, *a, **kw):
@@ -4224,22 +4298,16 @@ def test_manifest_write_failure_leaves_table_readable_and_retryable(
             raise OSError("disk full")
         return real_dump(obj, fp, *a, **kw)
 
-    more = spark.range(1000, 1010).select(
-        F.col("id"), (F.col("id") * 2).alias("v")
-    )
     monkeypatch.setattr(snaptable.json, "dump", failing_dump)
     with pytest.raises(OSError, match="disk full"):
-        cat.append("ns", "t", more)
+        _CRASH_AUTHORS[author](spark, cat, src)
     monkeypatch.undo()
 
-    assert cat.read(spark, "ns", "t").count() == 1000
-    assert cat.append("ns", "t", more) == 2
-    assert cat.read(spark, "ns", "t").count() == 1010
-    data = set(os.listdir(os.path.join(wh, "ns", "t", "data")))
-    assert data == set(cat._manifest("ns", "t", 2)["files"])
-    assert sorted(os.listdir(os.path.join(wh, "ns", "t", "snapshots"))) == [
-        "1.json", "2.json"
-    ]
+    assert layout() == before
+    assert cat._current_sid("ns", "t") == head
+    assert rows() == pre_rows
+    assert _CRASH_AUTHORS[author](spark, cat, src) == head + 1
+    assert cat.remove_orphans("ns", "t", older_than_ms=0) == []
 
 
 def test_head_lookup_parses_no_history(spark, tmp_path, monkeypatch):
@@ -4410,19 +4478,92 @@ def test_manifest_publish_without_hard_links(spark, tmp_path, monkeypatch):
     ]
 
 
-@pytest.mark.parametrize("verb", ["upsert", "merge"])
-def test_merge_verbs_keep_table_column_order(spark, tmp_path, verb):
-    """A source that lists the columns in another order, over keys the
-    table holds, leaves the table's column order as it was."""
+_HELD = [(1, 99), (2, 20), (3, 30), (5, 50)]
+_DISJOINT = [(1, 10), (2, 20), (3, 30), (4, 40), (5, 50)]
+# case -> (verb, table columns, source (k, v) rows, table (k, v) rows
+# after). The table holds k = 1, 2 in one dir and k = 5 in another, so
+# every case commits a new dir beside a carried one. The source always
+# lists v first.
+_ORDER_CASES = {
+    "upsert": ("upsert", "k long, v long", [(1, 99), (3, 30)], _HELD),
+    "merge": ("merge", "k long, v long", [(1, 99), (3, 30)], _HELD),
+    "upsert_disjoint": ("upsert", "k long, v long", [(3, 30), (4, 40)],
+                        _DISJOINT),
+    "merge_disjoint": ("merge", "k long, v long", [(3, 30), (4, 40)],
+                       _DISJOINT),
+    "append": ("append", "k long, v long", [(3, 30), (4, 40)], _DISJOINT),
+    # the key-column join puts a key that is not the first column first
+    "upsert_key_second": ("upsert", "v long, k long", [(1, 99)],
+                          [(1, 99), (2, 20), (5, 50)]),
+    "merge_key_second": ("merge", "v long, k long", [(1, 99)],
+                         [(1, 99), (2, 20), (5, 50)]),
+}
+
+
+@pytest.mark.parametrize("case", list(_ORDER_CASES))
+def test_merge_verbs_keep_table_column_order(spark, tmp_path, case):
+    """A commit beside carried dirs leaves the table's column order as it
+    was — whatever order the source lists, over held or disjoint keys, on
+    append, and when the key is not the first column — and the new dir's
+    stamp agrees with the carried ones', so reads keep their explicit
+    scan schema."""
+    verb, columns, src_rows, want = _ORDER_CASES[case]
+    names = [c.split()[0] for c in columns.split(", ")]
+
+    def frame(kv_rows, ddl):
+        cols = [c.split()[0] for c in ddl.split(", ")]
+        rows = [tuple(dict(zip("kv", r))[c] for c in cols) for r in kv_rows]
+        return spark.createDataFrame(rows, ddl)
+
     cat = SnapCatalog(str(tmp_path / "wh"))
-    cat.create_or_replace(
-        "ns", "t", spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    )
-    src = spark.createDataFrame([(99, 1), (30, 3)], "v long, k long")
-    getattr(cat, verb)("ns", "t", src, keys=["k"])
+    cat.create_or_replace("ns", "t", frame([(1, 10), (2, 20)], columns))
+    cat.append("ns", "t", frame([(5, 50)], columns))
+    src = frame(src_rows, "v long, k long")
+    if verb == "append":
+        cat.append("ns", "t", src)
+    else:
+        getattr(cat, verb)("ns", "t", src, keys=["k"])
     got = cat.read(spark, "ns", "t")
-    assert got.columns == ["k", "v"]
-    assert sorted(tuple(r) for r in got.collect()) == [(1, 99), (2, 20), (3, 30)]
+    assert got.columns == names
+    assert sorted((r["k"], r["v"]) for r in got.collect()) == want
+    head = cat._head("ns", "t")
+    assert [f["name"] for f in head["schema"]["fields"]] == names
+    assert cat._scan_schema(head) is not None
+
+
+@pytest.mark.parametrize("verb", ["upsert", "merge"])
+def test_merge_into_missing_table_conflicts_with_rival_create(
+    spark, tmp_path, verb
+):
+    """A rival that creates the table right after a MERGE verb found it
+    missing keeps its rows: the verb raises CommitConflict instead of
+    publishing its source as a replace of the rival's table."""
+    from component_iceberg_spark.io.snaptable import CommitConflict
+
+    wh = str(tmp_path / "wh")
+    cat, rival = SnapCatalog(wh), SnapCatalog(wh)
+    real = SnapCatalog._head_sid
+    state = {"raced": False}
+
+    def racing_head_sid(self, namespace, table):
+        sid = real(self, namespace, table)
+        if not state["raced"]:
+            state["raced"] = True  # the rival lands after the check
+            rival.create_or_replace("ns", "t", spark.range(100).select(
+                F.col("id").alias("k"), F.col("id").alias("v")
+            ))
+        return sid
+
+    cat._head_sid = racing_head_sid.__get__(cat)
+    src = spark.createDataFrame([(1000, 1)], "k long, v long")
+    with pytest.raises(CommitConflict):
+        getattr(cat, verb)("ns", "t", src, keys=["k"])
+    del cat._head_sid
+    fresh = SnapCatalog(wh)
+    assert fresh._current_sid("ns", "t") == 1
+    assert fresh.read(spark, "ns", "t").count() == 100
+    data = os.listdir(os.path.join(wh, "ns", "t", "data"))
+    assert data == fresh._manifest("ns", "t", 1)["files"]
 
 
 @pytest.mark.parametrize("col", ["_rn", "_del", "_hit"])
