@@ -202,7 +202,8 @@ def run_writer(spark: SparkSession, cfg: WriterConfig) -> int:
 
 def sync_action(spark: SparkSession, cfg, action: str, **kwargs) -> list:
     """Metadata endpoints (``@sync_action`` parity): small driver-side
-    catalog calls, no distributed work."""
+    catalog calls answered from manifests, no distributed work —
+    except ``query_preview``, which runs the user's capped query."""
     if action == "list_table_columns":
         # the writer's EXTERNAL column list: Storage-API table detail over
         # HTTP, table id from the input mapping
@@ -224,8 +225,7 @@ def sync_action(spark: SparkSession, cfg, action: str, **kwargs) -> list:
     if action == "list_tables":
         return cat.list_tables(kwargs["namespace"])
     if action == "list_snapshots":
-        rows = cat.snapshots(spark, kwargs["namespace"], kwargs["table"]).collect()
-        return [(r.snapshot_id, r.timestamp_ms, r.operation) for r in rows]
+        return cat.snapshot_rows(kwargs["namespace"], kwargs["table"])[0]
     if action == "list_columns":
         sch = cat.schema(spark, kwargs["namespace"], kwargs["table"])
         return [(f.name, f.dataType.simpleString()) for f in sch.fields]

@@ -144,127 +144,38 @@ def dir_row_count(path: str) -> int:
     return n
 
 
-def dir_column_stats(path: str) -> dict[str, list]:
-    """Per-column [min, max] over every Parquet file under ``path``, read
-    from row-group footers only. Driver-side here (metadata-sized: one
-    footer per file); a real deployment distributes footer reads the way
-    Iceberg writes metrics at commit time — inside the writing tasks."""
-    import pyarrow.parquet as pq
-
-    stats: dict[str, list] = {}
-    dropped: set[str] = set()
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(root, fn)).metadata
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    name = col.path_in_schema
-                    if "." in name or name in dropped:
-                        continue  # nested leaves: not prunable by top name
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        dropped.add(name)
-                        stats.pop(name, None)
-                        continue
-                    mn, mx = _stat_jsonable(st.min), _stat_jsonable(st.max)
-                    if mn is None or mx is None:
-                        dropped.add(name)
-                        stats.pop(name, None)
-                        continue
-                    if name in stats:
-                        stats[name][0] = min(stats[name][0], mn)
-                        stats[name][1] = max(stats[name][1], mx)
-                    else:
-                        stats[name] = [mn, mx]
-    return stats
-
-
 # manifest bounds-records bloat cap, shared by the fresh-stamp walk
-# (dir_file_bounds) and the compact_manifests fold concatenation — the
-# cap must hold whichever path produced the records
+# (dir_footer_metrics) and the compact_manifests fold concatenation —
+# the cap must hold whichever path produced the records
 DIR_BOUNDS_MAX_GROUPS = 512
-
-
-def dir_file_bounds(
-    path: str, max_groups: int = DIR_BOUNDS_MAX_GROUPS,
-    max_stat_len: int = 64
-) -> list[dict] | None:
-    """Per-ROW-GROUP bounds records for a freshly written data dir —
-    the manifest metrics Iceberg stamps at commit time
-    (``lower_bounds`` / ``upper_bounds`` / ``null_value_counts``), at
-    the granularity ``_dispatch_bounds`` evaluates. Each record is
-    ``{"n": rows, "c": {col: [min, max, null_count]}}`` (null_count
-    None when the footer omits it). Computed once per commit from the
-    same footers ``dir_column_stats`` already walks; serving dispatch
-    from the manifest afterwards costs zero I/O (VERDICT r14 finding
-    #1 — the per-statement driver-side footer walk).
-
-    Bloat guards: a dir with more than ``max_groups`` row groups
-    returns None (no stamp; dispatch falls back to memoized footer
-    reads) — at the default parquet row-group size that is ~64 GB in
-    one commit dir, where a few hundred manifest records are noise but
-    unbounded growth is not. String stats longer than ``max_stat_len``
-    are dropped per-column (Iceberg truncates with carry-up instead;
-    skipping is sound — absent stats only disable the shortcut)."""
-    import pyarrow.parquet as pq
-
-    records: list[dict] = []
-    for root, _dirs, files in os.walk(path):
-        for fn in sorted(files):
-            if not fn.endswith(".parquet") or fn.startswith((".", "_")):
-                continue
-            md = pq.ParquetFile(os.path.join(root, fn)).metadata
-            for rg in range(md.num_row_groups):
-                if len(records) >= max_groups:
-                    return None
-                row_group = md.row_group(rg)
-                cols: dict[str, list] = {}
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    name = col.path_in_schema
-                    if "." in name:
-                        # nested leaves: simple_conjuncts can never
-                        # reference them (\\w+ column names only), so
-                        # stamping them is pure manifest weight — same
-                        # exclusion dir_column_stats makes
-                        continue
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    mn = _stat_jsonable(st.min)
-                    mx = _stat_jsonable(st.max)
-                    if mn is None or mx is None:
-                        continue
-                    if isinstance(mn, str) and (
-                        len(mn) > max_stat_len or len(str(mx)) > max_stat_len
-                    ):
-                        continue
-                    cols[name] = [
-                        mn,
-                        mx,
-                        st.null_count if st.has_null_count else None,
-                    ]
-                records.append({"n": row_group.num_rows, "c": cols})
-    return records
 
 
 def dir_footer_metrics(
     path: str, max_groups: int = DIR_BOUNDS_MAX_GROUPS,
     max_stat_len: int = 64,
 ) -> tuple[dict[str, list], int, list[dict] | None]:
-    """One-pass fusion of :func:`dir_column_stats`, :func:`dir_row_count`
-    and :func:`dir_file_bounds`: every data commit needs all three, and
-    running them separately opened every footer three times on the
-    driver inside the statement's wall (guide §1.2 "per-task work" at
-    the driver: same metadata, one open). Returns
-    ``(stats, rows, bounds)`` with each output exactly what its
-    standalone function computes — the standalones remain as the
-    single-metric entry points and as the semantics spec this fusion is
-    pinned against (``test_dir_footer_metrics_matches_standalones``)."""
+    """Footer metrics for a freshly written data dir, every footer
+    opened once on the driver inside the statement's wall. Returns
+    ``(stats, rows, bounds)``:
+
+    - ``stats``: per-column ``[min, max]`` over the whole dir. A column
+      any row group lacks a usable min/max for is dropped; nested leaves
+      are skipped (not prunable by top name).
+    - ``rows``: total rows, as :func:`dir_row_count`.
+    - ``bounds``: per-ROW-GROUP records ``{"n": rows, "c": {col: [min,
+      max, null_count]}}`` — the manifest metrics Iceberg stamps at
+      commit time (``lower_bounds`` / ``upper_bounds`` /
+      ``null_value_counts``), at the granularity ``_dispatch_bounds``
+      evaluates, so dispatch is served from the manifest with zero I/O.
+      Files named ``.*`` / ``_*`` are skipped. None when the dir holds
+      more than ``max_groups`` row groups (no stamp; dispatch falls back
+      to footer reads); string stats longer than ``max_stat_len`` are
+      left out per column (Iceberg truncates with carry-up instead;
+      absent stats only disable the shortcut).
+
+    Driver-side here (metadata-sized); a real deployment computes these
+    inside the writing tasks, as Iceberg does. Pinned by
+    ``test_dir_footer_metrics_matches_standalones``."""
     import pyarrow.parquet as pq
 
     stats: dict[str, list] = {}
@@ -379,14 +290,15 @@ def dir_column_blooms(
     path: str, cols: list[str], max_bits: int = 2**18
 ) -> dict[str, dict]:
     """Per-column bloom filter over every Parquet file under ``path`` —
-    the point-lookup complement to :func:`dir_column_stats`: min/max
+    the point-lookup complement to the footer min/max stats
+    (:func:`dir_footer_metrics`): min/max
     cannot skip a directory for ``col = 'x'`` when values interleave
     across commits (every dir's range covers 'x'), a bloom can. Unlike
     the footer-only stats this reads the column pages, so it runs only
     for columns the table explicitly registered (``bloom_cols``) and
     only over the freshly written directory — the same moment Iceberg
     computes its write-time metrics (a real deployment pushes this into
-    the writing tasks; driver-side here, like ``dir_column_stats``).
+    the writing tasks; driver-side here, like ``dir_footer_metrics``).
 
     Sizing: bits = next power of two ≥ 16 × distinct (k=4 → ~2% false
     positives), capped at ``max_bits`` (32 KB of filter, ~44 KB base64
@@ -3574,45 +3486,36 @@ class SnapCatalog:
             tag(old_rows.exceptAll(new_rows), "delete")
         )
 
-    def snapshots(self, spark: SparkSession, namespace: str, table: str) -> DataFrame:
-        """Snapshot enumeration as a DataFrame — the ``t.snapshots``
-        metadata-table equivalent (``ex-iceberg/src/component.py:148-157``)."""
+    def snapshot_rows(self, namespace: str, table: str) -> tuple[list, str]:
+        """Snapshot enumeration as driver rows and their schema — the
+        ``t.snapshots`` metadata-table equivalent, answered in the driver
+        from manifests the way the reference answers it from pyiceberg
+        metadata (``ex-iceberg/src/component.py:148-157``). A missing
+        table has no rows."""
         rows = [
             (s["snapshot_id"], s["timestamp_ms"], s["operation"])
             for s in self._snapshots(namespace, table)
         ]
-        return local_relation(
-            spark, rows,
-            schema="snapshot_id long, timestamp_ms long, operation string",
-        )
+        return rows, "snapshot_id long, timestamp_ms long, operation string"
 
-    def history(
-        self, spark: SparkSession, namespace: str, table: str
-    ) -> DataFrame:
-        """Table-history metadata table — the Iceberg ``t.history``
-        analogue (reference surfaces table metadata read-only the same
-        way, ``ex-iceberg/src/component.py:148-157``): one row per
-        snapshot with its commit wall-clock, lineage parent, and whether
-        it is an ancestor of the CURRENT state. ``is_current_ancestor``
-        is the column audit tooling reads to tell retained-but-abandoned
-        history (rolled-back snapshots) from the live lineage — at 100 TB
-        that distinction decides what expire_snapshots may reclaim.
+    def snapshots(self, spark: SparkSession, namespace: str, table: str) -> DataFrame:
+        """:meth:`snapshot_rows` as a DataFrame."""
+        return local_relation(spark, *self.snapshot_rows(namespace, table))
 
-        Lineage rule: a rollback commit's content ancestor is its TARGET
-        (the ``rollback_of`` manifest field), not the head it displaced —
-        so the snapshots a rollback undid are reachable for time travel
-        but NOT current ancestors, matching Iceberg's history table.
-        Answered entirely from manifests: no data scan, no Spark job.
-        """
+    def history_rows(self, namespace: str, table: str) -> tuple[list, str]:
+        """Table-history metadata table as driver rows and their schema —
+        the Iceberg ``t.history`` analogue (reference surfaces table
+        metadata read-only the same way,
+        ``ex-iceberg/src/component.py:148-157``): one row per snapshot
+        with its commit wall-clock, lineage parent, and whether it is an
+        ancestor of the CURRENT state (:meth:`_lineage`).
+        ``is_current_ancestor`` is the column audit tooling reads to tell
+        retained-but-abandoned history (rolled-back snapshots) from the
+        live lineage — at 100 TB that distinction decides what
+        expire_snapshots may reclaim. Answered entirely from manifests:
+        no data scan, no Spark job."""
         snaps = self._snapshots(namespace, table)
-        current = snaps[-1]["snapshot_id"]
-        by_id = {s["snapshot_id"]: s for s in snaps}
-        ancestors: set[int] = set()
-        walk: int | None = current
-        while walk is not None and walk in by_id and walk not in ancestors:
-            ancestors.add(walk)
-            s = by_id[walk]
-            walk = s.get("rollback_of") or s.get("parent_id")
+        ancestors = self._lineage(snaps)
         rows = [
             (
                 s["timestamp_ms"],
@@ -3622,13 +3525,33 @@ class SnapCatalog:
             )
             for s in snaps
         ]
-        return local_relation(
-            spark, rows,
-            schema=(
-                "made_current_at_ms long, snapshot_id long, "
-                "parent_id long, is_current_ancestor boolean"
-            ),
+        return rows, (
+            "made_current_at_ms long, snapshot_id long, "
+            "parent_id long, is_current_ancestor boolean"
         )
+
+    def history(
+        self, spark: SparkSession, namespace: str, table: str
+    ) -> DataFrame:
+        """:meth:`history_rows` as a DataFrame."""
+        return local_relation(spark, *self.history_rows(namespace, table))
+
+    @staticmethod
+    def _lineage(snaps: list[dict]) -> set[int]:
+        """Ids of the current snapshot (the last of ``snaps``) and its
+        ancestors. A rollback commit's content ancestor is its TARGET
+        (the ``rollback_of`` manifest field), not the head it displaced
+        — so the snapshots a rollback undid are reachable for time
+        travel but NOT current ancestors, matching Iceberg's history
+        table."""
+        by_id = {s["snapshot_id"]: s for s in snaps}
+        ancestors: set[int] = set()
+        walk = snaps[-1]["snapshot_id"] if snaps else None
+        while walk in by_id and walk not in ancestors:
+            ancestors.add(walk)
+            s = by_id[walk]
+            walk = s.get("rollback_of") or s.get("parent_id")
+        return ancestors
 
     def refs(
         self, spark: SparkSession, namespace: str, table: str
@@ -4021,11 +3944,6 @@ class SnapCatalog:
         snaps = self._snapshots(namespace, table)
         cur = snaps[-1]
         refs = self.list_refs(namespace, table)
-        ancestors = {
-            r.snapshot_id
-            for r in self.history(spark, namespace, table).collect()
-            if r.is_current_ancestor
-        }
         dirs = cur.get("dirs", {})
         files = cur["files"]
         rows = [dirs.get(d, {}).get("rows") for d in files]
@@ -4033,7 +3951,7 @@ class SnapCatalog:
         small = sum(1 for n in rows if n is not None and n < small_dir_rows)
         row = (
             len(snaps),
-            len(ancestors),
+            len(self._lineage(snaps)),
             len(refs),
             len(files),
             small,
@@ -4041,7 +3959,8 @@ class SnapCatalog:
             len(cur.get("deletes") or []),
             bool(cur.get("renames") or cur.get("retired")),
         )
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [row],
             schema=(
                 "n_snapshots long, n_current_ancestors long, n_refs long, "

@@ -1438,7 +1438,7 @@ def snap_timetravel_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _warehouse(sf_dir, "tt_asof")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     cat.append("ns", "t", o.filter(F.col("o_orderkey") % 3 != 0))
-    ts1 = cat.snapshots(spark, "ns", "t").collect()[0].timestamp_ms
+    (_sid, ts1, _op), = cat.snapshot_rows("ns", "t")[0]
     while int(_time.time() * 1000) <= ts1:
         _time.sleep(0.002)
     cat.append("ns", "t", o.filter(F.col("o_orderkey") % 3 == 0))

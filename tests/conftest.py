@@ -56,6 +56,24 @@ def plan_formatted(df) -> str:
     return buf.getvalue()
 
 
+def spark_jobs_during(spark, fn):
+    """Run ``fn()`` under a fresh job group and return ``(result, n)``,
+    ``n`` being the number of Spark jobs it started — pins a zero-job
+    property instead of timing it. The group is cleared afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def write_legacy_delete(cat, ns, table, pos_df, mode="positional"):
     """Commit a path-scoped delete entry in a shape no current writer
     produces, the way older warehouses hold them: ``mode="positional"``

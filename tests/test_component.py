@@ -4,6 +4,7 @@ value, error paths by UserConfigError)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -26,6 +27,7 @@ from component_iceberg_spark.config import (
 )
 from component_iceberg_spark.io.snaptable import SnapCatalog
 from component_iceberg_spark.io.tables import load_table
+from tests.conftest import spark_jobs_during
 
 
 @pytest.fixture()
@@ -218,6 +220,56 @@ def test_writer_csv_typed_upsert_cycle(spark, sf_dir, tmp_path):
     assert sync_action(spark, base, "list_tables", namespace="ns") == ["t"]
     cols = dict(sync_action(spark, base, "list_columns", namespace="ns", table="t"))
     assert cols["n_nationkey"] == "int"
+
+
+def test_sync_action_list_snapshots_is_answered_without_spark_jobs(
+    spark, sf_dir, tmp_path
+):
+    """``list_snapshots`` lists the manifests' (snapshot_id,
+    timestamp_ms, operation) triples in id order through replace →
+    append → upsert → rollback, lists nothing for a missing table, and
+    runs no Spark job — nor does building ``maintenance_report``."""
+    wh = str(tmp_path / "wh")
+    cat = SnapCatalog(wh)
+    n = load_table(spark, sf_dir, "nation")
+    cat.create_or_replace("ns", "t", n.filter("n_regionkey = 0"))      # sid 1
+    cat.append("ns", "t", n.filter("n_regionkey = 1"))                 # sid 2
+    cat.upsert("ns", "t", n.filter("n_regionkey < 3"), keys=["n_nationkey"])
+    cat.rollback_to("ns", "t", 2)                                      # sid 4
+    cfg = ExtractorConfig(
+        catalog=CatalogConfig(warehouse=wh),
+        source=Source(namespace="ns", table_name="t"),
+    )
+    listed, jobs = spark_jobs_during(
+        spark,
+        lambda: sync_action(spark, cfg, "list_snapshots", namespace="ns", table="t"),
+    )
+    snap_dir = os.path.join(wh, "ns", "t", "snapshots")
+    manifests = []
+    for fn in os.listdir(snap_dir):
+        with open(os.path.join(snap_dir, fn)) as f:
+            manifests.append(json.load(f))
+    expected = sorted(
+        (m["snapshot_id"], m["timestamp_ms"], m["operation"]) for m in manifests
+    )
+    assert listed == expected
+    assert [op for _sid, _ts, op in listed] == [
+        "replace", "append", "upsert", "rollback"
+    ]
+    assert jobs == 0
+    assert sync_action(spark, cfg, "list_snapshots", namespace="ns", table="nope") == []
+
+    report, jobs = spark_jobs_during(
+        spark, lambda: cat.maintenance_report(spark, "ns", "t")
+    )
+    assert jobs == 0
+    row = report.collect()[0]
+    assert (row.n_snapshots, row.n_current_ancestors) == (4, 3)  # 3 rolled back
+    # the counter does see jobs: the DataFrame route runs one
+    _rows, jobs = spark_jobs_during(
+        spark, lambda: cat.snapshots(spark, "ns", "t").collect()
+    )
+    assert jobs >= 1
 
 
 def test_writer_parquet_input_partitioned(spark, sf_dir, tmp_path):

@@ -1683,6 +1683,31 @@ def test_history_lineage_marks_rolled_back_non_ancestor(spark, sf_dir, tmp_path)
     assert h2 == {1: True, 2: True, 3: True, 4: False, 5: True}, h2
 
 
+def test_metadata_row_producers_match_their_dataframes(spark, sf_dir, tmp_path):
+    """``snapshots()`` / ``history()`` are ``local_relation`` wrappers
+    over ``snapshot_rows`` / ``history_rows``: same rows in the same
+    order, same schema — on a rolled-back history, so
+    ``is_current_ancestor`` is mixed."""
+    from pyspark.sql.types import StructType
+
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    n = load_table(spark, sf_dir, "nation")
+    cat.create_or_replace("ns", "t", n.filter("n_regionkey = 0"))   # sid 1
+    cat.append("ns", "t", n.filter("n_regionkey = 1"))              # sid 2
+    cat.append("ns", "t", n.filter("n_regionkey = 2"))              # sid 3
+    cat.rollback_to("ns", "t", 2)                                   # sid 4
+    for frame, producer in (
+        (cat.snapshots, cat.snapshot_rows),
+        (cat.history, cat.history_rows),
+    ):
+        rows, schema = producer("ns", "t")
+        df = frame(spark, "ns", "t")
+        assert [tuple(r) for r in df.collect()] == rows
+        assert df.schema.simpleString() == StructType.fromDDL(schema).simpleString()
+    rows, _schema = cat.history_rows("ns", "t")
+    assert [r[3] for r in rows] == [True, True, False, True]
+
+
 def test_refs_table_includes_implicit_main(spark, sf_dir, tmp_path):
     """t.refs metadata table: explicit tags/branches plus the implicit
     main branch tracking the CURRENT snapshot (it advances with every
@@ -4063,14 +4088,89 @@ def test_compact_manifests_bounds_concat_cap(spark, tmp_path,
     assert b is not None and b[1] == 0
 
 
+def _ref_dir_column_stats(path):
+    """Reference semantics for ``dir_footer_metrics``' stats: per-column
+    [min, max] over every Parquet file under ``path``; a column any row
+    group lacks a usable min/max for is dropped, nested leaves skipped."""
+    import pyarrow.parquet as pq
+
+    from component_iceberg_spark.io.snaptable import _stat_jsonable
+
+    stats, dropped = {}, set()
+    for root, _dirs, files in os.walk(path):
+        for fn in files:
+            if not fn.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(root, fn)).metadata
+            for rg in range(md.num_row_groups):
+                row_group = md.row_group(rg)
+                for ci in range(row_group.num_columns):
+                    col = row_group.column(ci)
+                    name = col.path_in_schema
+                    if "." in name or name in dropped:
+                        continue
+                    st = col.statistics
+                    mn = mx = None
+                    if st is not None and st.has_min_max:
+                        mn, mx = _stat_jsonable(st.min), _stat_jsonable(st.max)
+                    if mn is None or mx is None:
+                        dropped.add(name)
+                        stats.pop(name, None)
+                    elif name in stats:
+                        stats[name][0] = min(stats[name][0], mn)
+                        stats[name][1] = max(stats[name][1], mx)
+                    else:
+                        stats[name] = [mn, mx]
+    return stats
+
+
+def _ref_dir_file_bounds(path, max_groups=512, max_stat_len=64):
+    """Reference semantics for ``dir_footer_metrics``' bounds: one
+    ``{"n": rows, "c": {col: [min, max, null_count]}}`` record per row
+    group of every non-hidden file, in file-name order; None past
+    ``max_groups`` groups; over-long string stats left out."""
+    import pyarrow.parquet as pq
+
+    from component_iceberg_spark.io.snaptable import _stat_jsonable
+
+    records = []
+    for root, _dirs, files in os.walk(path):
+        for fn in sorted(files):
+            if not fn.endswith(".parquet") or fn.startswith((".", "_")):
+                continue
+            md = pq.ParquetFile(os.path.join(root, fn)).metadata
+            for rg in range(md.num_row_groups):
+                if len(records) >= max_groups:
+                    return None
+                row_group = md.row_group(rg)
+                cols = {}
+                for ci in range(row_group.num_columns):
+                    col = row_group.column(ci)
+                    name = col.path_in_schema
+                    st = col.statistics
+                    if "." in name or st is None or not st.has_min_max:
+                        continue
+                    mn, mx = _stat_jsonable(st.min), _stat_jsonable(st.max)
+                    if mn is None or mx is None:
+                        continue
+                    if isinstance(mn, str) and (
+                        len(mn) > max_stat_len or len(str(mx)) > max_stat_len
+                    ):
+                        continue
+                    cols[name] = [
+                        mn, mx, st.null_count if st.has_null_count else None
+                    ]
+                records.append({"n": row_group.num_rows, "c": cols})
+    return records
+
+
 def test_dir_footer_metrics_matches_standalones(spark, sf_dir, tmp_path):
     """r15 optimization: the fused one-open-per-footer commit walk must
-    return byte-identical results to the three standalone helpers it
-    replaces (stats / rows / bounds), including the drop-on-missing-stat
+    return byte-identical results to the three separate walks it
+    replaced (stats / rows / bounds, kept as the test-local references
+    above and ``dir_row_count``), including the drop-on-missing-stat
     and bounds-cap semantics, on a multi-file dir with nulls and strings."""
     from component_iceberg_spark.io.snaptable import (
-        dir_column_stats,
-        dir_file_bounds,
         dir_footer_metrics,
         dir_row_count,
     )
@@ -4084,12 +4184,12 @@ def test_dir_footer_metrics_matches_standalones(spark, sf_dir, tmp_path):
     )
     df.repartition(3).write.parquet(out)
     stats, rows, bounds = dir_footer_metrics(out)
-    assert stats == dir_column_stats(out)
+    assert stats == _ref_dir_column_stats(out)
     assert rows == dir_row_count(out)
-    assert bounds == dir_file_bounds(out)
+    assert bounds == _ref_dir_file_bounds(out)
     # over-cap: both paths decline to stamp, stats/rows unaffected
     s2, r2, b2 = dir_footer_metrics(out, max_groups=1)
-    assert b2 is None and dir_file_bounds(out, max_groups=1) is None
+    assert b2 is None and _ref_dir_file_bounds(out, max_groups=1) is None
     assert (s2, r2) == (stats, rows)
 
 
