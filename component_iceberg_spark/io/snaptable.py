@@ -3694,38 +3694,12 @@ class SnapCatalog:
         ``file_ordinal`` (sorted-name position within the dir — the
         stable handle, Spark part names are uuids), ``n_rows``,
         ``n_row_groups``, ``size_bytes``."""
-        import pyarrow.parquet as pq
-
         per_dir: dict[str, list[tuple]] = {}
         rows = []
         for s in self._snapshots(namespace, table):
             for d in s["files"]:
                 if d not in per_dir:
-                    root = self._tbl(namespace, table, "data", d)
-                    paths = []
-                    for rdir, _sub, fns in os.walk(root):
-                        for fn in fns:
-                            if fn.endswith(".parquet") and not fn.startswith(
-                                (".", "_")
-                            ):
-                                paths.append(os.path.join(rdir, fn))
-                    entries = []
-                    for j, p in enumerate(sorted(paths)):
-                        # a broken link (the documented allow_symlink
-                        # adoption risk: source deleted after adoption)
-                        # degrades to NULL metrics, same contract as
-                        # files() for absent stats — the inspect surface
-                        # must stay usable for auditing exactly the
-                        # warehouses that need it
-                        try:
-                            md = pq.ParquetFile(p).metadata
-                            entries.append(
-                                (j, md.num_rows, md.num_row_groups,
-                                 os.path.getsize(p))
-                            )
-                        except OSError:
-                            entries.append((j, None, None, None))
-                    per_dir[d] = entries
+                    per_dir[d] = self._dir_file_metrics(namespace, table, d)
                 for j, n_rows, n_rg, size in per_dir[d]:
                     rows.append(
                         (s["snapshot_id"], d, j, n_rows, n_rg, size)
@@ -3738,6 +3712,38 @@ class SnapCatalog:
                 "size_bytes long"
             ),
         )
+
+    def _dir_file_metrics(
+        self, namespace: str, table: str, data_dir: str
+    ) -> list[tuple]:
+        """One data dir's parquet files as ``(file_ordinal, n_rows,
+        n_row_groups, size_bytes)`` in sorted path order, from footers
+        alone — the one per-dir walk behind :meth:`entries` and
+        :meth:`all_data_files`. Files named ``.*`` / ``_*`` are skipped.
+        A file whose footer cannot be read — a broken link, the
+        documented ``allow_symlink`` adoption risk (source deleted after
+        adoption) — yields NULL metrics, the :meth:`files` absent-stats
+        contract: the inspect views must stay usable for auditing
+        exactly the warehouses that need them."""
+        import pyarrow.parquet as pq
+
+        root = self._tbl(namespace, table, "data", data_dir)
+        paths = [
+            os.path.join(rdir, fn)
+            for rdir, _sub, fns in os.walk(root)
+            for fn in fns
+            if fn.endswith(".parquet") and not fn.startswith((".", "_"))
+        ]
+        out = []
+        for j, p in enumerate(sorted(paths)):
+            try:
+                md = pq.ParquetFile(p).metadata
+                out.append(
+                    (j, md.num_rows, md.num_row_groups, os.path.getsize(p))
+                )
+            except OSError:
+                out.append((j, None, None, None))
+        return out
 
     def metadata_log_entries(
         self, spark: SparkSession, namespace: str, table: str
@@ -3796,27 +3802,15 @@ class SnapCatalog:
         ``file_ordinal`` (position in sorted file-name order within the
         dir — names are Spark part-uuids, so the ordinal, not the name,
         is the stable handle), ``n_rows``, ``n_row_groups``,
-        ``size_bytes``."""
-        import pyarrow.parquet as pq
-
+        ``size_bytes`` (NULL for a file whose footer cannot be read, as
+        in :meth:`all_data_files`)."""
         sid = snapshot_id or self._current_sid(namespace, table)
         m = self._manifest(namespace, table, sid)
-        rows = []
-        for i, d in enumerate(m["files"]):
-            root = self._tbl(namespace, table, "data", d)
-            paths = []
-            for rdir, _sub, fns in os.walk(root):
-                for fn in fns:
-                    if fn.endswith(".parquet") and not fn.startswith(
-                        (".", "_")
-                    ):
-                        paths.append(os.path.join(rdir, fn))
-            for j, p in enumerate(sorted(paths)):
-                md = pq.ParquetFile(p).metadata
-                rows.append(
-                    (i, d, j, md.num_rows, md.num_row_groups,
-                     os.path.getsize(p))
-                )
+        rows = [
+            (i, d, *f)
+            for i, d in enumerate(m["files"])
+            for f in self._dir_file_metrics(namespace, table, d)
+        ]
         return local_relation(
             spark, rows,
             schema=(
@@ -3942,6 +3936,8 @@ class SnapCatalog:
         from metadata and paying a table scan to discover you need one.
         """
         snaps = self._snapshots(namespace, table)
+        if not snaps:
+            raise SnapshotNotFound(f"{namespace}.{table} has no current snapshot")
         cur = snaps[-1]
         refs = self.list_refs(namespace, table)
         dirs = cur.get("dirs", {})

@@ -14,7 +14,12 @@ Scale design (the reason these exist — 100 TB corpora):
   keyed shuffle; candidate volume is tunable by (B, R) instead of being
   data-determined. Hashes are md5-derived so the DuckDB oracle can run the
   *identical* algorithm — the correctness check covers the LSH itself, not
-  just the verified output.
+  just the verified output. Every entry point (batch dedup, incremental
+  batch→corpus pairs, the fused streaming screen) draws candidates from
+  one banded join (:func:`_band_pairs`) and verifies them in one body
+  (:func:`_verify`), which the brute n-gram path shares too: one
+  shingle-intersection count and one threshold filter on the unrounded
+  ratio, the same predicate as the SQL oracles.
 - **SimHash**: 64-bit fingerprint whose Hamming distance tracks cosine
   similarity of token multisets; banding 4×16 bits guarantees (pigeonhole)
   that any pair within Hamming ≤ 3 collides in at least one band.
@@ -86,34 +91,101 @@ def exact_dedup(df: DataFrame, id_col: str, fingerprint_col) -> DataFrame:
     )
 
 
+def _shingle_counts(sh: DataFrame) -> DataFrame:
+    """(doc, n): each doc's distinct-shingle count, the |A| and |B| of
+    the Jaccard denominator."""
+    return sh.groupBy("doc").agg(F.expr("count(1) AS n"))
+
+
+def _verify(
+    cand: DataFrame | None,
+    l: str,
+    r: str,
+    sh_l: DataFrame,
+    sh_r: DataFrame,
+    cnt_l: DataFrame,
+    cnt_r: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """The one Jaccard verify body: candidates → shingle intersection →
+    threshold. Returns ``(l, r, jaccard)`` for every candidate pair whose
+    exact ratio |A∩B| / |A∪B| clears ``threshold``.
+
+    ``cand`` holds ``(l, r)`` doc pairs; ``None`` means every pair
+    sharing a shingle with ``l < r`` (the brute self-join, where
+    ``sh_l`` and ``sh_r`` are one relation). ``sh_*`` are each side's
+    ``(doc, shingle)`` rows and ``cnt_*`` each side's ``(doc, n)``
+    counts (extra columns are ignored).
+
+    The filter compares the UNROUNDED ratio — the predicate every SQL
+    oracle runs (``i * 1.0 / (ca.n + cb.n - i) >= t``); ``jaccard`` is
+    rounded to 6 places only for output. Filtering on the rounded value
+    would admit pairs just under ``t`` (J = 2/3 at t = 0.6666667).
+    Explicit double casts and ``D`` suffixes pin a DOUBLE ratio: a bare
+    SQL ``1.0`` parses as DECIMAL and would switch it to decimal
+    arithmetic. Conditions and projections are parsed strings (one py4j
+    call each): the screen builds this plan per epoch, where Column-by-
+    Column construction was measurable driver gap."""
+    ql, qr = _quote_ident(l), _quote_ident(r)
+    if cand is None:
+        shared = sh_l.alias("a").join(
+            sh_r.alias("b"), F.expr("a.shingle = b.shingle AND a.doc < b.doc")
+        )
+        keys = [F.expr(f"a.doc AS {ql}"), F.expr(f"b.doc AS {qr}")]
+    else:
+        shared = cand.join(sh_l.alias("a"), F.expr(f"{ql} = a.doc")).join(
+            sh_r.alias("b"), F.expr(f"{qr} = b.doc AND a.shingle = b.shingle")
+        )
+        keys = [l, r]
+    ratio = "(cast(i AS double) * 1.0D) / cast(na + nb - i AS double)"
+    return (
+        shared.groupBy(*keys)
+        .agg(F.expr("count(1) AS i"))
+        .join(cnt_l.selectExpr(f"doc AS {ql}", "n AS na"), l)
+        .join(cnt_r.selectExpr(f"doc AS {qr}", "n AS nb"), r)
+        .filter(F.expr(f"{ratio} >= {float(threshold)!r}D"))
+        .selectExpr(ql, qr, f"round({ratio}, 6) AS jaccard")
+    )
+
+
+def _band_pairs(
+    x: DataFrame, y: DataFrame, l: str, r: str, ordered: bool = False
+) -> DataFrame:
+    """The one banded candidate join: ``(l, r)`` doc pairs whose
+    ``(band, key)`` rows (:func:`signature_bands`) collide in at least
+    one band. ``ordered`` keeps only ``l < r`` — the self join's half
+    of the symmetric pair set. Not deduplicated: a pair colliding in
+    several bands appears once per band."""
+    cond = "x.band = y.band AND x.key = y.key"
+    if ordered:
+        cond += " AND x.doc < y.doc"
+    return (
+        x.alias("x")
+        .join(y.alias("y"), F.expr(cond))
+        .selectExpr(f"x.doc AS {_quote_ident(l)}", f"y.doc AS {_quote_ident(r)}")
+    )
+
+
+def _candidate_shingles(
+    corpus: DataFrame, cand: DataFrame, col: str, id_col: str, text_col: str
+) -> DataFrame:
+    """``(doc, shingle)`` rows of the corpus docs named in ``cand[col]``:
+    a candidate-sized semi-join plus a shingle pass, never a corpus-wide
+    shingle build — how both corpus probes read old text for verify."""
+    keep = cand.selectExpr(f"{_quote_ident(col)} AS {_quote_ident(id_col)}")
+    return doc_shingles(
+        corpus.join(keep.distinct(), id_col, "left_semi"), id_col, text_col
+    )
+
+
 def jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact n-gram Jaccard over (doc, shingle) pairs: self-join on
-    shingle → intersection counts → |A∪B| from per-doc sizes.
+    """Exact n-gram Jaccard over (doc, shingle) pairs: the brute shingle
+    self-join through the one verify body (:func:`_verify`).
 
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard ≥ threshold.
     """
-    cnt = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    ca = cnt.alias("ca")
-    cb = cnt.alias("cb")
-    return (
-        inter.join(ca, F.col("doc_a") == F.col("ca.doc"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("i") * 1.0 / (F.col("ca.n") + F.col("cb.n") - F.col("i")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    cnt = _shingle_counts(sh)
+    return _verify(None, "doc_a", "doc_b", sh, sh, cnt, cnt, threshold)
 
 
 def minhash_hash_sql(k: int) -> str:
@@ -205,16 +277,7 @@ def lsh_candidates(sig: DataFrame) -> DataFrame:
     collide in ≥1 band. Shuffle key = (band_idx, band_key): collision
     buckets are tiny by construction, so the self-join never explodes."""
     bands = signature_bands(sig)
-    x = bands.alias("x")
-    y = bands.alias("y")
-    # join condition / projection as parsed strings — one py4j call each
-    # instead of ~14 Column-builder round-trips (see minhash_signatures;
-    # this builder runs per epoch inside the incremental screen)
-    return (
-        x.join(y, F.expr("x.band = y.band AND x.key = y.key AND x.doc < y.doc"))
-        .selectExpr("x.doc AS doc_a", "y.doc AS doc_b")
-        .distinct()
-    )
+    return _band_pairs(bands, bands, "doc_a", "doc_b", ordered=True).distinct()
 
 
 def minhash_lsh_dedup(
@@ -223,7 +286,6 @@ def minhash_lsh_dedup(
     text_col: str,
     threshold: float,
     persisted_out: list | None = None,
-    profile: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: shingle → sign → band → candidates →
     exact-verify. Returns verified (doc_a, doc_b, jaccard ≥ threshold).
@@ -239,47 +301,18 @@ def minhash_lsh_dedup(
     checkpoint it to the lake only if it also feeds reporting), the
     signature table is corpus-row-sized.
 
-    ``profile`` (optional): a precomputed :func:`corpus_minhash_profile`
-    of ``df`` — signatures AND shingle counts are taken from it, so the
-    K-way md5 signing pass (the dominant cost) is never re-run when the
-    caller already holds the stored artifact. Shingles are still built
-    for the exact-verify stage."""
+    ``persisted_out`` (optional) receives the signature cache handle, so
+    a caller that fully materializes the result can release it; lazy
+    consumers leave it session-scoped."""
     from pyspark import StorageLevel
 
     sh = doc_shingles(df, id_col, text_col)
-    if profile is not None:
-        sig = profile
-        cnt = profile.select("doc", "n")
-    else:
-        sig = minhash_signatures(sh).persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            # callers that fully materialize the result (streaming
-            # foreachBatch) receive the cache handle so they can release
-            # it — lazy consumers leave it session-scoped as before
-            persisted_out.append(sig)
-        cnt = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
-    cand = lsh_candidates(sig)
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        cand.join(a, F.col("doc_a") == F.col("a.doc"))
-        .join(b, (F.col("doc_b") == F.col("b.doc")) & (F.col("a.shingle") == F.col("b.shingle")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    ca = cnt.alias("ca")
-    cb = cnt.alias("cb")
-    return (
-        inter.join(ca, F.col("doc_a") == F.col("ca.doc"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("i") * 1.0 / (F.col("ca.n") + F.col("cb.n") - F.col("i")), 6
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    sig = minhash_signatures(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    if persisted_out is not None:
+        persisted_out.append(sig)
+    cnt = _shingle_counts(sh)
+    return _verify(
+        lsh_candidates(sig), "doc_a", "doc_b", sh, sh, cnt, cnt, threshold
     )
 
 
@@ -293,9 +326,7 @@ def corpus_minhash_profile(
     than the shingle table); at 100 TB this is the table you persist to
     the lake at ingest, bucketed by band key."""
     sh = doc_shingles(corpus, id_col, text_col)
-    sig = minhash_signatures(sh)
-    cnt = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
-    return sig.join(cnt, "doc")
+    return minhash_signatures(sh).join(_shingle_counts(sh), "doc")
 
 
 def incremental_minhash_pairs(
@@ -304,24 +335,23 @@ def incremental_minhash_pairs(
     id_col: str,
     text_col: str,
     threshold: float,
-    persisted_out: list | None = None,
-    corpus_profile: DataFrame | None = None,
-    batch_profile: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental near-dup screen: a NEW batch against an already-ingested
     corpus, without re-deduping the corpus against itself.
 
     The production shape for a growing 100 TB corpus (the reference's
     incremental-load mode — ``ex-iceberg/src/component.py`` reads only new
-    data past a stored watermark — applied to dedup): the corpus's MinHash
-    SIGNATURE table (one short row per doc, ~60× smaller than its shingle
-    table) is computed once at ingest and stored in the lake; arriving
-    batches shingle + sign ONLY their own rows, then probe the stored
-    bands. Per-batch cost is O(batch) + one join against the band table —
-    stored bucketed by (band, key), that join shuffles only the batch
-    side. Corpus text is re-read here only to exact-verify the candidate
+    data past a stored watermark — applied to dedup): candidates come
+    from a DIRECTED batch→corpus band join, so no corpus self-join runs
+    anywhere. Corpus text is re-read only to exact-verify the candidate
     pairs (a candidate-sized semi-join, not a corpus scan, once column
     stats prune the non-candidate files).
+
+    This operator signs the corpus inline — the registered query's shape.
+    The stored-profile form, where the corpus profile is computed once at
+    ingest and each batch signs only its own rows, is
+    :func:`screened_drop_ids` (``prior_profile``), which the streaming
+    screen runs; both verify through the same :func:`_verify` body.
 
     Returns verified (doc_new, doc_corpus, jaccard ≥ threshold): every
     batch doc that near-duplicates an existing corpus doc. Survivors =
@@ -331,74 +361,20 @@ def incremental_minhash_pairs(
     from pyspark import StorageLevel
 
     sh_b = doc_shingles(batch, id_col, text_col)
-    if corpus_profile is None:
-        corpus_profile = corpus_minhash_profile(corpus, id_col, text_col)
-        # persist when built here: banding reads it B times and the count
-        # join reads it again (a caller-provided profile is typically a
-        # stored table or already persisted)
-        corpus_profile = corpus_profile.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            persisted_out.append(corpus_profile)
-    if batch_profile is not None:
-        # a caller that already holds the batch's stored profile (e.g. a
-        # pipeline that just appended it to the lake at ingest) passes it
-        # here so the K-way md5 min-aggregation — the dominant signing
-        # cost — is never repeated; equivalence with the direct path is
-        # pinned by test_incremental_pairs_profile_path_equals_direct
-        sig_b = batch_profile
-    else:
-        sig_b = minhash_signatures(sh_b).persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            persisted_out.append(sig_b)
-    # parsed-string conditions/projections — same per-build driver-cost
-    # lever as screened_drop_ids (this pipeline is the stored-profile
-    # incremental probe, rebuilt per arriving batch); trees identical
-    bands_c = signature_bands(corpus_profile)
-    bands_b = signature_bands(sig_b)
-    cand = (
-        bands_b.alias("nb")
-        .join(
-            bands_c.alias("cb"),
-            F.expr("nb.band = cb.band AND nb.key = cb.key"),
-        )
-        .selectExpr("nb.doc AS doc_new", "cb.doc AS doc_corpus")
-        .distinct()
+    # persisted: banding reads each side B times and the count join reads
+    # the corpus profile again
+    profile_c = corpus_minhash_profile(corpus, id_col, text_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    cnt_c = corpus_profile.select("doc", "n")
-    if batch_profile is not None:
-        cnt_b = batch_profile.select("doc", "n")
-    else:
-        cnt_b = sh_b.groupBy("doc").agg(F.expr("count(1) AS n"))
-    # exact verification re-reads corpus TEXT only for candidate docs —
-    # a candidate-sized semi-join + shingle pass, never a corpus scan
-    corpus_cand = corpus.join(
-        cand.selectExpr(f"doc_corpus AS {_quote_ident(id_col)}").distinct(),
-        id_col,
-        "left_semi",
-    )
-    sh_c_cand = doc_shingles(corpus_cand, id_col, text_col)
-    inter = (
-        cand.join(sh_b.alias("a"), F.expr("doc_new = a.doc"))
-        .join(
-            sh_c_cand.alias("b"),
-            F.expr("doc_corpus = b.doc AND a.shingle = b.shingle"),
-        )
-        .groupBy("doc_new", "doc_corpus")
-        .agg(F.expr("count(1) AS i"))
-    )
-    return (
-        inter.join(cnt_b.alias("ca"), F.expr("doc_new = ca.doc"))
-        .join(cnt_c.alias("cb2"), F.expr("doc_corpus = cb2.doc"))
-        .selectExpr(
-            "doc_new",
-            "doc_corpus",
-            # explicit double casts + D suffix: a bare SQL 1.0 parses as
-            # DECIMAL and would switch the ratio to decimal arithmetic —
-            # this is the old Column path's exact double tree
-            "round((cast(i AS double) * 1.0D)"
-            " / cast(ca.n + cb2.n - i AS double), 6) AS jaccard",
-        )
-        .filter(F.expr(f"jaccard >= {float(threshold)!r}D"))
+    sig_b = minhash_signatures(sh_b).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = _band_pairs(
+        signature_bands(sig_b), signature_bands(profile_c),
+        "doc_new", "doc_corpus",
+    ).distinct()
+    return _verify(
+        cand, "doc_new", "doc_corpus",
+        sh_b, _candidate_shingles(corpus, cand, "doc_corpus", id_col, text_col),
+        _shingle_counts(sh_b), profile_c, threshold,
     )
 
 
@@ -426,17 +402,8 @@ def screened_drop_ids(
     ``batch_profile`` is the batch's :func:`corpus_minhash_profile`
     (signatures + shingle counts), computed once by the caller;
     ``prior_profile`` is the stored corpus profile. Prior TEXT is read
-    only candidate-restricted (semi-join) for exact verification.
-
-    The verify filter uses the UNROUNDED intersection ratio — the same
-    predicate as the SQL oracle's pair CTE (queries_text._minhash_cte_body
-    ``WHERE i * 1.0 / (ca.n + cb.n - i) >= t``)."""
-    # Conditions/projections are parsed strings throughout: this builder
-    # runs PER EPOCH inside the incremental screen, where call-by-call
-    # Column construction was measured as 0.26-0.41 s of zero-job driver
-    # gap per epoch (see minhash_signatures). Parsed trees identical.
+    only candidate-restricted (semi-join) for exact verification."""
     sh_b = doc_shingles(batch, id_col, text_col)
-    bands_b = signature_bands(batch_profile)
     # intra-batch candidates come from the SAME generator as the batch
     # dedup operator (single source of truth for the banding semantics);
     # the higher doc of a pair is the drop candidate (lower-id wins)
@@ -446,50 +413,19 @@ def screened_drop_ids(
     cnt_other = batch_profile.select("doc", "n")
     sh_other = sh_b
     if prior is not None and prior_profile is not None:
-        bands_p = signature_bands(prior_profile)
-        cross = (
-            bands_b.alias("nb")
-            .join(
-                bands_p.alias("cb"),
-                F.expr("nb.band = cb.band AND nb.key = cb.key"),
+        cand = cand.unionByName(
+            _band_pairs(
+                signature_bands(batch_profile), signature_bands(prior_profile),
+                "drop", "other",
             )
-            .selectExpr("nb.doc AS `drop`", "cb.doc AS other")
-        )
-        cand = cand.unionByName(cross)
-        prior_cand = prior.join(
-            cand.selectExpr(f"other AS {_quote_ident(id_col)}").distinct(),
-            id_col,
-            "left_semi",
         )
         sh_other = sh_other.unionByName(
-            doc_shingles(prior_cand, id_col, text_col)
+            _candidate_shingles(prior, cand, "other", id_col, text_col)
         )
         cnt_other = cnt_other.unionByName(prior_profile.select("doc", "n"))
-    cand = cand.distinct()
-    inter = (
-        cand.join(sh_b.alias("a"), F.expr("`drop` = a.doc"))
-        .join(
-            sh_other.alias("b"),
-            F.expr("other = b.doc AND a.shingle = b.shingle"),
-        )
-        .groupBy("drop", "other")
-        .agg(F.expr("count(1) AS i"))
-    )
-    verified = (
-        inter.join(
-            batch_profile.selectExpr("doc AS `drop`", "n AS na"), "drop"
-        )
-        .join(cnt_other.selectExpr("doc AS other", "n AS nb"), "other")
-        # D suffixes + explicit double casts pin the EXACT tree the old
-        # Column arithmetic built (``i * 1.0`` with a python float is a
-        # DOUBLE multiply; a bare SQL ``1.0`` would parse as DECIMAL and
-        # silently switch the ratio to decimal-exact arithmetic)
-        .filter(
-            F.expr(
-                "(cast(i AS double) * 1.0D) / cast(na + nb - i AS double)"
-                f" >= {float(threshold)!r}D"
-            )
-        )
+    verified = _verify(
+        cand.distinct(), "drop", "other",
+        sh_b, sh_other, batch_profile, cnt_other, threshold,
     )
     return verified.selectExpr(f"`drop` AS {_quote_ident(id_col)}").distinct()
 

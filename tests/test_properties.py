@@ -599,40 +599,103 @@ def test_sample_weighted_topk_matches_model_and_guards(spark):
     assert sorted(got2) == sorted(want)
 
 
-def test_incremental_pairs_profile_path_equals_direct(spark, sf_dir):
-    """The stored-profile fast path of incremental_minhash_pairs must be
-    result-identical to the build-it-inline path — both feed the same
-    oracle, so a divergence would silently desynchronize the streaming
-    screen from the registered query."""
+def test_jaccard_verify_filters_on_unrounded_ratio(spark):
+    """Every Jaccard entry point keeps a pair iff its UNROUNDED ratio
+    clears the threshold — the SQL oracles' ``i * 1.0 / (…) >= t``. Two
+    docs sharing 4 of 6 distinct shingles (J = 2/3) at t = 0.6666667:
+    the ratio rounded to 6 places (0.666667) clears t, the true ratio
+    does not, so the pair must be absent everywhere; just below 2/3 it
+    must be present with ``jaccard`` = 0.666667."""
+    import duckdb
     from pyspark.sql import functions as F
 
-    from component_iceberg_spark.io.tables import load_table
     from component_iceberg_spark.operators import dedup as D
 
-    d = load_table(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    batch = d.filter(F.col("doc_id") % 5 == 0)
-    direct = D.incremental_minhash_pairs(
-        corpus, batch, "doc_id", "text", 0.8
-    ).collect()
-    profile = D.corpus_minhash_profile(corpus, "doc_id", "text")
-    via_profile = D.incremental_minhash_pairs(
-        corpus, batch, "doc_id", "text", 0.8, corpus_profile=profile
-    ).collect()
-    assert sorted(map(tuple, direct)) == sorted(map(tuple, via_profile))
-    # the BATCH-side profile fast path must be identical too
-    b_profile = D.corpus_minhash_profile(batch, "doc_id", "text")
-    via_both = D.incremental_minhash_pairs(
-        corpus, batch, "doc_id", "text", 0.8,
-        corpus_profile=profile, batch_profile=b_profile,
-    ).collect()
-    assert sorted(map(tuple, direct)) == sorted(map(tuple, via_both))
-    # ... and minhash_lsh_dedup's profile reuse path on the batch alone
-    lsh_direct = D.minhash_lsh_dedup(batch, "doc_id", "text", 0.8).collect()
-    lsh_via = D.minhash_lsh_dedup(
-        batch, "doc_id", "text", 0.8, profile=b_profile
-    ).collect()
-    assert sorted(map(tuple, lsh_direct)) == sorted(map(tuple, lsh_via))
+    words = [f"w0x{i}" for i in range(7)]
+    df = spark.createDataFrame(
+        [(0, " ".join(words)), (1, " ".join(words[:6] + ["z0"]))],
+        "doc_id long, text string",
+    )
+    sh = D.doc_shingles(df, "doc_id", "text")
+    shingles = [tuple(r) for r in sh.collect()]
+    assert len(shingles) == 10  # 5 + 5 shingles, 4 shared: |A∪B| = 6
+    # the LSH entry points only verify what banding proposes: this pair
+    # must collide, or the checks below would pass vacuously
+    sig = D.minhash_signatures(sh)
+    assert [tuple(r) for r in D.lsh_candidates(sig).collect()] == [(0, 1)]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE sh (doc BIGINT, shingle VARCHAR)")
+    con.executemany("INSERT INTO sh VALUES (?, ?)", shingles)
+    oracle = """
+        WITH cnt AS (SELECT doc, count(*) AS n FROM sh GROUP BY doc),
+        inter AS (
+            SELECT a.doc AS doc_a, b.doc AS doc_b, count(*) AS i
+            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc < b.doc
+            GROUP BY 1, 2
+        )
+        SELECT doc_a, doc_b, round(i * 1.0 / (ca.n + cb.n - i), 6)
+        FROM inter JOIN cnt ca ON ca.doc = doc_a JOIN cnt cb ON cb.doc = doc_b
+        WHERE i * 1.0 / (ca.n + cb.n - i) >= ?"""
+
+    corpus = df.filter(F.col("doc_id") == 0)
+    batch = df.filter(F.col("doc_id") == 1)
+    cnt = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
+    cand = spark.createDataFrame([(1, 0)], "`drop` long, other long")
+
+    def pairs(t):
+        return {
+            "oracle": [tuple(r) for r in con.execute(oracle, [t]).fetchall()],
+            "jaccard_pairs": [
+                tuple(r) for r in D.jaccard_pairs(sh, t).collect()
+            ],
+            "verify": [
+                tuple(r)
+                for r in D._verify(
+                    cand, "drop", "other", sh, sh, cnt, cnt, t
+                ).collect()
+            ],
+            "minhash_lsh_dedup": [
+                tuple(r)
+                for r in D.minhash_lsh_dedup(df, "doc_id", "text", t).collect()
+            ],
+            "incremental_minhash_pairs": [
+                tuple(r)
+                for r in D.incremental_minhash_pairs(
+                    corpus, batch, "doc_id", "text", t
+                ).collect()
+            ],
+            "screened_drop_ids": [
+                tuple(r)
+                for r in D.screened_drop_ids(
+                    df, D.corpus_minhash_profile(df, "doc_id", "text"),
+                    "doc_id", "text", t,
+                ).collect()
+            ],
+            "screened_drop_ids_prior": [
+                tuple(r)
+                for r in D.screened_drop_ids(
+                    batch, D.corpus_minhash_profile(batch, "doc_id", "text"),
+                    "doc_id", "text", t, prior=corpus,
+                    prior_profile=D.corpus_minhash_profile(
+                        corpus, "doc_id", "text"
+                    ),
+                ).collect()
+            ],
+        }
+
+    above = pairs(0.6666667)
+    assert all(v == [] for v in above.values()), above
+    pair = [(0, 1, 0.666667)]
+    assert pairs(0.6666666) == {
+        "oracle": pair,
+        "jaccard_pairs": pair,
+        "verify": [(1, 0, 0.666667)],
+        "minhash_lsh_dedup": pair,
+        "incremental_minhash_pairs": [(1, 0, 0.666667)],
+        "screened_drop_ids": [(1,)],
+        "screened_drop_ids_prior": [(1,)],
+    }
 
 
 # --- prefix-filtered set-similarity join (operators/setjoin) -----------

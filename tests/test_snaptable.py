@@ -3580,6 +3580,28 @@ def test_all_data_files_degrades_on_broken_adopted_link(
         r.n_row_groups is None and r.size_bytes is None for r in broken
     )
     assert healthy and all(r.size_bytes > 0 for r in healthy)
+    # entries() walks the same files through the same per-dir reader: the
+    # current snapshot's rows match all_data_files' and degrade the same
+    ent = cat.entries(spark, "ns", "t").collect()
+    assert sorted(
+        (r.data_dir, r.file_ordinal, r.n_rows, r.n_row_groups, r.size_bytes)
+        for r in ent
+    ) == sorted(
+        (r.data_dir, r.file_ordinal, r.n_rows, r.n_row_groups, r.size_bytes)
+        for r in cur
+    )
+    assert any(r.n_rows is None for r in ent)
+
+
+def test_maintenance_report_missing_table_names_it(spark, tmp_path):
+    """maintenance_report on a table with nothing published raises
+    SnapshotNotFound naming ``ns.table`` — the error every other catalog
+    entry point gives for a missing table — not a bare IndexError."""
+    from component_iceberg_spark.io.snaptable import SnapshotNotFound
+
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    with pytest.raises(SnapshotNotFound, match=r"ns\.missing"):
+        cat.maintenance_report(spark, "ns", "missing")
 
 
 def test_dispatch_bounds_rename_partition_and_timestamp(
