@@ -670,24 +670,6 @@ class SnapCatalog:
 
     # -- commits ------------------------------------------------------------
 
-    def check_constraint(self, df: DataFrame, predicate: str) -> None:
-        """Plan-level CHECK constraint utility: fail if any row of ``df``
-        violates ``predicate`` (the Delta-style table constraint the
-        reference's strict-cast gate is the type-level version of). The
-        first violation found carries a sample row into the error.
-        NOTE: this evaluates the INPUT PLAN in its own job; for commit
-        gating, ``append(check=...)`` instead validates the already-
-        written files inside :meth:`_commit`, which is immune to
-        nondeterministic sources re-executing differently between the
-        check job and the write job."""
-        bad = df.filter(f"NOT ({predicate})")
-        sample = bad.limit(1).collect()
-        if sample:
-            raise ValueError(
-                f"CHECK constraint violated: ({predicate}); "
-                f"sample offending row: {sample[0].asDict()}"
-            )
-
     def append(
         self, namespace: str, table: str, df: DataFrame,
         partition_by: list[str] | None = None,

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from component_iceberg_spark.operators.similarity import kernel_width
 from component_iceberg_spark.operators.text import text_shingles, tokens
 from component_iceberg_spark.session import release_local_checkpoint
 
@@ -52,15 +53,19 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     Repartitions first: the CPU cost is in the per-doc regex/array work,
     and a small input (one parquet file → one partition) would otherwise
-    pin the whole corpus to a single core. The spread width is the
-    SESSION's shuffle-partition conf, not the hard core count: callers
-    that scope shuffles to their input volume (streaming micro-batches
-    via ``state_scope``) then right-size this exchange too, while at
-    100 TB the cluster-tuned conf keeps the full spread.
-    """
+    pin the whole corpus to a single core. The spread width comes from
+    the INPUT, by the byte gate every small-input kernel uses
+    (:func:`similarity.kernel_width`): a batch-sized input spreads to one
+    task per core, and everything keyed on ``doc`` downstream — the
+    signature aggregate, and any cached shingles a join reads — inherits
+    that width. An explicit ``repartition(n)`` is never coalesced by
+    AQE, so a session-wide width here used to fan every batch-sized
+    epoch out to ``spark.sql.shuffle.partitions`` near-empty tasks, and
+    a cached profile carried that width into every join it fed. At real
+    scale the gate declines and the cluster-tuned
+    ``spark.sql.shuffle.partitions`` keeps the full spread."""
     spread = df.select(F.col(id_col), F.col(text_col)).repartition(
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        F.col(id_col),
+        _spread_width(df), F.col(id_col)
     )
     return (
         spread.select(
@@ -69,6 +74,19 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         )
         .select("doc", F.explode("sh").alias("shingle"))
     )
+
+
+def _spread_width(df: DataFrame) -> int:
+    """Width of an explicit keyed spread of ``df``. Below the small-input
+    byte gate (:func:`similarity.kernel_width`) it is one task per core:
+    the spread exists to put the regex and signing work on every core,
+    and a floor of fewer tasks would leave cores idle. At real scale, or
+    for data with no stored bytes to size by, it is the session's
+    ``spark.sql.shuffle.partitions``."""
+    spark = df.sparkSession
+    return kernel_width(
+        df, floor=spark.sparkContext.defaultParallelism
+    ) or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def exact_dedup(df: DataFrame, id_col: str, fingerprint_col) -> DataFrame:
@@ -137,12 +155,12 @@ def _verify(
             sh_r.alias("b"), F.expr(f"{qr} = b.doc AND a.shingle = b.shingle")
         )
         keys = [l, r]
-    ratio = "(cast(i AS double) * 1.0D) / cast(na + nb - i AS double)"
+    ratio = "(cast(i AS double) * 1.0D) / cast(ca.n + cb.n - i AS double)"
     return (
         shared.groupBy(*keys)
         .agg(F.expr("count(1) AS i"))
-        .join(cnt_l.selectExpr(f"doc AS {ql}", "n AS na"), l)
-        .join(cnt_r.selectExpr(f"doc AS {qr}", "n AS nb"), r)
+        .join(cnt_l.select("doc", "n").alias("ca"), F.expr(f"{ql} = ca.doc"))
+        .join(cnt_r.select("doc", "n").alias("cb"), F.expr(f"{qr} = cb.doc"))
         .filter(F.expr(f"{ratio} >= {float(threshold)!r}D"))
         .selectExpr(ql, qr, f"round({ratio}, 6) AS jaccard")
     )
@@ -220,6 +238,23 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
     output schema (8-hex-char strings) is unchanged and the SQL oracles
     replay it exactly (pinned by
     ``test_minhash_signatures_hash_agg_matches_string_min``)."""
+    return _sign(sh, counted=False)
+
+
+def minhash_profile(sh: DataFrame) -> DataFrame:
+    """One row per doc: its K min-hash columns AND its distinct-shingle
+    count ``n`` (the |A| of the Jaccard denominator) — the stored dedup
+    artifact (:func:`corpus_minhash_profile`) and every MinHash
+    consumer's verify counts. ONE aggregate over the shingle rows: the
+    signature and the count used to be two aggregates plus a join on
+    ``doc``."""
+    return _sign(sh, counted=True)
+
+
+def _sign(sh: DataFrame, counted: bool) -> DataFrame:
+    """The signing aggregate behind :func:`minhash_signatures` and
+    :func:`minhash_profile`; ``counted`` adds ``count(1) AS n`` (shingles
+    are distinct per doc, so the row count is |A|)."""
     # Each lane is parsed from ONE SQL string (the same
     # :func:`minhash_hash_sql` text the oracles replay) instead of being
     # assembled md5/substring/conv/cast/min call-by-call over py4j, and
@@ -240,6 +275,9 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
         f"lpad(lower(conv(h{k}, 10, 16)), 8, '0') AS h{k}"
         for k in range(NUM_HASHES)
     ]
+    if counted:
+        aggs.append(F.expr("count(1) AS n"))
+        back.append("n")
     return sh.groupBy("doc").agg(*aggs).selectExpr("doc", *back)
 
 
@@ -258,18 +296,19 @@ def signature_bands(sig: DataFrame) -> DataFrame:
     # inside every per-epoch screen build, where py4j round-trips are
     # the cost (see minhash_signatures). Identical parsed trees,
     # identical plan.
-    entries = ", ".join(
-        "struct({b} AS band, md5(concat_ws('|', {cols})) AS key)".format(
-            b=b,
-            cols=", ".join(
-                f"h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(BANDS)
-    )
     return sig.selectExpr(
-        "doc", f"explode(array({entries})) AS bk"
+        "doc", f"explode(array({', '.join(_BAND_KEYS)})) AS bk"
     ).selectExpr("doc", "bk.band AS band", "bk.key AS key")
+
+
+#: SQL text of the B ``struct(band, key)`` values of one signature row
+_BAND_KEYS = [
+    "struct({b} AS band, md5(concat_ws('|', {cols})) AS key)".format(
+        b=b,
+        cols=", ".join(f"h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)),
+    )
+    for b in range(BANDS)
+]
 
 
 def lsh_candidates(sig: DataFrame) -> DataFrame:
@@ -307,12 +346,12 @@ def minhash_lsh_dedup(
     from pyspark import StorageLevel
 
     sh = doc_shingles(df, id_col, text_col)
-    sig = minhash_signatures(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    profile = minhash_profile(sh).persist(StorageLevel.MEMORY_AND_DISK)
     if persisted_out is not None:
-        persisted_out.append(sig)
-    cnt = _shingle_counts(sh)
+        persisted_out.append(profile)
     return _verify(
-        lsh_candidates(sig), "doc_a", "doc_b", sh, sh, cnt, cnt, threshold
+        lsh_candidates(profile), "doc_a", "doc_b", sh, sh, profile, profile,
+        threshold,
     )
 
 
@@ -325,8 +364,7 @@ def corpus_minhash_profile(
     candidate-restricted text re-read. Corpus-row-sized (~60× smaller
     than the shingle table); at 100 TB this is the table you persist to
     the lake at ingest, bucketed by band key."""
-    sh = doc_shingles(corpus, id_col, text_col)
-    return minhash_signatures(sh).join(_shingle_counts(sh), "doc")
+    return minhash_profile(doc_shingles(corpus, id_col, text_col))
 
 
 def incremental_minhash_pairs(
@@ -350,8 +388,9 @@ def incremental_minhash_pairs(
     This operator signs the corpus inline — the registered query's shape.
     The stored-profile form, where the corpus profile is computed once at
     ingest and each batch signs only its own rows, is
-    :func:`screened_drop_ids` (``prior_profile``), which the streaming
-    screen runs; both verify through the same :func:`_verify` body.
+    :func:`screened_drop_ids` (``prior_profile``), whose body the
+    streaming screen runs; both verify through the same :func:`_verify`
+    body.
 
     Returns verified (doc_new, doc_corpus, jaccard ≥ threshold): every
     batch doc that near-duplicates an existing corpus doc. Survivors =
@@ -366,15 +405,15 @@ def incremental_minhash_pairs(
     profile_c = corpus_minhash_profile(corpus, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    sig_b = minhash_signatures(sh_b).persist(StorageLevel.MEMORY_AND_DISK)
+    profile_b = minhash_profile(sh_b).persist(StorageLevel.MEMORY_AND_DISK)
     cand = _band_pairs(
-        signature_bands(sig_b), signature_bands(profile_c),
+        signature_bands(profile_b), signature_bands(profile_c),
         "doc_new", "doc_corpus",
     ).distinct()
     return _verify(
         cand, "doc_new", "doc_corpus",
         sh_b, _candidate_shingles(corpus, cand, "doc_corpus", id_col, text_col),
-        _shingle_counts(sh_b), profile_c, threshold,
+        profile_b, profile_c, threshold,
     )
 
 
@@ -401,33 +440,119 @@ def screened_drop_ids(
 
     ``batch_profile`` is the batch's :func:`corpus_minhash_profile`
     (signatures + shingle counts), computed once by the caller;
-    ``prior_profile`` is the stored corpus profile. Prior TEXT is read
-    only candidate-restricted (semi-join) for exact verification."""
-    sh_b = doc_shingles(batch, id_col, text_col)
-    # intra-batch candidates come from the SAME generator as the batch
-    # dedup operator (single source of truth for the banding semantics);
-    # the higher doc of a pair is the drop candidate (lower-id wins)
-    cand = lsh_candidates(batch_profile).selectExpr(
-        "doc_b AS `drop`", "doc_a AS other"
-    )
-    cnt_other = batch_profile.select("doc", "n")
-    sh_other = sh_b
+    ``prior_profile`` is the stored corpus profile. Prior docs sharing
+    an id with the batch are not prior (a replayed doc never matches its
+    own copy). The streaming screen runs the same two steps on its
+    one-table store: :func:`touching_rows`, then :func:`screen_drops`."""
     if prior is not None and prior_profile is not None:
+        stored = prior.select(id_col, text_col).join(
+            prior_profile.withColumnRenamed("doc", id_col), id_col
+        )
+        prior = touching_rows(
+            stored, batch_profile, batch.select(id_col), id_col, text_col
+        ).filter("NOT _present").drop("_present")
+    else:
+        prior = None
+    return screen_drops(
+        doc_shingles(batch, id_col, text_col), batch_profile,
+        id_col, text_col, threshold, prior,
+    ).distinct()
+
+
+def screen_drops(
+    sh_b: DataFrame,
+    profile_b: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    prior: DataFrame | None = None,
+) -> DataFrame:
+    """The fused screen body (see :func:`screened_drop_ids`) over the
+    batch's shingles ``sh_b`` and profile ``profile_b`` — both
+    batch-sized, built once by the caller — and ``prior``: the earlier
+    docs a batch doc band-collides with, as :func:`touching_rows` keeps
+    them (``id_col``, ``text_col`` and the profile columns on one row).
+
+    Every prior row is a candidate, so its text is shingled whole, with
+    no candidate semi-join. The batch's band rows are broadcast into
+    both band joins, so the prior side is probed where it lies, without
+    a shuffle of it. Candidate pairs are deduplicated once, after the
+    intra-batch and the batch→prior pairs are unioned. A doc that
+    near-dups several earlier docs is returned once per match: callers
+    that need a set deduplicate, the screen flags through an IN
+    subquery that needs none."""
+    bands_b = F.broadcast(signature_bands(profile_b))
+    # the higher doc of an intra-batch pair is the drop candidate
+    # (lower id wins)
+    cand = _band_pairs(bands_b, bands_b, "other", "drop", ordered=True)
+    cnt_other = profile_b.select("doc", "n")
+    sh_other = sh_b
+    if prior is not None:
+        profiled = prior.withColumnRenamed(id_col, "doc")
         cand = cand.unionByName(
-            _band_pairs(
-                signature_bands(batch_profile), signature_bands(prior_profile),
-                "drop", "other",
-            )
+            _band_pairs(bands_b, signature_bands(profiled), "drop", "other")
         )
-        sh_other = sh_other.unionByName(
-            _candidate_shingles(prior, cand, "other", id_col, text_col)
-        )
-        cnt_other = cnt_other.unionByName(prior_profile.select("doc", "n"))
+        sh_other = sh_other.unionByName(doc_shingles(prior, id_col, text_col))
+        cnt_other = cnt_other.unionByName(profiled.select("doc", "n"))
     verified = _verify(
         cand.distinct(), "drop", "other",
-        sh_b, sh_other, batch_profile, cnt_other, threshold,
+        sh_b, sh_other, profile_b, cnt_other, threshold,
     )
-    return verified.selectExpr(f"`drop` AS {_quote_ident(id_col)}").distinct()
+    return verified.selectExpr(f"`drop` AS {_quote_ident(id_col)}")
+
+
+def touching_rows(
+    store: DataFrame,
+    profile_b: DataFrame,
+    ids: DataFrame,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """The rows of a profiled store (``id_col``, ``text_col`` and the
+    profile columns h0..hK, n on one row; n is NULL for a doc without
+    shingles) that a batch touches, from ONE scan: every row that
+    shares a band key with a batch doc (``profile_b``) or whose id is a
+    batch id (``ids``, one ``id_col`` column). ``_present`` marks the
+    second kind.
+
+    Each store row explodes its B band keys plus one id key (band B,
+    the id as a string; a row without a profile has the id key only),
+    and one broadcast equi-join against the batch's keys keeps the
+    hits; one aggregate on the id folds a row's hits back into the row.
+    The result is candidate-sized, so the prior profile probe, the
+    candidate text and the already-present check all derive from it
+    instead of from three scans of the store."""
+    q = _quote_ident(id_col)
+    probe = signature_bands(profile_b).select("band", "key").unionByName(
+        ids.selectExpr(f"{BANDS} AS band", f"cast({q} AS string) AS key")
+    )
+    id_key = f"struct({BANDS} AS band, cast({q} AS string) AS key)"
+    keys = (
+        f"explode(if(n IS NULL, array({id_key}), "
+        f"array({', '.join(_BAND_KEYS)}, {id_key}))) AS _bk"
+    )
+    carried = [text_col] + [f"h{k}" for k in range(NUM_HASHES)] + ["n"]
+    hits = (
+        store.select(id_col, *carried)
+        .selectExpr("*", keys)
+        .alias("s")
+        .join(
+            F.broadcast(probe).alias("p"),
+            F.expr("s._bk.band = p.band AND s._bk.key = p.key"),
+        )
+        .selectExpr(
+            *(f"s.{_quote_ident(c)}" for c in [id_col] + carried),
+            f"p.band = {BANDS} AS _present",
+        )
+    )
+    return (
+        hits.repartition(_spread_width(store), F.col(id_col))
+        .groupBy(id_col)
+        .agg(
+            *(F.first(c).alias(c) for c in carried),
+            F.max("_present").alias("_present"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------

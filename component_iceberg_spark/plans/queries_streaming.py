@@ -749,20 +749,12 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    # scope shuffle width to the staged batch volume: the screen's joins
-    # and aggregations are batch-sized (maxFilesPerTrigger=1), so the
-    # session's cluster-width constant only multiplies per-task
-    # scheduling overhead here (r15 profile: ~100 stages/run of 32-64
-    # near-empty tasks); at real volumes state_scope returns the session
-    # default unchanged. foreachBatch has no state store, so results are
-    # partition-count independent.
-    # fixed_plan_scope: the screen's per-epoch plan is huge (2×K md5
-    # signature lanes) while its data is batch-sized, so AQE's per-stage
-    # replanning dominates the epoch wall (~30 stage-jobs/batch; measured
-    # 8.5→6.7 s median) — disabled below the staged-bytes gate, no-op at
-    # real scale exactly like state_scope
-    with SE.state_scope(spark, stage), SE.fixed_plan_scope(spark, stage):
-        SE.stream_incremental_dedup(docs, cat)
+    # no conf scope: each epoch sizes itself from its micro-batch (the
+    # shingle spread's width comes from the batch's bytes, the batch-
+    # sized relations are built once and broadcast), so the session's
+    # shuffle width and AQE stand as they are — see
+    # streaming.events.screen_batch_incremental
+    SE.stream_incremental_dedup(docs, cat)
     # the admitted relation is a verdict-column filter over the single
     # wide seen store (r16: one commit per epoch instead of two) —
     # column pruning reads only doc_id + the flag here

@@ -139,40 +139,6 @@ def scaled_state_partitions(
     return max(min(floor, default), min(default, input_bytes // per_partition_bytes + 1))
 
 
-def fixed_plan_scope(
-    spark: SparkSession, src: str | int, threshold_bytes: int = 64 << 20
-):
-    """Scoped AQE bypass for a bounded BATCH-SIZED multi-stage pipeline
-    (guide §1.2 step 3 — config only after the algorithm is right, and
-    scale-parameterised like :func:`state_scope` / ``kernel_width``).
-
-    AQE materializes every exchange as its own stage-job and re-runs the
-    optimizer on the remaining plan after each one — driver work
-    proportional to PLAN size, paid per stage regardless of data size.
-    The incremental dedup screen's plan is huge (2×K md5 signature
-    lanes, banded joins, anti-joins: ~30 stage-jobs per micro-batch)
-    while its per-epoch data is batch-sized, so replanning dominates:
-    measured 8.5→6.7 s median over interleaved process-isolated
-    best-of-3 at sf0.1, identical results (AQE is physical-only).
-    AQE's actual benefits — partition coalescing and skew splitting —
-    need data-sized shuffles, and the screen's shuffle width is already
-    pinned by :func:`state_scope`.
-
-    Gated on the staged source's bytes: below ``threshold_bytes`` the
-    scope disables AQE, at-or-above (or when the size is unknowable) it
-    is a NO-OP, so at real scale the session's AQE policy stands
-    untouched — the same no-op-at-scale construction as
-    ``scaled_state_partitions``."""
-    from contextlib import nullcontext
-
-    from component_iceberg_spark.session import scoped_conf
-
-    b = src if isinstance(src, int) else dir_bytes(src)
-    if b <= 0 or b >= threshold_bytes:
-        return nullcontext(spark)
-    return scoped_conf(spark, **{"spark.sql.adaptive.enabled": "false"})
-
-
 def state_scope(spark: SparkSession, src: str | int, floor: int = 8):
     """Context manager scoping ``spark.sql.shuffle.partitions`` to the
     scale-adaptive state-partition count for a bounded stateful run whose
@@ -480,6 +446,23 @@ def admitted_docs(
     return seen.filter(F.col(ADMIT_COL)).drop(*sig_cols, ADMIT_COL)
 
 
+def _built(df: DataFrame, caches: list) -> DataFrame:
+    """Persist ``df`` and build its cache NOW, through the no-op sink
+    (one job per stage of its plan plus one; a ``count`` would add a
+    global aggregate), and record it in ``caches`` for release. Plans
+    built afterwards see the cache's real size and partitioning: a
+    small relation is broadcast and a join on its key adds no shuffle.
+    A cache still unbuilt when a plan runs is neither: under AQE its
+    partitioning is unknown, its size is the optimizer's estimate, and
+    every scan of it in the plan is its own query stage."""
+    from pyspark import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    caches.append(df)
+    df.write.format("noop").mode("overwrite").save()
+    return df
+
+
 def screen_batch_incremental(
     catalog,
     batch: DataFrame,
@@ -513,7 +496,7 @@ def screen_batch_incremental(
     already-present read of the admitted store. It also closes the old
     crash window between the two commits outright: the epoch's rows and
     verdicts land atomically in one snapshot. Parquet column pruning
-    keeps candidate probing's I/O identical (signature columns only).
+    keeps the store scan to the id, text and profile columns.
 
     Shingle-less docs (< SHINGLE_N tokens — no signature) are LEFT-join
     preserved (ADVICE r15): they persist to the store with NULL profile
@@ -521,12 +504,22 @@ def screen_batch_incremental(
     dup anything, exactly why the pair oracle never emits them); the
     candidate probe path filters NULL-profile rows out.
 
-    The persisted signature tables built inside the dedup operators are
-    released at the end of the batch (they are fully materialized by the
-    commit) — without that, a long-running stream accumulates one
-    cached signature table per micro-batch."""
-    from pyspark import StorageLevel
+    Every relation of the epoch is sized by its batch, not by the
+    session: the shingles spread to the batch's own width
+    (``dedup.doc_shingles``) and are built ONCE, and the store is
+    scanned ONCE (``dedup.touching_rows``): the candidate-sized rows
+    that scan keeps answer the prior profile probe, the candidate text
+    re-read and the already-present check. Both are built before the
+    epoch's plan (:func:`_built`), so the planner sees their real sizes.
+    The batch-sized relations joined back onto the batch (profile, drop
+    verdicts, present ids) are broadcast, so the commit's plan keeps the
+    batch's own partitioning end to end: the epoch writes one file per
+    input partition with no coalesce and no partition-count probe, and
+    a later epoch's store scan never pays one split per near-empty file.
 
+    The cached shingles and store rows are released at the end of the
+    batch — without that, a long-running stream accumulates one cache
+    per micro-batch."""
     from component_iceberg_spark.operators import dedup as D
 
     sig_cols = [f"h{k}" for k in range(D.NUM_HASHES)] + ["n"]
@@ -536,82 +529,67 @@ def screen_batch_incremental(
             f"batch columns collide with screen columns: {sorted(clash)}"
         )
     caches: list = []
-    batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         spark = batch.sparkSession
-        # the batch's profile (signatures + shingle counts) is computed
-        # ONCE — it probes the stored profile, drives the intra-batch
-        # dedup, and becomes the rows appended to the store, so the
-        # K-way md5 signing cost is paid once per doc EVER
-        batch_profile = D.corpus_minhash_profile(
-            batch, "doc_id", "text"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(batch_profile)
+        # the batch's shingles are built ONCE: they verify, and the
+        # profile (signatures + shingle counts) is one aggregate over
+        # them, partitioned alike, so it needs no shuffle; each consumer
+        # re-runs that aggregate over the cache rather than pay two more
+        # jobs for a second one. The profile becomes the rows appended
+        # to the store, so a stored doc is never signed again.
+        sh_b = _built(D.doc_shingles(batch, "doc_id", "text"), caches)
+        profile_b = D.minhash_profile(sh_b)
         # the rows the seen store persists: doc columns + profile
         # columns. LEFT join: a sub-shingle doc has no profile row and
         # an inner join would silently drop it from the store (ADVICE
         # r15) — and, with the admitted relation now derived from the
         # store, from the admitted output too.
         wide_batch = batch.join(
-            batch_profile.withColumnRenamed("doc", "doc_id"), "doc_id", "left"
+            F.broadcast(profile_b.withColumnRenamed("doc", "doc_id")),
+            "doc_id",
+            "left",
         )
         have_seen = catalog.table_exists(namespace, seen_table)
+        prior = present = None
         if have_seen:
-            # stored profile COLUMNS answer candidate generation; stored
-            # text is only read candidate-restricted inside the
-            # verification stage — per-batch cost is O(batch + candidates),
-            # never a corpus re-sign. NULL-profile rows (sub-shingle
-            # docs) are excluded from the probe: they have no bands.
-            seen_full = catalog.read(spark, namespace, seen_table)
-            prior_profile = seen_full.filter(
-                F.col("n").isNotNull()
-            ).select(
-                F.col("doc_id").alias("doc"), *sig_cols
-            ).join(
-                batch.select(F.col("doc_id").alias("doc")), "doc", "left_anti"
+            # ONE store scan: the rows sharing a band key or an id with
+            # the batch. Stored text is only read for those, and the
+            # per-batch cost stays O(batch + candidates), never a corpus
+            # re-sign.
+            hits = _built(
+                D.touching_rows(
+                    catalog.read(spark, namespace, seen_table), profile_b,
+                    batch.select("doc_id"), "doc_id", "text",
+                ),
+                caches,
             )
-            prior = seen_full.drop(*sig_cols, ADMIT_COL).join(
-                batch.select("doc_id"), "doc_id", "left_anti"
-            )
-        else:
-            prior = prior_profile = None
+            # the prior set is the store MINUS the batch's own ids (the
+            # replay contract above); the ids it does hold are present
+            prior = hits.filter("NOT _present").drop("_present")
+            present = hits.filter("_present").select("doc_id")
         # ONE fused candidate+verify pipeline covers both drop sources
         # (own lower-id rows and the whole seen corpus) — see
         # dedup.screened_drop_ids for why fusing halves the epoch's stages
-        dropped = D.screened_drop_ids(
-            batch, batch_profile, "doc_id", "text", threshold,
-            prior=prior, prior_profile=prior_profile,
+        dropped = D.screen_drops(
+            sh_b, profile_b, "doc_id", "text", threshold, prior
         )
-        flagged = wide_batch.join(
-            dropped.withColumn("_dropped", F.lit(True)), "doc_id", "left"
-        ).withColumn(ADMIT_COL, F.col("_dropped").isNull()).drop("_dropped")
-        # Output-file sizing (guide §6): the epoch's append is batch-row
-        # sized, but its plan ends at the screen's shuffle width, so an
-        # un-coalesced write lands one near-empty parquet file PER
-        # PARTITION — and every LATER epoch's three store scans (profile
-        # probe, candidate text, already-present anti-join) then pay one
-        # split per tiny file (r16 profile: commit wall grew
-        # 1.28→1.55→1.98 s across epochs, tracking 8N accumulated
-        # files). Cap the commit's files at the micro-batch's own input
-        # width — output rows ∝ input rows, so files ∝ input partitions
-        # is right-sized by construction at every scale, and only the
-        # light post-exchange tail (the flag join) narrows; the heavy
-        # sign/verify stages sit upstream of their exchanges.
-        width = max(1, batch.rdd.getNumPartitions())
+        # an IN-subquery flag (one broadcast existence join): the drop
+        # ids need no distinct, and no row can fan out
+        is_dropped = F.col("doc_id").isin(F.broadcast(dropped))
+        flagged = wide_batch.withColumn(
+            ADMIT_COL, ~F.coalesce(is_dropped, F.lit(False))
+        )
         if have_seen:
             # no isEmpty guard: it would evaluate the anti-join a second
             # time just to (rarely) skip an append; an empty append on a
             # replayed epoch is a harmless empty commit
             new_seen = flagged.join(
-                seen_full.select("doc_id"), "doc_id", "left_anti"
+                F.broadcast(present), "doc_id", "left_anti"
             )
-            catalog.append(namespace, seen_table, new_seen.coalesce(width))
+            catalog.append(namespace, seen_table, new_seen)
         else:
-            catalog.create_or_replace(
-                namespace, seen_table, flagged.coalesce(width)
-            )
+            catalog.create_or_replace(namespace, seen_table, flagged)
     finally:
-        batch.unpersist()
         for c in caches:
             c.unpersist()
 

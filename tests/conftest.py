@@ -60,7 +60,19 @@ def spark_jobs_during(spark, fn):
     """Run ``fn()`` under a fresh job group and return ``(result, n)``,
     ``n`` being the number of Spark jobs it started — pins a zero-job
     property instead of timing it. The group is cleared afterwards."""
+    result, jobs, _stages = spark_work_during(spark, fn)
+    return result, jobs
+
+
+def spark_work_during(spark, fn):
+    """Run ``fn()`` under a fresh job group and return ``(result, jobs,
+    stages)``: the Spark jobs it started and the stages those jobs ran.
+    A stage an earlier job already computed (its shuffle output reused)
+    is listed again by later jobs but runs no task; it is not counted.
+    The group is cleared afterwards."""
     import uuid
+
+    from component_iceberg_spark.metrics import _drain_listener_bus
 
     sc = spark.sparkContext
     group = f"jobs-during-{uuid.uuid4().hex}"
@@ -71,7 +83,17 @@ def spark_jobs_during(spark, fn):
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+    _drain_listener_bus(spark)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = set()
+    for j in jobs:
+        info = tracker.getJobInfo(j)
+        for s in info.stageIds if info else ():
+            st = tracker.getStageInfo(s)
+            if st is not None and st.numCompletedTasks > 0:
+                stages.add(s)
+    return result, len(jobs), len(stages)
 
 
 def write_legacy_delete(cat, ns, table, pos_df, mode="positional"):

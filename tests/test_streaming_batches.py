@@ -312,6 +312,81 @@ def test_incremental_screen_one_commit_per_epoch_and_subshingle(
         assert 0 < n_parts <= 8, (d, n_parts)
     assert cat.read(spark, "stream", "seen").count() == 12
 
+    # width independence: the shingle spread sizes itself from the
+    # batch's stored bytes, so a file-backed batch spreads to one task
+    # per core while a wide in-memory one (no stored bytes: the session
+    # width) spreads to more; both admit exactly the docs the runs
+    # above did
+    def admitted_after(batches, root):
+        c = SnapCatalog(str(tmp_path / root))
+        for b in batches:
+            SE.screen_batch_incremental(c, b)
+        return sorted(
+            r["doc_id"]
+            for r in SE.admitted_docs(c, spark).select("doc_id").collect()
+        )
+
+    file_backed = []
+    for i, b in enumerate((b0, b1, b2)):
+        path = str(tmp_path / f"batch_{i}.parquet")
+        b.write.parquet(path)
+        file_backed.append(spark.read.parquet(path))
+    wide = [b.repartition(8) for b in (b0, b1, b2)]
+    expected = sorted(
+        r["doc_id"]
+        for r in SE.admitted_docs(cat, spark).select("doc_id").collect()
+    )
+    assert admitted_after(file_backed, "wh_file") == expected
+    assert admitted_after(wide, "wh_wide") == expected
+
+
+def test_screen_epoch_work_is_batch_sized_and_flat(spark, tmp_path):
+    """Every screen epoch runs a fixed number of Spark jobs and stages,
+    set by its batch and not by the store or the session: the shingle
+    spread takes its width from the batch, the store is scanned once,
+    and the batch-sized relations are built once and broadcast. Epochs
+    after the first run the same count however large the store grows,
+    and each epoch runs at most half the jobs and stages it ran when its
+    shingles spread to the session width and it scanned the store three
+    times: this test then counted 23 for the first epoch and 39 for each
+    later one."""
+    import random
+
+    from tests.conftest import spark_work_during
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(400)]
+    originals = [
+        [rng.choice(vocab) for _ in range(rng.randint(12, 30))]
+        for _ in range(90)
+    ]
+    docs = []
+    for i in range(120):
+        words = list(originals[i % 90])
+        if i >= 90:  # a near copy of an earlier doc, one word edited
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+        docs.append((i, " ".join(words)))
+    rng.shuffle(docs)
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    work = []
+    for e in range(5):
+        path = str(tmp_path / f"batch_{e}.parquet")
+        spark.createDataFrame(
+            sorted(docs[e * 24:(e + 1) * 24]), "doc_id long, text string"
+        ).coalesce(1).write.parquet(path)
+        batch = spark.read.parquet(path)
+        _r, jobs, stages = spark_work_during(
+            spark, lambda b=batch: SE.screen_batch_incremental(cat, b)
+        )
+        work.append((jobs, stages))
+    first, later = work[0], work[1:]
+    assert len(set(later)) == 1, work
+    assert max(first) <= 23 // 2, work
+    assert max(later[0]) <= 39 // 2, work
+    # the work is the screen's, not an empty run: near copies were dropped
+    admitted = SE.admitted_docs(cat, spark).count()
+    assert 90 <= admitted < 120, admitted
+
 
 def test_run_concurrently_order_and_errors():
     """run_concurrently returns results in argument order and propagates
@@ -800,28 +875,6 @@ def test_scaled_state_partitions_floor_cap_and_scaling(spark):
     assert ten == min(10, default)
     # volume beyond the ceiling: the session default is returned unchanged
     assert SE.scaled_state_partitions(spark, 1 << 40) == default
-
-
-def test_fixed_plan_scope_gates_on_input_bytes(spark):
-    """fixed_plan_scope disables AQE only below the small-input gate and
-    restores the session value on exit; at-scale (or unknowable) inputs
-    are a no-op, so the cluster's AQE policy is never touched by a
-    data-sized run — the same no-op-at-scale contract as
-    scaled_state_partitions."""
-    key = "spark.sql.adaptive.enabled"
-    before = spark.conf.get(key)
-    assert before == "true"
-    with SE.fixed_plan_scope(spark, 1 << 20):
-        assert spark.conf.get(key) == "false"
-    assert spark.conf.get(key) == before
-    # at/above the gate: no-op
-    with SE.fixed_plan_scope(spark, 64 << 20):
-        assert spark.conf.get(key) == before
-    # unknown volume (0 / missing dir): no-op — never degrade at scale
-    with SE.fixed_plan_scope(spark, 0):
-        assert spark.conf.get(key) == before
-    with SE.fixed_plan_scope(spark, "/nonexistent-dir-xyz"):
-        assert spark.conf.get(key) == before
 
 
 def test_state_scope_sets_and_restores_shuffle_conf(spark, tmp_path):
