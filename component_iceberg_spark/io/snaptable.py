@@ -261,6 +261,12 @@ def _session_tz_is_utc() -> bool:
     return tz.upper() in ("UTC", "ETC/UTC", "GMT", "ETC/GMT", "Z", "+00:00")
 
 
+def _plan_is_deterministic(df: DataFrame) -> bool:
+    """True when every expression in ``df``'s analyzed plan is
+    deterministic, so two evaluations of ``df`` yield the same rows."""
+    return bool(df._jdf.queryExecution().analyzed().deterministic())
+
+
 def _bloom_key(v) -> bytes | None:
     """Canonical hash input for a bloom-filter value. Ints and strings
     only — float/timestamp equality lookups are not a pruning use case
@@ -984,6 +990,13 @@ class SnapCatalog:
         rows (emitted iff update and not delete) from unmatched ones
         (emitted iff insert). The union keeps the target's column order.
 
+        The dedupe is skipped when the key-range bounds job proves the
+        source key-unique (its row count equals its distinct key-tuple
+        count) and the source plan is deterministic: the window would
+        then keep every row, so the write plans the raw source with no
+        full-row shuffle. A nondeterministic source may yield other rows
+        when the write evaluates it again, so it keeps the window.
+
         Determinism: without ``order_by``, source-internal key duplicates
         resolve by the md5 of the remaining columns — a partition-layout-
         independent tie-break, so repeated runs of the same statement
@@ -998,24 +1011,27 @@ class SnapCatalog:
         while {f"_rn{sfx}", f"_hit{sfx}"} & set(source.columns):
             sfx += "_"
         rn, hit = f"_rn{sfx}", f"_hit{sfx}"
-        if order_by is not None:
-            rank_key = F.col(order_by).desc()
-        else:
-            non_keys = [c for c in source.columns if c not in keys]
-            # Unambiguous row encoding: to_json escapes separators and
-            # distinguishes NULL from any string, so two *distinct* rows
-            # can never hash equal (a concat_ws encoding would collide on
-            # values containing the separator, silently reverting to
-            # arbitrary-winner nondeterminism). Handles complex types too.
-            rank_key = F.md5(
-                F.to_json(F.struct(*[F.col(c) for c in non_keys]))
-            ).desc() if non_keys else F.lit(1).asc()
-        w = Window.partitionBy(*keys).orderBy(rank_key)
-        source = (
-            source.withColumn(rn, F.row_number().over(w))
-            .filter(F.col(rn) == 1)
-            .drop(rn)
-        )
+
+        def dedupe(df: DataFrame) -> DataFrame:
+            if order_by is not None:
+                rank_key = F.col(order_by).desc()
+            else:
+                non_keys = [c for c in df.columns if c not in keys]
+                # Unambiguous row encoding: to_json escapes separators and
+                # distinguishes NULL from any string, so two *distinct*
+                # rows can never hash equal (a concat_ws encoding would
+                # collide on values containing the separator, silently
+                # reverting to arbitrary-winner nondeterminism). Handles
+                # complex types too.
+                rank_key = F.md5(
+                    F.to_json(F.struct(*[F.col(c) for c in non_keys]))
+                ).desc() if non_keys else F.lit(1).asc()
+            w = Window.partitionBy(*keys).orderBy(rank_key)
+            return (
+                df.withColumn(rn, F.row_number().over(w))
+                .filter(F.col(rn) == 1)
+                .drop(rn)
+            )
 
         def flag(cond: str | None, default: bool) -> Column:
             return (
@@ -1032,14 +1048,18 @@ class SnapCatalog:
             # guard. Base 0 makes a rival that creates the table first
             # a conflict, not a replace of its rows
             return self._commit(
-                namespace, table, source.filter(ins), operation=operation,
-                carry=False, base_sid=0,
+                namespace, table, dedupe(source).filter(ins),
+                operation=operation, carry=False, base_sid=0,
             )
         manifest = self._manifest(namespace, table, base)
         self._validate_source_schema(
             namespace, table, manifest, source, operation, additive_ok=evolve
         )
-        candidates, untouched = self._delta_key_pruning(manifest, source, keys)
+        candidates, untouched, keys_unique = self._delta_key_pruning(
+            manifest, source, keys
+        )
+        if not (keys_unique and _plan_is_deterministic(source)):
+            source = dedupe(source)
         if candidates:
             target = self._read_with_deletes(
                 source.sparkSession, namespace, table, manifest, candidates
@@ -1129,18 +1149,28 @@ class SnapCatalog:
 
     def _delta_key_pruning(
         self, manifest: dict, delta: DataFrame, keys: list[str]
-    ) -> tuple[list[str], list[str]]:
+    ) -> tuple[list[str], list[str], bool]:
         """File-pruned copy-on-write (Iceberg MERGE cost shape): a data dir
         whose key-range stats cannot overlap the delta's key range cannot
         contain a matched row — carry it into the new snapshot untouched.
-        The bounds job is a column-pruned min/max agg over the delta
-        (metadata-sized result; the delta plan runs once more in the
-        merge itself). Returns (candidate_dirs, untouched_dirs)."""
+
+        One aggregate job over the delta's key columns reads the per-key
+        min/max, the row count and the exact count of distinct key
+        tuples. The distinct count groups the tuple the way the merge's
+        dedupe window partitions it: NULL key fields compare equal and
+        floating keys are normalized (-0.0 = 0.0, one NaN). Returns
+        ``(candidate_dirs, untouched_dirs, keys_unique)``; ``keys_unique``
+        is true when no key tuple occurs twice in this evaluation of the
+        delta."""
         conjuncts: list[tuple[str, str, object]] = []
         aggs = [F.min(k).alias(f"_mn_{k}") for k in keys] + [
             F.max(k).alias(f"_mx_{k}") for k in keys
+        ] + [
+            F.count(F.lit(1)).alias("_rows"),
+            F.count_distinct(F.struct(*keys)).alias("_keys"),
         ]
         bounds = delta.agg(*aggs).collect()[0]
+        keys_unique = bounds["_rows"] == bounds["_keys"]
         # collect() renders tz-adjusted TimestampType in the SYSTEM
         # timezone (datetime.fromtimestamp), while manifest stats live in
         # naive UTC — on a non-UTC host the raw strftime would shift
@@ -1168,8 +1198,8 @@ class SnapCatalog:
                 break
             conjuncts += [(k, ">=", mn), (k, "<=", mx)]
         if conjuncts:
-            return self._split_by_stats(manifest, conjuncts)
-        return list(manifest["files"]), []
+            return (*self._split_by_stats(manifest, conjuncts), keys_unique)
+        return list(manifest["files"]), [], keys_unique
 
     def compact(
         self,

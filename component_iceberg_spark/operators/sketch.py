@@ -48,22 +48,6 @@ def hll_distinct(df: DataFrame, group_cols: list[str], key: Column | str,
     )
 
 
-def hll_distinct_merged(df: DataFrame, group_cols: list[str], key: Column | str,
-                        shard_col: Column | str, lg_k: int = 12) -> DataFrame:
-    """Two-level HLL: sketch per (group, shard), then union the shard
-    sketches per group. Proves the mergeability contract the scale-out
-    depends on — the estimate must match the single-pass sketch exactly
-    (same algorithm, same seed), which tests/test_approx.py asserts."""
-    partials = df.groupBy(*group_cols, shard_col).agg(
-        F.hll_sketch_agg(key, F.lit(lg_k)).alias("partial")
-    )
-    return partials.groupBy(*group_cols).agg(
-        F.hll_sketch_estimate(F.hll_union_agg(F.col("partial"))).alias(
-            "approx_distinct"
-        )
-    )
-
-
 def kll_quantiles(df: DataFrame, group_cols: list[str], value: str,
                   probs: tuple[float, ...] = (0.5, 0.9, 0.99),
                   k: int = 200) -> DataFrame:

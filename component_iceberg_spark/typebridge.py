@@ -70,36 +70,6 @@ class UserDataError(ValueError):
     ``UserException`` mapping (``ex-iceberg/src/component.py:83-84``)."""
 
 
-def strict_cast_columns(df: DataFrame, casts: dict[str, str]) -> DataFrame:
-    """Cast columns with reference-style strict semantics: any
-    non-NULL value that fails its cast raises :class:`UserDataError`
-    naming the column, instead of silently becoming NULL.
-
-    One distributed validation pass (try_cast + null-mismatch counts per
-    column, a single aggregate over the scan), then the cheap cast plan is
-    returned — the validation does not run per downstream action.
-    """
-    checks = [
-        F.sum(
-            (F.col(c).isNotNull() & F.expr(f"try_cast({c} AS {t})").isNull()).cast(
-                "long"
-            )
-        ).alias(c)
-        for c, t in casts.items()
-    ]
-    bad = df.agg(*checks).collect()[0].asDict()
-    offenders = {c: n for c, n in bad.items() if n}
-    if offenders:
-        raise UserDataError(
-            "values failed strict cast: "
-            + ", ".join(f"{c} -> {casts[c]} ({n} rows)" for c, n in offenders.items())
-        )
-    out = df
-    for c, t in casts.items():
-        out = out.withColumn(c, F.col(c).cast(t))
-    return out
-
-
 def stringify_complex(df: DataFrame) -> DataFrame:
     """CSV-path collapse of nested types to STRING via ``to_json``.
 

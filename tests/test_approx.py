@@ -118,7 +118,6 @@ def test_hll_cardinality_bounds_and_mergeability(spark, sf_dir, oracle_con):
     import pyspark.sql.functions as F
 
     from component_iceberg_spark.io.tables import load_table
-    from component_iceberg_spark.operators import sketch as SK
 
     approx = {
         r["event_type"]: r["approx_distinct"]
@@ -133,11 +132,17 @@ def test_hll_cardinality_bounds_and_mergeability(spark, sf_dir, oracle_con):
     for et, est in approx.items():
         assert abs(est - exact[et]) / exact[et] < 0.05, (et, est, exact[et])
 
+    # sketch per (event_type, shard), then union the shard sketches
     ev = load_table(spark, sf_dir, "events")
+    partials = ev.groupBy(
+        "event_type", F.pmod(F.col("event_id"), F.lit(7))
+    ).agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("partial"))
     merged = {
         r["event_type"]: r["approx_distinct"]
-        for r in SK.hll_distinct_merged(
-            ev, ["event_type"], "user_id", F.pmod(F.col("event_id"), F.lit(7))
+        for r in partials.groupBy("event_type").agg(
+            F.hll_sketch_estimate(F.hll_union_agg("partial")).alias(
+                "approx_distinct"
+            )
         ).collect()
     }
     assert merged == approx, "sharded-union sketch diverged from single-pass"

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis): upsert/MERGE semantics and the
-strict-cast error surface — the reference behaviors that are easy to get
+CSV dialect round-trip — the reference behaviors that are easy to get
 subtly wrong (SURVEY §7 'What's hard')."""
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from component_iceberg_spark.io.snaptable import SnapCatalog
-from component_iceberg_spark.typebridge import UserDataError, strict_cast_columns
 
 rows = st.lists(
     st.tuples(st.integers(0, 15), st.integers(0, 100)), min_size=0, max_size=25
@@ -61,16 +60,6 @@ def test_upsert_idempotent(spark, tmp_path):
     cat.upsert("ns", "t", df, keys=["k"])
     cat.upsert("ns", "t", df, keys=["k"])
     assert cat.read(spark, "ns", "t").count() == 2
-
-
-def test_strict_cast_ok_and_fail(spark):
-    ok = spark.createDataFrame([("1",), ("2",), (None,)], schema="x string")
-    out = strict_cast_columns(ok, {"x": "int"})
-    assert [r.x for r in out.orderBy("x").collect()] == [None, 1, 2]
-
-    bad = spark.createDataFrame([("1",), ("abc",)], schema="x string")
-    with pytest.raises(UserDataError, match="x -> int"):
-        strict_cast_columns(bad, {"x": "int"})
 
 
 # CSV dialect round-trip: quotes, embedded delimiters/newlines, unicode,
@@ -938,6 +927,110 @@ def test_merge_matches_model(
         insert_when=lambda v: v % dmod != 0,
     )
     assert got == want
+
+
+# SQL condition → the same test on a Python value; NULL makes any
+# comparison NULL, which the MERGE counts as false
+_CONDS = {
+    "v % 2 = 0": lambda v: v is not None and v % 2 == 0,
+    "v > 10": lambda v: v is not None and v > 10,
+    "v IS NULL": lambda v: v is None,
+    "v % 3 <> 0": lambda v: v is not None and v % 3 != 0,
+}
+_key_rows = st.lists(
+    st.tuples(
+        st.none() | st.integers(0, 2),
+        st.none() | st.sampled_from(["a", "b"]),
+        st.none() | st.integers(0, 20),
+    ),
+    min_size=0, max_size=14,
+)
+_clause = st.none() | st.sampled_from(sorted(_CONDS))
+
+
+def _model_merge_composite(
+    base: list, source: list, delete_when, update_when, insert_when
+) -> list:
+    """Last-wins MERGE over composite keys in plain Python. ``source``
+    rows are ``((k1, k2), v)`` in arrival order; the last row of a key
+    wins, NULL key fields comparing equal as in the engine's dedupe.
+    A key with a NULL field matches no target row (SQL equality), so its
+    source row can only insert. A matched key loses ALL its target rows
+    on delete or update."""
+    last = {}
+    for key, v in source:
+        last[key] = v
+    state = list(base)
+    for key, v in last.items():
+        matched = None not in key and any(k == key for k, _ in state)
+        if matched:
+            if delete_when(v):
+                state = [r for r in state if r[0] != key]
+            elif update_when(v):
+                state = [r for r in state if r[0] != key] + [(key, v)]
+        elif insert_when(v):
+            state.append((key, v))
+    return state
+
+
+@pytest.mark.parametrize("hyp", [None])
+@settings(
+    max_examples=16,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    base=_key_rows, source=_key_rows, verb=st.sampled_from(["upsert", "merge"]),
+    dups=st.booleans(), ordered=st.booleans(),
+    delete_when=_clause, update_when=_clause, insert_when=_clause,
+)
+def test_upsert_and_merge_match_last_wins_model(
+    spark, tmp_path_factory, hyp, base, source, verb, dups, ordered,
+    delete_when, update_when, insert_when,
+):
+    """upsert, and merge under random WHEN clauses, on a composite key
+    (k1, k2) whose fields may be NULL, against a last-wins Python model.
+    ``dups`` keeps the source's duplicate keys (the dedupe window path);
+    otherwise the source is key-unique (the path that skips the window).
+    With ``ordered`` the winner is the last row by ``ord``; without
+    ``order_by`` a key's duplicates are full-row copies, so any winner
+    is the model's."""
+    schema = "k1 int, k2 string, v int, ord int"
+    src = [((k1, k2), v) for k1, k2, v in source]
+    if not dups:
+        src = list(dict(src).items())
+    if not ordered:
+        last = dict(src)
+        src = [(key, last[key]) for key, _ in src]
+    cat = SnapCatalog(str(tmp_path_factory.mktemp("wh")))
+    cat.create_or_replace(
+        "ns", "t",
+        spark.createDataFrame(
+            [(k1, k2, v, 0) for k1, k2, v in base], schema=schema
+        ),
+    )
+    sdf = spark.createDataFrame(
+        [(*key, v, i if ordered else 0) for i, (key, v) in enumerate(src)],
+        schema=schema,
+    )
+    order_by = "ord" if ordered else None
+    if verb == "upsert":
+        delete_when = update_when = insert_when = None
+        cat.upsert("ns", "t", sdf, keys=["k1", "k2"], order_by=order_by)
+    else:
+        cat.merge(
+            "ns", "t", sdf, keys=["k1", "k2"], delete_when=delete_when,
+            update_when=update_when, insert_when=insert_when,
+            order_by=order_by,
+        )
+    want = _model_merge_composite(
+        [((k1, k2), v) for k1, k2, v in base], src,
+        _CONDS[delete_when] if delete_when else lambda v: False,
+        _CONDS[update_when] if update_when else lambda v: True,
+        _CONDS[insert_when] if insert_when else lambda v: True,
+    )
+    got = [((r.k1, r.k2), r.v) for r in cat.read(spark, "ns", "t").collect()]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
 def test_containment_detects_crafted_excerpt(spark, monkeypatch):

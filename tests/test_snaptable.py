@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import time
 
 import pytest
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 
 from component_iceberg_spark.io.snaptable import SnapCatalog
 from component_iceberg_spark.io.tables import load_table
-from tests.conftest import write_legacy_delete
+from tests.conftest import spark_jobs_during, write_legacy_delete
 
 
 def _data_files(wh: str, ns: str, tbl: str, commit_dirs: list[str]) -> int:
@@ -97,6 +98,57 @@ def test_upsert_tiebreak_encoding_unambiguous(spark, tmp_path):
             [(r.v1, r.v2) for r in cat.read(spark, "ns", "t").collect()]
         )
     assert winners[0] == winners[1]
+
+
+def test_upsert_skips_dedupe_window_for_key_unique_source(
+    spark, tmp_path, monkeypatch
+):
+    """A source the bounds job proves key-unique, with a deterministic
+    plan, commits without the dedupe window: no Window in the written
+    plan and at least two Spark jobs fewer than the same upsert with one
+    duplicated key. A duplicate-key source and a rand()-derived
+    (nondeterministic) source keep the window."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    written = []
+    real_commit = cat._commit
+
+    def spy(namespace, table, df, **kw):
+        written.append(df)
+        return real_commit(namespace, table, df, **kw)
+
+    monkeypatch.setattr(cat, "_commit", spy)
+
+    def windows(df) -> int:
+        p = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted"
+        )
+        return len(re.findall(r"\(\d+\) Window", p))
+
+    cat.create_or_replace(
+        "ns", "t",
+        spark.range(2000).select(
+            F.col("id").cast("int").alias("k"), (F.col("id") * 2).alias("v")
+        ),
+    )
+    uniq = spark.range(1000, 3000).select(
+        F.col("id").cast("int").alias("k"), (F.col("id") * 3).alias("v")
+    )
+    dup = uniq.unionByName(spark.createDataFrame([(1500, 7)], "k int, v long"))
+    _, uniq_jobs = spark_jobs_during(
+        spark, lambda: cat.upsert("ns", "t", uniq, ["k"])
+    )
+    assert windows(written[-1]) == 0
+    _, dup_jobs = spark_jobs_during(
+        spark, lambda: cat.upsert("ns", "t", dup, ["k"])
+    )
+    assert windows(written[-1]) >= 1
+    assert uniq_jobs + 2 <= dup_jobs, (uniq_jobs, dup_jobs)
+    noisy = uniq.withColumn("v", (F.rand(7) * 1000).cast("long"))
+    cat.upsert("ns", "t", noisy, ["k"])
+    assert windows(written[-1]) >= 1
+    got = cat.read(spark, "ns", "t")
+    assert got.count() == 3000
+    assert got.select("k").distinct().count() == 3000
 
 
 def test_drop_table(spark, sf_dir, tmp_path):
@@ -4021,7 +4073,7 @@ def test_delta_key_pruning_system_timezone(spark, tmp_path):
     try:
         os.environ["TZ"] = "America/New_York"
         _time.tzset()
-        cand, untouched = cat._delta_key_pruning(m, delta, ["ts"])
+        cand, untouched, _ = cat._delta_key_pruning(m, delta, ["ts"])
     finally:
         if prev_tz is None:
             os.environ.pop("TZ", None)
