@@ -92,18 +92,23 @@ def run_extractor(
     """Catalog table → CSV/Parquet export, one lazy plan."""
     cfg.validate()
     cat = _catalog(cfg)
-    df = cat.read(
-        spark, cfg.source.namespace, cfg.source.table_name,
-        snapshot_id=cfg.source.snapshot_id,
-    )
+    src = cfg.source
+    sid, stored = src.snapshot_id, None
+    if isinstance(cat, SnapCatalog) and not cfg.custom_query:
+        # the limit is planned from the manifest, as pyiceberg's
+        # scan(limit=) does: a snapshot that stores no more rows than
+        # the cap needs no single-partition limit stage before the write
+        sid, stored = cat.stored_rows(src.namespace, src.table_name, sid)
+    df = cat.read(spark, src.namespace, src.table_name, snapshot_id=sid)
     if cfg.custom_query:
         # declared in the reference UI, unimplemented there
         # (configRowSchema.json:94-107); here: plain Spark SQL over the table
-        df.createOrReplaceTempView(cfg.source.table_name)
+        df.createOrReplaceTempView(src.table_name)
         df = spark.sql(cfg.custom_query)
     elif cfg.data_selection.mode == SELECT_COLUMNS:
         df = scan.scan_projection(df, cfg.data_selection.columns)
-    df = scan.scan_limit(df, cfg.limit)
+    if stored is None or stored > cfg.limit:
+        df = scan.scan_limit(df, cfg.limit)
 
     dest = cfg.destination
     if dest.parquet_output:

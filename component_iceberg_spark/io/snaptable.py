@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from component_iceberg_spark.io import partition_spec
-from component_iceberg_spark.session import local_relation
+from component_iceberg_spark.session import kernel_width, local_relation
 
 
 class SnapshotNotFound(Exception):
@@ -1156,9 +1156,12 @@ class SnapCatalog:
 
         One aggregate job over the delta's key columns reads the per-key
         min/max, the row count and the exact count of distinct key
-        tuples. The distinct count groups the tuple the way the merge's
-        dedupe window partitions it: NULL key fields compare equal and
-        floating keys are normalized (-0.0 = 0.0, one NaN). Returns
+        tuples; a delta under the byte gate's one-task size
+        (:func:`session.kernel_width`) aggregates in a single partition,
+        which plans no exchange. The distinct count groups the tuple the
+        way the merge's dedupe window partitions it: NULL key fields
+        compare equal and floating keys are normalized (-0.0 = 0.0, one
+        NaN). Returns
         ``(candidate_dirs, untouched_dirs, keys_unique)``; ``keys_unique``
         is true when no key tuple occurs twice in this evaluation of the
         delta."""
@@ -1169,6 +1172,10 @@ class SnapCatalog:
             F.count(F.lit(1)).alias("_rows"),
             F.count_distinct(F.struct(*keys)).alias("_keys"),
         ]
+        # a source the byte gate sizes to one task aggregates in one
+        # partition: no exchange, so one Spark job instead of three
+        if kernel_width(delta, floor=1) == 1:
+            delta = delta.coalesce(1)
         bounds = delta.agg(*aggs).collect()[0]
         keys_unique = bounds["_rows"] == bounds["_keys"]
         # collect() renders tz-adjusted TimestampType in the SYSTEM
@@ -1201,27 +1208,22 @@ class SnapCatalog:
             return (*self._split_by_stats(manifest, conjuncts), keys_unique)
         return list(manifest["files"]), [], keys_unique
 
-    def compact(
-        self,
-        spark: SparkSession,
-        namespace: str,
-        table: str,
-        target_partitions: int | None = None,
-    ) -> int:
+    def compact(self, spark: SparkSession, namespace: str, table: str) -> int:
         """Compaction commit: rewrite the current snapshot's (possibly
-        many, possibly small) data directories into one coalesced
-        directory — content-identical, metadata flipped atomically.
+        many, possibly small) data directories into one directory —
+        content-identical, metadata flipped atomically.
 
         The Iceberg analogue is ``rewrite_data_files``; the point at scale
         is the same: appends/upserts accrete small files, and scan cost is
         dominated by file count once files are smaller than
-        ``maxPartitionBytes``. Readers of prior snapshots are unaffected
-        (their manifests still reference the old directories).
+        ``maxPartitionBytes``. The rewrite is sized like every
+        table-derived write (:meth:`_commit`): below the byte gate it
+        writes at most one file per core, above it one per scan split.
+        Readers of prior snapshots are unaffected (their manifests still
+        reference the old directories).
         """
         base = self._current_sid(namespace, table)
         df = self.read(spark, namespace, table, snapshot_id=base)
-        if target_partitions:
-            df = df.coalesce(target_partitions)
         # compaction MATERIALIZES pending merge-on-read deletes (the read
         # above applied them) and clears the entries — Iceberg's
         # rewrite_data_files + rewrite_position_delete_files in one
@@ -3379,20 +3381,31 @@ class SnapCatalog:
         """count(*) answered from manifest metadata — NO data scan, no
         Spark job (Iceberg answers count(*) from manifest row counts the
         same way). Raises if the manifest predates row-count tracking."""
-        sid = snapshot_id or self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, sid)
-        dirs = manifest.get("dirs", {})
-        rows = [dirs.get(d, {}).get("rows") for d in manifest["files"]]
-        if None in rows:
+        sid, rows = self.stored_rows(namespace, table, snapshot_id)
+        if rows is None:
             raise ValueError(
                 f"{namespace}.{table}@{sid}: manifest lacks row counts"
             )
-        if manifest.get("deletes"):
+        if self._manifest(namespace, table, sid).get("deletes"):
             raise ValueError(
                 f"{namespace}.{table}@{sid}: pending merge-on-read deletes;"
                 " exact count needs a scan (or compact first)"
             )
-        return sum(rows)
+        return rows
+
+    def stored_rows(
+        self, namespace: str, table: str, snapshot_id: int | None = None
+    ) -> tuple[int, int | None]:
+        """``(sid, rows)``: the snapshot id (the given one, else the
+        current) and the rows stored in its data dirs, from the manifest
+        — an upper bound on the rows a read of ``sid`` returns (pending
+        deletes only remove rows). ``rows`` is None when a dir predates
+        row-count tracking."""
+        sid = snapshot_id or self._current_sid(namespace, table)
+        manifest = self._manifest(namespace, table, sid)
+        dirs = manifest.get("dirs", {})
+        rows = [dirs.get(d, {}).get("rows") for d in manifest["files"]]
+        return sid, None if None in rows else sum(rows)
 
     def read_appends_between(
         self,
@@ -4164,9 +4177,15 @@ class SnapCatalog:
         to the dirs still listed.
 
         ``base_sid`` is the head the operation's inputs were read from
-        (:meth:`_publish`'s conflict rule). An append (``carry``) has no
-        base and rebuilds on whatever head it meets. A replace has none
-        either: its base is pinned to the head seen after the data
+        (:meth:`_publish`'s conflict rule). A data write with a base is
+        derived from the table (a MERGE, a copy-on-write rewrite, an
+        UPDATE's images, a compaction); below the byte gate
+        (:func:`session.kernel_width`) it is coalesced to one task per
+        core, so it writes at most one file per core rather than one per
+        scanned split. Appends, replaces, ``sort_by`` and
+        hive-partitioned writes keep their layout. An append (``carry``)
+        has no base and rebuilds on whatever head it meets. A replace has
+        none either: its base is pinned to the head seen after the data
         write, so it wins over whatever landed during the write (last
         writer wins) while a publish collision raises. A commit with
         ``carry`` or a base inherits the table's layout for every layout
@@ -4237,6 +4256,15 @@ class SnapCatalog:
                     df = df.repartitionByRange(
                         n, *[F.col(c) for c in sort_by]
                     ).sortWithinPartitions(*sort_by)
+                elif base_sid is not None and not partition_by:
+                    # a rewrite derived from the table: one split per
+                    # small file would write one file per split, so the
+                    # file count would grow with history; below the byte
+                    # gate it writes one file per core instead
+                    par = df.sparkSession.sparkContext.defaultParallelism
+                    width = kernel_width(df, floor=par)
+                    if width:
+                        df = df.coalesce(width)
                 data_dir_name = f"commit-{uuid.uuid4().hex[:12]}"
                 out_dir = claim("data", data_dir_name)
                 writer = df.write.mode("overwrite")

@@ -32,9 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from component_iceberg_spark.operators.similarity import kernel_width
 from component_iceberg_spark.operators.text import text_shingles, tokens
-from component_iceberg_spark.session import release_local_checkpoint
+from component_iceberg_spark.session import kernel_width, release_local_checkpoint
 
 NUM_HASHES = 12
 BANDS = 4
@@ -55,7 +54,7 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     and a small input (one parquet file → one partition) would otherwise
     pin the whole corpus to a single core. The spread width comes from
     the INPUT, by the byte gate every small-input kernel uses
-    (:func:`similarity.kernel_width`): a batch-sized input spreads to one
+    (:func:`session.kernel_width`): a batch-sized input spreads to one
     task per core, and everything keyed on ``doc`` downstream — the
     signature aggregate, and any cached shingles a join reads — inherits
     that width. An explicit ``repartition(n)`` is never coalesced by
@@ -78,7 +77,7 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def _spread_width(df: DataFrame) -> int:
     """Width of an explicit keyed spread of ``df``. Below the small-input
-    byte gate (:func:`similarity.kernel_width`) it is one task per core:
+    byte gate (:func:`session.kernel_width`) it is one task per core:
     the spread exists to put the regex and signing work on every core,
     and a floor of fewer tasks would leave cores idle. At real scale, or
     for data with no stored bytes to size by, it is the session's

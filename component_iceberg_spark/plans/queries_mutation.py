@@ -341,14 +341,15 @@ def snap_catalog_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snap_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compaction (north-star 'read/write/compaction'): three append
     commits accrete small files; compact() rewrites them into one
-    coalesced directory as a new snapshot — content must be IDENTICAL to
-    the pre-compaction table, and prior snapshots stay readable."""
+    directory (at most one file per core below the byte gate) as a new
+    snapshot — content must be IDENTICAL to the pre-compaction table,
+    and prior snapshots stay readable."""
     cat = _warehouse(sf_dir, "compact")
     o = load_table(spark, sf_dir, "orders")
     cat.create_or_replace("ns", "orders", o.filter(F.col("o_orderkey") % 3 == 0))
     cat.append("ns", "orders", o.filter(F.col("o_orderkey") % 3 == 1))
     cat.append("ns", "orders", o.filter(F.col("o_orderkey") % 3 == 2))
-    cat.compact(spark, "ns", "orders", target_partitions=4)
+    cat.compact(spark, "ns", "orders")
     return cat.read(spark, "ns", "orders")
 
 

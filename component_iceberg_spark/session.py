@@ -11,7 +11,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -146,6 +146,68 @@ def local_relation(spark, rows, schema, rows_per_slice: int = 8192):
         rows, max(1, len(rows) // rows_per_slice + 1)
     )
     return spark.createDataFrame(rdd, schema)
+
+
+def source_bytes(df: DataFrame) -> int | None:
+    """Bytes of stored data under a plan, or None for generated or
+    in-memory data.
+
+    Sums the size Spark records for each leaf of the ANALYZED plan: a
+    file relation's on-disk bytes, or a ``LogicalRDD``'s origin size (a
+    ``foreachBatch`` micro-batch or a checkpoint carries the stats of
+    the plan it came from). The analyzed plan is read because it still
+    holds the leaves a cache hides: ``inputFiles()`` of a persisted
+    DataFrame is empty, so a byte rule built on it went blind the moment
+    a caller persisted its input. Any other leaf (``range``, local rows)
+    gives None; an RDD of in-memory rows reports Spark's unknown size
+    (``Long.MaxValue``), which every byte threshold then declines."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        total = 0
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() not in (
+                "LogicalRelation", "LogicalRDD"
+            ):
+                return None
+            total += int(leaf.stats().sizeInBytes())
+    except Exception:
+        return None
+    return total
+
+
+def kernel_width(
+    df: DataFrame, per_task_bytes: int = 8 << 20, floor: int = 2
+) -> int | None:
+    """Task width for a SMALL stored input, or None.
+
+    Every Python-kernel task (``mapInPandas`` / ``applyInPandas``) pays
+    a fixed JVM→Python worker round-trip (~20-50 ms) — even an EMPTY
+    post-shuffle partition spins a worker — and both the session's scan
+    floor (``files.minPartitionNum``) and AQE's parallelism-first
+    coalescing keep tiny inputs at full cluster width, a policy tuned
+    for CPU-heavy JVM stages (r15 profile: sim_knn_graph_clusters' wall
+    was 32 near-empty Python tasks). The same floor hits JVM stages fed
+    by an explicit ``repartition(n)``, which AQE never coalesces (the
+    MinHash shingle spread, :func:`operators.dedup.doc_shingles`). When
+    the plan's stored bytes (:func:`source_bytes`) total LESS than one
+    ``per_task_bytes`` slice per core, return ~one task per slice
+    (floored; the cap is the core count); otherwise None, so at real
+    scale (or for generated / in-memory plans) callers keep the
+    cluster-width policy. The snapshot catalog sizes its table-derived
+    rewrites and its MERGE bounds job by the same gate.
+
+    ``floor`` is the kernel-shape knob: per-ROW kernels do O(bytes)
+    work, so bytes size them and the floor is a straggler spare (2);
+    per-BUCKET kernels do O(n_b²) work the byte count cannot see —
+    exactly the fan-out blindness that breaks AQE on expansion joins —
+    so group callers pass a higher CPU floor (measured: the hyperplane
+    band verify at width 2 serialized its gram blocks, 0.95 → 1.6 s)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    total = source_bytes(df)
+    if not total or total >= per_task_bytes * par:
+        return None
+    return min(par, max(floor, total // per_task_bytes + 1))
 
 
 def release_local_checkpoint(df, blocking: bool = False) -> None:

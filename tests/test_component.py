@@ -63,6 +63,39 @@ def test_extractor_projection_and_parquet(spark, sf_dir, warehouse, tmp_path):
     assert back.columns == ["n_name"]
 
 
+def test_extractor_plans_limit_from_manifest_rows(
+    spark, sf_dir, warehouse, tmp_path
+):
+    """A snapshot that stores no more rows than the cap exports without
+    the limit stage: the same rows in one Spark job instead of two. The
+    stored total is an upper bound, so a table with pending
+    merge-on-read deletes still exports exactly its visible rows; a cap
+    below the stored total keeps the limit."""
+    cat = SnapCatalog(warehouse)
+    n = load_table(spark, sf_dir, "nation")
+    cfg = _extract_cfg(warehouse, parquet_output=True)
+    res, jobs = spark_jobs_during(
+        spark, lambda: run_extractor(spark, cfg, str(tmp_path / "a"))
+    )
+    assert jobs == 1, jobs
+    assert sorted(spark.read.parquet(res.path).collect()) == sorted(
+        n.collect()
+    )
+    capped = _extract_cfg(warehouse, parquet_output=True)
+    capped.limit = 10
+    res, jobs = spark_jobs_during(
+        spark, lambda: run_extractor(spark, capped, str(tmp_path / "b"))
+    )
+    assert jobs == 2, jobs
+    assert spark.read.parquet(res.path).count() == 10
+    cat.delete_where_mor(spark, "ns", "nation", "n_regionkey = 1")
+    assert cat.stored_rows("ns", "nation")[1] == n.count()
+    res = run_extractor(spark, cfg, str(tmp_path / "c"))
+    assert sorted(spark.read.parquet(res.path).collect()) == sorted(
+        n.filter("n_regionkey <> 1").collect()
+    )
+
+
 def test_extractor_custom_query(spark, sf_dir, warehouse, tmp_path):
     cfg = _extract_cfg(warehouse, parquet_output=True)
     cfg.custom_query = "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY 1"

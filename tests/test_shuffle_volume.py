@@ -393,10 +393,8 @@ def test_kernel_width_small_input_and_scale_noop(spark, sf_dir):
     policies stand at scale. kernel_sized applies it as a shuffle-free
     coalesce."""
     from component_iceberg_spark.io.tables import load_table
-    from component_iceberg_spark.operators.similarity import (
-        kernel_sized,
-        kernel_width,
-    )
+    from component_iceberg_spark.operators.similarity import kernel_sized
+    from component_iceberg_spark.session import kernel_width
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     w = kernel_width(e)

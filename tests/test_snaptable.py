@@ -34,7 +34,7 @@ def test_compaction_reduces_files_keeps_history(spark, sf_dir, tmp_path):
     pre_files = _data_files(wh, "ns", "t", pre_manifest["files"])
     pre_count = cat.read(spark, "ns", "t").count()
 
-    sid = cat.compact(spark, "ns", "t", target_partitions=1)
+    sid = cat.compact(spark, "ns", "t")
     post_manifest = cat._manifest("ns", "t", sid)
     post_files = _data_files(wh, "ns", "t", post_manifest["files"])
 
@@ -44,6 +44,83 @@ def test_compaction_reduces_files_keeps_history(spark, sf_dir, tmp_path):
     assert cat.read(spark, "ns", "t", snapshot_id=1).count() == o.count()
     ops = [r.operation for r in cat.snapshots(spark, "ns", "t").collect()]
     assert ops == ["replace", "append", "compact"]
+
+
+def _one_file_dirs(spark, cat, tmp_path, n: int):
+    """``ns.t`` built from ``n`` one-file commits of 100 keys each, every
+    commit read back from a stored Parquet file (so it has stored
+    bytes for the byte gate to size)."""
+    for i in range(n):
+        path = str(tmp_path / f"src{i}")
+        spark.range(i * 100, (i + 1) * 100).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        ).coalesce(1).write.parquet(path)
+        commit = cat.create_or_replace if i == 0 else cat.append
+        commit("ns", "t", spark.read.parquet(path))
+
+
+def _head_files(cat, wh: str) -> int:
+    head = cat._manifest("ns", "t", cat._head_sid("ns", "t"))
+    return _data_files(wh, "ns", "t", head["files"])
+
+
+def test_compact_writes_at_most_one_file_per_core(spark, tmp_path):
+    """compact() sizes its rewrite by the table's stored bytes: twelve
+    one-file commits compact to at most one file per core (it used to
+    write one file per scanned split, 12 → 12), rows identical."""
+    wh = str(tmp_path / "wh")
+    cat = SnapCatalog(wh)
+    _one_file_dirs(spark, cat, tmp_path, 12)
+    assert _head_files(cat, wh) == 12
+    before = sorted(cat.read(spark, "ns", "t").collect())
+    cat.compact(spark, "ns", "t")
+    assert _head_files(cat, wh) <= spark.sparkContext.defaultParallelism
+    assert sorted(cat.read(spark, "ns", "t").collect()) == before
+
+
+def test_table_derived_rewrite_writes_at_most_one_file_per_core(
+    spark, tmp_path, monkeypatch
+):
+    """An upsert whose key range covers N one-file dirs rewrites them in
+    at most one file per core (it used to write N + 1), and successive
+    upserts keep the head's file count bounded instead of growing with
+    history. A small key-unique stored source upserts in 3 Spark jobs:
+    its bounds aggregate runs in one partition, so it plans no
+    exchange. An in-memory source has no stored bytes: the gate
+    declines and its write keeps its plan (no Coalesce)."""
+    wh = str(tmp_path / "wh")
+    cat = SnapCatalog(wh)
+    _one_file_dirs(spark, cat, tmp_path, 12)
+    par = spark.sparkContext.defaultParallelism
+    for j in range(3):
+        path = str(tmp_path / f"delta{j}")
+        spark.range(0, 1200, 7).select(
+            F.col("id").alias("k"), (F.col("id") * 3 + j).alias("v")
+        ).coalesce(1).write.parquet(path)
+        delta = spark.read.parquet(path)
+        _, jobs = spark_jobs_during(
+            spark, lambda: cat.upsert("ns", "t", delta, ["k"])
+        )
+        assert jobs <= 3, (j, jobs)
+        assert _head_files(cat, wh) <= par, j
+    got = {r.k: r.v for r in cat.read(spark, "ns", "t").collect()}
+    assert len(got) == 1200
+    assert all(got[k] == (k * 3 + 2 if k % 7 == 0 else k * 2) for k in got)
+
+    written = []
+    real_parquet = type(spark.range(1).write).parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df._jdf.queryExecution().analyzed().toString())
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark.range(1).write), "parquet", spy)
+    cat.upsert("ns", "t", spark.read.parquet(path), ["k"])
+    assert "Repartition" in written[-1]  # the coalesce above the rewrite
+    mem = spark.createDataFrame([(3, 9), (5000, 1)], "k long, v long")
+    cat.upsert("ns", "t", mem, ["k"])
+    assert "Repartition" not in written[-1]
+    assert cat.read(spark, "ns", "t").count() == 1201
 
 
 def test_upsert_without_order_by_is_deterministic(spark, sf_dir, tmp_path):

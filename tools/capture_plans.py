@@ -3,7 +3,9 @@
 into plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<label>.txt (default r16) —
 the before/after plan evidence for the optimization round. A query that
 commits to a ``SnapCatalog`` also gets <query>_write_<label>.txt: the plan
-of every DataFrame its commits write, in commit order.
+of every data write its commits make, as ``_commit`` hands it to the
+Parquet writer, in commit order. A query that upserts or merges also gets
+<query>_bounds_<label>.txt: the plan of each MERGE key-range bounds job.
 
 Usage: python tools/capture_plans.py <label> [query ...]
 (no query args = the bench HEADLINE tuple)
@@ -11,10 +13,9 @@ Usage: python tools/capture_plans.py <label> [query ...]
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
+import threading
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,10 +32,12 @@ OUT_DIR = os.path.join(
 
 
 def _explain(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    """``df.explain("formatted")``'s text, read without redirecting the
+    process-wide stdout, so queries that commit from concurrent lanes
+    record each plan whole."""
+    jvm = df.sparkSession.sparkContext._jvm
+    qe = df._jdf.queryExecution()
+    return jvm.PythonSQLUtils.explainString(qe, "formatted") + "\n"
 
 
 def main() -> int:
@@ -48,17 +51,43 @@ def main() -> int:
     registry = load_all()
     spark = get_spark("capture_plans")
     written: list[str] = []
-    real_commit = SnapCatalog._commit
+    bounds: list[str] = []
+    # per thread: the (catalog method, table) calls running
+    lane = threading.local()
 
-    def commit(self, namespace, table, df, *args, **kwargs):
-        if df is not None:
-            written.append(f"== {namespace}.{table} ==\n{_explain(df)}")
-        return real_commit(self, namespace, table, df, *args, **kwargs)
+    def within(kind, method):
+        def run(self, *args, **kwargs):
+            # _commit(namespace, table, ...) names its table
+            where = f"{args[0]}.{args[1]}" if kind == "commit" else kind
+            lane.inside = getattr(lane, "inside", []) + [(kind, where)]
+            try:
+                return method(self, *args, **kwargs)
+            finally:
+                lane.inside = lane.inside[:-1]
 
-    SnapCatalog._commit = commit
+        return run
+
+    def record(kind, out, method):
+        def run(self, *args, **kwargs):
+            inside = getattr(lane, "inside", [])
+            if inside and inside[-1][0] == kind:
+                df = self._df if kind == "commit" else self
+                out.append(f"== {inside[-1][1]} ==\n{_explain(df)}")
+            return method(self, *args, **kwargs)
+
+        return run
+
+    SnapCatalog._commit = within("commit", SnapCatalog._commit)
+    SnapCatalog._delta_key_pruning = within(
+        "bounds", SnapCatalog._delta_key_pruning
+    )
+    frame, writer = type(spark.range(1)), type(spark.range(1).write)
+    writer.parquet = record("commit", written, writer.parquet)
+    frame.collect = record("bounds", bounds, frame.collect)
     for name in names:
         q = registry[name]
         written.clear()
+        bounds.clear()
         try:
             text = _explain(q.fn(spark, SF_DIR))
         except Exception as e:  # noqa: BLE001 — record the failure, keep going
@@ -66,6 +95,8 @@ def main() -> int:
         outs = [(f"{name}_{label}.txt", text)]
         if written:
             outs.append((f"{name}_write_{label}.txt", "\n".join(written)))
+        if bounds:
+            outs.append((f"{name}_bounds_{label}.txt", "\n".join(bounds)))
         for fn, body in outs:
             out = os.path.join(OUT_DIR, fn)
             with open(out, "w") as fh:
