@@ -34,9 +34,13 @@ from __future__ import annotations
 import datetime as _dt
 import zlib
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+# parsing and predicate rewriting are plain Python, so the Spark-free
+# manifest layer imports this module; pyspark loads only where a
+# transform expression is built
+if TYPE_CHECKING:
+    from pyspark.sql import Column, DataFrame
 
 _TRANSFORMS = ("identity", "bucket", "truncate", "day", "month", "year")
 
@@ -88,10 +92,14 @@ def _bucket_col(col: Column, n: int) -> Column:
     # JVM-computed on write, and reproducible driver-side via zlib.crc32
     # for literal rewriting. Sound for int/string/date/timestamp sources
     # (types whose Spark string cast is canonical).
+    from pyspark.sql import functions as F
+
     return F.pmod(F.crc32(col.cast("string").cast("binary")), F.lit(n)).cast("int")
 
 
 def derived_column(field: PartitionField, col: Column) -> Column:
+    from pyspark.sql import functions as F
+
     t = field.transform
     if t == "identity":
         return col
@@ -115,6 +123,8 @@ def derived_column(field: PartitionField, col: Column) -> Column:
 def apply_spec(df: DataFrame, fields: list[PartitionField]) -> DataFrame:
     """Add the hidden partition columns (skipping identity: the source
     column itself is the partition column there)."""
+    from pyspark.sql import functions as F
+
     dtypes = dict(df.dtypes)
     for f in fields:
         if f.transform == "identity":

@@ -858,10 +858,10 @@ def snap_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
     cat.create_or_replace("ns", "orders", o)
-    cat.update_where_mor(
+    cat.update_where(
         spark, "ns", "orders", "o_orderkey % 100 = 7",
         {"o_totalprice": "o_totalprice + 100000",
-         "o_orderstatus": "'P'"},
+         "o_orderstatus": "'P'"}, mode="mor",
     )
     return cat.read(spark, "ns", "orders")
 
@@ -897,7 +897,7 @@ def snap_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snap_update_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE with the physical strategy chosen per statement
-    (``update_where_auto``, the UPDATE twin of ``snap_delete_auto`` —
+    (``update_where(mode="auto")``, the UPDATE twin of ``snap_delete_auto`` —
     together they complete the auto-dispatch matrix over both mutation
     verbs): a ~1% predicate must go merge-on-read (DV mask + image
     append, zero candidate dirs rewritten), a ~33% predicate must go
@@ -922,9 +922,9 @@ def snap_update_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _mod_lane(lane: str, mod: int, rem: int) -> DataFrame:
         cat.create_or_replace("ns", lane, o)
         pred = f"o_orderkey % {mod} = {rem}"
-        sid = cat.update_where_auto(
+        sid = cat.update_where(
             spark, "ns", lane, pred,
-            {"o_totalprice": "o_totalprice + 100000"},
+            {"o_totalprice": "o_totalprice + 100000"}, mode="auto",
         )
         deletes = cat._manifest("ns", lane, sid)["deletes"]
         if lane == "sparse" and [e.get("mode") for e in deletes] != ["dv"]:
@@ -951,9 +951,9 @@ def snap_update_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.create_or_replace(
             "ns", "range", o.repartitionByRange(8, "o_orderkey")
         )
-        sid = cat.update_where_auto(
+        sid = cat.update_where(
             spark, "ns", "range", f"o_orderkey > {k}",
-            {"o_totalprice": "o_totalprice + 100000"},
+            {"o_totalprice": "o_totalprice + 100000"}, mode="auto",
         )
         deletes = cat._manifest("ns", "range", sid)["deletes"]
         if deletes:
@@ -1173,7 +1173,7 @@ def snap_time_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snap_delete_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE with the physical strategy chosen per statement
-    (``delete_where_auto``): Iceberg pins merge-on-read vs
+    (``delete_where(mode="auto")``): Iceberg pins merge-on-read vs
     copy-on-write statically per table (``write.delete.mode``); here
     the engine picks per statement — AQE-style runtime physical
     selection for mutations. Three lanes over the same source: a ~1%
@@ -1200,8 +1200,8 @@ def snap_delete_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     def _mod_lane(lane: str, mod: int) -> DataFrame:
         cat.create_or_replace("ns", lane, o)
-        sid = cat.delete_where_auto(
-            spark, "ns", lane, f"o_orderkey % {mod} = 0"
+        sid = cat.delete_where(
+            spark, "ns", lane, f"o_orderkey % {mod} = 0", mode="auto"
         )
         deletes = cat._manifest("ns", lane, sid)["deletes"]
         if lane == "sparse" and [e.get("mode") for e in deletes] != ["dv"]:
@@ -1229,8 +1229,8 @@ def snap_delete_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.create_or_replace(
             "ns", "range", o.repartitionByRange(8, "o_orderkey")
         )
-        sid = cat.delete_where_auto(
-            spark, "ns", "range", f"o_orderkey <= {k}"
+        sid = cat.delete_where(
+            spark, "ns", "range", f"o_orderkey <= {k}", mode="auto"
         )
         deletes = cat._manifest("ns", "range", sid)["deletes"]
         if [e.get("mode") for e in deletes] != ["dv"]:

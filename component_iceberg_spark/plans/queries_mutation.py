@@ -204,9 +204,9 @@ def snap_append_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = with_row_index(load_table(spark, sf_dir, "nation"), ["n_name"])
     cat.create_namespace("ns")
     cat.append("ns", "nation_ordered", src.filter(F.col("_row_idx") <= 13),
-               sort_by=["_row_idx"], sort_partitions=3)
+               sort_by=["_row_idx"])
     cat.append("ns", "nation_ordered", src.filter(F.col("_row_idx") > 13),
-               sort_by=["_row_idx"], sort_partitions=3)
+               sort_by=["_row_idx"])
     df = cat.read_ordered(
         spark, "ns", "nation_ordered", with_position=True
     ).select(

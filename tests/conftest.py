@@ -131,8 +131,8 @@ def write_legacy_delete(cat, ns, table, pos_df, mode="positional"):
         "mode": mode,
         "applies_to": sorted(d for d in manifest["files"] if d in touched),
     }
-    return cat._commit(
-        ns, table, None, operation="delete", carry=False, base_sid=base,
+    return cat._commit_metadata(
+        ns, table, "delete", base_sid=base,
         carry_dirs=list(manifest["files"]),
         deletes=manifest.get("deletes", []) + [entry],
     )

@@ -88,7 +88,7 @@ def test_extractor_plans_limit_from_manifest_rows(
     )
     assert jobs == 2, jobs
     assert spark.read.parquet(res.path).count() == 10
-    cat.delete_where_mor(spark, "ns", "nation", "n_regionkey = 1")
+    cat.delete_where(spark, "ns", "nation", "n_regionkey = 1", mode="mor")
     assert cat.stored_rows("ns", "nation")[1] == n.count()
     res = run_extractor(spark, cfg, str(tmp_path / "c"))
     assert sorted(spark.read.parquet(res.path).collect()) == sorted(

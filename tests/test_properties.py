@@ -2261,7 +2261,7 @@ def test_range_bound_predicates_are_exact_duals(mn, span, op, lit):
     must ⇒ may. A false 'must' is a wrong copy-on-write dispatch (cost
     bug); a false 'not may' is rows silently surviving a DELETE
     (correctness bug) — the same contract stats pruning relies on."""
-    from component_iceberg_spark.io.snaptable import (
+    from component_iceberg_spark.io.manifest import (
         _range_may_match,
         _range_must_match,
     )
@@ -2295,7 +2295,7 @@ def test_range_bound_predicates_type_mismatch_is_conservative(mn, span, op):
     """A literal the stats' type cannot compare against (string vs int)
     must degrade each side to its SAFE answer: may_match True (never
     skip), must_match False (never claim certainty)."""
-    from component_iceberg_spark.io.snaptable import (
+    from component_iceberg_spark.io.manifest import (
         _range_may_match,
         _range_must_match,
     )

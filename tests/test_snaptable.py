@@ -1560,8 +1560,8 @@ def test_read_ordered_recovers_cross_commit_order(spark, tmp_path):
     cat = SnapCatalog(str(tmp_path / "wh"))
     a = spark.range(0, 50).select(F.col("id"))
     b = spark.range(50, 100).select(F.col("id"))
-    cat.append("ns", "t", a, sort_by=["id"], sort_partitions=3)
-    cat.append("ns", "t", b, sort_by=["id"], sort_partitions=3)
+    cat.append("ns", "t", a, sort_by=["id"])
+    cat.append("ns", "t", b, sort_by=["id"])
     df = cat.read_ordered(spark, "ns", "t", with_position=True)
     rows = [
         r.id
@@ -2390,7 +2390,7 @@ def test_bloom_float_probe_beyond_double_precision_never_skips(
     to the literal — the int-keyed probe would miss and wrongly skip the
     dir. Below 2**53 the conversion stays exact and pruning still
     works."""
-    from component_iceberg_spark.io.snaptable import bloom_maybe_contains
+    from component_iceberg_spark.io.manifest import bloom_maybe_contains
 
     big = 2**53 + 1  # rounds to 2**53 as a double
     cat = SnapCatalog(str(tmp_path / "wh"))
@@ -2531,14 +2531,14 @@ def test_add_files_crash_and_link_contracts(spark, sf_dir, tmp_path,
     cat.create_or_replace("ns", "t", o.filter("o_orderkey % 3 = 0"))
     adopt_root = os.path.join(cat.warehouse, "ns", "t", "adopted")
     # (a) in-band commit failure sweeps marker AND linked dir: retry OK
-    real_commit = cat._commit
+    real_commit = cat._commit_metadata
     monkeypatch.setattr(
-        cat, "_commit",
+        cat, "_commit_metadata",
         lambda *a, **k: (_ for _ in ()).throw(RuntimeError("boom")),
     )
     with pytest.raises(RuntimeError, match="boom"):
         cat.add_files(spark, "ns", "t", ext)
-    monkeypatch.setattr(cat, "_commit", real_commit)
+    monkeypatch.setattr(cat, "_commit_metadata", real_commit)
     assert os.listdir(adopt_root) == [], "failed attempt must sweep marker"
     sid = cat.add_files(spark, "ns", "t", ext)
     (fn,) = os.listdir(adopt_root)
@@ -2645,16 +2645,16 @@ def test_update_where_mor(spark, sf_dir, tmp_path):
     dirs_before = set(os.listdir(data_root))
     base_sid = cat._current_sid("ns", "t")
     # stats exclude every dir / zero rows match → no-op, no commit
-    assert cat.update_where_mor(
-        spark, "ns", "t", "o_orderkey < 0", {"o_totalprice": "0"}
+    assert cat.update_where(
+        spark, "ns", "t", "o_orderkey < 0", {"o_totalprice": "0"}, mode="mor"
     ) == base_sid
-    assert cat.update_where_mor(
+    assert cat.update_where(
         spark, "ns", "t", "o_orderkey % 2 = 0 AND o_orderkey % 2 = 1",
-        {"o_totalprice": "0"},
+        {"o_totalprice": "0"}, mode="mor",
     ) == base_sid
-    sid = cat.update_where_mor(
+    sid = cat.update_where(
         spark, "ns", "t", "o_orderkey % 50 = 3",
-        {"o_totalprice": "o_totalprice + 1000"},
+        {"o_totalprice": "o_totalprice + 1000"}, mode="mor",
     )
     m = cat._manifest("ns", "t", sid)
     # old dirs untouched; exactly one NEW dir (the updated images)
@@ -2678,8 +2678,9 @@ def test_update_where_mor(spark, sf_dir, tmp_path):
         and want.exceptAll(got).count() == 0
     )
     with pytest.raises(ValueError, match="pending"):
-        cat.update_where_mor(
-            spark, "ns", "t", "o_orderkey % 7 = 0", {"o_totalprice": "0"}
+        cat.update_where(
+            spark, "ns", "t", "o_orderkey % 7 = 0", {"o_totalprice": "0"},
+            mode="mor",
         )
     cat.compact(spark, "ns", "t")
     m2 = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
@@ -2709,25 +2710,26 @@ def test_update_where_auto_density_dispatch(spark, sf_dir, tmp_path):
     dirs0 = set(os.listdir(data_root))
     base = cat._current_sid("ns", "t")
     set_ = {"o_totalprice": "o_totalprice + 1000"}
-    assert cat.update_where_auto(
-        spark, "ns", "t", "o_orderkey < 0", set_
+    assert cat.update_where(
+        spark, "ns", "t", "o_orderkey < 0", set_, mode="auto"
     ) == base
-    assert cat.update_where_auto(
-        spark, "ns", "t", "o_orderkey % 2 = 0 AND o_orderkey % 2 = 1", set_
+    assert cat.update_where(
+        spark, "ns", "t", "o_orderkey % 2 = 0 AND o_orderkey % 2 = 1", set_,
+        mode="auto",
     ) == base
     # ~1% matched: MoR — DV entry, old dirs untouched, one image dir
-    sid = cat.update_where_auto(spark, "ns", "t", "o_orderkey % 97 = 0",
-                                set_)
+    sid = cat.update_where(spark, "ns", "t", "o_orderkey % 97 = 0",
+                           set_, mode="auto")
     m = cat._manifest("ns", "t", sid)
     assert [e.get("mode") for e in m["deletes"]] == ["dv"]
     assert dirs0 < set(os.listdir(data_root))
     # pending MoR delete entry forces CoW even for a sparse predicate
-    sid2 = cat.update_where_auto(spark, "ns", "t", "o_orderkey % 101 = 0",
-                                 set_)
+    sid2 = cat.update_where(spark, "ns", "t", "o_orderkey % 101 = 0",
+                            set_, mode="auto")
     assert cat._manifest("ns", "t", sid2)["deletes"] == []
     # 50% matched on a clean table: CoW — still no delete entry
-    sid3 = cat.update_where_auto(spark, "ns", "t", "o_orderkey % 2 = 0",
-                                 set_)
+    sid3 = cat.update_where(spark, "ns", "t", "o_orderkey % 2 = 0",
+                            set_, mode="auto")
     assert cat._manifest("ns", "t", sid3)["deletes"] == []
     want = o.withColumn(
         "o_totalprice",
@@ -2744,8 +2746,8 @@ def test_update_where_auto_density_dispatch(spark, sf_dir, tmp_path):
         and want.exceptAll(got).count() == 0
     )
     with pytest.raises(ValueError, match="SET targets"):
-        cat.update_where_mor(spark, "ns", "t", "o_orderkey = 1",
-                             {"not_a_column": "1"})
+        cat.update_where(spark, "ns", "t", "o_orderkey = 1",
+                         {"not_a_column": "1"}, mode="mor")
 
 
 def test_dv_apply_mode_threshold_matrix(tmp_path):
@@ -3359,8 +3361,10 @@ def test_delete_where_mor_dv(spark, sf_dir, tmp_path):
     dirs_before = set(os.listdir(data_root))
     # a predicate whose stats exclude every dir is a metadata-only no-op
     base_sid = cat._current_sid("ns", "t")
-    assert cat.delete_where_mor(spark, "ns", "t", "o_orderkey < 0") == base_sid
-    sid = cat.delete_where_mor(spark, "ns", "t", "o_orderkey % 4 = 0")
+    assert cat.delete_where(
+        spark, "ns", "t", "o_orderkey < 0", mode="mor"
+    ) == base_sid
+    sid = cat.delete_where(spark, "ns", "t", "o_orderkey % 4 = 0", mode="mor")
     assert set(os.listdir(data_root)) == dirs_before, "no rewrite"
     (entry,) = cat._manifest("ns", "t", sid)["deletes"]
     assert entry["mode"] == "dv"
@@ -3368,7 +3372,7 @@ def test_delete_where_mor_dv(spark, sf_dir, tmp_path):
     assert cat.read(spark, "ns", "t").count() == want
     # pending-delete refusal on a REAL predicate
     with pytest.raises(ValueError, match="pending"):
-        cat.delete_where_mor(spark, "ns", "t", "o_orderkey % 5 = 0")
+        cat.delete_where(spark, "ns", "t", "o_orderkey % 5 = 0", mode="mor")
     # later append of deleted keys is unmasked; compact materializes
     cat.append("ns", "t", o.filter("o_orderkey % 4 = 0").limit(3))
     assert cat.read(spark, "ns", "t").count() == want + 3
@@ -3396,16 +3400,21 @@ def test_delete_where_auto_density_dispatch(spark, sf_dir, tmp_path):
     dirs0 = set(os.listdir(data_root))
     base = cat._current_sid("ns", "t")
     # stats exclude every dir → no-op, no commit
-    assert cat.delete_where_auto(spark, "ns", "t", "o_orderkey < 0") == base
+    assert cat.delete_where(
+        spark, "ns", "t", "o_orderkey < 0", mode="auto"
+    ) == base
     # candidates exist but zero rows match → no-op, no commit
     assert (
-        cat.delete_where_auto(
-            spark, "ns", "t", "o_orderkey % 2 = 0 AND o_orderkey % 2 = 1"
+        cat.delete_where(
+            spark, "ns", "t", "o_orderkey % 2 = 0 AND o_orderkey % 2 = 1",
+            mode="auto",
         )
         == base
     )
     # ~1% doomed: MoR DV — no rewrite, stamped entry
-    sid = cat.delete_where_auto(spark, "ns", "t", "o_orderkey % 97 = 0")
+    sid = cat.delete_where(
+        spark, "ns", "t", "o_orderkey % 97 = 0", mode="auto"
+    )
     assert set(os.listdir(data_root)) == dirs0, "sparse must not rewrite"
     (entry,) = cat._manifest("ns", "t", sid)["deletes"]
     doomed_n = o.filter("o_orderkey % 97 = 0").count()
@@ -3415,7 +3424,9 @@ def test_delete_where_auto_density_dispatch(spark, sf_dir, tmp_path):
     want_sparse = o.filter("o_orderkey % 97 <> 0").count()
     assert cat.read(spark, "ns", "t").count() == want_sparse
     # pending MoR delete forces CoW even for a sparse predicate
-    sid2 = cat.delete_where_auto(spark, "ns", "t", "o_orderkey % 101 = 0")
+    sid2 = cat.delete_where(
+        spark, "ns", "t", "o_orderkey % 101 = 0", mode="auto"
+    )
     m2 = cat._manifest("ns", "t", sid2)
     assert m2["deletes"] == [], "pending-delete path materializes via CoW"
     want2 = o.filter(
@@ -3424,7 +3435,9 @@ def test_delete_where_auto_density_dispatch(spark, sf_dir, tmp_path):
     assert cat.read(spark, "ns", "t").count() == want2
     # 50% doomed: CoW — dirs rewritten, still no delete entry
     dirs1 = set(os.listdir(data_root))
-    sid3 = cat.delete_where_auto(spark, "ns", "t", "o_orderkey % 2 = 0")
+    sid3 = cat.delete_where(
+        spark, "ns", "t", "o_orderkey % 2 = 0", mode="auto"
+    )
     m3 = cat._manifest("ns", "t", sid3)
     assert m3["deletes"] == []
     assert set(os.listdir(data_root)) != dirs1, "dense must rewrite"
@@ -3529,7 +3542,7 @@ def test_auto_dispatch_stats_served_single_scan(spark, tmp_path,
     # decisive MoR: upper ≈ 250/1000 ≤ 0.5 → DV, no dispatch count
     monkeypatch.setattr(SnapCatalog, "COW_DENSITY", 0.5)
     cat, calls = tracked(str(tmp_path / "wh1"))
-    sid = cat.delete_where_auto(spark, "ns", "t", "id < 10")
+    sid = cat.delete_where(spark, "ns", "t", "id < 10", mode="auto")
     assert calls["n"] == 1, "stats-served dispatch must not scan to count"
     assert calls["fb"] == 0, "stamped: no footer walk for dispatch"
     (entry,) = cat._manifest("ns", "t", sid)["deletes"]
@@ -3538,7 +3551,7 @@ def test_auto_dispatch_stats_served_single_scan(spark, tmp_path,
 
     # decisive CoW: lower ≈ 750/1000 > 0.5 → rewrite, no dispatch count
     cat, calls = tracked(str(tmp_path / "wh2"))
-    sid = cat.delete_where_auto(spark, "ns", "t", "id >= 10")
+    sid = cat.delete_where(spark, "ns", "t", "id >= 10", mode="auto")
     assert calls["n"] == 1
     assert calls["fb"] == 0
     assert cat._manifest("ns", "t", sid)["deletes"] == []
@@ -3546,8 +3559,8 @@ def test_auto_dispatch_stats_served_single_scan(spark, tmp_path,
 
     # decisive MoR update: DV mask + image append, still one scan
     cat, calls = tracked(str(tmp_path / "wh3"))
-    sid = cat.update_where_auto(spark, "ns", "t", "id < 10",
-                                {"v": "v + 100000"})
+    sid = cat.update_where(spark, "ns", "t", "id < 10",
+                           {"v": "v + 100000"}, mode="auto")
     assert calls["n"] == 1
     assert calls["fb"] == 0
     assert [e["mode"] for e in cat._manifest("ns", "t", sid)["deletes"]] \
@@ -3562,7 +3575,7 @@ def test_auto_dispatch_stats_served_single_scan(spark, tmp_path,
     # old stats-free path paid a second full count for the denominator)
     monkeypatch.undo()  # the default threshold
     cat, calls = tracked(str(tmp_path / "wh4"))
-    sid = cat.delete_where_auto(spark, "ns", "t", "id % 97 = 0")
+    sid = cat.delete_where(spark, "ns", "t", "id % 97 = 0", mode="auto")
     assert calls["n"] == 2, "measured dispatch = one agg scan + the verb"
     (entry,) = cat._manifest("ns", "t", sid)["deletes"]
     assert entry["mode"] == "dv"
@@ -3819,9 +3832,9 @@ def test_auto_dispatch_footer_proof_noop_zero_scans(spark, sf_dir, tmp_path):
 
     cat._read_dirs = counting.__get__(cat)
     base = cat._current_sid("ns", "t")
-    assert cat.delete_where_auto(spark, "ns", "t", "id > 5000") == base
-    assert cat.update_where_auto(
-        spark, "ns", "t", "id > 5000", {"v": "v + 1"}
+    assert cat.delete_where(spark, "ns", "t", "id > 5000", mode="auto") == base
+    assert cat.update_where(
+        spark, "ns", "t", "id > 5000", {"v": "v + 1"}, mode="auto"
     ) == base
     assert calls["n"] == 0, "footer-proven-empty must scan nothing"
     assert cat._current_sid("ns", "t") == base  # commit-free
@@ -4027,7 +4040,7 @@ def test_dispatch_bounds_nan_float_guard(spark, tmp_path):
     cand, _skipped = cat._prune_dirs(m, "v > 5")
     assert cand == list(m["files"]), "read pruning must keep the dir"
     # the delete actually removes the NaN row end-to-end
-    cat.delete_where_auto(spark, "ns", "t", "v > 5")
+    cat.delete_where(spark, "ns", "t", "v > 5", mode="auto")
     got = [r["v"] for r in cat.read(spark, "ns", "t").collect()]
     assert sorted(got) == [1.0, 2.0] and not any(
         math.isnan(x) for x in got
@@ -4066,7 +4079,7 @@ def test_dispatch_bounds_timezone_guard(spark, tmp_path):
         assert cand == list(m["files"]), "non-UTC: ts must not prune"
         b = cat._dispatch_bounds("ns", "t", m, list(m["files"]), pred)
         assert b is not None and b[1] > 0, "non-UTC: no footer no-op"
-        sid = cat.delete_where_auto(spark, "ns", "t", pred)
+        sid = cat.delete_where(spark, "ns", "t", pred, mode="auto")
         assert cat.read(spark, "ns", "t").count() == 1
         assert sid != 1
     finally:
@@ -4103,7 +4116,7 @@ def test_dispatch_bounds_offset_literal(spark, tmp_path):
     assert cand == list(m["files"]), "offset literal must not mis-prune"
     b = cat._dispatch_bounds("ns", "t", m, list(m["files"]), pred)
     assert b is not None and b[1] > 0
-    cat.delete_where_auto(spark, "ns", "t", pred)
+    cat.delete_where(spark, "ns", "t", pred, mode="auto")
     assert cat.read(spark, "ns", "t").count() == 1
     # zone-explicit literals are session-independent: the footer PROOF
     # works even under a non-UTC session (where naive literals decline)
@@ -4211,7 +4224,7 @@ def test_cluster_rewrite_stamps_dir_bounds(spark, sf_dir, tmp_path):
         return real_fb(self, *a, **kw)
 
     cat._footer_bounds_records = counting.__get__(cat)
-    cat.delete_where_auto(spark, "ns", "t", "o_orderkey < 0")
+    cat.delete_where(spark, "ns", "t", "o_orderkey < 0", mode="auto")
     assert calls["fb"] == 0, "rewritten table must serve from manifest"
 
 
@@ -4220,7 +4233,7 @@ def test_compact_manifests_bounds_concat_cap(spark, tmp_path,
     """Review r15: the fold's bounds concatenation honors the same
     bloat cap as fresh stamps — an over-cap concatenation leaves the
     folded dir unstamped instead of growing the manifest unboundedly."""
-    from component_iceberg_spark.io import snaptable as st
+    from component_iceberg_spark.io import manifest as st
 
     cat = SnapCatalog(str(tmp_path / "wh"))
     ids = spark.range(100).select(F.col("id"))
@@ -4245,7 +4258,7 @@ def _ref_dir_column_stats(path):
     group lacks a usable min/max for is dropped, nested leaves skipped."""
     import pyarrow.parquet as pq
 
-    from component_iceberg_spark.io.snaptable import _stat_jsonable
+    from component_iceberg_spark.io.manifest import _stat_jsonable
 
     stats, dropped = {}, set()
     for root, _dirs, files in os.walk(path):
@@ -4282,7 +4295,7 @@ def _ref_dir_file_bounds(path, max_groups=512, max_stat_len=64):
     ``max_groups`` groups; over-long string stats left out."""
     import pyarrow.parquet as pq
 
-    from component_iceberg_spark.io.snaptable import _stat_jsonable
+    from component_iceberg_spark.io.manifest import _stat_jsonable
 
     records = []
     for root, _dirs, files in os.walk(path):
@@ -4321,7 +4334,7 @@ def test_dir_footer_metrics_matches_standalones(spark, sf_dir, tmp_path):
     replaced (stats / rows / bounds, kept as the test-local references
     above and ``dir_row_count``), including the drop-on-missing-stat
     and bounds-cap semantics, on a multi-file dir with nulls and strings."""
-    from component_iceberg_spark.io.snaptable import (
+    from component_iceberg_spark.io.manifest import (
         dir_footer_metrics,
         dir_row_count,
     )
@@ -4445,7 +4458,7 @@ def test_mutation_verb_outcome_matrix(spark, tmp_path, case, verb, mode):
         "no_candidate": "id > 5000",      # manifest stats prune every dir
         "zero_matches": "id % 1000 = 1001",  # no pruning, no match
     }.get(case, "id < 10")
-    fn = getattr(cat, f"{verb}_where" + ("" if mode == "cow" else f"_{mode}"))
+    fn = getattr(cat, f"{verb}_where")
     args = [spark, "ns", "t", predicate]
     if verb == "update":
         target = "nope" if case == "unknown_target" else "v"
@@ -4454,10 +4467,10 @@ def test_mutation_verb_outcome_matrix(spark, tmp_path, case, verb, mode):
     if want == "analysis":
         want = AnalysisException
     if isinstance(want, int):
-        assert fn(*args) == want
+        assert fn(*args, mode=mode) == want
     else:
         with pytest.raises(want):
-            fn(*args)
+            fn(*args, mode=mode)
     assert len(cat._snapshots("ns", "t")) == n_snaps
 
 
@@ -4492,8 +4505,8 @@ _CRASH_AUTHORS = {
     "delete_where": lambda spark, cat, src: cat.delete_where(
         spark, "ns", "t", "id < 5"
     ),
-    "delete_where_mor": lambda spark, cat, src: cat.delete_where_mor(
-        spark, "ns", "t", "id < 5"
+    "delete_where_mor": lambda spark, cat, src: cat.delete_where(
+        spark, "ns", "t", "id < 5", mode="mor"
     ),
     "update_where": lambda spark, cat, src: cat.update_where(
         spark, "ns", "t", "id < 5", {"v": "v + 1"}
@@ -4646,7 +4659,7 @@ def test_delete_file_authors_sweep_on_conflict(spark, tmp_path, author):
         elif author == "delete_positions":
             cat.delete_positions(spark, "ns", "t", doomed)
         elif author == "delete_where_mor":
-            cat.delete_where_mor(spark, "ns", "t", "id % 7 = 0")
+            cat.delete_where(spark, "ns", "t", "id % 7 = 0", mode="mor")
         else:
             cat.rewrite_deletes_to_dv(spark, "ns", "t")
     del cat._manifest
@@ -4686,10 +4699,10 @@ def test_mor_delete_conflicts_with_rival_rewrite(spark, tmp_path):
 
     a._read_dirs = racing_read_dirs.__get__(a)
     with pytest.raises(CommitConflict):
-        a.delete_where_mor(spark, "ns", "t", "id < 10")
+        a.delete_where(spark, "ns", "t", "id < 10", mode="mor")
     del a._read_dirs
     # the caller re-runs on the new state and the delete lands
-    a.delete_where_mor(spark, "ns", "t", "id < 10")
+    a.delete_where(spark, "ns", "t", "id < 10", mode="mor")
     assert a.read(spark, "ns", "t").filter("id < 10").count() == 0
     assert a.read(spark, "ns", "t").count() == 890
 
