@@ -16,10 +16,12 @@ Layout::
 A table exists exactly when ``snapshots/`` holds a manifest; the current
 snapshot is the highest manifest id. Besides ``files`` (the visible data
 dirs, in commit order) a manifest carries ``dirs``: one metadata record
-per data dir, ``{"rows", "stats", "bounds", "blooms", "schema"}``, each
-field present only where it was stamped (see :func:`_stamp_dir`). An
-absent record or field only disables a metadata shortcut (pruning,
-manifest row counts, the explicit-schema scan) — never correctness.
+per data dir, ``{"rows", "stats", "bounds", "blooms"}``, each field
+present only where it was stamped (see :func:`_stamp_dir`). An absent
+record or field only disables a metadata shortcut (pruning, manifest row
+counts) — never correctness. The manifest's ``schema`` is the one
+authority on the table's columns: every scan reads through it
+(:func:`read_schema_json`), never through the files' own schemas.
 
 Commits are atomic via write-temp-then-link of the manifest (the link
 fails if a rival published the id first, :meth:`ManifestStore._publish`);
@@ -53,43 +55,6 @@ from component_iceberg_spark.io import partition_spec
 _TS_FMT = "%Y-%m-%d %H:%M:%S.%f"
 _NUM_RE = re.compile(r"^-?\d+(\.\d+)?$")
 _CONJ_RE = re.compile(r"^\s*(\w+)\s*(=|!=|<>|<=|>=|<|>)\s*(.+?)\s*$")
-
-
-def _nullable_schema_json(t):
-    """Recursively force every nullability flag in a Spark schema JSON
-    tree to True — the shape parquet INFERENCE returns for any file
-    (file sources read all columns as nullable). Commit-time stamped
-    dir schemas are normalized through this so an explicit-schema scan
-    (:meth:`SnapCatalog._scan_schema`'s uniform fast path) produces a
-    read schema bit-identical to the mergeSchema inference it replaces."""
-    if isinstance(t, dict):
-        tt = t.get("type")
-        if tt == "struct":
-            return {
-                **t,
-                "fields": [
-                    {
-                        **f,
-                        "nullable": True,
-                        "type": _nullable_schema_json(f["type"]),
-                    }
-                    for f in t.get("fields", [])
-                ],
-            }
-        if tt == "array":
-            return {
-                **t,
-                "containsNull": True,
-                "elementType": _nullable_schema_json(t["elementType"]),
-            }
-        if tt == "map":
-            return {
-                **t,
-                "valueContainsNull": True,
-                "keyType": _nullable_schema_json(t["keyType"]),
-                "valueType": _nullable_schema_json(t["valueType"]),
-            }
-    return t
 
 
 def _stat_jsonable(v):
@@ -403,18 +368,14 @@ def _merge_dir_stats(per_dir: list[dict | None]) -> dict | None:
     return merged
 
 
-def _stamp_dir(
-    path: str, bloom_cols: list[str] | None, schema: dict | None = None
-) -> dict:
+def _stamp_dir(path: str, bloom_cols: list[str] | None) -> dict:
     """The manifest ``dirs`` record of a freshly written (or adopted)
     data dir: one :func:`dir_footer_metrics` walk for rows, stats and
     per-row-group bounds (the Iceberg lower/upper_bounds pattern, so
     auto-dispatch is served from the manifest with zero per-statement
-    I/O), registered blooms, and — when passed the dir's Spark schema
-    JSON — the nullability-normalized physical schema stamp that lets
-    equal-schema reads skip mergeSchema inference (see ``_scan_schema``).
-    Empty stats/blooms and over-cap bounds are left out: every reader
-    treats an absent field as "no shortcut"."""
+    I/O) and registered blooms. Empty stats/blooms and over-cap bounds
+    are left out: every reader treats an absent field as "no
+    shortcut"."""
     stats, rows, bounds = dir_footer_metrics(path)
     rec: dict = {"rows": rows}
     if stats:
@@ -424,8 +385,6 @@ def _stamp_dir(
     blooms = dir_column_blooms(path, bloom_cols) if bloom_cols else {}
     if blooms:
         rec["blooms"] = blooms
-    if schema is not None:
-        rec["schema"] = _nullable_schema_json(schema)
     return rec
 
 
@@ -433,10 +392,9 @@ def _fold_dir_records(records: list[dict]) -> dict:
     """The ``dirs`` record of a manifest fold (``compact_manifests``):
     the folded dir hard-links the SAME physical files as its sources.
     Stats merge min-of-mins / max-of-maxes, rows sum, blooms OR-merge,
-    bounds records concatenate (they carry no file names) under the
-    ``DIR_BOUNDS_MAX_GROUPS`` cap fresh stamps honor, and the schema
-    stamp survives only when every source carried the same one. A field
-    any source lacks is left out of the fold."""
+    and bounds records concatenate (they carry no file names) under the
+    ``DIR_BOUNDS_MAX_GROUPS`` cap fresh stamps honor. A field any source
+    lacks is left out of the fold."""
     rec: dict = {}
     stats = _merge_dir_stats([r.get("stats") for r in records])
     if stats:
@@ -450,9 +408,6 @@ def _fold_dir_records(records: list[dict]) -> dict:
         bounds = [b for r in records for b in r["bounds"]]
         if len(bounds) <= DIR_BOUNDS_MAX_GROUPS:
             rec["bounds"] = bounds
-    schema = records[0].get("schema")
-    if schema is not None and all(r.get("schema") == schema for r in records):
-        rec["schema"] = schema
     return rec
 
 
@@ -561,8 +516,77 @@ class CommitConflict(Exception):
 
 # Iceberg-legal type promotions (spec §Schema Evolution): the Spark
 # parquet reader upcasts a narrow physical column into the wide
-# requested type, so widening is metadata-only — old files stay.
-_WIDENINGS = {("integer", "long"), ("float", "double")}
+# requested type, so widening is metadata-only — old files stay. A tuple,
+# not a set: nested types are dicts, which do not hash.
+_WIDENINGS = (("integer", "long"), ("float", "double"))
+
+
+def read_schema_json(manifest: dict) -> dict | None:
+    """The Spark schema JSON every scan of ``manifest``'s dirs reads
+    with — Iceberg's column projection from table metadata: the logical
+    fields in manifest order, each followed by the older names its rename
+    chain left in old files, at the field's current type. A dir of any
+    name or width generation then reads (an absent column NULL-fills, a
+    narrow one upcasts) and ``SnapCatalog._resolve_schema`` folds each
+    alias into its field. A dropped name is in no chain of a live field,
+    so it is never read. Hive and ``_pt_*`` partition columns the schema
+    does not name are discovered from the paths; one it names takes its
+    manifest type. None when the manifest records no schema."""
+    schema = manifest.get("schema")
+    if not schema:
+        return None
+    alias_of: dict[str, list[str]] = {}
+    for old, new in manifest.get("renames") or []:
+        alias_of.setdefault(new, []).extend([old] + alias_of.pop(old, []))
+    fields = []
+    for f in schema["fields"]:
+        fields.append(f)
+        fields += [
+            {"name": a, "type": f["type"], "nullable": True, "metadata": {}}
+            for a in alias_of.get(f["name"], [])
+        ]
+    return {**schema, "fields": fields}
+
+
+def _bare(t):
+    """A Spark type JSON without its nullability flags and field
+    metadata: what two writes of one column must agree on (a file source
+    reads every column as nullable anyway)."""
+    if isinstance(t, dict):
+        return {
+            k: _bare(v) for k, v in t.items()
+            if k not in ("nullable", "containsNull", "valueContainsNull",
+                         "metadata")
+        }
+    if isinstance(t, list):
+        return [_bare(v) for v in t]
+    return t
+
+
+def _carried_schema(parent: dict | None, schema: dict | None) -> dict | None:
+    """The schema of a commit whose dirs sit beside the parent's: every
+    parent field in parent order, then the commit's new columns. A
+    carried dir still holds its columns, so a narrower write must not
+    hide them. A field the write narrows by an Iceberg-legal promotion
+    keeps the parent's wide type and the narrow files upcast on read; any
+    other type change raises, since no one read type serves both
+    generations."""
+    if not schema or not parent:
+        return schema
+    new_by_name = {f["name"]: f for f in schema["fields"]}
+    fields = []
+    for p in parent["fields"]:
+        f = new_by_name.pop(p["name"], p)
+        if _bare(f["type"]) != _bare(p["type"]):
+            if (f["type"], p["type"]) not in _WIDENINGS:
+                raise ValueError(
+                    f"column {p['name']!r} is {p['type']} in the table; "
+                    f"a write beside its files cannot make it {f['type']} "
+                    f"(only {list(_WIDENINGS)} narrow writes read back)"
+                )
+            f = {**f, "type": p["type"]}
+        fields.append(f)
+    return {**schema, "fields": fields + list(new_by_name.values())}
 
 
 def next_manifest(
@@ -587,9 +611,10 @@ def next_manifest(
     data dir, or dirs assembled without a data write (adopted, folded,
     clustered or cherry-picked). ``deletes`` is the delete-entry list;
     None carries the head's entries, each pruned to the dirs still
-    listed. ``schema`` is the written data's schema and ``layout`` its
-    ``partition_by`` / ``partition_spec`` / ``bloom_cols``; None keeps
-    the head's."""
+    listed. ``schema`` is the written data's schema (a commit that
+    carries dirs unions it onto the head's, :func:`_carried_schema`) and
+    ``layout`` its ``partition_by`` / ``partition_spec`` /
+    ``bloom_cols``; None keeps the head's."""
     files = list(head["files"] if carry and head else carry_dirs or [])
     files += [d for d in extra_dirs or {} if d not in files]
     # carried dirs keep their parent-manifest records verbatim — the
@@ -618,46 +643,10 @@ def next_manifest(
     # substitute for Iceberg field ids).
     renames: list = []
     retired: list = []
-    widened = False
     if head and (carry or carry_dirs is not None):
         renames = head.get("renames") or []
         retired = head.get("retired") or []
-        widened = bool(head.get("widened"))
-        parent_fields = (head.get("schema") or {}).get("fields", [])
-        if schema and (renames or retired or widened):
-            # reads on lineage-active tables PROJECT to the manifest
-            # schema, so a narrower append must not hide previously
-            # evolved columns (mergeSchema keeps surfacing them on plain
-            # tables): keep every parent field in parent order (taking
-            # the new field dict where names overlap), then append the
-            # genuinely new columns
-            if parent_fields:
-                new_by_name = {f["name"]: f for f in schema["fields"]}
-                pnames = {f["name"] for f in parent_fields}
-                schema = {
-                    **schema,
-                    "fields": [
-                        new_by_name.get(f["name"], f) for f in parent_fields
-                    ]
-                    + [f for f in schema["fields"] if f["name"] not in pnames],
-                }
-        if widened and schema:
-            # a narrow-typed append after a widening must not revert the
-            # logical type: the narrow files upcast at scan, the schema
-            # keeps the wide type
-            ptypes = {f["name"]: f["type"] for f in parent_fields}
-            schema = {
-                **schema,
-                "fields": [
-                    {**f, "type": ptypes[f["name"]]}
-                    if (
-                        f["name"] in ptypes
-                        and (f["type"], ptypes[f["name"]]) in _WIDENINGS
-                    )
-                    else f
-                    for f in schema["fields"]
-                ],
-            }
+        schema = _carried_schema(head.get("schema"), schema)
         if schema and retired:
             clash = {f["name"] for f in schema.get("fields", [])} & set(retired)
             if clash:
@@ -677,7 +666,6 @@ def next_manifest(
         "deletes": entries,
         "renames": renames,
         "retired": retired,
-        "widened": widened,
         "bloom_cols": layout.get("bloom_cols") or [],
     }
 
@@ -1496,13 +1484,11 @@ class ManifestStore:
         """Iceberg ``ALTER TABLE .. ALTER COLUMN .. TYPE`` analogue —
         METADATA-ONLY type promotion (int→long, float→double, the
         Iceberg-legal widenings): the commit rewrites the logical field
-        type; reads pass an explicit wide schema to the scan (the parquet
-        reader upcasts narrow physical columns — mergeSchema alone
-        refuses to merge int with long) and old files are never
-        rewritten. Refuses non-widening changes, partitioned layouts
-        (hive path values are typed by the directory names), and pending
-        merge-on-read deletes (delete key files are physically narrow —
-        compact first)."""
+        type; every scan reads through the manifest schema, so the
+        parquet reader upcasts narrow physical columns, and old files
+        are never rewritten. Refuses non-widening changes, partitioned
+        layouts, and pending merge-on-read deletes (delete key files are
+        physically narrow — compact first)."""
         spark_name = {"bigint": "long", "int": "integer"}.get(
             new_type, new_type
         )
@@ -1544,7 +1530,6 @@ class ManifestStore:
                         for f in fields
                     ],
                 },
-                "widened": True,
             }
 
         return self._publish(namespace, table, build)

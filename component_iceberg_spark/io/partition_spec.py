@@ -215,7 +215,7 @@ def derive_predicates(
                 continue
             # NULL-safe: after partition-spec evolution, data directories
             # written under an older spec lack this derived column (it
-            # reads as NULL through the mergeSchema union) — those rows
+            # reads as NULL through the per-dir scan union) — those rows
             # must pass the partition predicate and be filtered only by
             # the exact source-column filter. Spark still treats the OR
             # as a partition-only predicate, so pruning holds for dirs

@@ -50,6 +50,7 @@ from component_iceberg_spark.io.manifest import (
     _stamp_dir,
     _stat_jsonable,
     dir_row_count,
+    read_schema_json,
     simple_conjuncts,
 )
 from component_iceberg_spark.session import kernel_width, local_relation
@@ -143,7 +144,12 @@ class SnapCatalog(ManifestStore):
         fails with a sample row and the table is untouched. Validation
         runs against the WRITTEN (still-unpublished) files inside
         :meth:`_commit`, so a nondeterministic source cannot pass a
-        pre-write check and then write different rows."""
+        pre-write check and then write different rows.
+
+        The table keeps its columns: a batch that lacks some reads them
+        as NULL, an int (float) batch column under a long (double) table
+        column keeps the table's type and upcasts on read, and any other
+        type change raises before the publish."""
         return self._commit(
             namespace, table, df, operation="append", carry=True,
             partition_by=partition_by, transform_spec=partition_spec,
@@ -354,10 +360,11 @@ class SnapCatalog(ManifestStore):
         analogue: the delta may carry ADDITIVE columns (a strict
         superset of the target's), which join the table schema; rows
         from untouched/carried files surface the new columns as NULL on
-        read (mergeSchema — same mechanism as append-path evolution in
-        ``snap_schema_evolution``). Dropping target columns or changing
-        a common column's type stays refused either way — evolution is
-        additive only, exactly Iceberg's safe subset.
+        read (the manifest schema unions them — same mechanism as
+        append-path evolution in ``snap_schema_evolution``). Dropping
+        target columns or changing a common column's type stays refused
+        either way — evolution is additive only, exactly Iceberg's safe
+        subset.
         """
         return self._merge(
             namespace, table, delta, keys, None, None, None, order_by,
@@ -1675,42 +1682,19 @@ class SnapCatalog(ManifestStore):
         return out
 
     def _resolve_schema(self, df: DataFrame, manifest: dict) -> DataFrame:
-        """Apply the manifest's column-rename chain and logical-schema
-        projection to a raw multi-dir scan — the read half of
-        METADATA-ONLY rename/drop (:meth:`rename_column` /
-        :meth:`drop_column`): directories written before a rename keep
-        their physical names forever (no data rewrite at any scale); the
-        scan surfaces both generations via mergeSchema and this step
-        folds them into the logical column (coalesce is exact — a dir
-        contains at most ONE generation of a column, enforced by the
-        retired-name reuse guard), then projects to the logical schema so
-        dropped columns vanish. Tables that never renamed/dropped skip
-        this entirely — their plans are untouched."""
-        renames = manifest.get("renames") or []
-        if not renames and not manifest.get("retired"):
-            return df
-        for old, new in renames:
+        """Fold the manifest's rename chain into a scan read with
+        :meth:`_scan_schema` — the read half of METADATA-ONLY rename
+        (:meth:`rename_column`): directories written before a rename keep
+        their physical names forever (no data rewrite at any scale), the
+        read schema lists each old name beside its logical column, and
+        this step coalesces the old name into the column (exact — a dir
+        holds at most ONE generation of a column, enforced by the
+        retired-name reuse guard). Tables that never renamed skip it."""
+        for old, new in manifest.get("renames") or []:
             if old in df.columns:
-                if new in df.columns:
-                    df = df.withColumn(
-                        new, F.coalesce(F.col(new), F.col(old))
-                    ).drop(old)
-                else:
-                    df = df.withColumnRenamed(old, new)
-        fields = [
-            f["name"]
-            for f in (manifest.get("schema") or {}).get("fields", [])
-        ]
-        if fields:
-            extras = [
-                c
-                for c in df.columns
-                if c.startswith("_pt_")
-                or c in (self.POS_FILE_COL, self.POS_IDX_COL)
-            ]
-            df = df.select(
-                *[c for c in fields if c in df.columns], *extras
-            )
+                df = df.withColumn(
+                    new, F.coalesce(F.col(new), F.col(old))
+                ).drop(old)
         return df
 
     def _scan_dirs(
@@ -1730,64 +1714,14 @@ class SnapCatalog(ManifestStore):
         )
 
     def _scan_schema(self, manifest: dict):
-        """Explicit read schema for the scan, or None (the scan keeps
-        its mergeSchema plan untouched).
-
-        Widened tables: every logical field at its current (wide) type,
-        plus each field's retired rename aliases at the same wide type,
-        so directories from any name/width generation read correctly
-        (absent columns NULL-fill, narrow columns upcast) and
-        :meth:`_resolve_schema` folds the generations.
-
-        Plain tables (r16, guide §1.2 — the driver should do almost no
-        per-statement work): when EVERY scanned directory carries the
-        same commit-stamped physical schema (its ``dirs`` record's
-        ``schema``), return
-        it, so the reader is built with an explicit schema instead of a
-        mergeSchema inference pass — measured ~230 ms → ~20 ms per
-        DataFrame CONSTRUCTION (the inference is a distributed
-        footer-read job, paid on every catalog read of every statement).
-        Stamped schemas are nullability-normalized at commit time to
-        match parquet inference exactly, so read schemas are
-        bit-identical either way. Any dir without a stamp (pre-r16
-        manifests, ``add_files`` imports, manifest folds), any schema
-        disagreement between dirs (evolving plain tables rely on
-        mergeSchema's union), and any partitioned/renamed/retired
-        layout falls back to the old inference path unchanged."""
-        if not manifest.get("widened"):
-            if (
-                manifest.get("partition_by")
-                or manifest.get("partition_spec")
-                or manifest.get("renames")
-                or manifest.get("retired")
-            ):
-                return None
-            files = manifest.get("files") or []
-            dirs = manifest.get("dirs", {})
-            if not files:
-                return None
-            first = dirs.get(files[0], {}).get("schema")
-            if first is None or any(
-                dirs.get(d, {}).get("schema") != first for d in files[1:]
-            ):
-                return None
-            from pyspark.sql import types as T
-
-            return T.StructType.fromJson(first)
+        """The explicit read schema of every scan of ``manifest``'s dirs
+        (:func:`manifest.read_schema_json`), so building a reader starts
+        no footer-reading inference job; None only for a manifest that
+        records no schema."""
         from pyspark.sql import types as T
 
-        logical = T.StructType.fromJson(manifest["schema"])
-        alias_of: dict[str, list[str]] = {}
-        for old, new in manifest.get("renames") or []:
-            alias_of.setdefault(new, []).extend(
-                [old] + alias_of.pop(old, [])
-            )
-        out = []
-        for f in logical.fields:
-            out.append(f)
-            for a in alias_of.get(f.name, []):
-                out.append(T.StructField(a, f.dataType, True))
-        return T.StructType(out)
+        schema = read_schema_json(manifest)
+        return None if schema is None else T.StructType.fromJson(schema)
 
     def _read_dirs(
         self,
@@ -1799,14 +1733,11 @@ class SnapCatalog(ManifestStore):
         with_positions: bool = False,
         read_schema=None,
     ) -> DataFrame:
-        """Distributed scan over an explicit set of data directories.
-
-        mergeSchema: appends may evolve the schema (add columns); rows
-        from pre-evolution files read the new columns as NULL — Iceberg
-        schema-evolution semantics. ``read_schema`` (from
-        :meth:`_scan_schema`, widened tables only) replaces mergeSchema
-        with an explicit schema so narrow physical columns upcast —
-        mergeSchema itself refuses to merge int with long.
+        """Distributed scan over an explicit set of data directories
+        with ``read_schema`` (:meth:`_scan_schema`): rows from files
+        that lack a column read it as NULL and narrow physical columns
+        upcast — Iceberg schema-evolution semantics. Only a manifest
+        that records no schema leaves the files' schemas to inference.
 
         Partitioned commits are read per-directory and unioned by name:
         hive partition discovery is per data dir, and the union keeps
@@ -2397,23 +2328,6 @@ class SnapCatalog(ManifestStore):
             # manifest schema = the USER schema; hidden transform
             # columns are derived below and never appear to readers
             schema_json = df.schema.jsonValue()
-            if head and (carry or carry_dirs is not None):
-                # a new dir beside carried ones keeps the table's column
-                # order (new columns last), so its stamp matches theirs
-                # and _scan_schema keeps applying
-                cols = [f["name"] for f in schema_json["fields"]]
-                order = [
-                    f["name"]
-                    for f in (head.get("schema") or {}).get("fields", [])
-                    if f["name"] in cols
-                ]
-                order += [c for c in cols if c not in order]
-                if order != cols:
-                    df = df.select(
-                        *[F.col("`" + c.replace("`", "``") + "`")
-                          for c in order]
-                    )
-                    schema_json = df.schema.jsonValue()
             if transform_spec:
                 fields = partition_spec.parse_spec(transform_spec)
                 df = partition_spec.apply_spec(df, fields)
@@ -2447,8 +2361,10 @@ class SnapCatalog(ManifestStore):
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(out_dir)
             if check is not None:
+                # read with the commit's own schema: inference would
+                # type a hive partition value by its path text
                 bad = (
-                    df.sparkSession.read.parquet(out_dir)
+                    df.sparkSession.read.schema(df.schema).parquet(out_dir)
                     .filter(f"NOT ({check})")
                     .limit(1)
                     .collect()
@@ -2458,14 +2374,7 @@ class SnapCatalog(ManifestStore):
                         f"CHECK constraint violated: ({check}); "
                         f"sample offending row: {bad[0].asDict()}"
                     )
-            # the physical schema of THIS commit's df (before any lineage
-            # merge in next_manifest rewrites the logical manifest
-            # schema) is stamped too — except on partitioned layouts,
-            # whose files physically lack the partition columns, so the
-            # stamp would not match inference
-            new_dir = _stamp_dir(
-                out_dir, bloom_cols, None if partition_by else schema_json
-            )
+            new_dir = _stamp_dir(out_dir, bloom_cols)
             return self._commit_metadata(
                 namespace, table, operation, base_sid=base_sid, carry=carry,
                 carry_dirs=carry_dirs, deletes=deletes,

@@ -430,8 +430,9 @@ def snap_cluster_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snap_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution: an append introduces a new column; rows from
-    pre-evolution files surface it as NULL (mergeSchema read — Iceberg
-    add-column semantics, no rewrite of old data)."""
+    pre-evolution files surface it as NULL (every read goes through the
+    manifest schema, which unions the new column — Iceberg add-column
+    semantics, no rewrite of old data)."""
     cat = _warehouse(sf_dir, "schema_evo")
     n = load_table(spark, sf_dir, "nation")
     cat.create_or_replace("ns", "nation", n.filter(F.col("n_regionkey") < 3))
@@ -829,10 +830,9 @@ def snap_bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snap_widen_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg ALTER TABLE .. ALTER COLUMN .. TYPE — METADATA-ONLY type
     promotion (int→long here): the commit rewrites the logical field
-    type, old narrow files upcast at scan through the explicit wide read
-    schema (mergeSchema alone refuses to merge int with long), and the
-    post-widen append carries keys beyond the 32-bit range. No data file
-    is rewritten at any table size."""
+    type, old narrow files upcast at scan through the manifest's wide
+    read schema, and the post-widen append carries keys beyond the
+    32-bit range. No data file is rewritten at any table size."""
     cat = _warehouse(sf_dir, "widen_col")
     n = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("int").alias("n_nationkey"),
@@ -1474,11 +1474,11 @@ def snap_upsert_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows keep flowing and surface the new column as NULL. Old data files
     are NEVER rewritten for the evolution itself: carried (key-range-
     pruned) dirs keep their five-column schema on disk and the read path
-    NULL-fills via mergeSchema — add-a-column stays a metadata-cost
-    operation even mid-merge, which is the property that makes schema
-    evolution viable on a 100 TB table. Evolution refusal modes
-    (dropped column, retyped column, evolve unset) are unit-pinned in
-    tests/test_snaptable.py."""
+    NULL-fills through the manifest schema — add-a-column stays a
+    metadata-cost operation even mid-merge, which is the property that
+    makes schema evolution viable on a 100 TB table. Evolution refusal
+    modes (dropped column, retyped column, evolve unset) are unit-pinned
+    in tests/test_snaptable.py."""
     cat = _warehouse(sf_dir, "upsert_evolve")
     c = load_table(spark, sf_dir, "customer")
     cat.create_or_replace("ns", "cust", c.filter(F.col("c_custkey") % 3 != 0))

@@ -45,7 +45,6 @@ def _head() -> dict:
         "schema": {"type": "struct", "fields": [_field("k"), _field("w")]},
         "renames": [["v", "w"]],
         "retired": ["v"],
-        "widened": False,
         "partition_by": [],
         "partition_spec": [],
         "bloom_cols": ["k"],
@@ -118,6 +117,66 @@ def test_next_manifest_refuses_a_retired_name():
             _head(), "append", carry=True, extra_dirs={"n": {}},
             schema={"type": "struct", "fields": [_field("k"), _field("v")]},
         )
+
+
+def test_read_schema_lists_rename_aliases_at_the_current_type():
+    """Every scan reads through the manifest: each logical field, then
+    the older names of its rename chain at the field's current type."""
+    m = {
+        "schema": {"type": "struct", "fields": [
+            _field("k"), _field("c", "long"), _field("e", "string"),
+        ]},
+        # a -> b -> c, widened to long after; d dropped; x -> y dropped
+        "renames": [["a", "b"], ["x", "y"], ["b", "c"]],
+        "retired": ["a", "x", "b", "d", "y"],
+    }
+    got = M.read_schema_json(m)
+    assert [(f["name"], f["type"]) for f in got["fields"]] == [
+        ("k", "long"), ("c", "long"), ("b", "long"), ("a", "long"),
+        ("e", "string"),
+    ]
+    assert all(f["nullable"] for f in got["fields"][2:4])
+    # no chain: the manifest schema itself; no schema: nothing to read by
+    assert M.read_schema_json({"schema": m["schema"]}) == m["schema"]
+    assert M.read_schema_json({"schema": None}) is None
+
+
+def test_next_manifest_unions_carried_fields_and_refuses_type_changes():
+    head = {**_head(), "renames": [], "retired": []}
+    narrow = M.next_manifest(
+        head, "append", carry=True, extra_dirs={"n": {}},
+        schema={"type": "struct", "fields": [
+            _field("x", "string"), _field("w", "integer"),
+        ]},
+    )
+    # parent fields in parent order, then the new column; the int write
+    # beside long files keeps the table's long
+    assert [(f["name"], f["type"]) for f in narrow["schema"]["fields"]] == [
+        ("k", "long"), ("w", "long"), ("x", "string"),
+    ]
+    assert "widened" not in narrow
+    # nested nullability is not a type change
+    arr = {"type": "array", "elementType": "long", "containsNull": False}
+    nested = {**head, "schema": {"type": "struct", "fields": [
+        _field("k", {**arr, "containsNull": True}),
+    ]}}
+    body = M.next_manifest(
+        nested, "append", carry=True, extra_dirs={"n": {}},
+        schema={"type": "struct", "fields": [_field("k", arr)]},
+    )
+    assert body["schema"]["fields"][0]["type"] == arr
+    for typ in ("string", "double", arr):
+        with pytest.raises(ValueError, match="'k' is long"):
+            M.next_manifest(
+                head, "append", carry_dirs=["a"], extra_dirs={"n": {}},
+                schema={"type": "struct", "fields": [_field("k", typ)]},
+            )
+    # a commit that carries nothing may retype: it rewrote every file
+    replaced = M.next_manifest(
+        head, "replace", extra_dirs={"n": {}},
+        schema={"type": "struct", "fields": [_field("k", "string")]},
+    )
+    assert replaced["schema"]["fields"] == [_field("k", "string")]
 
 
 def _store(tmp_path) -> M.ManifestStore:

@@ -1507,6 +1507,17 @@ def test_partitioned_read_prunes_with_in_predicate(spark, tmp_path):
     assert "bucket" in pf and "IN(1,3)" in pf.replace(" ", ""), pf
     got = {r.id for r in pruned.collect()}
     assert got == {i for i in range(100) if i % 8 in (1, 3)}
+    # a string bucket keeps its text: '007' is not the number 7
+    cat.create_or_replace("ns", "s", df.select(
+        "id", F.format_string("%03d", F.col("bucket")).alias("bucket")
+    ), partition_by=["bucket"])
+    pruned = cat.read(spark, "ns", "s", where="bucket IN ('001', '007')")
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    pf = plan[plan.index("PartitionFilters"):]
+    assert "IN(001,007)" in pf[: pf.index("]") + 1].replace(" ", ""), pf
+    assert dict(pruned.dtypes)["bucket"] == "string"
+    got = {(r.id, r.bucket) for r in pruned.collect()}
+    assert got == {(i, f"{i % 8:03d}") for i in range(100) if i % 8 in (1, 7)}
 
 
 def test_check_constraint_blocks_before_write(spark, tmp_path):
@@ -1528,6 +1539,32 @@ def test_check_constraint_blocks_before_write(spark, tmp_path):
     # must be cleaned up, leaving exactly the good commit's data dir
     data_root = str(tmp_path / "wh" / "ns" / "t" / "data")
     assert len(os.listdir(data_root)) == 1
+
+
+def test_check_constraint_reads_hive_partition_column_as_its_type(
+    spark, tmp_path
+):
+    """The CHECK re-read of the written dir uses the commit's schema: a
+    string partition value '010' is tested as the string, not as the
+    number 10 that path inference would make of it."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    ddl = "k long, p string"
+    cat.create_or_replace(
+        "ns", "t", spark.createDataFrame([(1, "009")], ddl),
+        partition_by=["p"],
+    )
+    cat.append(
+        "ns", "t", spark.createDataFrame([(2, "010")], ddl),
+        check="p LIKE '0%'",
+    )
+    with pytest.raises(ValueError, match="CHECK constraint violated"):
+        cat.append(
+            "ns", "t", spark.createDataFrame([(3, "110")], ddl),
+            check="p LIKE '0%'",
+        )
+    got = cat.read(spark, "ns", "t")
+    assert dict(got.dtypes)["p"] == "string"
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "009"), (2, "010")]
 
 
 def test_check_constraint_malformed_predicate_sweeps_dir(spark, tmp_path):
@@ -2317,6 +2354,84 @@ def test_narrow_append_keeps_evolved_columns_on_renamed_table(
     )                                   # narrower than the evolved schema
     rows = {r.x: (r.b, r.d) for r in cat.read(spark, "ns", "t").collect()}
     assert rows == {1: ("b1", None), 2: ("b2", "d2"), 3: ("b3", None)}, rows
+
+
+def test_narrow_append_keeps_evolved_columns_on_plain_table(
+    spark, tmp_path
+):
+    """The plain-table twin of the renamed case: after (a, b), (a, b, d),
+    (a, b) the manifest, ``schema()``, the upsert gate and the add_files
+    gate all see (a, b, d) — the columns a read returns."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    cat.create_or_replace(
+        "ns", "t", spark.createDataFrame([(1, "b1")], "a long, b string")
+    )
+    wide = "a long, b string, d string"
+    cat.append("ns", "t", spark.createDataFrame([(2, "b2", "d2")], wide))
+    cat.append(
+        "ns", "t", spark.createDataFrame([(3, "b3")], "a long, b string")
+    )
+    names = ["a", "b", "d"]
+    assert [f["name"] for f in cat._head("ns", "t")["schema"]["fields"]] \
+        == names
+    assert cat.schema(spark, "ns", "t").names == names
+    cat.upsert(
+        "ns", "t", spark.createDataFrame([(3, "b3", "d3")], wide), keys=["a"]
+    )
+    assert sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect()) \
+        == [(1, "b1", None), (2, "b2", "d2"), (3, "b3", "d3")]
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(4, "b4")], "a long, b string").write.parquet(src)
+    with pytest.raises(ValueError, match=r"target=\['a', 'b', 'd'\]"):
+        cat.add_files(spark, "ns", "t", src)
+
+
+def test_narrow_typed_append_upcasts_and_other_types_refuse(
+    spark, tmp_path
+):
+    """An int batch appended to a long column keeps the table long (the
+    int files upcast on read, so the table stays readable); a string
+    batch raises before it publishes and its written dir is swept."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    cat.create_or_replace("ns", "t", spark.createDataFrame([(1,)], "k long"))
+    cat.append("ns", "t", spark.createDataFrame([(2,)], "k int"))
+    assert cat._head("ns", "t")["schema"]["fields"][0]["type"] == "long"
+    got = cat.read(spark, "ns", "t")
+    assert got.dtypes == [("k", "bigint")]
+    assert sorted(r.k for r in got.collect()) == [1, 2]
+    sid = cat._current_sid("ns", "t")
+    with pytest.raises(ValueError, match="'k' is long"):
+        cat.append("ns", "t", spark.createDataFrame([("x",)], "k string"))
+    assert cat._current_sid("ns", "t") == sid
+    assert len(os.listdir(cat._tbl("ns", "t", "data"))) == 2
+
+
+def test_read_of_renamed_widened_partitioned_table_starts_no_job(
+    spark, tmp_path
+):
+    """Building a read never infers a schema: a hive-partitioned table
+    with a rename chain and int files under a long column builds its
+    read with 0 Spark jobs (mergeSchema inference ran one per dir)."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    cat.create_or_replace(
+        "ns", "t",
+        spark.createDataFrame([(1, 10, "x")], "k long, v long, p string"),
+        partition_by=["p"],
+    )
+    for i in range(2, 6):
+        cat.append("ns", "t", spark.createDataFrame(
+            [(i, i * 10, "y")], "k long, v int, p string"
+        ))
+    cat.rename_column("ns", "t", "v", "w")
+    cat.append("ns", "t", spark.createDataFrame(
+        [(6, 60, "x")], "k long, w int, p string"
+    ))
+    df, jobs = spark_jobs_during(spark, lambda: cat.read(spark, "ns", "t"))
+    assert jobs == 0
+    assert df.dtypes == [("k", "bigint"), ("w", "bigint"), ("p", "string")]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (i, i * 10, "x" if i in (1, 6) else "y") for i in range(1, 7)
+    ]
 
 
 def test_cluster_rewrite_resets_schema_lineage(spark, sf_dir, tmp_path):
@@ -3191,7 +3306,10 @@ def test_parent_format_manifest_reads_exact_and_next_commit_writes_dirs(
     dir_rows, dir_bounds, dir_blooms, dir_schemas) and no ``dirs`` —
     needs no migration: readers see its metadata as absent, so reads
     stay exact and only the shortcuts go (files() shows NULLs,
-    row_count refuses); the next append publishes only ``dirs``."""
+    row_count refuses); the next append publishes only ``dirs``. So does
+    the format after it, whose ``dirs`` records carry a physical
+    ``schema`` stamp and whose manifest may carry ``widened``: readers
+    ignore both, and the next commit writes neither."""
     cat = SnapCatalog(str(tmp_path / "wh"))
     df = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v"))
     cat.create_or_replace("ns", "t", df, bloom_cols=["id"])
@@ -3200,10 +3318,10 @@ def test_parent_format_manifest_reads_exact_and_next_commit_writes_dirs(
         m = json.load(f)
     recs = m.pop("dirs")
     (d,) = m["files"]
-    assert set(recs[d]) == {"rows", "stats", "bounds", "blooms", "schema"}
+    assert set(recs[d]) == {"rows", "stats", "bounds", "blooms"}
     for field in ("stats", "rows", "bounds", "blooms"):
         m[f"dir_{field}"] = {d: recs[d][field]}
-    m["dir_schemas"] = {d: recs[d]["schema"]}
+    m["dir_schemas"] = {d: m["schema"]}
     with open(path, "w") as f:
         json.dump(m, f)
 
@@ -3227,6 +3345,29 @@ def test_parent_format_manifest_reads_exact_and_next_commit_writes_dirs(
     assert list(m2["dirs"]) == [new]
     assert m2["dirs"][new]["rows"] == 10
     assert cat.read(spark, "ns", "t").count() == 110
+
+    # the stamp format: every record stamped, one stamp out of date
+    m2["widened"] = True
+    for x in m2["files"]:
+        m2["dirs"].setdefault(x, {})["schema"] = m2["schema"]
+    m2["dirs"][d]["schema"] = {"type": "struct", "fields": [
+        {"name": "id", "type": "long", "nullable": True, "metadata": {}},
+    ]}
+    with open(cat._tbl("ns", "t", "snapshots", f"{sid}.json"), "w") as f:
+        json.dump(m2, f)
+    got = cat.read(spark, "ns", "t")
+    assert got.columns == ["id", "v"]
+    assert sorted(r.v for r in got.filter("id >= 105").collect()) == [
+        210, 212, 214, 216, 218,
+    ]
+    sid = cat.append("ns", "t", spark.range(110, 120).select(
+        F.col("id"), (F.col("id") * 2).alias("v"),
+    ))
+    m3 = cat._manifest("ns", "t", sid)
+    assert "widened" not in m3
+    (newest,) = [x for x in m3["files"] if x not in m2["files"]]
+    assert "schema" not in m3["dirs"][newest]
+    assert cat.read(spark, "ns", "t").count() == 120
 
 
 def test_compact_manifests_never_folds_dv_dirs(spark, sf_dir, tmp_path):
@@ -4357,16 +4498,13 @@ def test_dir_footer_metrics_matches_standalones(spark, sf_dir, tmp_path):
     assert (s2, r2) == (stats, rows)
 
 
-def test_dir_schema_stamp_fast_path_and_fallbacks(spark, tmp_path):
-    """r16 read-construction fast path: commits stamp each data dir's
-    physical schema (nullability-normalized) so equal-schema reads build
-    the reader with an explicit schema instead of a mergeSchema
-    inference job (~230 ms -> ~20 ms per catalog-read CONSTRUCTION).
-    Pins: (a) the fast-path schema is bit-identical to the mergeSchema
-    one (incl. array containsNull); (b) schema-evolving appends on plain
-    tables break uniformity and fall back to mergeSchema, so the union
-    of columns still surfaces; (c) manifest folds inherit the stamp when
-    sources agree."""
+def test_manifest_read_schema_matches_inference(spark, tmp_path):
+    """Every catalog read is built with the manifest's schema instead of
+    a mergeSchema inference job. Pins: (a) the read schema is
+    bit-identical to the mergeSchema one (incl. array containsNull, and
+    although the written frame's array is non-nullable); (b) building the
+    read starts no Spark job; (c) a schema-evolving append surfaces the
+    union of columns, in manifest order."""
     from pyspark.sql import functions as F
 
     cat = SnapCatalog(str(tmp_path / "wh"))
@@ -4378,29 +4516,21 @@ def test_dir_schema_stamp_fast_path_and_fallbacks(spark, tmp_path):
     cat.create_or_replace("ns", "t", df)
     cat.append("ns", "t", df)
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert all("schema" in m["dirs"][d] for d in m["files"])
-    assert cat._scan_schema(m) is not None, "uniform stamps -> fast path"
-    fast = cat.read(spark, "ns", "t")
+    assert not any("schema" in m["dirs"][d] for d in m["files"])
+    read, jobs = spark_jobs_during(spark, lambda: cat.read(spark, "ns", "t"))
+    assert jobs == 0
     merged = spark.read.option("mergeSchema", "true").parquet(
         *[cat._tbl("ns", "t", "data", d) for d in m["files"]]
     )
-    assert fast.schema.json() == merged.schema.json()
-    assert fast.count() == 100
+    assert read.schema.json() == merged.schema.json()
+    assert read.count() == 100
 
-    # manifest fold: the hard-linked dir inherits the agreed stamp
-    cat.compact_manifests("ns", "t")
-    mf = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert len(mf["files"]) == 1
-    assert cat._scan_schema(mf) is not None, mf.get("dirs")
-
-    # evolving append (extra column): stamps disagree -> mergeSchema
-    # fallback keeps surfacing the union of columns on plain tables
+    # evolving append (extra column): the manifest unions the columns
     cat.append("ns", "t", df.withColumn("extra", F.lit(1)))
     me = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert cat._scan_schema(me) is None, "evolved table must fall back"
-    assert set(cat.read(spark, "ns", "t").columns) == {
-        "id", "a", "s", "extra"
-    }
+    names = ["id", "a", "s", "extra"]
+    assert [f["name"] for f in me["schema"]["fields"]] == names
+    assert cat.read(spark, "ns", "t").columns == names
 
 
 def _id_rows(spark, lo, hi):
@@ -4768,9 +4898,8 @@ _ORDER_CASES = {
 def test_merge_verbs_keep_table_column_order(spark, tmp_path, case):
     """A commit beside carried dirs leaves the table's column order as it
     was — whatever order the source lists, over held or disjoint keys, on
-    append, and when the key is not the first column — and the new dir's
-    stamp agrees with the carried ones', so reads keep their explicit
-    scan schema."""
+    append, and when the key is not the first column — in the manifest
+    and so in the read schema, which binds the files' columns by name."""
     verb, columns, src_rows, want = _ORDER_CASES[case]
     names = [c.split()[0] for c in columns.split(", ")]
 
@@ -4792,7 +4921,7 @@ def test_merge_verbs_keep_table_column_order(spark, tmp_path, case):
     assert sorted((r["k"], r["v"]) for r in got.collect()) == want
     head = cat._head("ns", "t")
     assert [f["name"] for f in head["schema"]["fields"]] == names
-    assert cat._scan_schema(head) is not None
+    assert cat._scan_schema(head).names == names
 
 
 @pytest.mark.parametrize("verb", ["upsert", "merge"])
